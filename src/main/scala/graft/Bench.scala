@@ -18,6 +18,37 @@ object Bench {
   val StreamManifest2wQueryName = "stream_cdc_merge_manifest_2w"
   val StreamManifest2f1wQueryName = "stream_cdc_merge_manifest_2feed_1w"
 
+  /** One stream entry from its repeats, each a run's `(name, total)`
+    * head plus its dotted phases; a failed repeat's total is negative.
+    *
+    *  - An odd number of survivors reports the median repeat with THAT
+    *    repeat's phases. Two survivors report their mean, phase by phase
+    *    — the slower run alone would be a biased "median".
+    *  - `.spread` is (max − min) / reported total over the survivors, so
+    *    the line self-dispositions its own resolution.
+    *  - `.failed_repeats` appears whenever any repeat failed, so a
+    *    survivor-only number never hides a flaky run. All repeats failed
+    *    reports the first run's -1.
+    */
+  private[graft] def medianOfRepeats(
+      runs: Seq[Seq[(String, Double)]]): Seq[(String, Double)] = {
+    val ok = runs.filter(_.headOption.exists(_._2 >= 0))
+    val failed = runs.size - ok.size
+    def failedEntry(name: String) =
+      if (failed > 0) Seq(s"$name.failed_repeats" -> failed.toDouble) else Nil
+    if (ok.isEmpty) return runs.head ++ failedEntry(runs.head.head._1)
+    val reported =
+      if (ok.size == 2) {
+        val other = ok(1).toMap
+        ok.head.map { case (k, v) => k -> (v + other.getOrElse(k, v)) / 2 }
+      } else ok.sortBy(_.head._2).apply(ok.size / 2)
+    val (name, total) = reported.head
+    val totals = ok.map(_.head._2)
+    val spread = if (total > 0) (totals.max - totals.min) / total else 0.0
+    reported ++ Seq(s"$name.spread" -> math.rint(spread * 1000) / 1000.0) ++
+      failedEntry(name)
+  }
+
   def main(args: Array[String]): Unit = {
     val only = args.toSet
     val unknown = only.diff(
@@ -70,21 +101,11 @@ object Bench {
     // creates its own temp dir); the reported entry is the MEDIAN
     // repeat's total with THAT repeat's phase breakdown (phases stay
     // consistent within a run), exactly the batch entries' methodology.
-    // The dotted `.spread` addition records (max − min) / median across
-    // the repeats so the line self-dispositions its own resolution.
-    def median3Stream(run: () => Seq[(String, Double)]): Seq[(String, Double)] = {
-      val runs = (1 to 3).map { _ =>
+    // See [[medianOfRepeats]] for the failed-repeat and two-survivor rules.
+    def median3Stream(run: () => Seq[(String, Double)]): Seq[(String, Double)] =
+      medianOfRepeats((1 to 3).map { _ =>
         val r = run(); sweepState(); r
-      }
-      val ok = runs.filter(_.headOption.exists(_._2 >= 0))
-      if (ok.isEmpty) return runs.head // all repeats failed: report -1
-      val sorted = ok.sortBy(_.head._2)
-      val med = sorted(sorted.size / 2)
-      val totals = ok.map(_.head._2)
-      val spread =
-        if (med.head._2 > 0) (totals.max - totals.min) / med.head._2 else 0.0
-      med :+ (s"${med.head._1}.spread" -> math.rint(spread * 1000) / 1000.0)
-    }
+      })
     val streamed: Seq[(String, Double)] =
       (if (only.isEmpty || only.contains(StreamQueryName))
         median3Stream(() => StreamBench.run(spark, sfDir))
@@ -235,7 +256,8 @@ object Bench {
       k => !(k.endsWith(".compact_swap") || k.endsWith(".swap") ||
         k.endsWith(".compact_write") || k.endsWith(".merge_fold") ||
         k.endsWith(".other")),
-      k => !k.contains(".") || k.endsWith(".spread"))
+      k => !k.contains(".") || k.endsWith(".spread") ||
+        k.endsWith(".failed_repeats"))
     def lineAt(n: Int, streamKeep: String => Boolean): String = {
       val streamKept = stream.filter { case (k, _) =>
         !k.startsWith("stream_") || streamKeep(k) }

@@ -1519,10 +1519,11 @@ object SparkEntry {
     // to every reader immediately (logical delete: window 2 below), and
     // window COMPACTION re-packs the remaining docs at the window's own
     // seed to restore the 512-dense span invariant (physical rewrite
-    // under the retire-aside crash protocol: window 1 below). The store
-    // keeps retracted hashes — banned content cannot re-enter under a new
-    // id. The oracle replays both stages: window 1 packed over the
-    // remaining docs, window 2 packed over ALL docs then filtered.
+    // into a fresh generation published by one manifest PUT: window 1
+    // below). The store keeps retracted hashes — banned content cannot
+    // re-enter under a new id. The oracle replays both stages: window 1
+    // packed over the remaining docs, window 2 packed over ALL docs then
+    // filtered.
     "q_manifest_retract" -> ((s, dir) => {
       import s.implicits._
       val gated = manifestGated(t(s, dir, "documents"))
@@ -1546,7 +1547,7 @@ object SparkEntry {
                 .survivorRows(batch1, "doc_id", "text"),
               "text", vocabSize = 200, maxPieceLen = 3, seedSize = 40,
               emIters = 1, pruneFraction = 0.0), s)
-          val maint = new graft.streaming.ManifestMaintainer(store,
+          val maint = new graft.streaming.VersionedManifestMaintainer(store,
             tokPath, work.resolve("manifest").toString,
             windowOf = _ + 1L, seedOf = bid => Seq(67L, 71L)(bid.toInt))
           maint.processBatch(batch1, 0L)
@@ -1727,10 +1728,11 @@ object SparkEntry {
     // THE STREAMING MANIFEST MAINTAINER (r16): the incremental fold as a
     // LIVE foreachBatch loop — window 1 bootstraps store + tokenizer in
     // batch; two delta batches then arrive as REAL micro-batches through
-    // a MemoryStream and ManifestMaintainer's crash-ordered protocol
-    // (spans durable before the store merge, marker after), and batch 2
-    // REPLAYS through processBatch (the at-least-once case) where the
-    // committed-window marker must no-op it. Output = window-1 spans ∪
+    // a MemoryStream and VersionedManifestMaintainer's crash-ordered
+    // protocol (spans durable before the store merge, manifest PUT
+    // after), and batch 2 REPLAYS through processBatch (the
+    // at-least-once case) where the committed manifest entry must no-op
+    // it. Output = window-1 spans ∪
     // the manifest directory's committed windows, each span joined to
     // its survivor's content_hash FROM THE STORE; the oracle recomputes
     // all three windows from raw documents in one statement.
@@ -1760,10 +1762,8 @@ object SparkEntry {
           val served = graft.operators.TokenizerStore.loadUnigram(s, tokPath)
           val m1 = graft.operators.ManifestPipeline
             .packWindow(surv0, "doc_id", "text", served, 1L, 53L)
-          // the OBJECT-STORE-SAFE maintainer (r18, VERDICT r17 #1): the
-          // flagship maintenance gates run over the rename-free
-          // conditional-PUT protocol; the rename-based sibling keeps its
-          // own spec suite + q_manifest_retract/q_manifest_retokenize
+          // the rename-free conditional-PUT protocol: correct on POSIX
+          // and object stores alike
           val maint = new graft.streaming.VersionedManifestMaintainer(store,
             tokPath, work.resolve("manifest").toString,
             windowOf = _ + 2L, seedOf = bid => Seq(59L, 61L)(bid.toInt))
@@ -1776,7 +1776,8 @@ object SparkEntry {
             ms.addData(b2.as[(Long, String)].collect().toIndexedSeq: _*)
             q.processAllAvailable()
           } finally q.stop()
-          // at-least-once: batch 1 redelivered — the marker must no-op it
+          // at-least-once: batch 1 redelivered — its committed entry
+          // must no-op it
           maint.processBatch(b2, batchId = 1L)
           val storedKeys = store.snapshot()
             .select(col("content_hash"), col("doc_id"))
@@ -1895,7 +1896,7 @@ object SparkEntry {
             emIters = 1, pruneFraction = 0.0)
           graft.operators.TokenizerStore.saveUnigram(tokPath, trainA, s)
           val seeds = Seq(107L, 109L)
-          val maint = new graft.streaming.ManifestMaintainer(store,
+          val maint = new graft.streaming.VersionedManifestMaintainer(store,
             tokPath, work.resolve("manifest").toString,
             windowOf = _ + 1L, seedOf = bid => seeds(bid.toInt))
           maint.processBatch(batch1, 0L)
@@ -1903,7 +1904,7 @@ object SparkEntry {
           // the retrain lands at the same artifact path; a fresh
           // maintainer process MUST refuse to pack under it unversioned
           graft.operators.TokenizerStore.saveUnigram(tokPath, trainB, s)
-          val maint2 = new graft.streaming.ManifestMaintainer(store,
+          val maint2 = new graft.streaming.VersionedManifestMaintainer(store,
             tokPath, work.resolve("manifest").toString,
             windowOf = _ + 1L, seedOf = bid => seeds(bid.toInt))
           maint2.adoptModel(s)
@@ -1930,7 +1931,7 @@ object SparkEntry {
     // (AnnIndex.deleteIvf tombstones), and stays BANNED in the survivor
     // store (a re-crawl of the same texts under new ids folds to an
     // empty window; a replay of the original batch no-ops on its
-    // marker). Output = manifest spans ∪ ANN top-k as one null-padded
+    // committed entry). Output = manifest spans ∪ ANN top-k as one null-padded
     // union; the oracle recomputes both surfaces minus the retracted
     // docs in one statement, so a single leaked span OR a single
     // tombstone-escaping neighbor breaks the hash.
@@ -1983,7 +1984,7 @@ object SparkEntry {
           maint.processBatch(
             takedown.select((col("doc_id") + 1000000L).alias("doc_id"),
               col("text")), 2L)
-          // ...and the original batch's redelivery no-ops on its marker
+          // ...and the original batch's redelivery no-ops on its entry
           maint.processBatch(batch2, 1L)
           val storedKeys = store.snapshot()
             .select(col("content_hash"), col("doc_id"))

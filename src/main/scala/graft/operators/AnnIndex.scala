@@ -60,12 +60,14 @@ object AnnIndex {
     * persisted index are IMMUTABLE for the lifetime of one index
     * generation: appends/tombstones never touch them, and every operation
     * that can change them ([[buildIvf]]/[[buildIvfPq]]/[[compactIvf]])
-    * publishes a WHOLE new directory via [[swapInto]], whose `_meta.json`
-    * is freshly created — so (canonical path, `_meta.json` mtime+size) is
-    * a sound generation key. Before this cache, EVERY per-batch append
-    * re-ran `KMeansModel.load` (several driver actions through the ML
-    * reader), re-collected the codebooks parquet, and re-read the base
-    * footer schema — measured as ~35 of the 146 jobs in one
+    * publishes a WHOLE new directory via [[swapInto]]. The cache key is
+    * (canonical path, the generation token in `_meta.json`): a build
+    * writes a fresh token, and a compaction copies the meta with its
+    * token because the artifacts it serves are byte-identical. A legacy
+    * meta without a token falls back to its mtime+size. Before this
+    * cache, EVERY per-batch append re-ran `KMeansModel.load` (several
+    * driver actions through the ML reader), re-collected the codebooks
+    * parquet, and re-read the base footer schema — measured as ~35 of the 146 jobs in one
     * `q_ann_stream_maintain_pq` run, pure fixed overhead at any scale
     * (the artifacts are KB-sized; the reload tax is per-BATCH, so it
     * also rides every production micro-batch). Entries are dropped

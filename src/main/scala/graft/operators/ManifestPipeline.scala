@@ -92,9 +92,9 @@ object ManifestPipeline {
   /** The merge-free half of [[foldDelta]]: the batch's within-batch
     * survivors anti-joined against the store's EXISTING keys,
     * materialized (so later store writes cannot retroactively change the
-    * frame). Exposed separately because crash-safe maintainers
-    * ([[graft.streaming.ManifestMaintainer]]) must write the window's
-    * spans BEFORE the store merge — replay-forward ordering.
+    * frame). Exposed separately because a crash-safe maintainer
+    * ([[graft.streaming.VersionedManifestMaintainer]]) must write the
+    * window's spans BEFORE the store merge — replay-forward ordering.
     */
   def freshSurvivors(store: KeyedUpsertStore, gatedBatch: DataFrame,
       idCol: String, textCol: String): DataFrame =

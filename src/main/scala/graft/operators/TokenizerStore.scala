@@ -216,8 +216,8 @@ object TokenizerStore {
     * family's serving ADT (the VERDICT r16 #2 seam): a unigram artifact
     * serves Viterbi, a merge-table artifact (BPE or WordPiece) serves
     * the compiled greedy fusion. This is what lets a
-    * [[graft.streaming.ManifestMaintainer]] pack windows under ANY
-    * stored tokenizer kind instead of unigram-only.
+    * [[graft.streaming.VersionedManifestMaintainer]] pack windows under
+    * ANY stored tokenizer kind instead of unigram-only.
     */
   def loadServed(spark: SparkSession, path: String): ServedModel =
     loadServedWithHash(spark, path)._1

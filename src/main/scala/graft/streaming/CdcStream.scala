@@ -141,6 +141,16 @@ class CdcStreamJob(spark: SparkSession, source: () => DataFrame,
       // trigger means thousands of no-op polls — they now cost one scan
       // and zero materialization, where the r19 shape paid the full
       // latest-per-key shuffle plus block materialization per no-op.
+      //
+      // Two-scan race: the scalar stats and the latest-per-key fold below
+      // are separate scans of the feed, so an append-only log that grows
+      // between them lets the fold see rows the stats did not. Both scans
+      // filter on the same `from`, so the fold only ever sees MORE
+      // committed changes, never fewer; the ledger still advances only to the `safe` bound
+      // computed from the stats, so a row the stats missed stays above
+      // the ledger and the next poll re-folds it. The merge is an
+      // idempotent latest-txid-wins upsert, so that re-fold is a no-op
+      // on the keys already applied.
       val stats = changeFeed.agg(
         max(when(col(Cdc.TransactionId) > from, col(Cdc.TransactionId)))
           .alias("_max_tx"),

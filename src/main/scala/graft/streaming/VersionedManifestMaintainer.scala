@@ -8,21 +8,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{ManifestPipeline, ServedModel, TokenizerStore}
 import graft.util.Fs
 
-/** OBJECT-STORE-SEMANTICS sibling of [[ManifestMaintainer]] (VERDICT r17
-  * #1): the same incremental pre-training-manifest maintenance — feed-
-  * driven window packing over a survivor [[KeyedUpsertStore]], takedown
-  * retraction, physical compaction, tokenizer model versioning and
-  * re-tokenization, multi-writer disjoint window spaces — committed
-  * WITHOUT a single rename.
+/** Streaming maintenance loop for the incremental pre-training manifest:
+  * a `foreachBatch` sink (the at-least-once sink model of Structured
+  * Streaming) that folds each micro-batch of new documents against a
+  * survivor [[KeyedUpsertStore]], tokenizes only the genuinely new
+  * survivors under the STORED tokenizer, and commits their packed spans
+  * as one window. The same class carries the rest of the manifest's
+  * lifecycle: takedown retraction, physical compaction, tokenizer model
+  * versioning and re-tokenization, multi-writer disjoint window spaces,
+  * time travel and a deletion-propagating change feed.
   *
-  * [[ManifestMaintainer]]'s protocol is correct on filesystems where
-  * rename is atomic (local POSIX, HDFS) and carries that contract in its
-  * scaladoc; an object store renames by copy+delete, which tears its
-  * `_tmp`/`_old` publish swap, its marker rewrites, and its retraction-
-  * ledger part renames. This class commits the way the survivor store's
-  * own [[ManifestUpsertStore]] does — the Iceberg/Delta shape, so the
-  * flagship GPT-family manifest can run against the SAME object store as
-  * the survivor store it feeds:
+  * Every commit is made WITHOUT a single rename, so the protocol is
+  * correct on local POSIX, HDFS and object stores alike (an object store
+  * renames by copy+delete, which would tear any rename-based publish).
+  * It commits the way the survivor store's own [[ManifestUpsertStore]]
+  * does — the Iceberg/Delta shape, so the flagship GPT-family manifest
+  * can run against the SAME object store as the survivor store it feeds:
   *
   *  - SPAN DATA is immutable: each window's spans land in a generation
   *    dir no committed state ever mutates. Append generations use the
@@ -34,8 +35,8 @@ import graft.util.Fs
   *    (compaction / re-tokenization) use a fresh nonce name; the replaced
   *    generation stays byte-identical for older retained versions.
   *  - RETRACTION ledger entries are immutable `rgen-<nonce>` dirs; the
-  *    ledger IS the ordered list the manifest carries (the rename-based
-  *    part-file shuffle and its staging-sweep hazards are gone).
+  *    ledger IS the ordered list the manifest carries, so no part file
+  *    is ever staged, renamed or swept.
   *  - VISIBILITY is one small file: `manifest-<v%012d>.json` holds every
   *    committed window's (generation, batchId, model stamp, writer), the
   *    pinned tokenizer model + adoption history, and the retraction list,
@@ -49,9 +50,8 @@ import graft.util.Fs
   *    winner's manifest and retries — disjoint windows always merge.
   *  - CLAIMS are conditional PUTs too: `claim-<window>` objects created
   *    create-exclusive with their full `writerId\nbatchId` content
-  *    atomic, so the torn/empty-claim debris class the rename protocol
-  *    must grab-and-re-assert CANNOT EXIST here — a visible claim always
-  *    carries its owner. The claim is the EARLY fence (loud before any
+  *    atomic, so a torn or empty claim CANNOT EXIST — a visible claim
+  *    always carries its owner. The claim is the EARLY fence (loud before any
   *    span write); the manifest PUT is the real mutual exclusion: even a
   *    mistaken [[reclaimWindow]] of a live owner ends in one winner and
   *    one loud commit-time error, never silent double-packing (though
@@ -62,9 +62,9 @@ import graft.util.Fs
   *    leaves either an unreferenced generation (invisible; aged GC
   *    reclaims it), an un-deleted claim (its owner's replay takes over),
   *    or a torn manifest (readers skip it; the slot number burns, the
-  *    version-gap contract of [[ManifestUpsertStore.putManifest]]). The
-  *    rename protocol's `recoverWindowCrash` / reader-side loud-torn-
-  *    generation checks have no analog — there is nothing to recover.
+  *    version-gap contract of [[ManifestUpsertStore.putManifest]]).
+  *    There is no recovery pass and no reader-side torn-state check —
+  *    there is nothing to recover.
   *
   * Crash/replay ordering per batch (at-least-once upstream assumed):
   * claim → pack spans into the deterministic gen (fsynced) → store merge
@@ -84,9 +84,9 @@ import graft.util.Fs
   * content-disjointness; identical ids AND identical content in two
   * feeds is a routing misdeployment).
   *
-  * Scale shape: identical to [[ManifestMaintainer]] — curation upstream,
-  * delta-sized md5-key fold, distinct-word × broadcast-model
-  * tokenization, window-local packing. The manifest file grows one JSON
+  * Scale shape per window: curation upstream, delta-sized md5-key fold,
+  * distinct-word × broadcast-model tokenization, window-local packing;
+  * history is touched only as the store's bucketed key set. The manifest file grows one JSON
   * entry (~120 bytes) per window: ~10 MB at 100k macro-batch windows,
   * read once per maintenance call — the Iceberg single-manifest regime;
   * sharding into a manifest list is the documented growth path beyond
@@ -97,6 +97,12 @@ import graft.util.Fs
   * commit per polled batch, replay-safe by transaction id); the commit
   * protocol itself is the public Iceberg/Delta optimistic-concurrency
   * model, shared with [[ManifestUpsertStore]].
+  *
+  * {{{
+  * val maint = new VersionedManifestMaintainer(store, tokPath, dir,
+  *   windowOf = _ + 2, seedOf = bid => 1000L + bid)
+  * docs.writeStream.foreachBatch(maint.processBatch _).start()
+  * }}}
   *
   * @param keepVersions  retained manifest versions (the time-travel /
   *   concurrent-reader horizon, exactly [[ManifestUpsertStore]]'s)
@@ -128,9 +134,10 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
 
   private def root = new java.io.File(manifestDir)
 
-  // model + hash are ONE cached artifact read (the ManifestMaintainer
-  // r17 invariant): two independent loads could straddle a racing
-  // retrain and pack spans under model B while stamping hash A
+  // model + hash are ONE cached artifact read: two independent loads
+  // could straddle a racing retrain and pack spans under model B while
+  // stamping hash A — the silent token-unit mix the stamp exists to
+  // prevent
   @volatile private var cached: (ServedModel, String) = null
 
   private def loaded(spark: SparkSession): (ServedModel, String) = {
@@ -291,8 +298,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     new java.io.File(root, s"claim-$window")
 
   /** Create-exclusive, CONTENT-ATOMIC claim (staged write + hard link):
-    * a visible claim always carries its full `writerId\nbatchId`, so the
-    * rename protocol's torn/empty-claim debris class cannot exist. Our
+    * a visible claim always carries its full `writerId\nbatchId`, so no
+    * torn or empty claim can exist. Our
     * own (writer+batch match) surviving claim is a crashed predecessor —
     * take over, replay forward. A foreign claim is loud.
     */
@@ -429,11 +436,12 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
         true
     }
 
-  /** Refuse to pack under a model the manifest is not versioned to —
-    * same loudness contract as [[ManifestMaintainer]], but the pin is a
-    * manifest FIELD, committed atomically with the first window: the
-    * crashed-empty-pin and racing-repair states of a standalone pin file
-    * cannot exist.
+  /** Refuse to pack under a model the manifest is not versioned to: a
+    * silent retrain of the artifact at `tokenizerPath` would mix TOKEN
+    * UNITS across windows with no record that it happened, so a mismatch
+    * fails loudly and names the explicit escape hatch, [[adoptModel]].
+    * The pin is a manifest FIELD, committed atomically with the first
+    * window, so no half-written pin state exists.
     */
   private def checkModel(m: Option[VManifest], h: String): Unit =
     m.filter(_.model != h).foreach { cur =>
@@ -459,14 +467,6 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   private def hasSpans(gen: String): Boolean =
     Option(genDir(gen).listFiles()) // null when the dir vanished mid-check
       .exists(_.exists(_.getName.endsWith(".parquet")))
-
-  /** Total row count of a generation dir from the parquet FOOTERS — a
-    * driver-side metadata read (KBs), replacing the one read-back Spark
-    * job per rewritten window the r19 emptiness check used to schedule.
-    * Shared definition since r20: [[graft.util.Fs.parquetRowCount]].
-    */
-  private def parquetRowCount(dir: java.io.File): Long =
-    Fs.parquetRowCount(dir)
 
   /** Referenced-generation read path: a generation a manifest references
     * was fsynced strictly before the PUT and GC keeps it alive as long
@@ -506,8 +506,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
 
   /** Apply one micro-batch of raw (curated) documents — the
     * `foreachBatch` entry point, also usable un-streamed (backfills,
-    * replays, tests). Same semantics as [[ManifestMaintainer
-    * .processBatch]]; see the class scaladoc for the rename-free
+    * replays, tests). A batch whose window is already committed at the
+    * same batchId is a replay and no-ops; see the class scaladoc for the
     * crash/replay ordering.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
@@ -580,21 +580,26 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   // ── Reads ────────────────────────────────────────────────────────────────
 
   /** All committed windows' spans with retracted documents filtered out
-    * — the manifest's merge-on-read rule, same as [[ManifestMaintainer
-    * .readManifest]]. No reader-side crash checks exist because no
-    * readable state is ever torn: the manifest is digest-validated and
-    * every generation it references was fsynced before the PUT.
+    * — the manifest's merge-on-read rule. A manifest whose windows are
+    * all spanless reads as zero rows. No reader-side crash checks exist
+    * because no readable state is ever torn: the manifest is digest-
+    * validated and every generation it references was fsynced before
+    * the PUT.
     */
-  def readManifest(spark: SparkSession): DataFrame = {
-    val m = currentManifest()
-    val spans = rawCommittedSpans(spark, m)
-    retractedIds(spark, m) match {
-      case Some(ids) =>
-        spans.join(org.apache.spark.sql.functions.broadcast(ids),
-          Seq(idCol), "left_anti")
-      case None => spans
-    }
-  }
+  def readManifest(spark: SparkSession): DataFrame =
+    visibleSpans(spark, currentManifest())
+
+  /** The span columns every generation, read and feed row carries. */
+  private def spanCols = Seq("window", idCol, "shuffle_pos", "n_tok",
+    "cum_before", "seq", "tok_start", "tok_end", "seq_offset")
+
+  private def withoutIds(spans: DataFrame,
+      ids: Option[DataFrame]): DataFrame =
+    ids.fold(spans)(i => spans.join(
+      org.apache.spark.sql.functions.broadcast(i), Seq(idCol), "left_anti"))
+
+  private def visibleSpans(spark: SparkSession, m: VManifest): DataFrame =
+    withoutIds(rawCommittedSpans(spark, m), retractedIds(spark, m))
 
   private def rawCommittedSpans(spark: SparkSession,
       m: VManifest): DataFrame = {
@@ -613,9 +618,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq("window", idCol, "shuffle_pos", "n_tok", "cum_before",
-        "seq", "tok_start", "tok_end", "seq_offset")
-        .map(StructField(_, LongType, nullable = false))))
+      StructType(spanCols.map(StructField(_, LongType, nullable = false))))
   }
 
   /** The serving manifest version — advances by one per committed state
@@ -639,13 +642,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       .getOrElse(throw new IllegalStateException(
         s"manifest $manifestDir: version $version is not retained " +
           s"(keepVersions=$keepVersions) or never committed"))
-    val spans = rawCommittedSpans(spark, m)
-    retractedIds(spark, m) match {
-      case Some(ids) =>
-        spans.join(org.apache.spark.sql.functions.broadcast(ids),
-          Seq(idCol), "left_anti")
-      case None => spans
-    }
+    visibleSpans(spark, m)
   }
 
   /** CHANGE FEED over manifest versions — the training consumer's tail
@@ -694,24 +691,15 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
           s"(keepVersions=$keepVersions) or never committed"))
     val mTo = at(toVersion)
     val mFrom = at(fromVersion)
-    val spanCols = Seq("window", idCol, "shuffle_pos", "n_tok",
-      "cum_before", "seq", "tok_start", "tok_end", "seq_offset")
     val nullL = lit(null).cast(
       org.apache.spark.sql.types.LongType)
     val retractedTo = retractedIds(spark, mTo)
     def tagged(gens: Seq[String], change: String): Option[DataFrame] =
       if (gens.isEmpty) None
-      else {
-        val spans = spark.read
-          .parquet(gens.map(servingDir(_, toVersion)): _*)
-        val filtered = retractedTo match {
-          case Some(ids) =>
-            spans.join(broadcast(ids), Seq(idCol), "left_anti")
-          case None => spans
-        }
-        Some(filtered.select(spanCols.map(col): _*)
-          .withColumn("change", lit(change)))
-      }
+      else Some(withoutIds(
+          spark.read.parquet(gens.map(servingDir(_, toVersion)): _*),
+          retractedTo)
+        .select(spanCols.map(col): _*).withColumn("change", lit(change)))
     val newGens = mTo.windows.toSeq.collect {
       case (w, e) if !mFrom.windows.contains(w) => e.gen
     }.flatten.sorted
@@ -755,9 +743,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq("window", idCol, "shuffle_pos", "n_tok", "cum_before",
-        "seq", "tok_start", "tok_end", "seq_offset")
-        .map(StructField(_, LongType, nullable = true)) :+
+      StructType(spanCols.map(StructField(_, LongType, nullable = true)) :+
         StructField("change", StringType, nullable = false)))
   }
 
@@ -787,8 +773,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     * crash before the PUT leaves an unreferenced dir (aged GC) and the
     * caller re-runs — retraction is an idempotent set union. The ledger
     * is takedown-sized and intentionally never pruned; the ban-on-
-    * recrawl guarantee lives in the survivor STORE's kept hashes (same
-    * contract as [[ManifestMaintainer.retract]]).
+    * recrawl guarantee lives in the survivor STORE's kept hashes:
+    * retracted content cannot re-enter under a new id.
     */
   def retract(ids: DataFrame): Unit = {
     root.mkdirs()
@@ -845,9 +831,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
         val repacked = graft.operators.Shards.packSpans(shuf,
             "shuffle_pos", "n_tok", budget)
           .withColumn("window", lit(windowId))
-          .select(col("window"), col(idCol), col("shuffle_pos"), col("n_tok"),
-            col("cum_before"), col("seq"), col("tok_start"), col("tok_end"),
-            col("seq_offset"))
+          .select(spanCols.map(col): _*)
         // the compacted entry keeps its batchId/model/writer stamps —
         // compaction rewrites spans, not delivery or token units
         rewriteWindow(spark, windowId, repacked, entry)(identity)
@@ -874,7 +858,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     // Read from the parquet FOOTERS driver-side (r19): the row count is
     // authoritative metadata, and the former read-back was one Spark job
     // per rewritten window (priced in SCALING's r19 protocol-delta note).
-    val newGen = if (hasSpans(gen) && parquetRowCount(genDir(gen)) > 0L)
+    val newGen = if (hasSpans(gen) && Fs.parquetRowCount(genDir(gen)) > 0L)
         Some(gen)
       else { // emptied entirely
         Fs.rmTree(genDir(gen)); None
@@ -917,12 +901,12 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   private class RewriteAbort(msg: String) extends IllegalStateException(msg)
 
   /** Physically re-pack one committed window under the manifest's
-    * CURRENT model — the uniform-units restore after [[adoptModel]],
-    * same source-batch contract as [[ManifestMaintainer
-    * .retokenizeWindow]] (spans store offsets, not text). A spanless
-    * window RESTAMPS its manifest entry with the adopted model (one
-    * PUT, no data write). The rewrite keeps the original batchId and
-    * writer; retracted documents drop.
+    * CURRENT model — the uniform-units restore after [[adoptModel]]. The
+    * caller supplies the window's source batch, because spans store
+    * token offsets, not text; retracted documents drop during the
+    * rewrite, so the batch may omit their texts. A spanless window
+    * RESTAMPS its manifest entry with the adopted model (one PUT, no
+    * data write). The rewrite keeps the original batchId and writer.
     */
   def retokenizeWindow(spark: SparkSession, windowId: Long,
       sourceBatch: DataFrame, seed: Long): Unit = {
@@ -935,7 +919,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     val entry = m0.windows(windowId)
     if (entry.gen.isEmpty) {
       // spanless: restamp the adopted model so the uniform-units-restored
-      // record holds (the ManifestMaintainer ADVICE-r17 contract)
+      // record holds for every window, spanless ones included
       if (entry.model != h) commitWithRetry(s"window $windowId restamp") {
         (m, slot) =>
           val base = m.getOrElse(m0)
@@ -980,9 +964,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
 
   /** Explicitly version the manifest onto the artifact's CURRENT model:
     * one PUT replaces the pin and appends the previous hash to the
-    * embedded history — atomic together, unlike the rename protocol's
-    * separate `_MODEL_HISTORY` append. Idempotent; legal pre-bootstrap
-    * (pins the model for the first window).
+    * embedded history — atomic together. Idempotent; legal
+    * pre-bootstrap (pins the model for the first window).
     */
   def adoptModel(spark: SparkSession): Unit = {
     cached = null
@@ -1000,9 +983,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     gc()
   }
 
-  /** Adopted-model audit trail, oldest first (the `_MODEL_HISTORY`
-    * equivalent, read from the manifest).
-    */
+  /** Adopted-model audit trail, oldest first, read from the manifest. */
   def modelHistory(): Seq[String] =
     currentState()._1.map(_.history).getOrElse(Seq.empty)
 

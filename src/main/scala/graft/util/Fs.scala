@@ -111,15 +111,29 @@ object Fs {
     * pure IO wait, so overlapping requests lets the device coalesce
     * flushes. Sized by `SPARK_GRAFT_FSYNC_THREADS` (a deployment tunes it
     * to its storage: object stores never reach here, NVMe likes more,
-    * a single spinning disk wants 1); default 8. Daemon threads — the
-    * pool must never block JVM exit.
+    * a single spinning disk wants 1); default min(8, cores). Daemon
+    * threads — the pool must never block JVM exit.
     */
-  private lazy val fsyncPool: java.util.concurrent.ExecutorService = {
-    val n = sys.env.get("SPARK_GRAFT_FSYNC_THREADS").map(_.toInt)
-      .getOrElse(math.min(8, Runtime.getRuntime.availableProcessors()))
-    java.util.concurrent.Executors.newFixedThreadPool(math.max(1, n),
+  private lazy val fsyncPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(fsyncThreads,
       r => { val t = new Thread(r, "graft-fsync"); t.setDaemon(true); t })
-  }
+
+  /** Parsed once when `Fs` initialises, so a bad deployment setting
+    * fails before the first commit instead of in the middle of one.
+    */
+  private val fsyncThreads: Int = parseFsyncThreads(
+    sys.env.get("SPARK_GRAFT_FSYNC_THREADS"),
+    Runtime.getRuntime.availableProcessors())
+
+  /** `SPARK_GRAFT_FSYNC_THREADS`: unset means min(8, cores); anything
+    * but an integer >= 1 is rejected, naming the variable and the value.
+    */
+  private[util] def parseFsyncThreads(raw: Option[String], cores: Int): Int =
+    raw.map { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_FSYNC_THREADS must be an integer >= 1, got '$v'"))
+    }.getOrElse(math.min(8, cores))
 
   /** fsync a batch of regular files in parallel, propagating the FIRST
     * failure (a durability failure must fail the commit that depends on

@@ -57,7 +57,8 @@ class BpeTrainSpec extends SparkSpec {
         val got = BpeTrain.trainFromCounts(counts, numMerges = 3)
           .orderBy("rank").as[(Long, String, String, Long)].collect().toSeq
         assert(got.map(x => (x._2, x._3)) == Seq(("e", "s"), ("es", "t"), ("l", "o")))
-        Thread.sleep(1500) // listener bus is async; drain before asserting
+        // listener bus is async; drain before asserting
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         // 3 merge rounds + round 0 + the final learned-table collect
         assert(actions.get() <= 5,
           s"expected <= 5 actions for a 3-merge train (1 checkpoint per " +

@@ -73,7 +73,8 @@ class StoreLookupSpec extends SparkSpec {
         // probe; LocalTableScan serves head() without a job) — the r19
         // shape scheduled a 1-row cluster job PER PROBE KEY here
         store.lookup(77L)
-        Thread.sleep(1500) // listener bus is async; drain before asserting
+        // listener bus is async; drain before asserting
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         assert(jobs.get() === 0,
           s"lookup() plan construction scheduled ${jobs.get()} Spark " +
             "job(s) — the bucket probe must evaluate driver-side")

@@ -15,20 +15,29 @@ import graft.operators.{ManifestPipeline, TokenizerStore, UnigramLm}
 class VersionedManifestMaintainerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fixture(work: java.nio.file.Path,
-      grace: Long = 24 * 3600 * 1000L) = {
+  /** A survivor store bootstrapped with two seed documents, plus their
+    * survivor rows (the tokenizer's training corpus).
+    */
+  private def seededStore(work: java.nio.file.Path) = {
     val batch0 = Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text")
     val store = new ManifestUpsertStore(spark, work.resolve("surv").toString,
       pkCols = Seq("content_hash"), numBuckets = 4)
-    val surv0 = ManifestPipeline
-      .initializeSurvivors(store, batch0, "doc_id", "text")
+    (store, ManifestPipeline
+      .initializeSurvivors(store, batch0, "doc_id", "text"))
+  }
+
+  /** Seeded store + a unigram tokenizer at `work/tok` + a maintainer. */
+  private def fixture(work: java.nio.file.Path,
+      grace: Long = 24 * 3600 * 1000L, keepVersions: Int = 3) = {
+    val (store, surv0) = seededStore(work)
     val tokPath = work.resolve("tok").toString
     TokenizerStore.saveUnigram(tokPath,
       UnigramLm.train(surv0, "text", vocabSize = 50, maxPieceLen = 3,
         seedSize = 10, emIters = 1, pruneFraction = 0.0), spark)
     val maint = new VersionedManifestMaintainer(store, tokPath,
       work.resolve("manifest").toString,
-      windowOf = _ + 1L, seedOf = 100L + _, orphanGraceMs = grace)
+      windowOf = _ + 1L, seedOf = 100L + _, orphanGraceMs = grace,
+      keepVersions = keepVersions)
     (store, maint)
   }
 
@@ -207,16 +216,8 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
   test("two writers with disjoint window spaces race one manifest: zero lost, zero double-packed, rebased commits") {
     val work = java.nio.file.Files.createTempDirectory("graft-vmm5")
     try {
-      val batch0 = Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text")
-      val store = new ManifestUpsertStore(spark,
-        work.resolve("surv").toString, pkCols = Seq("content_hash"),
-        numBuckets = 4)
-      val surv0 = ManifestPipeline
-        .initializeSurvivors(store, batch0, "doc_id", "text")
+      val (store, _) = fixture(work)
       val tokPath = work.resolve("tok").toString
-      TokenizerStore.saveUnigram(tokPath,
-        UnigramLm.train(surv0, "text", vocabSize = 50, maxPieceLen = 3,
-          seedSize = 10, emIters = 1, pruneFraction = 0.0), spark)
       def maintFor(base: Long) = new VersionedManifestMaintainer(store,
         tokPath, work.resolve("manifest").toString,
         windowOf = bid => base + bid, seedOf = 200L + _,
@@ -279,6 +280,28 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
     } finally graft.util.Fs.rmTree(work.toFile)
   }
 
+  test("a takedown sweep no-ops over empty committed windows, and an all-empty manifest reads as zero rows") {
+    val work = java.nio.file.Files.createTempDirectory("graft-vmm21")
+    try {
+      val (_, maint) = fixture(work)
+      // the first batch fully duplicates the bootstrap content, so the
+      // ONLY committed window is spanless: a healthy manifest reads empty
+      maint.processBatch(Seq((30L, "aa bb")).toDF("doc_id", "text"), 0L)
+      assert(maint.readManifest(spark).isEmpty,
+        "all-empty manifest reads as zero rows, not an error")
+      // a real window, a retraction, then compaction over EVERY window —
+      // the spanless one must no-op instead of killing the sweep
+      maint.processBatch(Seq((31L, "ab ba")).toDF("doc_id", "text"), 1L)
+      maint.retract(Seq(31L).toDF("doc_id"))
+      val v = maint.currentVersion
+      maint.compactWindow(spark, 1L, seed = 100L)
+      assert(maint.currentVersion === v, "a spanless window publishes nothing")
+      maint.compactWindow(spark, 2L, seed = 101L) // rewritten to empty
+      assert(maint.readManifest(spark).isEmpty)
+      assert(maint.compactRetracted(spark, 99L + _).isEmpty)
+    } finally graft.util.Fs.rmTree(work.toFile)
+  }
+
   test("a crashed rewrite changes NOTHING for readers — no healing protocol exists because no state needs healing") {
     val work = java.nio.file.Files.createTempDirectory("graft-vmm7")
     try {
@@ -290,8 +313,7 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
         .collect().toSet
       // a rewrite that died after writing its generation but before its
       // PUT is just an unreferenced dir: readers are oblivious, no loud
-      // reader-side crash state exists (contrast ManifestMaintainer's
-      // torn _tmp/_old generations), and the re-run compacts cleanly
+      // reader-side crash state exists, and the re-run compacts cleanly
       val orphan = new java.io.File(work.resolve("manifest").toFile,
         "wgen-1-rw-deadbeef")
       Seq((1L, 10L, 0L, 1L, 0L, 0L, 0L, 1L, 0L))
@@ -358,6 +380,61 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
       maint2.retokenizeWindow(spark, 2L,
         Seq((20L, "ab ba")).toDF("doc_id", "text"), seed = 101L)
       assert(maint2.windowModelStamp(2L) === v2, "spanless window restamped")
+      // a source batch may legally omit a retracted document's text (its
+      // owner may be required to delete it): the rewrite drops the doc
+      maint2.retract(Seq(12L).toDF("doc_id"))
+      maint2.retokenizeWindow(spark, 1L, batch1.where($"doc_id" =!= 12L),
+        seed = 100L)
+      assert(spanSet(maint2).filter(_(0) == 1L).map(_(1)) === Set(10L))
+    } finally graft.util.Fs.rmTree(work.toFile)
+  }
+
+  test("a byte-level maintainer packs a window carrying a script the model never saw") {
+    val work = java.nio.file.Files.createTempDirectory("graft-vmm22")
+    try {
+      val (store, surv0) = seededStore(work)
+      val tokPath = work.resolve("tok").toString
+      TokenizerStore.saveUnigram(tokPath,
+        graft.operators.ByteLevel.trainUnigramBytes(surv0, "text",
+          vocabSize = 400, maxPieceLen = 3, seedSize = 10, emIters = 1,
+          pruneFraction = 0.0), spark)
+      val maint = new VersionedManifestMaintainer(store, tokPath,
+        work.resolve("manifest").toString,
+        windowOf = _ + 1L, seedOf = 100L + _, byteLevel = true)
+      // the operational case byteLevel exists for: a crawl window brings
+      // CJK + emoji the bootstrap tokenizer never trained on — a char
+      // maintainer would kill the stream; the byte one packs it
+      maint.processBatch(Seq((10L, "世界 😀 привет")).toDF("doc_id", "text"), 0L)
+      val spans = spanSet(maint)
+      assert(spans.nonEmpty && spans.forall(_(1) == 10L))
+      assert(spans.head(3).asInstanceOf[Long] > 0L, "byte tokens counted")
+    } finally graft.util.Fs.rmTree(work.toFile)
+  }
+
+  test("a BPE merge-table artifact serves the maintainer through the model-kind seam") {
+    val work = java.nio.file.Files.createTempDirectory("graft-vmm23")
+    try {
+      val (store, surv0) = seededStore(work)
+      val tokPath = work.resolve("tok").toString
+      TokenizerStore.saveMerges(tokPath,
+        graft.operators.ByteLevel.trainBpeBytes(surv0, "text", numMerges = 4))
+      // the maintainer loads whatever KIND the artifact holds — a BPE
+      // merge table serves the compiled greedy fusion, byte-level, so
+      // unseen scripts pack through unmerged byte symbols
+      val maint = new VersionedManifestMaintainer(store, tokPath,
+        work.resolve("manifest").toString,
+        windowOf = _ + 1L, seedOf = 100L + _, byteLevel = true)
+      val batch = Seq((10L, "ab ba"), (11L, "世界 😀")).toDF("doc_id", "text")
+      maint.processBatch(batch, 0L)
+      val spans = spanSet(maint)
+      assert(spans.map(_(1)).toSet === Set(10L, 11L))
+      // the packed n_tok equals the direct compiled-serving count
+      val direct = graft.operators.ByteLevel.tokenCountsBpeBytes(batch,
+          "doc_id", "text", TokenizerStore.loadMerges(spark, tokPath))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      spans.foreach(s =>
+        assert(s(3) === direct(s(1).asInstanceOf[Long]),
+          s"span n_tok diverged from direct serving for doc ${s(1)}"))
     } finally graft.util.Fs.rmTree(work.toFile)
   }
 
@@ -483,20 +560,8 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
   test("deletion-propagating feed: replica identity across retraction-without-compaction, an emptied window, and a replayed poll — where the span-only feed provably diverged") {
     val work = java.nio.file.Files.createTempDirectory("graft-vmm14")
     try {
-      val batch0 = Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text")
-      val store = new ManifestUpsertStore(spark,
-        work.resolve("surv").toString, pkCols = Seq("content_hash"),
-        numBuckets = 4)
-      val surv0 = ManifestPipeline
-        .initializeSurvivors(store, batch0, "doc_id", "text")
-      val tokPath = work.resolve("tok").toString
-      TokenizerStore.saveUnigram(tokPath,
-        UnigramLm.train(surv0, "text", vocabSize = 50, maxPieceLen = 3,
-          seedSize = 10, emIters = 1, pruneFraction = 0.0), spark)
       // every poll endpoint must stay retained across the whole lifecycle
-      val maint = new VersionedManifestMaintainer(store, tokPath,
-        work.resolve("manifest").toString,
-        windowOf = _ + 1L, seedOf = 100L + _, keepVersions = 8)
+      val (_, maint) = fixture(work, keepVersions = 8)
       maint.processBatch(Seq((10L, "ab ba"), (11L, "aa cc"), (12L, "ad da"))
         .toDF("doc_id", "text"), 0L)
       maint.processBatch(Seq((20L, "ca bc"), (21L, "bd db"))
@@ -785,19 +850,7 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
   test("poll-boundary invariance: one big poll and per-version polls converge a replica to the same state") {
     val work = java.nio.file.Files.createTempDirectory("graft-vmm20")
     try {
-      val batch0 = Seq((1L, "aa bb"), (2L, "cc dd")).toDF("doc_id", "text")
-      val store = new ManifestUpsertStore(spark,
-        work.resolve("surv").toString, pkCols = Seq("content_hash"),
-        numBuckets = 4)
-      val surv0 = ManifestPipeline
-        .initializeSurvivors(store, batch0, "doc_id", "text")
-      val tokPath = work.resolve("tok").toString
-      TokenizerStore.saveUnigram(tokPath,
-        UnigramLm.train(surv0, "text", vocabSize = 50, maxPieceLen = 3,
-          seedSize = 10, emIters = 1, pruneFraction = 0.0), spark)
-      val maint = new VersionedManifestMaintainer(store, tokPath,
-        work.resolve("manifest").toString,
-        windowOf = _ + 1L, seedOf = 100L + _, keepVersions = 10)
+      val (_, maint) = fixture(work, keepVersions = 10)
       maint.processBatch(Seq((10L, "ab ba"), (11L, "aa cc"), (12L, "ad da"))
         .toDF("doc_id", "text"), 0L)
       val v0 = maint.currentVersion
