@@ -13,7 +13,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   val StreamQueryName = "stream_cdc_merge"
-  val StreamMorQueryName = "stream_cdc_merge_mor"
   val StreamManifestQueryName = "stream_cdc_merge_manifest"
   val StreamManifest2wQueryName = "stream_cdc_merge_manifest_2w"
   val StreamManifest2f1wQueryName = "stream_cdc_merge_manifest_2feed_1w"
@@ -52,9 +51,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val only = args.toSet
     val unknown = only.diff(
-      SparkEntry.queries.keySet + StreamQueryName + StreamMorQueryName +
-        StreamManifestQueryName + StreamManifest2wQueryName +
-        StreamManifest2f1wQueryName)
+      SparkEntry.queries.keySet + StreamQueryName + StreamManifestQueryName +
+        StreamManifest2wQueryName + StreamManifest2f1wQueryName)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -110,12 +108,8 @@ object Bench {
       (if (only.isEmpty || only.contains(StreamQueryName))
         median3Stream(() => StreamBench.run(spark, sfDir))
       else Nil) ++
-      (if (only.isEmpty || only.contains(StreamMorQueryName))
-        median3Stream(() => StreamBench.run(spark, sfDir, mergeOnRead = true))
-      else Nil) ++
       (if (only.isEmpty || only.contains(StreamManifestQueryName))
-        median3Stream(() =>
-          StreamBench.run(spark, sfDir, mergeOnRead = true, manifest = true))
+        median3Stream(() => StreamBench.run(spark, sfDir, manifest = true))
       else Nil) ++
       (if (only.isEmpty || only.contains(StreamManifest2wQueryName))
         median3Stream(() => StreamBench.runTwoWriter(spark, sfDir))
@@ -248,16 +242,16 @@ object Bench {
     // r20: the median-of-3 `.spread` additions pushed even the
     // zero-batch-entry line past the tail window, so the stream PHASE
     // detail now shrinks in tiers too — the parents, the dominant
-    // merge_write/compact phases, and the self-disposition entries
-    // (.spread/.conflicts/.policy_noops/.gc_sec) are the last to go;
+    // merge_write/compact phases and the self-disposition entries
+    // (.spread/.conflicts/.policy_noops/.gc_sec) are the last to go, and
+    // `.swap`, the commit protocol's health phase, is never dropped;
     // every elided value stays in target/bench.json.
     val streamDetailTiers: Seq[String => Boolean] = Seq(
       _ => true, // tier 0: every stream dotted entry
-      k => !(k.endsWith(".compact_swap") || k.endsWith(".swap") ||
-        k.endsWith(".compact_write") || k.endsWith(".merge_fold") ||
-        k.endsWith(".other")),
-      k => !k.contains(".") || k.endsWith(".spread") ||
-        k.endsWith(".failed_repeats"))
+      k => !(k.endsWith(".compact_swap") || k.endsWith(".compact_write") ||
+        k.endsWith(".merge_fold") || k.endsWith(".other")),
+      k => !k.contains(".") || k.endsWith(".swap") ||
+        k.endsWith(".spread") || k.endsWith(".failed_repeats"))
     def lineAt(n: Int, streamKeep: String => Boolean): String = {
       val streamKept = stream.filter { case (k, _) =>
         !k.startsWith("stream_") || streamKeep(k) }
@@ -391,8 +385,9 @@ object StoreReadBench {
       val lookup = median3(noop(
         SparkEntry.LookupProbeKeys.map(store.lookup(_))
           .reduce(_.unionByName(_))))
-      val timeTravel = median3(noop(store.snapshotAsOf(1)))
-      val cdf = median3(noop(store.changesBetween(1, 2)))
+      val v = SparkEntry.ReplayAfterBatch1
+      val timeTravel = median3(noop(store.snapshotAt(v)))
+      val cdf = median3(noop(store.changesBetween(v, v + 1)))
       Seq("q_store_lookup.build" -> build,
         "q_store_lookup.read" -> lookup,
         "q_store_time_travel.read" -> timeTravel,
@@ -406,17 +401,18 @@ object StoreReadBench {
 }
 
 /** Streaming merge-throughput benchmark: the engine's core loop (SURVEY.md
-  * §3.1) measured end-to-end — initialize an [[graft.streaming.UpsertStore]]
-  * replica of `customer`, then replay the sf events table as a CDC change
+  * §3.1) measured end-to-end — initialize a keyed-store replica of
+  * `customer` (the copy-on-write [[graft.streaming.UpsertStore]], or the
+  * merge-on-read [[graft.streaming.ManifestUpsertStore]] with
+  * `manifest = true`), then replay the sf events table as a CDC change
   * feed through [[graft.streaming.CdcStreamJob.processBatch]] in
   * `numBatches` micro-batch windows (window → latest-per-key fold against
   * the master → bucket-partitioned idempotent merge → ledger advance).
   * Reported seconds cover the full replay, not per-batch bests: throughput
   * of a stateful loop only means anything measured across its whole run —
-  * INCLUDING maintenance: merges skip the bucket-aligning exchange to stay
-  * low-latency and delegate file health to `compact()`, so the loop runs a
-  * compaction every `compactEvery` batches. A number that excluded it would
-  * flatter a design whose maintenance bill comes due at 100 TB.
+  * INCLUDING maintenance, so the loop runs a compaction every
+  * `compactEvery` batches. A number that excluded it would flatter a
+  * design whose maintenance bill comes due at 100 TB.
   */
 object StreamBench {
   /** Returns the total plus dotted per-phase entries
@@ -428,14 +424,15 @@ object StreamBench {
     * re-profiling (VERDICT r7 #6). Phases sum to the total by
     * construction.
     *
-    * MOR compaction is POLICY-DRIVEN from inside [[graft.streaming
-    * .CdcStreamJob.processBatch]] (`autoCompactDeltas = compactEvery`) —
-    * the loop owns its maintenance cadence (VERDICT r9 #5); the COW loop
-    * keeps the external hand-scheduled cadence (COW merges publish no
-    * deltas, so a debt policy has nothing to observe there).
+    * The manifest store's compaction is POLICY-DRIVEN from inside
+    * [[graft.streaming.CdcStreamJob.processBatch]] (`autoCompactDeltas =
+    * compactEvery`) — the loop owns its maintenance cadence (VERDICT r9
+    * #5); the COW loop keeps the external hand-scheduled cadence (COW
+    * merges publish no deltas, so a debt policy has nothing to observe
+    * there).
     */
   def run(spark: SparkSession, sfDir: String, numBatches: Int = 10,
-      compactEvery: Int = 5, mergeOnRead: Boolean = false,
+      compactEvery: Int = 5,
       manifest: Boolean = false): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import graft.cdc.Cdc
@@ -447,10 +444,11 @@ object StreamBench {
       .select(col("user_id"), col("event_id").alias(Cdc.TransactionId))
     val maxTx = feed.agg(max(Cdc.TransactionId)).head().getLong(0)
     val work = java.nio.file.Files.createTempDirectory("graft-streambench")
+    val q =
+      if (manifest) Bench.StreamManifestQueryName else Bench.StreamQueryName
     try {
-      // manifest = the object-store (rename-free) commit protocol riding
-      // the SAME loop — benched head-to-head with the rename-based MOR
-      // store so the protocol tax is a measured number, not a guess
+      // manifest = the merge-on-read store riding the SAME loop, benched
+      // head-to-head with the copy-on-write store
       val store: KeyedUpsertStore =
         if (manifest) {
           val s = new ManifestUpsertStore(spark,
@@ -462,8 +460,7 @@ object StreamBench {
           s
         } else {
           val s = new UpsertStore(spark, work.resolve("store").toString,
-            pkCols = Seq("user_id"), numBuckets = 32,
-            mergeOnRead = mergeOnRead)
+            pkCols = Seq("user_id"), numBuckets = 32)
           s.initialize(Cdc.initialLoad(
             customer.select(col("c_custkey").alias("user_id"), col("c_name"),
               col("c_acctbal"))))
@@ -475,11 +472,10 @@ object StreamBench {
           col("c_name"), col("c_acctbal")),
         store = store, ledger = ledger,
         keyJoin = Seq("user_id" -> "user_id"),
-        // MOR/manifest: the loop compacts itself when the delta debt hits
-        // the threshold — same cadence the hand-scheduler produced (debt
+        // manifest: the loop compacts itself when the delta debt hits the
+        // threshold — same cadence the hand-scheduler produced (debt
         // reaches `compactEvery` every `compactEvery` batches)
-        autoCompactDeltas =
-          if (mergeOnRead || manifest) Some(compactEvery) else None)
+        autoCompactDeltas = if (manifest) Some(compactEvery) else None)
       val step = math.max(1L, maxTx / numBatches)
       UpsertStore.drainPhases() // reset: earlier merges must not leak in
       val t0 = System.nanoTime()
@@ -492,11 +488,10 @@ object StreamBench {
         lo = hi
         batch += 1
         // COW merges are bucket-aligned and publish no deltas — keep the
-        // external maintenance cadence the MOR loop drives via its policy
+        // external maintenance cadence the manifest loop drives via its
+        // policy
         store match {
-          case cow: UpsertStore
-              if !mergeOnRead && !manifest && batch % compactEvery == 0 =>
-            cow.compact()
+          case cow: UpsertStore if batch % compactEvery == 0 => cow.compact()
           case _ =>
         }
       }
@@ -504,11 +499,12 @@ object StreamBench {
       val total = (System.nanoTime() - t0) / 1e9
       val merged = UpsertStore.drainPhases()
       // merge() and compact() both feed the phase counters (compact's
-      // write/swap are separate names, so nothing double-counts). In MOR
-      // mode merge_fold reads 0 — there is no changed-bucket probe, so the
-      // CDC fold computes lazily INSIDE the delta write (merge_write
-      // covers fold + IO there) — and `other` carries the read-side
-      // snapshot fold, the price MOR trades its O(batch) writes for.
+      // write/swap are separate names, so nothing double-counts). On the
+      // manifest store merge_fold reads 0 — there is no changed-bucket
+      // probe, so the CDC fold computes lazily INSIDE the delta write
+      // (merge_write covers fold + IO there) — and `other` carries the
+      // read-side snapshot fold, the price MOR trades its O(batch) writes
+      // for.
       // compact.{write,swap} decompose the compact total the same way
       // (compact_write = fold compute + staging IO; the remainder is
       // listing/fsync/lease overhead).
@@ -516,10 +512,6 @@ object StreamBench {
       val write = merged.getOrElse("merge_write", 0.0)
       val swap = merged.getOrElse("swap", 0.0)
       val compactSec = merged.getOrElse("compact", 0.0)
-      val q =
-        if (manifest) Bench.StreamManifestQueryName
-        else if (mergeOnRead) Bench.StreamMorQueryName
-        else Bench.StreamQueryName
       Seq(q -> total,
         s"$q.merge_fold" -> fold,
         s"$q.merge_write" -> write,
@@ -531,10 +523,6 @@ object StreamBench {
           math.max(0.0, total - fold - write - swap - compactSec))
     } catch {
       case e: Throwable =>
-        val q =
-          if (manifest) Bench.StreamManifestQueryName
-          else if (mergeOnRead) Bench.StreamMorQueryName
-          else Bench.StreamQueryName
         System.err.println(s"[bench] $q failed: ${e.getMessage}")
         Seq(q -> -1.0)
     } finally {

@@ -38,29 +38,25 @@ object SparkEntry {
     Cdc.delta(changeFeed(s, dir), t(s, dir, "customer"),
       Seq(("user_id", "c_custkey")), lo = 100L, hi = 1000000000L)
 
-  /** Two-batch MOR replay store over `customer`, shared by the
-    * time-travel and change-data-feed gates: batch 1 deletes every 7th key
-    * and bumps every remaining 3rd by +100; batch 2 bumps every 5th by
-    * +200 (re-inserting deleted keys). `f`'s result is eagerly
-    * checkpointed so the temp store can be removed before consumption.
-    */
-  // Deliberately NOT cached across the two gates that share it (review r9
+  // Deliberately NOT cached across the gates that share it (review r9
   // suggested one build serving both): Bench's between-query state sweep
   // unpersists every RDD including localCheckpoint blocks, which have no
   // lineage to recompute from — a cached frame would throw on its second
   // use. Each gate pays its own small build (two O(batch) MOR merges).
-  /** Build the two-batch replay store the q_store_* gates read (also
-    * driven standalone by the bench's read-path isolation entries —
+  /** Build the two-batch merge-on-read replay store over `customer` that
+    * the q_store_* time-travel, lookup and change-data-feed gates read
+    * (also driven standalone by the bench's read-path isolation entries —
     * VERDICT r9 #7). Batch 1: +100 on every 3rd key, delete every 7th;
     * batch 2: +200 on every 5th key (re-inserting deleted multiples
-    * of 35).
+    * of 35). Batch 1 publishes version [[ReplayAfterBatch1]] and batch 2
+    * the one after it.
     */
   private[graft] def buildReplayStore(s: SparkSession, dir: String,
-      storeDir: String): graft.streaming.UpsertStore = {
+      storeDir: String): graft.streaming.ManifestUpsertStore = {
     val cust = t(s, dir, "customer").select(
       col("c_custkey").alias("user_id"), col("c_name"), col("c_acctbal"))
-    val store = new graft.streaming.UpsertStore(s, storeDir,
-      pkCols = Seq("user_id"), numBuckets = 8, mergeOnRead = true)
+    val store = new graft.streaming.ManifestUpsertStore(s, storeDir,
+      pkCols = Seq("user_id"), numBuckets = 8)
     store.initialize(Cdc.initialLoad(cust))
     store.merge(cust
       .where(col("user_id") % 7 === 0 || col("user_id") % 3 === 0)
@@ -78,13 +74,18 @@ object SparkEntry {
     store
   }
 
+  /** The replay store's version after batch 1: the initial load publishes
+    * version 1, and each merge the next one.
+    */
+  private[graft] val ReplayAfterBatch1 = 2L
+
   /** The eight q_store_lookup probe keys: untouched / updated / LWW-
     * overridden / deleted / delete-then-reinserted coverage.
     */
   private[graft] val LookupProbeKeys = Seq(1L, 3L, 5L, 7L, 8L, 15L, 21L, 35L)
 
   private def withReplayStore(s: SparkSession, dir: String)(
-      f: graft.streaming.UpsertStore => DataFrame): DataFrame = {
+      f: graft.streaming.ManifestUpsertStore => DataFrame): DataFrame = {
     val work = java.nio.file.Files.createTempDirectory("graft-replaystore")
     def rm(x: java.io.File): Unit = graft.util.Fs.rmTree(x)
     try f(buildReplayStore(s, dir, work.resolve("store").toString))
@@ -1478,9 +1479,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-incrman")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           val surv1 = graft.operators.ManifestPipeline
             .initializeSurvivors(store, batch1, "doc_id", "text")
             .localCheckpoint(true)
@@ -1533,9 +1534,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-retract")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           // empty bootstrap: EVERY window (including the first) flows
           // through the same fold — the maintainer's uniform path
           store.initialize(Cdc.initialLoad(
@@ -1590,9 +1591,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-ttrav")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           store.initialize(Cdc.initialLoad(
             Seq.empty[(String, Long)].toDF("content_hash", "doc_id")))
           val tokPath = work.resolve("tok").toString
@@ -1652,9 +1653,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-feedman")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           store.initialize(Cdc.initialLoad(
             Seq.empty[(String, Long)].toDF("content_hash", "doc_id")))
           val tokPath = work.resolve("tok").toString
@@ -1748,9 +1749,9 @@ object SparkEntry {
         val b2 = gated.where(col("doc_id") >= 300)
         val work = java.nio.file.Files.createTempDirectory("graft-maniflow")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           val surv0 = graft.operators.ManifestPipeline
             .initializeSurvivors(store, b0, "doc_id", "text")
             .localCheckpoint(true)
@@ -1878,9 +1879,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-retok")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           store.initialize(Cdc.initialLoad(
             Seq.empty[(String, Long)].toDF("content_hash", "doc_id")))
           val tokPath = work.resolve("tok").toString
@@ -1944,9 +1945,9 @@ object SparkEntry {
         val batch2 = gated.where(col("doc_id") >= IncrementalSplitId)
         val work = java.nio.file.Files.createTempDirectory("graft-takedown")
         try {
-          val store = new graft.streaming.UpsertStore(s,
+          val store = new graft.streaming.ManifestUpsertStore(s,
             work.resolve("surv").toString, pkCols = Seq("content_hash"),
-            numBuckets = 8, mergeOnRead = true)
+            numBuckets = 8)
           store.initialize(Cdc.initialLoad(
             Seq.empty[(String, Long)].toDF("content_hash", "doc_id")))
           val tokPath = work.resolve("tok").toString
@@ -2916,9 +2917,9 @@ object SparkEntry {
         .drop("l_shipdate")
       val work = java.nio.file.Files.createTempDirectory("graft-hiercdc")
       try {
-        val store = new graft.streaming.UpsertStore(s,
+        val store = new graft.streaming.ManifestUpsertStore(s,
           work.resolve("store").toString, pkCols = Seq("o_orderkey"),
-          numBuckets = 8, mergeOnRead = true)
+          numBuckets = 8)
         store.initialize(Cdc.initialLoad(
           Hierarchy.nest(parent, items.drop("l_shipdate"), join,
             field = "items", childCols = itemCols)))
@@ -2982,9 +2983,9 @@ object SparkEntry {
             col("o_custkey") + 1000).otherwise(col("o_custkey")))
       val work = java.nio.file.Files.createTempDirectory("graft-hierboth")
       try {
-        val store = new graft.streaming.UpsertStore(s,
+        val store = new graft.streaming.ManifestUpsertStore(s,
           work.resolve("store").toString, pkCols = Seq("o_orderkey"),
-          numBuckets = 8, mergeOnRead = true)
+          numBuckets = 8)
         store.initialize(Cdc.initialLoad(
           Hierarchy.nest(parent, items.drop("l_shipdate"), join,
             field = "items", childCols = itemCols)))
@@ -3013,15 +3014,16 @@ object SparkEntry {
     // TIME TRAVEL through the MOR store (ST4/ST6 extension — the
     // Delta/Iceberg `VERSION AS OF` analog): initialize a replica from
     // customer, apply two folded CDC batches as sequenced deltas, then
-    // read `snapshotAsOf(1)` — the batch-2 effects (+200 on every 5th key,
-    // re-inserts of deleted keys) must be invisible, which only holds if
-    // the store really serves the historical version, not the latest. The
+    // read the version after batch 1 — the batch-2 effects (+200 on every
+    // 5th key, re-inserts of deleted keys) must be invisible, which only
+    // holds if the store really serves the historical version, not the
+    // latest. The
     // oracle recomputes batch-1 state from customer arithmetic alone. The
     // store result is eagerly checkpointed so the temp dir can be removed
     // before the frame is consumed.
     "q_store_time_travel" -> ((s, dir) =>
       withReplayStore(s, dir)(store =>
-        store.snapshotAsOf(1)
+        store.snapshotAt(ReplayAfterBatch1)
           .select(col("user_id"), col("c_name"),
             col("c_acctbal").cast(DoubleType).alias("bal")))),
 
@@ -3039,31 +3041,34 @@ object SparkEntry {
             col("c_acctbal").cast(DoubleType).alias("bal"))
       }),
 
-    // CHANGE DATA FEED over the same two-batch store: the net changes in
-    // (1, 2] are exactly batch 2's upserts (+200 on every 5th key) — the
+    // CHANGE DATA FEED over the same two-batch store: the net changes
+    // after batch 1 are exactly batch 2's upserts (+200 on every 5th
+    // key) — the
     // Delta-CDF `table_changes` analog; LWW replay identity spec-pinned.
     "q_store_cdf" -> ((s, dir) =>
       withReplayStore(s, dir)(store =>
-        store.changesBetween(1, 2)
+        store.changesBetween(ReplayAfterBatch1, ReplayAfterBatch1 + 1)
           .select(col("user_id"), col("c_name"),
             col("c_acctbal").cast(DoubleType).alias("bal"),
             col(Cdc.ChangeType)))),
 
     // CDF AS A MAINTENANCE FEED (r12): the Delta-CDF consumer contract
     // driven end-to-end — a decile count/sum aggregate materialized at
-    // store version 1 is brought current using ONLY changesBetween(1, 2)
-    // plus the v1 snapshot for retractions, never rescanning v2; the
+    // the version after batch 1 is brought current using ONLY the change
+    // feed past it plus that snapshot for retractions, never rescanning
+    // the latest version; the
     // oracle recomputes the aggregate from the final folded state, so a
     // CDF feed missing a change, or maintenance double-counting one,
     // breaks the hash (maintenance ≡ recompute, composed with the store).
     "q_store_cdf_maintain" -> ((s, dir) =>
       withReplayStore(s, dir) { store =>
-        val v1 = store.snapshotAsOf(1)
+        val v1 = store.snapshotAt(ReplayAfterBatch1)
           .select(pmod(col("user_id"), lit(10)).alias("g"), col("user_id"),
             dec(col("c_acctbal")).alias("bal"))
         val oldAgg = v1.groupBy(col("g"))
           .agg(count(lit(1)).alias("n"), sum(col("bal")).alias("s"))
-        val changes = store.changesBetween(1, 2)
+        val changes =
+          store.changesBetween(ReplayAfterBatch1, ReplayAfterBatch1 + 1)
         val oldRows = v1.join(changes.select(col("user_id")),
           Seq("user_id"), "left_semi")
         val newRows = changes.where(col(Cdc.ChangeType) === Cdc.Upsert)
@@ -3117,9 +3122,9 @@ object SparkEntry {
     // topic the producer commits into (README.md:44); here a
     // StoreChangeFeed consumer (durable cursor, at-least-once) tails the
     // object-store MANIFEST store's version history and maintains a
-    // rename-based MOR replica, i.e. the two commit protocols composed
-    // across the feed seam. Batch 1, a manifest compaction, and batch 2
-    // land behind the attached consumer; every polled window is applied
+    // rename-based copy-on-write replica, i.e. the two commit protocols
+    // composed across the feed seam. Batch 1, a manifest compaction, and
+    // batch 2 land behind the attached consumer; every polled window is applied
     // TWICE before its ack (the crash-between-effect-and-ack replay), so
     // idempotent convergence is inside the hash. Oracle = the source's
     // final-state arithmetic (identical to q_store_manifest): a skipped
@@ -3140,7 +3145,7 @@ object SparkEntry {
           work.resolve("cursor").toString)
         val replica = new graft.streaming.UpsertStore(s,
           work.resolve("replica").toString, pkCols = Seq("user_id"),
-          numBuckets = 8, mergeOnRead = true)
+          numBuckets = 8)
         replica.initialize(Cdc.initialLoad(source.snapshot()))
         def drain(): Unit = {
           val (changes, to) = feed.poll()
@@ -3191,9 +3196,9 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val work = java.nio.file.Files.createTempDirectory("graft-annfeed")
       try {
-        val source = new graft.streaming.UpsertStore(s,
+        val source = new graft.streaming.ManifestUpsertStore(s,
           work.resolve("source").toString, pkCols = Seq("vec_id"),
-          numBuckets = 8, mergeOnRead = true)
+          numBuckets = 8)
         source.initialize(Cdc.initialLoad(
           emb.where(pmod(col("vec_id"), lit(3)) =!= 0)))
         // attach BEFORE snapshotting: a merge landing in between replays

@@ -491,8 +491,8 @@ object AnnIndex {
     * quantizer (no refit — cells stay stable, which is what makes the
     * append O(batch) instead of O(corpus)) and publish it as one
     * atomically-renamed delta dir, cell-partitioned exactly like the
-    * base so search prunes it the same way. The UpsertStore MOR shape
-    * applied to an index: appends are cheap, [[compactIvf]] folds them
+    * base so search prunes it the same way. The ManifestUpsertStore MOR
+    * shape applied to an index: appends are cheap, [[compactIvf]] folds them
     * back. Contract: ids are append-only NEW ids — replacing a vector
     * under an existing id needs a rebuild (the search would return both).
     * Centroid `n_vectors` counts stay base-only until the next compact.
@@ -679,7 +679,7 @@ object AnnIndex {
     (deltaDirs(path) ++ tombDirs(path)).size
 
   /** Debt-count compaction policy — the index twin of
-    * [[graft.streaming.UpsertStore.compactIfNeeded]] (VERDICT r12 #3):
+    * [[graft.streaming.ManifestUpsertStore.compactIfNeeded]] (VERDICT r12 #3):
     * fold when the un-compacted dir count reaches `maxDeltas`. Returns
     * whether a compaction ran, so a caller can short-circuit a ratio
     * policy behind it exactly like `CdcStreamJob`'s store maintenance.

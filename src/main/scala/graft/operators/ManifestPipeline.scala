@@ -34,7 +34,7 @@ final case class ServedBpe(merges: Seq[(String, String)]) extends ServedModel
   * (S4HanaProducer.java:392-469 — poll the delta, fold against existing
   * state, emit only the consequences) applied to the LLM data pipeline:
   *
-  *   - the dedup survivor set lives in a bucketed [[UpsertStore]] keyed
+  *   - the dedup survivor set lives in a bucketed [[KeyedUpsertStore]] keyed
   *     by content hash — the CDC fold, not a recompute: each delta batch
   *     dedups within itself (one hash-keyed shuffle over the DELTA), then
   *     anti-joins the store's existing keys, so prior windows' documents

@@ -60,14 +60,14 @@ class TxidLedger(path: String) {
   *                  aggregation scan with zero materialization (ADVICE
   *                  r19 #5); the non-skip poll pays that scan plus the
   *                  fold's single keyed shuffle.
-  * @param autoCompactDeltas when set, run [[UpsertStore.compactIfNeeded]]
+  * @param autoCompactDeltas when set, run [[KeyedUpsertStore.compactIfNeeded]]
   *                  with this threshold after each batch's ledger advance —
   *                  the MOR maintenance policy driven from INSIDE the loop
   *                  (the job owning its own compaction cadence instead of
   *                  an external scheduler; VERDICT r9 #5). Compaction debt
   *                  is a store-observable (delta-dir count), so the policy
   *                  check is a directory listing, not a Spark job.
-  * @param autoCompactRatio byte-ratio sibling ([[UpsertStore
+  * @param autoCompactRatio byte-ratio sibling ([[KeyedUpsertStore
   *                  .compactIfDeltaRatio]]): catches the few-huge-deltas
   *                  case (a backfill) the count policy misses. Both may be
   *                  set; whichever fires first compacts.
@@ -290,7 +290,7 @@ object LatencyListener {
   * change per key (last-write-wins by txid) and merge into the replica.
   */
 object CdcApply {
-  def applyChanges(store: UpsertStore, batch: DataFrame, pkCols: Seq[String]): Unit = {
+  def applyChanges(store: KeyedUpsertStore, batch: DataFrame, pkCols: Seq[String]): Unit = {
     val payload = batch.columns.toSeq.filterNot(pkCols.contains)
     val latest = batch
       .groupBy(pkCols.map(col): _*)

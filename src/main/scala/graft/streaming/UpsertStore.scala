@@ -23,6 +23,12 @@ import graft.cdc.Cdc
   * (upserts overwrite by PK, deletes of absent keys are no-ops) — the
   * replay guarantee the reference gets from UPSERT row types
   * (`S4HanaProducer.java:434-441`).
+  *
+  * This is the COPY-ON-WRITE store: each merge rewrites the touched
+  * buckets, and reads stay a plain scan. Its merge-on-read counterpart —
+  * O(batch) sequenced delta appends folded at read, version time travel
+  * and a retained change feed — is [[ManifestUpsertStore]]; writer
+  * leases, column rename/drop and clustered compaction live only here.
   */
 /** @param broadcastBatchKeys the merge anti-joins the store's changed
   *   buckets against the batch's key set, broadcast by default (poll
@@ -38,22 +44,11 @@ import graft.cdc.Cdc
   *   passes its job id resumes its own lease immediately instead of
   *   waiting out the TTL of the lease its previous incarnation left
   *   behind. Defaults to a fresh per-instance id.
-  * @param mergeOnRead storage strategy. `false` (default) is COPY-ON-WRITE:
-  *   each merge rewrites the touched buckets, reads stay a plain scan.
-  *   `true` is MERGE-ON-READ: each merge APPENDS a sequenced delta dir —
-  *   O(batch) regardless of how much base data the touched buckets hold —
-  *   and `snapshot()` folds base ∪ deltas by (pk, max seq), paying one
-  *   shuffle at read; `compact()` folds the deltas back into the base and
-  *   drops them. The classic lakehouse tradeoff (Hudi COW vs MOR, Delta
-  *   deletion vectors): write-heavy loops with infrequent reads want MOR,
-  *   read-heavy replicas want COW. Both modes share the same lease,
-  *   recovery, and schema-evolution machinery, and converge to identical
-  *   snapshots for the same batch sequence (spec-pinned).
   */
 class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     numBuckets: Int = 16, broadcastBatchKeys: Boolean = true,
-    leaseTtlMs: Long = 10 * 60 * 1000L, writerId: Option[String] = None,
-    mergeOnRead: Boolean = false) extends KeyedUpsertStore {
+    leaseTtlMs: Long = 10 * 60 * 1000L, writerId: Option[String] = None)
+    extends KeyedUpsertStore {
 
   private val bucketCol = "_bucket"
 
@@ -200,9 +195,6 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
       java.nio.file.Files.readAllBytes(schemaFile.toPath), "UTF-8"))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** Current snapshot (no envelope columns). Reads with the persisted
-    * schema so a store whose rows were all deleted stays readable.
-    */
   /** Reader-side entry guard shared by every read surface: heal crashed
     * swaps when it is safe to (no live foreign writer — ADVICE r7), and
     * refuse a read that CANNOT be consistent: while another writer's
@@ -221,6 +213,9 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
         "shapes; retry after the writer finishes or its lease expires")
   }
 
+  /** Current snapshot (no envelope columns). Reads with the persisted
+    * schema so a store whose rows were all deleted stays readable.
+    */
   def snapshot(): DataFrame = opLock.synchronized {
     // a READER must not run recovery while another writer is live: their
     // in-flight merge owns `_staging`, and recoverSwap deletes it
@@ -228,12 +223,7 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     // [[baseRead]] overlays any crashed-swap debris READ-ONLY, so a
     // bucket mid-swap is never invisible to this reader.
     guardRead()
-    // MODE-MISMATCH SAFETY: published deltas are data, whatever this
-    // instance's flag says — a COW-flagged reader over a MOR-written store
-    // must fold them, not silently serve the stale base. The flag only
-    // chooses how MERGES write.
-    if (mergeOnRead || deltaSeqDirs.nonEmpty) foldedView().drop(bucketCol)
-    else baseRead().drop(bucketCol)
+    baseRead().drop(bucketCol)
   }
 
   /** POINT LOOKUP: the current row(s) for one primary key, reading ONLY
@@ -242,11 +232,10 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     * so every bucket dir is scanned; here the bucket is computed from the
     * key up front (the same `pmod(hash(pk...))` the writers use — via a
     * 1-row Spark eval, so the hash semantics can never drift from the
-    * write path) and becomes a PARTITION filter on the base plus a
-    * LISTING filter on the delta dirs. At 100 TB that is one bucket's
-    * files plus the deltas that touched it, not the table. Values cast to
-    * the stored key types first — `hash(5)` ≠ `hash(5L)`, and a silently
-    * mis-typed probe would scan the right store and find nothing.
+    * write path) and becomes a PARTITION filter. At 100 TB that is one
+    * bucket's files, not the table. Values cast to the stored key types
+    * first — `hash(5)` ≠ `hash(5L)`, and a silently mis-typed probe would
+    * scan the right store and find nothing.
     */
   def lookup(key: Any*): DataFrame = opLock.synchronized {
     guardRead()
@@ -260,46 +249,18 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     val b = UpsertStore.bucketOf(spark, typedKey, numBuckets)
     val pred = pkCols.zip(typedKey)
       .map { case (c, v) => col(c) === v }.reduce(_ && _)
-    val view =
-      if (mergeOnRead || deltaSeqDirs.nonEmpty) foldedView(bucket = Some(b))
-      else baseRead().where(col(bucketCol) === b)
-    view.where(pred).drop(bucketCol)
+    baseRead().where(col(bucketCol) === b).where(pred).drop(bucketCol)
   }
 
-  /** TIME TRAVEL: the snapshot as of delta sequence `seq` (inclusive) —
-    * the state after the merge that published `_delta_<seq>` and before
-    * any later one; `seq = earliestSeq` reads the base alone. History
-    * reaches back exactly to the last compaction/COW rewrite: folding
-    * deltas into the base (or rewriting it copy-on-write) is what DESTROYS
-    * earlier versions, so [[earliestSeq]] is the horizon and a request
-    * behind it fails loudly rather than serving the newer base as if it
-    * were old (the same contract as Delta/Iceberg VACUUM'd time travel —
-    * retention here is "since the last compact()", so a reader that needs
-    * N batches of history simply compacts every N batches).
-    */
-  def snapshotAsOf(seq: Long): DataFrame = opLock.synchronized {
-    guardRead()
-    val lo = earliestSeq
-    val hi = currentSeq
-    if (seq < lo) throw new IllegalStateException(
-      s"store $dir: history before seq $lo was compacted/rewritten away " +
-        s"(requested $seq) — compact less often, or read >= $lo")
-    if (seq > hi) throw new IllegalArgumentException(
-      s"store $dir: seq $seq has not been written yet (current $hi)")
-    foldedView(maxSeq = seq).drop(bucketCol)
-  }
-
-  /** CHANGE DATA FEED: the net per-key changes between two readable
-    * versions — envelope rows (`_change_type` 'A'/'D' + full payload) such
-    * that applying them with last-write-wins semantics to
-    * `snapshotAsOf(fromSeq)` yields `snapshotAsOf(toSeq)` (the
-    * Delta-CDF / `table_changes` analog, spec-pinned by exactly that
-    * replay). Folds the retained delta dirs in `(fromSeq, toSeq]`
-    * latest-per-key; a 'D' for a key absent at `fromSeq` (created and
-    * deleted inside the range) may appear and is a harmless no-op under
-    * LWW apply. Both endpoints must be inside the readable window — a
-    * range the compaction/COW horizon has passed cannot be reconstructed
-    * (its deltas were folded away) and refuses loudly.
+  /** CHANGE DATA FEED contract (see [[KeyedUpsertStore]]): the envelope
+    * rows (`_change_type` + payload) in `(fromSeq, toSeq]`. A COW store
+    * retains no history — every merge and rewrite destroys the version
+    * before it and moves [[earliestSeq]] up to [[currentSeq]] — so the
+    * only readable range is the empty one at the current version, and a
+    * consumer whose cursor a rewrite has passed fails LOUDLY here (the
+    * Kafka offset-out-of-range / Delta vacuumed-version analog) instead
+    * of silently skipping the rewritten span. A consumer that needs a
+    * retained feed tails a [[ManifestUpsertStore]].
     */
   def changesBetween(fromSeq: Long, toSeq: Long): DataFrame = opLock.synchronized {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -308,35 +269,21 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     val lo = earliestSeq
     val hi = currentSeq
     if (fromSeq < lo) throw new IllegalStateException(
-      s"store $dir: changes before seq $lo were compacted/rewritten away " +
+      s"store $dir: changes before seq $lo were rewritten away " +
         s"(requested from $fromSeq)")
     if (toSeq > hi) throw new IllegalArgumentException(
       s"store $dir: seq $toSeq has not been written yet (current $hi)")
-    val withEnvelope = StructType(
-      savedSchema.fields.filterNot(_.name == bucketCol) :+
-        StructField(Cdc.ChangeType, StringType))
-    val deltas = deltaSeqDirs.filter { case (sq, _) => sq > fromSeq && sq <= toSeq }
-    if (deltas.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withEnvelope)
-    val onDisk = StructType(savedSchema.fields :+ // incl. the bucket column
-      StructField(Cdc.ChangeType, StringType))
-    val all = deltas.map { case (sq, d) =>
-      spark.read.schema(onDisk).parquet(d.getPath)
-        .withColumn(seqCol, lit(sq))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val payload = struct(onDisk.fieldNames.map(col).toIndexedSeq: _*)
-    all.groupBy(pkCols.map(col): _*)
-      .agg(max_by(payload, col(seqCol)).alias("_r"))
-      .select(col("_r.*"))
-      .drop(bucketCol)
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(savedSchema.fields.filterNot(_.name == bucketCol) :+
+        StructField(Cdc.ChangeType, StringType)))
   }
 
-  /** Feed position = newest delta seq (see [[KeyedUpsertStore]]). */
+  /** Feed position = the newest rewrite's seq (see [[KeyedUpsertStore]]). */
   def feedVersion: Long = currentSeq
 
-  /** Highest published sequence (0 before any MOR merge; COW merges also
-    * advance it so the horizon arithmetic stays uniform across modes).
+  /** Highest published sequence (0 before any merge); every merge and
+    * schema rewrite advances it.
     */
   def currentSeq: Long =
     if (seqFile.exists())
@@ -344,8 +291,9 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
         .trim.toLong
     else 0L
 
-  /** Oldest sequence still readable via [[snapshotAsOf]] — advanced by
-    * compaction and by every COW rewrite (both destroy prior versions).
+  /** Oldest sequence whose changes are still readable via
+    * [[changesBetween]] — advanced by every COW rewrite (each destroys
+    * the prior version).
     */
   def earliestSeq: Long =
     if (baseSeqFile.exists())
@@ -612,16 +560,12 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
   def merge(folded: DataFrame): Unit = opLock.synchronized {
     acquireLease() // single-writer fence + heartbeat
     recoverSwap() // a crashed prior swap must heal before we read `existing`
-    if (mergeOnRead) mergeDelta(folded) else mergeCow(folded)
+    mergeCow(folded)
   }
 
-  // ── Merge-on-read machinery ──────────────────────────────────────────────
-
-  /** Durable monotonic delta sequence. NEVER resets (compaction removes
-    * delta dirs but not the counter): if it restarted at 1, a stale delta
-    * dir surviving a crashed compaction would outrank every new delta and
-    * resurrect old values. Advanced via write-temp + atomic move; a crash
-    * between advance and delta publish leaves a harmless gap.
+  /** Durable monotonic rewrite sequence — the store's version and its
+    * [[feedVersion]]. NEVER resets. Advanced via write-temp + atomic move;
+    * a crash between advance and swap leaves a harmless gap.
     */
   private def seqFile = new java.io.File(dir, "_graft_seq")
 
@@ -650,241 +594,52 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     next
   }
 
-  /** Published delta-dir count — the compaction-debt signal. */
-  def deltaCount: Int = deltaSeqDirs.size
-
-  /** Operational stats, one row per bucket: base/delta file counts and
-    * bytes. Pure driver-side directory listing — bounded by numBuckets ×
-    * deltaCount entries, no data read — the signal an operator (or an
-    * auto-compaction policy beyond [[compactIfNeeded]]'s count heuristic)
-    * watches: base files per bucket should sit at ~1 under the
-    * bucket-aligned COW merge, and delta bytes per bucket quantify the
-    * MOR fold tax each snapshot pays until the next compact().
-    */
-  private def statsRows(): Seq[(Int, Long, Long, Long, Long)] = opLock.synchronized {
-    // same guard as the data reads: heal crashed swaps when safe so the
-    // figures include mid-swap buckets (review r9 — a retired-but-not-
-    // promoted bucket would otherwise report an empty base); under a LIVE
-    // foreign writer the figures are in-flux approximations by nature
-    guardRead()
-    def filesIn(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles((f: java.io.File) =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-        .getOrElse(Array.empty)
-    def bucketsOf(root: java.io.File): Map[Int, (Long, Long)] =
-      Option(root.listFiles((f: java.io.File) =>
-        f.isDirectory && f.getName.startsWith(s"$bucketCol=")))
-        .getOrElse(Array.empty[java.io.File])
-        .map { d =>
-          val fs = filesIn(d)
-          d.getName.stripPrefix(s"$bucketCol=").toInt ->
-            ((fs.length.toLong, fs.map(_.length).sum))
-        }.toMap
-    val base = bucketsOf(new java.io.File(dir))
-    val delta = deltaSeqDirs.map(d => bucketsOf(d._2))
-      .foldLeft(Map.empty[Int, (Long, Long)]) { (acc, m) =>
-        m.foldLeft(acc) { case (a, (b, (n, sz))) =>
-          val (pn, psz) = a.getOrElse(b, (0L, 0L))
-          a.updated(b, (pn + n, psz + sz))
-        }
-      }
-    (base.keySet ++ delta.keySet).toSeq.sorted.map { b =>
-      val (bn, bsz) = base.getOrElse(b, (0L, 0L))
-      val (dn, dsz) = delta.getOrElse(b, (0L, 0L))
-      (b, bn, bsz, dn, dsz)
-    }
-  }
-
-  /** [[statsRows]] as a DataFrame (tuple order: bucket, base_files,
-    * base_bytes, delta_files, delta_bytes).
+  /** Operational stats, one row per bucket: data file count and bytes.
+    * Pure driver-side directory listing — bounded by numBuckets entries,
+    * no data read — the signal an operator watches: files per bucket
+    * should sit at ~1 under the bucket-aligned merge.
     */
   def stats(): DataFrame = {
+    val rows = opLock.synchronized {
+      // same guard as the data reads: heal crashed swaps when safe so the
+      // figures include mid-swap buckets (review r9 — a retired-but-not-
+      // promoted bucket would otherwise report an empty base); under a
+      // LIVE foreign writer the figures are in-flux approximations
+      guardRead()
+      Option(new java.io.File(dir).listFiles((f: java.io.File) =>
+        f.isDirectory && f.getName.startsWith(s"$bucketCol=")))
+        .getOrElse(Array.empty[java.io.File]).toSeq
+        .map { d =>
+          val fs = Option(d.listFiles((f: java.io.File) => f.isFile &&
+            !f.getName.startsWith("_") && !f.getName.startsWith(".")))
+            .getOrElse(Array.empty[java.io.File])
+          (d.getName.stripPrefix(s"$bucketCol=").toInt, fs.length.toLong,
+            fs.map(_.length).sum)
+        }.sortBy(_._1)
+    }
     val session = spark // stable identifier for the implicits import
     import session.implicits._
-    statsRows().toDF("bucket", "base_files", "base_bytes", "delta_files",
-      "delta_bytes")
+    rows.toDF("bucket", "files", "bytes")
   }
 
-  /** Compact when the delta debt reaches `maxDeltas` (the cadence policy a
-    * streaming job wants inline: every snapshot fold unions one frame per
-    * delta, so unbounded debt grows the read plan without bound). Returns
-    * whether a compaction ran.
+  /** The delta-debt policy of [[KeyedUpsertStore]]: a COW store publishes
+    * no deltas, so it is never due. Always false.
     */
   def compactIfNeeded(maxDeltas: Int = 16): Boolean = {
     require(maxDeltas > 0, s"maxDeltas must be positive, got $maxDeltas")
-    val due = deltaCount >= maxDeltas
-    if (due) compact()
-    due
+    false
   }
 
-  /** Byte-ratio sibling of [[compactIfNeeded]]: compact when delta bytes
-    * reach `maxRatio` of base bytes (from [[stats]] — a directory listing,
-    * no data read). The count heuristic misses the case the ratio
-    * catches: a few huge backfill deltas cost a snapshot fold as much as
-    * many small ones. An empty base with any delta bytes is always due.
-    * Returns whether a compaction ran.
+  /** Byte-ratio sibling of [[compactIfNeeded]]: a COW store has no delta
+    * bytes, so it is never due. Always false.
     */
   def compactIfDeltaRatio(maxRatio: Double = 0.2): Boolean = {
     require(maxRatio > 0, s"maxRatio must be positive, got $maxRatio")
-    // driver-side sums over the listing rows — scheduling a Spark job per
-    // policy check would tax the hot streaming loop for nothing (review r9)
-    val rows = statsRows()
-    val base = rows.map(_._3).sum
-    val delta = rows.map(_._5).sum
-    val due = delta > 0 && (base == 0L || delta.toDouble / base >= maxRatio)
-    if (due) compact()
-    due
+    false
   }
 
-  /** Complete (published) delta dirs, ascending by sequence. */
-  private def deltaSeqDirs: Seq[(Long, java.io.File)] =
-    Option(new java.io.File(dir).listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.matches("_delta_\\d+")))
-      .getOrElse(Array.empty[java.io.File])
-      .map(f => (f.getName.stripPrefix("_delta_").toLong, f))
-      .sortBy(_._1).toSeq
-
-  private val seqCol = "_graft_seq"
-
-  /** MOR merge: append the folded batch as one sequenced delta dir.
-    * O(batch) — the base is never read, never rewritten; deletes persist
-    * as 'D' marker rows until [[compact]] folds them away. Publication is
-    * a single atomic rename of a fully-fsynced dir, so readers only ever
-    * see complete deltas and the crash story needs no marker protocol at
-    * all (the COW swap's retire/promote dance exists because it REPLACES
-    * live dirs; an append replaces nothing).
-    */
-  private def mergeDelta(folded: DataFrame): Unit = {
-    // sweep tmp orphans from a crashed publish (invisible to readers,
-    // but they would accumulate)
-    Option(new java.io.File(dir).listFiles((_, n) => n.startsWith("_delta_tmp_")))
-      .foreach(_.foreach(rmTree))
-    val data = withBucket(folded.drop(Cdc.TransactionId)) // ChangeType stays
-    // widen the persisted schema BEFORE publishing data that carries new
-    // columns (crash between the two must not hide a column; same
-    // reasoning as the COW path)
-    val existing = savedSchema
-    val newFields = data.schema.fields.filter(f =>
-      f.name != Cdc.ChangeType && !existing.fieldNames.contains(f.name))
-    if (newFields.nonEmpty) {
-      val added = newFields.map(_.name).toSeq.sorted
-      org.slf4j.LoggerFactory.getLogger(classOf[UpsertStore]).warn(
-        s"schema evolution in $dir: delta adds $added — " +
-          "verify this is not a renamed column")
-      val woBucket = existing.fields.filterNot(_.name == bucketCol)
-      writeSchema(org.apache.spark.sql.types.StructType(
-        (woBucket ++ newFields) :+ existing(existing.fieldIndex(bucketCol))))
-    }
-    val seq = nextSeq()
-    val tmp = new java.io.File(dir, s"_delta_tmp_$seq")
-    val tWrite = System.nanoTime()
-    // bucket-aligning exchange before the write, same reasoning as the COW
-    // merge (r9): without it every shuffle task writes one file per bucket
-    // it holds rows for — up to tasks × buckets tiny files per delta, each
-    // individually fsynced below, re-listed by every snapshot fold, and at
-    // 100 TB each an object-store PUT. With it a delta is one file per
-    // touched bucket (spec-asserted); the exchange costs one O(batch)
-    // shuffle. Local wall-clock is noise-neutral (the files are tiny);
-    // the win is file-count health, which compounds with delta debt.
-    data.repartition(col(bucketCol))
-      .write.partitionBy(bucketCol).mode("overwrite").parquet(tmp.getPath)
-    val tPublish = System.nanoTime()
-    UpsertStore.addPhase("merge_write", (tPublish - tWrite) / 1e9)
-    // an EMPTY folded batch must not publish: each published delta adds a
-    // frame to every snapshot fold and counts toward compaction debt, and
-    // COW's empty batch is a no-op — parity. Emptiness falls out of the
-    // write free of charge (no bucket subdirs); the burned seq is a gap,
-    // which the ordering tolerates.
-    if (stagedBuckets(tmp).isEmpty) { rmTree(tmp); return }
-    // data durability before the publish rename (Spark never fsyncs);
-    // all files then all bucket dirs, each batch in parallel (r20 — the
-    // serial per-file loop was the core-count-invariant wall time of
-    // every small delta publish); contents-before-dirent order holds
-    locally {
-      val bucketDirs = stagedBuckets(tmp).toSeq
-      graft.util.Fs.fsyncFiles(bucketDirs.flatMap(d =>
-        Option(d.listFiles()).getOrElse(Array.empty).filter(_.isFile)))
-      graft.util.Fs.fsyncDirs(bucketDirs)
-    }
-    fsyncDir(tmp)
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, s"_delta_$seq").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    fsyncDir(new java.io.File(dir))
-    UpsertStore.addPhase("swap", (System.nanoTime() - tPublish) / 1e9)
-  }
-
-  /** Base ∪ deltas, folded last-write-wins by (pk, max seq), deletes
-    * dropped — the MOR read path. BUCKET-PRUNED: the delta dirs' own
-    * `_bucket=N` subdir names say exactly which buckets any delta touches
-    * (a filesystem listing, no data read), and a key's bucket is a pure
-    * hash — so base buckets no delta touches bypass the fold entirely and
-    * union in as a plain scan. Only the touched slice pays the PK shuffle:
-    * at 100 TB with narrow poll windows that is a handful of buckets, not
-    * the table (the same observation the COW merge builds on). Reads with
-    * the widened persisted schema, so pre-evolution files null-fill.
-    */
-  /** @param touchedOnly return ONLY the folded touched-bucket slice,
-    *   dropping the untouched-base union — the bucket-selective
-    *   compaction's write set (the untouched buckets are exactly the ones
-    *   it must NOT rewrite). The folded slice is identical either way.
-    */
-  private def foldedView(maxSeq: Long = Long.MaxValue,
-      bucket: Option[Int] = None, touchedOnly: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    def emptySlice = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], savedSchema)
-    // single-bucket reads (point lookup): deltas that never touched the
-    // bucket drop out by a LISTING (their _bucket=N subdir names), and
-    // the base narrows by a partition filter — no data outside the bucket
-    // is read anywhere below
-    val deltas = deltaSeqDirs.filter(_._1 <= maxSeq).filter { case (_, d) =>
-      bucket.forall(b => stagedBuckets(d)
-        .exists(_.getName == s"$bucketCol=$b"))
-    }
-    val baseAll = bucket.foldLeft(baseRead())((df, b) =>
-      df.where(col(bucketCol) === b)) // debris-tolerant (see baseRead)
-    if (deltas.isEmpty) return if (touchedOnly) emptySlice else baseAll
-    val touched = deltas.flatMap { case (_, d) =>
-      stagedBuckets(d).map(_.getName.stripPrefix(s"$bucketCol=").toInt)
-    }.toSet.filter(t => bucket.forall(_ == t))
-    if (touched.isEmpty) // only empty deltas exist
-      return if (touchedOnly) emptySlice else baseAll
-    val untouched =
-      baseAll.where(!col(bucketCol).isin(touched.toSeq: _*))
-    val withEnvelope = StructType(
-      savedSchema.fields :+ StructField(Cdc.ChangeType, StringType))
-    val touchedBase = baseAll
-      .where(col(bucketCol).isin(touched.toSeq: _*))
-      .withColumn(Cdc.ChangeType, lit(Cdc.Upsert))
-      .withColumn(seqCol, lit(0L))
-    val all = deltas.foldLeft(touchedBase) { case (acc, (seq, d)) =>
-      val deltaRead = spark.read.schema(withEnvelope).parquet(d.getPath)
-      acc.unionByName(
-        bucket.foldLeft(deltaRead)((r, b) => // partition-prune the delta too
-            r.where(col(bucketCol) === b))
-          .withColumn(seqCol, lit(seq)),
-        allowMissingColumns = true)
-    }
-    val payload = struct(withEnvelope.fieldNames.map(col).toIndexedSeq: _*)
-    val folded = all.groupBy(pkCols.map(col): _*)
-      .agg(max_by(payload, col(seqCol)).alias("_r"))
-      .select(col("_r.*"))
-      .where(col(Cdc.ChangeType) === Cdc.Upsert)
-      .drop(Cdc.ChangeType)
-    if (touchedOnly) folded else folded.unionByName(untouched)
-  }
-
-  /** COW merge (the default path; see class doc). */
+  /** COW merge (see class doc). */
   private def mergeCow(folded: DataFrame): Unit = {
-    // a COW rewrite computes its kept-rows from the BASE alone; with
-    // un-folded deltas present, base rows it keeps may be outranked by a
-    // delta and deleted keys may resurrect — refuse rather than corrupt
-    // the LWW order (compact() folds the deltas away, or keep mergeOnRead)
-    if (deltaSeqDirs.nonEmpty) throw new IllegalStateException(
-      s"store $dir holds ${deltaSeqDirs.size} un-compacted delta dir(s): " +
-        "a copy-on-write merge over them would corrupt last-write-wins " +
-        "precedence — run compact() first, or open with mergeOnRead=true")
     val batch = withBucket(folded).cache()
     try {
       // this probe is the first ACTION over the folded plan: the CDC fold
@@ -959,7 +714,7 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
       val tSwap = System.nanoTime()
       UpsertStore.addPhase("merge_write", (tSwap - tWrite) / 1e9)
       // a COW rewrite destroys the pre-merge version of every touched
-      // bucket: advance the sequence and the time-travel horizon WITH it,
+      // bucket: advance the sequence and the change-feed horizon WITH it,
       // conservatively before the swap commits (see [[baseSeqFile]])
       val seq = nextSeq()
       writeBaseSeq(seq)
@@ -983,19 +738,16 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     * `_graft_schema_next` and promoted under the same `_swap_started`
     * marker as the data, so no crash point leaves new-shape files behind
     * an old-shape schema (which would silently null the column) — the
-    * crash spec drives both recovery branches. MOR deltas are folded
-    * first (they carry the old shape); history before the rewrite is
-    * destroyed, so the time-travel horizon advances with it.
+    * crash spec drives both recovery branches. History before the
+    * rewrite is destroyed, so the change-feed horizon advances with it.
     */
   def renameColumn(from: String, to: String): Unit = {
     if (!exists) throw new IllegalStateException(s"store $dir not initialized")
     require(!pkCols.contains(from) && from != bucketCol,
       s"cannot rename key/internal column $from (row identity)")
     // the underscore namespace is the engine's: _change_type/_transactionid
-    // are envelope columns every merge re-attaches, _graft_seq is the MOR
-    // fold's sequence — a user column shadowing any of them corrupts folds
-    // (review r9: renaming to _graft_seq made foldedView overwrite the
-    // data column with the sequence literal on every snapshot)
+    // are envelope columns every merge re-attaches, _bucket is the layout —
+    // a user column shadowing any of them corrupts merges
     require(!to.startsWith("_"),
       s"target $to is in the reserved internal/envelope namespace (_*)")
     val cur = savedSchema
@@ -1019,9 +771,6 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
   private def schemaRewrite(f: DataFrame => DataFrame): Unit = opLock.synchronized {
     acquireLease()
     recoverSwap()
-    // fold MOR deltas first so exactly one shape exists on disk; compact
-    // re-enters the (reentrant) opLock and refreshes the lease heartbeat
-    if (deltaSeqDirs.nonEmpty) compact()
     val out = f(spark.read.schema(savedSchema).parquet(dir))
       .repartition(col(bucketCol))
     require(out.columns.contains(bucketCol),
@@ -1032,31 +781,18 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     // rolled back under the swap marker
     writeSchema(out.schema, target = schemaNextFile)
     // a rewrite destroys every prior version: advance the horizon
-    // conservatively BEFORE the swap commits (same rule as compact/COW)
+    // conservatively BEFORE the swap commits (same rule as merge)
     val seq = nextSeq()
     writeBaseSeq(seq)
     swapStaged(staging, beforeMarkerClear = () => promoteSchemaNext())
   }
 
-  /** Compaction maintenance pass. Since r9, COW merges are themselves
-    * bucket-aligned (one file per touched bucket), so compact()'s role for
-    * a pure-COW store is reduced to an occasional full rewrite (e.g. after
-    * schema evolution left mixed-schema files); its REAL job is MOR
-    * maintenance — folding published delta dirs back into the base and
-    * dropping them. Same stage-then-swap commit as merge.
-    *
-    * BUCKET-SELECTIVE (r10, VERDICT r9 #1): the delta dirs' own
-    * `_bucket=N` subdir names bound exactly which base buckets any delta
-    * can change — so only THOSE buckets are folded, staged, and swapped;
-    * every other base bucket's files are never read, never rewritten,
-    * byte-identical after the compact (spec-pinned). Cost is O(delta
-    * debt), not O(store): at 100 TB with deltas touching 1% of buckets, a
-    * compaction rewrites ~1 TB, not the table. The time-travel horizon
-    * still advances store-wide — the folded deltas' VERSIONS are what a
-    * partial fold destroys, and versions are store-level (an old snapshot
-    * must fold old deltas over old base buckets; the touched buckets' old
-    * state is gone) — so `earliestSeq` stays a single conservative store
-    * horizon, exactly as before.
+  /** Full rewrite of every bucket through the same stage-then-swap commit
+    * as merge. Since r9, merges are themselves bucket-aligned (one file
+    * per touched bucket), so this is an occasional maintenance pass —
+    * e.g. after schema evolution left mixed-schema files — or a layout
+    * pass with `clusterBy`. Snapshot contents are unchanged, so the
+    * sequence and the change-feed horizon do not move.
     *
     * @param clusterBy optional CLUSTERED rewrite: sort rows by these
     *   columns within each bucket before writing, so parquet's per-row-
@@ -1071,8 +807,7 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     *   .GraftExpressions.zorder2_bucketized]] which auto-pmods with a
     *   documented wrap-locality caveat).
     *   Layout only: snapshot contents are bit-identical with or without
-    *   it. Passing clusterBy forces the FULL rewrite (a layout pass is
-    *   whole-store by intent), never the selective fold.
+    *   it.
     */
   def compact(clusterBy: Seq[String] = Nil): Unit = opLock.synchronized {
     val tc = System.nanoTime()
@@ -1088,65 +823,15 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     def cluster(df: DataFrame): DataFrame =
       if (clusterBy.isEmpty) df
       else df.sortWithinPartitions((bucketCol +: clusterBy).map(col): _*)
-    def timedWrite(data: DataFrame): java.io.File = {
-      val staging = stagingDir
-      val t0 = System.nanoTime()
-      data.write.partitionBy(bucketCol).mode("overwrite")
-        .parquet(staging.getPath)
-      UpsertStore.addPhase("compact_write", (System.nanoTime() - t0) / 1e9)
-      staging
-    }
-    def timedSwap(staging: java.io.File): Set[Int] = {
-      val t0 = System.nanoTime()
-      val s = swapStaged(staging)
-      UpsertStore.addPhase("compact_swap", (System.nanoTime() - t0) / 1e9)
-      s
-    }
-    // dispatch on what is ON DISK, not on this instance's write mode: a
-    // COW-flagged compact over published deltas must fold them (rewriting
-    // just the base would leave the deltas outranking it)
-    if (deltaSeqDirs.nonEmpty) {
-      // fold the deltas into the base via the same staged swap COW uses,
-      // then drop the deltas. Crash anywhere: the base keeps one complete
-      // copy per bucket, and leftover deltas re-fold over the compacted
-      // base to the IDENTICAL state (LWW of equal values; deletes of
-      // absent keys are no-ops) — so partial delta removal is harmless.
-      val pre = deltaSeqDirs
-      val touched = pre.flatMap { case (_, d) =>
-        stagedBuckets(d).map(_.getName.stripPrefix(s"$bucketCol=").toInt)
-      }.toSet
-      // selective unless a clustered (whole-store layout) pass was asked
-      val selective = clusterBy.isEmpty
-      val data = cluster(foldedView(touchedOnly = selective)
+    val staging = stagingDir
+    val t0 = System.nanoTime()
+    cluster(spark.read.schema(savedSchema).parquet(dir)
         .repartition(col(bucketCol)))
-      val staging = timedWrite(data)
-      // folding deltas into the base destroys every version before the
-      // newest folded seq: advance the time-travel horizon conservatively
-      // BEFORE the swap commits (crash between the two = refused reads,
-      // never wrong ones)
-      writeBaseSeq(pre.map(_._1).max)
-      val survivors = timedSwap(staging)
-      // a bucket whose keys were ALL deleted has no staged dir: drop its
-      // pre-compaction base copy (deletes only materialize here in MOR).
-      // Only buckets the fold COVERED may vanish — under the selective
-      // fold an untouched bucket has no staged dir BY DESIGN, and dropping
-      // it would destroy live data
-      Option(new java.io.File(dir).listFiles((f: java.io.File) =>
-        f.getName.startsWith(s"$bucketCol=")))
-        .getOrElse(Array.empty[java.io.File])
-        .filter { d =>
-          val b = d.getName.stripPrefix(s"$bucketCol=").toInt
-          (touched.contains(b) || !selective) && !survivors.contains(b)
-        }
-        .foreach(rmTree)
-      pre.foreach { case (_, d) => rmTree(d) }
-      fsyncDir(new java.io.File(dir))
-    } else {
-      val staging = timedWrite(cluster(
-        spark.read.schema(savedSchema).parquet(dir)
-          .repartition(col(bucketCol))))
-      timedSwap(staging)
-    }
+      .write.partitionBy(bucketCol).mode("overwrite").parquet(staging.getPath)
+    val t1 = System.nanoTime()
+    UpsertStore.addPhase("compact_write", (t1 - t0) / 1e9)
+    swapStaged(staging)
+    UpsertStore.addPhase("compact_swap", (System.nanoTime() - t1) / 1e9)
     UpsertStore.addPhase("compact", (System.nanoTime() - tc) / 1e9)
   }
 }
@@ -1160,11 +845,12 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
   * crash between effect and ack replays the window and an idempotent /
   * last-write-wins downstream converges.
   *
-  * A cursor the compaction horizon has passed fails loudly on poll (the
-  * Kafka offset-out-of-range / Delta vacuumed-version analog): the
+  * A cursor the store's retention horizon has passed fails loudly on poll
+  * (the Kafka offset-out-of-range / Delta vacuumed-version analog): the
   * consumer fell behind the store's retention, and silently skipping the
-  * folded-away span would lose deletes. Retention is the compaction
-  * cadence — a consumer needing N versions of slack compacts every N.
+  * lost span would lose deletes. Retention is the store's: the last
+  * `keepVersions` manifests of a [[ManifestUpsertStore]]; none on the
+  * copy-on-write [[UpsertStore]], whose every merge moves the horizon.
   */
 class StoreChangeFeed(store: KeyedUpsertStore, cursorPath: String) {
   private val ledger = new TxidLedger(cursorPath)

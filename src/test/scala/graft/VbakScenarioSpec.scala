@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.cdc.Cdc
 import graft.functions.GraftExpressions
-import graft.streaming.{CdcStreamJob, TxidLedger, UpsertStore}
+import graft.streaming.{CdcStreamJob, KeyedUpsertStore, ManifestUpsertStore,
+  TxidLedger, UpsertStore}
 
 /** End-to-end replication fidelity, mirroring the reference's integration
   * test (`PerformanceIT.java` + `VBAK.sql`/`VBAK_change.sql`): a VBAK-style
@@ -32,7 +33,7 @@ class VbakScenarioSpec extends SparkSpec {
     rows.map { case ((mandt, keyNum), txid) => (mandt, f"$keyNum%010d", txid) }
       .toDF("MANDT", "VBELN", Cdc.TransactionId)
 
-  private def snapshotSet(store: UpsertStore) =
+  private def snapshotSet(store: KeyedUpsertStore) =
     store.snapshot().as[Vbak].collect().toSet
 
   test("initial load + 3 delta rounds keep replica identical to source") {
@@ -98,42 +99,44 @@ class VbakScenarioSpec extends SparkSpec {
   test("VBAK workload over MOR: time travel recovers every round; CDF tails a replica") {
     // the reference's integration rounds again, but on a merge-on-read
     // store — then the surfaces the reference LACKS prove out on its own
-    // workload: snapshotAsOf reproduces each round's replica state, and a
-    // StoreChangeFeed-driven downstream replica converges via poll/ack
+    // workload: snapshotAt reproduces each round's replica state, and a
+    // StoreChangeFeed-driven copy-on-write downstream replica converges
+    // via poll/ack
     import graft.streaming.StoreChangeFeed
     val dir = java.nio.file.Files.createTempDirectory("vbak3").toString
     var source = vbak(("800", 1, "C1"), ("800", 2, "C2"), ("900", 1, "C9"))
-    val store = new UpsertStore(spark, s"$dir/store",
-      Seq("MANDT", "VBELN"), numBuckets = 8, mergeOnRead = true)
+    // keepVersions = 3 retains every round: the initial load and two merges
+    val store = new ManifestUpsertStore(spark, s"$dir/store",
+      Seq("MANDT", "VBELN"), numBuckets = 8, keepVersions = 3)
     store.initialize(Cdc.initialLoad(source))
     val downstream = new UpsertStore(spark, s"$dir/replica",
-      Seq("MANDT", "VBELN"), numBuckets = 8, mergeOnRead = true)
+      Seq("MANDT", "VBELN"), numBuckets = 8)
     val tail = new StoreChangeFeed(store, s"$dir/cursor") // baseline FIRST
     downstream.initialize(Cdc.initialLoad(store.snapshot()))
     val ledger = new TxidLedger(s"$dir/txid")
     val job = new CdcStreamJob(spark, () => source, store, ledger,
       Seq(("MANDT", "MANDT"), ("VBELN", "VBELN")))
     val history = scala.collection.mutable.ArrayBuffer(
-      store.currentSeq -> snapshotSet(store))
+      store.currentVersion -> snapshotSet(store))
     // round 1: insert + update; round 2: delete
     source = vbak(("800", 1, "C1*"), ("800", 2, "C2"), ("800", 4, "C3"),
       ("900", 1, "C9"))
     job.processBatch(feed((("800", 1), 101L), (("800", 4), 102L)), 0)
-    history += store.currentSeq -> snapshotSet(store)
+    history += store.currentVersion -> snapshotSet(store)
     source = vbak(("800", 1, "C1*"), ("800", 4, "C3"), ("900", 1, "C9"))
     job.processBatch(feed((("800", 2), 103L)), 1)
-    history += store.currentSeq -> snapshotSet(store)
-    // time travel: every recorded round state is reproducible by seq
-    history.foreach { case (seq, expect) =>
-      assert(store.snapshotAsOf(seq).as[Vbak].collect().toSet == expect,
-        s"as-of $seq")
+    history += store.currentVersion -> snapshotSet(store)
+    // time travel: every recorded round state is reproducible by version
+    history.foreach { case (version, expect) =>
+      assert(store.snapshotAt(version).as[Vbak].collect().toSet == expect,
+        s"as-of $version")
     }
     // CDF tail: one drain applies both rounds' net changes downstream
     val (changes, to) = tail.poll()
     downstream.merge(changes)
     tail.commit(to)
     assert(snapshotSet(downstream) == snapshotSet(store))
-    assert(tail.cursor == store.currentSeq)
+    assert(tail.cursor == store.currentVersion)
   }
 
   test("to_alphanum derives the clone key like VBAK_change.sql") {

@@ -163,13 +163,13 @@ class HierarchySpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("nested business objects ride BOTH store protocols identically (rename MOR vs manifest)") {
+  test("nested business objects ride BOTH store protocols identically (rename COW vs manifest)") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.cdc.Cdc
     import graft.streaming.{ManifestUpsertStore, UpsertStore}
-    // q_hier_cdc_rebuild gates the rename store; this pins that the
-    // object-store protocol folds the SAME array-of-struct payloads (LWW
-    // over nested schemas) to the identical snapshot
+    // q_hier_cdc_rebuild gates the manifest store; this pins that the
+    // copy-on-write rename store merges the SAME array-of-struct payloads
+    // (LWW over nested schemas) to the identical snapshot
     val work = java.nio.file.Files.createTempDirectory("graft-hier2s")
     val initial = Hierarchy.nest(header, items,
       Seq(("SALESORDERID", "SALESORDERID")), "items")
@@ -180,25 +180,25 @@ class HierarchySpec extends SparkSpec {
         Seq(("SALESORDERID", "SALESORDERID")), "items")
       .withColumn(Cdc.ChangeType, lit(Cdc.Upsert))
       .withColumn(Cdc.TransactionId, lit(1L))
-    val mor = new UpsertStore(spark, work.resolve("mor").toString,
-      pkCols = Seq("SALESORDERID"), numBuckets = 4, mergeOnRead = true)
+    val cow = new UpsertStore(spark, work.resolve("cow").toString,
+      pkCols = Seq("SALESORDERID"), numBuckets = 4)
     val man = new ManifestUpsertStore(spark, work.resolve("man").toString,
       pkCols = Seq("SALESORDERID"), numBuckets = 4)
-    mor.initialize(Cdc.initialLoad(initial)); mor.merge(rebuilt)
+    cow.initialize(Cdc.initialLoad(initial)); cow.merge(rebuilt)
     man.initialize(Cdc.initialLoad(initial)); man.merge(rebuilt)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(col("SALESORDERID"), col("PARTNER"), col("items"))
         .collect().map(r => (r.getString(0), r.getString(1),
           r.getSeq[org.apache.spark.sql.Row](2)
             .map(x => (x.getInt(0), x.getString(1))).toSeq)).toSet
-    val a = canon(mor.snapshot())
+    val a = canon(cow.snapshot())
     val b = canon(man.snapshot())
     assert(a === b)
     // and the content is the rebuilt state: SO2 re-nested from updated
     // items, SO1/SO3 untouched
     assert(a.find(_._1 == "SO2").get._3 == Seq((1, "gizmo-v2"), (2, "bonus")))
     assert(a.find(_._1 == "SO1").get._3 == Seq((1, "widget"), (2, "gadget")))
-    mor.releaseLease()
+    cow.releaseLease()
     graft.util.Fs.rmTree(work.toFile)
   }
 

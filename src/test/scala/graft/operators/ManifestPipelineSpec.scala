@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.streaming.UpsertStore
+import graft.streaming.ManifestUpsertStore
 
 /** Pins [[ManifestPipeline]]'s fold semantics on a corpus small enough to
   * enumerate by hand — especially the two contracts the gate hash can
@@ -33,8 +33,9 @@ class ManifestPipelineSpec extends SparkSpec {
         (12L, "ee ff")   // within-batch duplicate of doc 10
       ).toDF("doc_id", "text")
 
-      val store = new UpsertStore(spark, work.resolve("surv").toString,
-        pkCols = Seq("content_hash"), numBuckets = 4, mergeOnRead = true)
+      val store = new ManifestUpsertStore(spark,
+        work.resolve("surv").toString, pkCols = Seq("content_hash"),
+        numBuckets = 4)
 
       val surv1 = ManifestPipeline
         .initializeSurvivors(store, batch1, "doc_id", "text")
@@ -53,14 +54,14 @@ class ManifestPipelineSpec extends SparkSpec {
       assert(spans2.select("doc_id").as[Long].collect().toSet === Set(10L))
 
       // replay the SAME batch: zero survivors, zero spans, store untouched
-      val seqBefore = store.currentSeq
+      val versionBefore = store.currentVersion
       val replay = ManifestPipeline
         .foldDelta(store, batch2, "doc_id", "text", txnId = 3L)
       assert(replay.isEmpty, "replayed batch yields no new survivors")
       assert(ManifestPipeline
         .packWindow(replay, "doc_id", "text", model, 2L, shuffleSeed = 7L)
         .isEmpty, "replayed batch appends no spans")
-      assert(store.currentSeq === seqBefore,
+      assert(store.currentVersion === versionBefore,
         "an all-duplicate batch writes nothing to the store")
 
       // incremental survivor state == one-shot recompute over the union

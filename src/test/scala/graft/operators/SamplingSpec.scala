@@ -228,12 +228,8 @@ class SamplingSpec extends SparkSpec {
       try {
         records.set(0)
         body
-        // listener events are async: poll until the counter goes quiet
-        var last = -1L
-        var spins = 0
-        while (records.get() != last && spins < 50) {
-          last = records.get(); Thread.sleep(100); spins += 1
-        }
+        // listener events are async: drain the bus before reading
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         records.get()
       } finally spark.sparkContext.removeSparkListener(listener)
     }

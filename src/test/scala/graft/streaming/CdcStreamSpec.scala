@@ -78,11 +78,10 @@ class CdcStreamSpec extends SparkSpec {
       .contains("again"))
   }
 
-  // ── Merge-on-read mode ──────────────────────────────────────────────────
+  // ── Merge-on-read (ManifestUpsertStore) vs copy-on-write ─────────────────
 
-  private def morStore(dir: String): UpsertStore = {
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      mergeOnRead = true)
+  private def morStore(dir: String): ManifestUpsertStore = {
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4)
     store.initialize(Cdc.initialLoad(
       Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "payload")))
     store
@@ -90,8 +89,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("MOR: same snapshots as COW across a batch sequence; O(batch) appends") {
     val cow = newStore(tmp("cow"))
-    val morDir = tmp("mor")
-    val mor = morStore(morDir)
+    val mor = morStore(tmp("mor"))
     val batches = Seq(
       Seq((Cdc.Upsert, 10L, 2L, "TWO"), (Cdc.Upsert, 11L, 9L, "nine"),
         (Cdc.Delete, 12L, 3L, null.asInstanceOf[String])),
@@ -105,10 +103,8 @@ class CdcStreamSpec extends SparkSpec {
     }
     assert(mor.snapshot().as[(Long, String)].collect().toSet ==
       Set((2L, "two2"), (9L, "NINE"), (3L, "back")))
-    // the base was never rewritten: three published delta dirs exist
-    val root = new java.io.File(morDir)
-    assert(root.listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).length == 3)
+    // the base was never rewritten: three published deltas exist
+    assert(mor.deltaCount == 3)
   }
 
   test("reader under a crashed foreign mid-swap sees the complete store (read overlay)") {
@@ -155,10 +151,8 @@ class CdcStreamSpec extends SparkSpec {
       try {
         bytes.set(0)
         body
-        var last = -1L; var spins = 0
-        while (bytes.get() != last && spins < 50) {
-          last = bytes.get(); Thread.sleep(100); spins += 1
-        }
+        // listener events are async: drain the bus before reading
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         bytes.get()
       } finally spark.sparkContext.removeSparkListener(listener)
     }
@@ -171,8 +165,10 @@ class CdcStreamSpec extends SparkSpec {
         (Cdc.Upsert, 100L + i, i * 1000L, s"updated_$i"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
     def run(mor: Boolean): Long = {
-      val store = new UpsertStore(spark, tmp("amp"), Seq("id"),
-        numBuckets = 2, mergeOnRead = mor)
+      val store: KeyedUpsertStore =
+        if (mor) new ManifestUpsertStore(spark, tmp("amp"), Seq("id"),
+          numBuckets = 2)
+        else new UpsertStore(spark, tmp("amp"), Seq("id"), numBuckets = 2)
       store.initialize(Cdc.initialLoad(base))
       written { store.merge(batch) }
     }
@@ -186,8 +182,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("MOR delta is bucket-aligned: one file per touched bucket") {
     val dir = tmp("morfiles")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 8,
-      mergeOnRead = true)
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 8)
     store.initialize(Cdc.initialLoad(
       (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
     // a wide batch (touches many buckets) written from many partitions:
@@ -198,49 +193,13 @@ class CdcStreamSpec extends SparkSpec {
         concat(lit("u"), col("id")).alias("payload"))
       .repartition(16))
     val delta = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).head
+      n.startsWith("gen-delta-")).head
     delta.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
       .foreach { b =>
         val n = b.listFiles((f: java.io.File) =>
           f.getName.endsWith(".parquet")).length
         assert(n === 1, s"delta bucket ${b.getName} holds $n files, want 1")
       }
-  }
-
-  test("mode mismatch is safe: COW-flagged readers fold deltas, COW merges refuse") {
-    val dir = tmp("mix")
-    val mor = morStore(dir)
-    mor.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    // a COW-flagged instance over the same dir: snapshot must NOT silently
-    // serve the stale base — published deltas are data regardless of the
-    // instance's write mode
-    mor.releaseLease()
-    val cowView = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4)
-    assert(cowView.snapshot().as[(Long, String)].collect().toMap.get(2L)
-      .contains("TWO"))
-    // a COW merge over un-folded deltas would corrupt LWW precedence:
-    // refuse loudly
-    val up = Seq((Cdc.Upsert, 11L, 1L, "ONE"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
-    val err = intercept[IllegalStateException] { cowView.merge(up) }
-    assert(err.getMessage.contains("un-compacted delta"), err.getMessage)
-    // compact folds the debt away (dispatches on disk state, not the
-    // flag); then the COW merge proceeds
-    assert(cowView.deltaCount == 1)
-    cowView.compact()
-    assert(cowView.deltaCount == 0)
-    cowView.merge(up)
-    assert(cowView.snapshot().as[(Long, String)].collect().toSet ==
-      Set((1L, "ONE"), (2L, "TWO"), (3L, "three")))
-    // compactIfNeeded: fires only at the threshold
-    mor.releaseLease(); cowView.releaseLease()
-    val mor2 = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      mergeOnRead = true)
-    mor2.merge(up)
-    assert(!mor2.compactIfNeeded(maxDeltas = 2) && mor2.deltaCount == 1)
-    mor2.merge(up)
-    assert(mor2.compactIfNeeded(maxDeltas = 2) && mor2.deltaCount == 0)
   }
 
   test("MOR: replay of the same batch is idempotent (a later equal delta wins harmlessly)") {
@@ -255,102 +214,9 @@ class CdcStreamSpec extends SparkSpec {
     assert(first == Set((2L, "TWO"), (3L, "three")))
   }
 
-  test("MOR: compaction folds deltas into the base; stale deltas reapply harmlessly") {
-    val dir = tmp("morc")
-    val mor = morStore(dir)
-    mor.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"),
-      (Cdc.Delete, 11L, 3L, null.asInstanceOf[String]))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    val before = mor.snapshot().as[(Long, String)].collect().toSet
-    val root = new java.io.File(dir)
-    // keep a copy of the delta aside to simulate a compaction that crashed
-    // before removing it
-    val delta = root.listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).head
-    val aside = new java.io.File(dir + "_aside") // outside the store dir
-    def cp(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    cp(delta, aside)
-    mor.compact()
-    assert(root.listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).isEmpty)
-    assert(mor.snapshot().as[(Long, String)].collect().toSet == before)
-    // "crashed compaction": the already-folded delta reappears — the fold
-    // must converge to the same state (LWW of equal values, delete of an
-    // absent key)
-    cp(aside, new java.io.File(dir, delta.getName))
-    assert(mor.snapshot().as[(Long, String)].collect().toSet == before)
-    // and the NEXT merge must outrank the stale delta (seq never reset)
-    mor.merge(Seq((Cdc.Upsert, 12L, 2L, "TWO2"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(mor.snapshot().as[(Long, String)].collect().toMap.get(2L)
-      .contains("TWO2"))
-  }
-
-  test("compaction is bucket-selective: untouched base files byte-identical (VERDICT r9 #1)") {
-    import java.security.MessageDigest
-    val dir = tmp("morsel")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 8,
-      mergeOnRead = true)
-    // enough keys that every bucket holds data
-    store.initialize(Cdc.initialLoad(
-      (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
-    // two batches touching a handful of keys (few buckets)
-    store.merge(Seq((Cdc.Upsert, 10L, 5L, "V5"), (Cdc.Delete, 11L, 9L,
-      null.asInstanceOf[String]))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    store.merge(Seq((Cdc.Upsert, 12L, 5L, "V5b"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    val root = new java.io.File(dir)
-    val touched = root.listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).flatMap(_.listFiles(
-        (f: java.io.File) => f.getName.startsWith("_bucket=")))
-      .map(_.getName.stripPrefix("_bucket=").toInt).toSet
-    assert(touched.nonEmpty && touched.size < 8,
-      s"test setup: deltas must touch a strict subset of buckets ($touched)")
-    def md5(f: java.io.File): String = MessageDigest.getInstance("MD5")
-      .digest(java.nio.file.Files.readAllBytes(f.toPath))
-      .map("%02x".format(_)).mkString
-    def baseFiles(bucket: Int): Map[String, String] =
-      Option(new java.io.File(root, s"_bucket=$bucket")
-        .listFiles((f: java.io.File) => f.isFile &&
-          !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-        .getOrElse(Array.empty).map(f => f.getName -> md5(f)).toMap
-    val untouchedBefore = (0 until 8).filterNot(touched)
-      .map(b => b -> baseFiles(b)).toMap
-    val expect = store.snapshot().as[(Long, String)].collect().toSet
-    store.compact()
-    // 1) untouched buckets: same file names, same bytes — never rewritten
-    untouchedBefore.foreach { case (b, files) =>
-      assert(baseFiles(b) === files,
-        s"untouched bucket $b was rewritten by a selective compact")
-    }
-    // 2) deltas folded away, snapshot identical
-    assert(root.listFiles((_: java.io.File, n: String) =>
-      n.matches("_delta_\\d+")).isEmpty)
-    assert(store.snapshot().as[(Long, String)].collect().toSet === expect)
-    assert(expect.contains((5L, "V5b")) && !expect.exists(_._1 == 9L))
-    // 3) time-travel horizon advanced with the fold (store-wide, as before)
-    assert(store.earliestSeq === 2L)
-    intercept[IllegalStateException](store.snapshotAsOf(1L).collect())
-    // 4) a clusterBy pass is the explicit FULL-rewrite flavor
-    store.merge(Seq((Cdc.Upsert, 13L, 5L, "V5c"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    val anyUntouched = untouchedBefore.keys.head
-    store.compact(clusterBy = Seq("id"))
-    assert(baseFiles(anyUntouched) !== untouchedBefore(anyUntouched),
-      "clusterBy compact must rewrite every bucket (layout pass)")
-    assert(store.snapshot().as[(Long, String)].collect().toMap.get(5L)
-      .contains("V5c"))
-  }
-
   test("selective compact handles a touched bucket emptied by deletes") {
     val dir = tmp("morempty")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 8,
-      mergeOnRead = true)
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 8)
     store.initialize(Cdc.initialLoad(
       (1L to 32L).map(i => (i, s"v$i")).toDF("id", "payload")))
     // find a bucket and delete EVERY key in it
@@ -359,22 +225,22 @@ class CdcStreamSpec extends SparkSpec {
         .head().getInt(0)
       i -> b
     }
-    val (victimBucket, victims) = byBucket.groupBy(_._2).view
+    val (_, victims) = byBucket.groupBy(_._2).view
       .mapValues(_.map(_._1)).head
     store.merge(victims.map(i => (Cdc.Delete, 100L + i, i,
         null.asInstanceOf[String]))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
     store.compact()
-    // the emptied bucket's base dir is gone; no victim row survives
-    assert(!new java.io.File(dir, s"_bucket=$victimBucket").exists())
+    // the emptied bucket serves nothing; no victim row survives
+    assert(store.deltaCount === 0)
+    assert(store.lookup(victims.head).count() === 0)
     val left = store.snapshot().as[(Long, String)].collect().map(_._1).toSet
     assert(left === (1L to 32L).toSet -- victims)
   }
 
   test("processBatch drives MOR compaction from the debt policy (VERDICT r9 #5)") {
     val dir = tmp("morauto")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      mergeOnRead = true)
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4)
     store.initialize(Cdc.initialLoad(
       Seq((1L, "one"), (2L, "two")).toDF("id", "payload")))
     val ledger = new TxidLedger(tmp("morauto-led") + "/led")
@@ -396,8 +262,7 @@ class CdcStreamSpec extends SparkSpec {
     // byte-ratio policy: one huge backfill delta triggers compaction even
     // at delta-count 1 (the case the count policy misses)
     val dir2 = tmp("morauto2")
-    val store2 = new UpsertStore(spark, dir2, Seq("id"), numBuckets = 4,
-      mergeOnRead = true)
+    val store2 = new ManifestUpsertStore(spark, dir2, Seq("id"), numBuckets = 4)
     store2.initialize(Cdc.initialLoad(
       Seq((1L, "x")).toDF("id", "payload")))
     val ledger2 = new TxidLedger(tmp("morauto2-led") + "/led")
@@ -413,143 +278,17 @@ class CdcStreamSpec extends SparkSpec {
     assert(store2.snapshot().count() === 500L)
   }
 
-  test("MOR: torn tmp delta is ignored and swept; schema evolves additively") {
-    val dir = tmp("mort")
-    val mor = morStore(dir)
-    // a crashed publish leaves a tmp dir: invisible to snapshot, swept by
-    // the next merge
-    val torn = new java.io.File(dir, "_delta_tmp_99")
-    torn.mkdirs()
-    java.nio.file.Files.write(new java.io.File(torn, "junk").toPath,
-      "not parquet".getBytes)
-    assert(mor.snapshot().count() == 3)
-    // evolution: a delta carries a NEW column; missing columns null-fill
-    mor.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO", "extra"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload", "note"))
-    assert(!torn.exists(), "torn tmp delta not swept")
-    val got = mor.snapshot().as[(Long, String, Option[String])].collect().toSet
-    assert(got == Set((1L, "one", None), (2L, "TWO", Some("extra")),
-      (3L, "three", None)))
-    // all-delete then compact: dead buckets drop, store stays usable
-    val wipe = mor.snapshot().select($"id").as[Long].collect().map(id =>
-      (Cdc.Delete, 20L, id, null.asInstanceOf[String], null.asInstanceOf[String]))
-    mor.merge(wipe.toSeq.toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload", "note"))
-    assert(mor.snapshot().count() == 0)
-    mor.compact()
-    assert(mor.snapshot().count() == 0)
-    mor.merge(Seq((Cdc.Upsert, 21L, 7L, "seven", "n"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload", "note"))
-    assert(mor.snapshot().as[(Long, String, Option[String])].collect().toSet ==
-      Set((7L, "seven", Some("n"))))
-  }
-
-  test("time travel: snapshotAsOf serves each MOR version; compact/COW advance the horizon") {
-    val store = new UpsertStore(spark, tmp("timetravel"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    store.initialize(Cdc.initialLoad(
-      Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "payload")))
-    assert(store.currentSeq == 0L && store.earliestSeq == 0L)
-    store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"), (Cdc.Delete, 10L, 3L, "x"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    store.merge(Seq((Cdc.Upsert, 11L, 4L, "four"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(store.currentSeq == 2L && store.earliestSeq == 0L)
-    def snap(seq: Long) =
-      store.snapshotAsOf(seq).as[(Long, String)].collect().toSet
-    assert(snap(0) == Set((1L, "one"), (2L, "two"), (3L, "three")))
-    assert(snap(1) == Set((1L, "one"), (2L, "TWO")))
-    assert(snap(2) == Set((1L, "one"), (2L, "TWO"), (4L, "four")))
-    assert(snap(2) == store.snapshot().as[(Long, String)].collect().toSet)
-    intercept[IllegalArgumentException] { store.snapshotAsOf(3) } // future
-    // compaction folds deltas 1-2 into the base: versions before seq 2 are
-    // gone, and asking for them fails LOUDLY instead of serving the new
-    // base as if it were old
-    store.compact()
-    assert(store.earliestSeq == 2L)
-    intercept[IllegalStateException] { store.snapshotAsOf(1) }
-    assert(snap(2) == Set((1L, "one"), (2L, "TWO"), (4L, "four")))
-    // history continues past the compaction
-    store.merge(Seq((Cdc.Upsert, 12L, 5L, "five"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(snap(2) == Set((1L, "one"), (2L, "TWO"), (4L, "four")))
-    assert(snap(store.currentSeq) ==
-      Set((1L, "one"), (2L, "TWO"), (4L, "four"), (5L, "five")))
-  }
-
-  test("time travel horizon is conservative: a crash between horizon advance and swap refuses, never lies") {
-    // simulate the compact() crash window: the horizon marker persisted
-    // (earliestSeq = 2) but the destroying swap did NOT run — deltas 1..2
-    // still exist and the base is unfolded. The safety contract: versions
-    // behind the horizon are REFUSED (even though this particular crash
-    // left them technically reconstructible), while snapshot()/asOf(2)
-    // still serve the correct current state; the next compact() heals.
-    val dir = tmp("timetravel-crash")
-    val store = new UpsertStore(spark, dir, Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    store.initialize(Cdc.initialLoad(
-      Seq((1L, "one"), (2L, "two")).toDF("id", "payload")))
-    store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    store.merge(Seq((Cdc.Upsert, 11L, 3L, "three"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    // crash injection: persist the horizon exactly as compact() would,
-    // then "die" before the staged swap
-    java.nio.file.Files.write(
-      new java.io.File(dir, "_graft_base_seq").toPath, "2".getBytes("UTF-8"))
-    intercept[IllegalStateException] { store.snapshotAsOf(1) }
-    val now = Set((1L, "one"), (2L, "TWO"), (3L, "three"))
-    assert(store.snapshot().as[(Long, String)].collect().toSet == now)
-    assert(store.snapshotAsOf(2).as[(Long, String)].collect().toSet == now)
-    store.compact() // heals: folds the leftover deltas over the base
-    assert(store.snapshot().as[(Long, String)].collect().toSet == now)
-    assert(store.earliestSeq == 2L)
-  }
-
-  test("change data feed: changesBetween is the LWW replay between versions") {
-    val store = new UpsertStore(spark, tmp("cdf"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    store.initialize(Cdc.initialLoad(
-      Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "payload")))
-    store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"), (Cdc.Delete, 10L, 3L, "x"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    store.merge(Seq((Cdc.Upsert, 11L, 4L, "four"), (Cdc.Upsert, 11L, 2L, "TWO2"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    // (1, 2]: only batch 2's net rows
-    val cdf12 = store.changesBetween(1, 2)
-    assert(cdf12.select("id", "payload", Cdc.ChangeType)
-      .as[(Long, String, String)].collect().toSet ==
-      Set((4L, "four", "A"), (2L, "TWO2", "A")))
-    // (0, 2]: latest-per-key net fold across both batches
-    assert(store.changesBetween(0, 2)
-      .select("id", "payload", Cdc.ChangeType)
-      .as[(Long, String, String)].collect().toSet ==
-      Set((2L, "TWO2", "A"), (3L, "x", "D"), (4L, "four", "A")))
-    // REPLAY IDENTITY: asOf(1) + changes(1,2] == asOf(2), via a real merge
-    val replay = new UpsertStore(spark, tmp("cdf-replay"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    replay.initialize(Cdc.initialLoad(store.snapshotAsOf(1)))
-    replay.merge(cdf12)
-    assert(replay.snapshot().as[(Long, String)].collect().toSet ==
-      store.snapshotAsOf(2).as[(Long, String)].collect().toSet)
-    // empty range is an empty frame with the envelope schema, not a crash
-    val empty = store.changesBetween(2, 2)
-    assert(empty.isEmpty && empty.columns.contains(Cdc.ChangeType))
-    // refusals: future version; compacted-away history
-    intercept[IllegalArgumentException] { store.changesBetween(1, 9) }
-    store.compact()
-    intercept[IllegalStateException] { store.changesBetween(0, store.currentSeq) }
-  }
-
   test("store change-feed consumer: at-least-once tail with a durable cursor") {
-    val store = new UpsertStore(spark, tmp("feed-src"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
+    // keepVersions = 2: the feed window is the manifest retention window
+    val store = new ManifestUpsertStore(spark, tmp("feed-src"), Seq("id"),
+      numBuckets = 4, keepVersions = 2)
     store.initialize(Cdc.initialLoad(
       Seq((1L, "one"), (2L, "two")).toDF("id", "payload")))
     val cursorPath = tmp("feed-cursor") + "/cursor"
     val feed = new StoreChangeFeed(store, cursorPath)
     // downstream replica seeded from the same initial snapshot
     val replica = new UpsertStore(spark, tmp("feed-dst"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
+      numBuckets = 4)
     replica.initialize(Cdc.initialLoad(store.snapshot()))
     def drainOnce(): Unit = {
       val (changes, to) = feed.poll()
@@ -557,6 +296,7 @@ class CdcStreamSpec extends SparkSpec {
     }
     store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"), (Cdc.Delete, 10L, 1L, "x"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
+    val acked = store.currentVersion
     drainOnce()
     assert(replica.snapshot().as[(Long, String)].collect().toSet ==
       Set((2L, "TWO")))
@@ -567,13 +307,13 @@ class CdcStreamSpec extends SparkSpec {
     val (c1, _) = feed.poll()
     replica.merge(c1) // ... crash here: no commit
     val feed2 = new StoreChangeFeed(store, cursorPath) // restarted consumer
-    assert(feed2.cursor == 1L) // cursor still at the last ack
+    assert(feed2.cursor == acked) // cursor still at the last ack
     val (c2, to2) = feed2.poll()
     replica.merge(c2) // replay converges
     feed2.commit(to2)
     assert(replica.snapshot().as[(Long, String)].collect().toSet ==
       store.snapshot().as[(Long, String)].collect().toSet)
-    // a consumer behind the compaction horizon fails loudly, not silently
+    // a consumer behind the retention horizon fails loudly, not silently
     store.merge(Seq((Cdc.Upsert, 12L, 4L, "four"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
     store.compact()
@@ -582,9 +322,9 @@ class CdcStreamSpec extends SparkSpec {
     // the current version (review r9: a zero cursor would be permanently
     // behind-horizon) — it polls cleanly and tails new merges
     val late = new StoreChangeFeed(store, tmp("feed-cursor2") + "/cursor")
-    assert(late.cursor == store.currentSeq)
+    assert(late.cursor == store.currentVersion)
     val (none, to3) = late.poll()
-    assert(none.isEmpty && to3 == store.currentSeq)
+    assert(none.isEmpty && to3 == store.currentVersion)
     store.merge(Seq((Cdc.Upsert, 13L, 5L, "five"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
     val (c3, _) = late.poll()
@@ -592,17 +332,19 @@ class CdcStreamSpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSet == Set((5L, "five", "A")))
   }
 
-  test("time travel on a COW store: every rewrite moves the horizon to now") {
-    val store = newStore(tmp("timetravel-cow"))
+  test("change feed on a COW store: every rewrite moves the horizon to now") {
+    val store = newStore(tmp("cowfeed"))
+    // a consumer attached before a rewrite is behind the horizon after it
+    val feed = new StoreChangeFeed(store, tmp("cowfeed-cursor") + "/cursor")
     store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
     assert(store.currentSeq == store.earliestSeq) // no retained history
-    assert(store.snapshotAsOf(store.currentSeq)
-      .as[(Long, String)].collect().toSet ==
-      Set((1L, "one"), (2L, "TWO"), (3L, "three")))
+    val none = store.changesBetween(store.currentSeq, store.currentSeq)
+    assert(none.isEmpty && none.columns.contains(Cdc.ChangeType))
     intercept[IllegalStateException] {
-      store.snapshotAsOf(store.earliestSeq - 1)
+      store.changesBetween(store.earliestSeq - 1, store.currentSeq)
     }
+    intercept[IllegalStateException] { feed.poll() }
   }
 
   test("renameColumn/dropColumn: explicit rewrites; merges speak the new shape") {
@@ -619,24 +361,23 @@ class CdcStreamSpec extends SparkSpec {
     intercept[IllegalArgumentException] { store.renameColumn("id", "key") }
     intercept[IllegalArgumentException] { store.renameColumn("nope", "x") }
     intercept[IllegalArgumentException] { store.renameColumn("body", "id") }
-    // the underscore namespace is the engine's (envelope/seq columns):
-    // a user column named _graft_seq would be overwritten by the MOR fold
+    // the underscore namespace is the engine's (envelope/layout columns)
     intercept[IllegalArgumentException] {
       store.renameColumn("body", "_graft_seq")
     }
-    // a MOR store folds its pending deltas before rewriting
-    val mor = new UpsertStore(spark, tmp("schema-rewrite-mor"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    mor.initialize(Cdc.initialLoad(
+    // drop after a merge: the rewrite covers merged and initial buckets
+    val wide = new UpsertStore(spark, tmp("schema-rewrite-drop"), Seq("id"),
+      numBuckets = 4)
+    wide.initialize(Cdc.initialLoad(
       Seq((1L, "one", 5)).toDF("id", "payload", "extra")))
-    mor.merge(Seq((Cdc.Upsert, 10L, 2L, "two", 7))
+    wide.merge(Seq((Cdc.Upsert, 10L, 2L, "two", 7))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload", "extra"))
-    mor.dropColumn("extra")
-    assert(mor.snapshot().columns.toSeq == Seq("id", "payload"))
-    assert(mor.snapshot().as[(Long, String)].collect().toSet ==
+    wide.dropColumn("extra")
+    assert(wide.snapshot().columns.toSeq == Seq("id", "payload"))
+    assert(wide.snapshot().as[(Long, String)].collect().toSet ==
       Set((1L, "one"), (2L, "two")))
     // rewrites destroy history: horizon at now
-    assert(mor.earliestSeq == mor.currentSeq)
+    assert(wide.earliestSeq == wide.currentSeq)
   }
 
   test("schema rewrite crash protocol: schema and data commit or roll back TOGETHER") {
@@ -691,32 +432,22 @@ class CdcStreamSpec extends SparkSpec {
     assert(reader3.snapshot().columns.toSeq == Seq("id", "payload"))
   }
 
-  test("stats: COW buckets stay at one file; MOR delta debt visible and compact clears it") {
+  test("stats: COW buckets stay at one file, through merges and compaction") {
     val cow = newStore(tmp("stats-cow"))
     cow.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    val cowStats = cow.stats().as[(Int, Long, Long, Long, Long)].collect()
-    assert(cowStats.nonEmpty)
-    assert(cowStats.forall { case (_, bf, bb, df, db) =>
-      bf == 1L && bb > 0L && df == 0L && db == 0L },
-      cowStats.mkString(",")) // bucket-aligned merges: one file per bucket
-    val mor = new UpsertStore(spark, tmp("stats-mor"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
-    mor.initialize(Cdc.initialLoad(Seq((1L, "one")).toDF("id", "payload")))
-    mor.merge(Seq((Cdc.Upsert, 10L, 1L, "ONE"), (Cdc.Upsert, 10L, 2L, "two"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    val morStats = mor.stats().as[(Int, Long, Long, Long, Long)].collect()
-    assert(morStats.map(_._4).sum > 0L, "delta debt invisible") // delta files
-    mor.compact()
-    val after = mor.stats().as[(Int, Long, Long, Long, Long)].collect()
-    assert(after.forall(r => r._4 == 0L && r._5 == 0L), after.mkString(","))
-    assert(after.forall(_._2 == 1L)) // compaction leaves one file per bucket
-    // byte-ratio policy: no debt → not due; fresh delta trips the ratio
-    assert(!mor.compactIfDeltaRatio(0.01))
-    mor.merge(Seq((Cdc.Upsert, 11L, 3L, "three"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(mor.compactIfDeltaRatio(0.01)) // small threshold: due, and ran
-    assert(mor.deltaCount == 0)
+    def oneFileEach(): Unit = {
+      val rows = cow.stats().as[(Int, Long, Long)].collect()
+      assert(rows.nonEmpty)
+      // bucket-aligned merges: one file per bucket
+      assert(rows.forall { case (_, n, bytes) => n == 1L && bytes > 0L },
+        rows.mkString(","))
+    }
+    oneFileEach()
+    cow.compact()
+    oneFileEach()
+    // a COW store has no delta debt: both policies are never due
+    assert(!cow.compactIfNeeded(1) && !cow.compactIfDeltaRatio(0.01))
   }
 
   test("merge applies upserts and deletes, only touched buckets rewritten") {
@@ -990,8 +721,10 @@ class CdcStreamSpec extends SparkSpec {
   test("CdcStreamJob end-to-end over a MOR store ≡ COW (fold, deletes, ledger)") {
     val source = Seq((1L, "one"), (2L, "TWO"), (3L, "three")).toDF("id", "payload")
     def runWith(mor: Boolean): (Set[(Long, String)], Long) = {
-      val store = new UpsertStore(spark, tmp("jstore"), Seq("id"),
-        numBuckets = 4, mergeOnRead = mor)
+      val store: KeyedUpsertStore =
+        if (mor) new ManifestUpsertStore(spark, tmp("jstore"), Seq("id"),
+          numBuckets = 4)
+        else new UpsertStore(spark, tmp("jstore"), Seq("id"), numBuckets = 4)
       store.initialize(Cdc.initialLoad(
         Seq((1L, "old1"), (9L, "old9")).toDF("id", "payload")))
       val ledger = new TxidLedger(tmp("jled") + "/txid")

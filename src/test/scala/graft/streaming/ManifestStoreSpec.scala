@@ -456,6 +456,30 @@ class ManifestStoreSpec extends SparkSpec {
     assert(ledger.read() === 12L)
   }
 
+  test("compaction policies: no debt is never due; the count and byte-ratio thresholds compact and clear the debt") {
+    val store = newStore(tmp("mfpolicy"))
+    val v0 = store.currentVersion
+    assert(!store.compactIfNeeded(maxDeltas = 1))
+    assert(!store.compactIfDeltaRatio(0.01))
+    assert(store.currentVersion === v0, "a policy with no debt published")
+    // count: below the threshold is not due; reaching it compacts
+    store.merge(batch((Cdc.Upsert, 10L, 2L, "TWO")))
+    assert(!store.compactIfNeeded(maxDeltas = 2))
+    assert(store.deltaCount === 1)
+    store.merge(batch((Cdc.Upsert, 11L, 1L, "ONE")))
+    assert(store.compactIfNeeded(maxDeltas = 2))
+    assert(store.deltaCount === 0)
+    // byte ratio: a compacted store is not due; a fresh delta trips a
+    // small ratio but not a large one
+    assert(!store.compactIfDeltaRatio(0.01))
+    store.merge(batch((Cdc.Upsert, 12L, 3L, "THREE")))
+    assert(!store.compactIfDeltaRatio(1000.0))
+    assert(store.deltaCount === 1)
+    assert(store.compactIfDeltaRatio(0.01))
+    assert(store.deltaCount === 0)
+    assert(state(store) === Set((1L, "ONE"), (2L, "TWO"), (3L, "THREE")))
+  }
+
   test("lookup prunes to one bucket's files (measured), base and deltas") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -689,8 +713,10 @@ class ManifestStoreSpec extends SparkSpec {
     val feed = new StoreChangeFeed(store, cursorPath)
     assert(feed.cursor === store.currentVersion,
       "baseline at attach = the snapshot the consumer is about to seed from")
+    // a copy-on-write replica: the two commit protocols composed across
+    // the feed seam
     val replica = new UpsertStore(spark, tmp("mffeed-dst"), Seq("id"),
-      numBuckets = 4, mergeOnRead = true)
+      numBuckets = 4)
     replica.initialize(Cdc.initialLoad(store.snapshot()))
     def replicaState = replica.snapshot()
       .as[(Long, String)].collect().toSet

@@ -137,10 +137,10 @@ class StoreClusterSpec extends SparkSpec {
     assert(both === 0L)
   }
 
-  test("clusterBy validates columns and preserves MOR fold") {
-    val dir = Files.createTempDirectory("graft-morcluster").toString
+  test("clusterBy validates columns and preserves merged rows") {
+    val dir = Files.createTempDirectory("graft-cowcluster").toString
     val store = new UpsertStore(spark, dir, pkCols = Seq("id"),
-      numBuckets = 2, mergeOnRead = true)
+      numBuckets = 2)
     store.initialize(Cdc.initialLoad(
       spark.range(100).toDF("id").withColumn("v", col("id") * 7)))
     store.merge(Seq((Cdc.Upsert, 1L, 5L, 999L), (Cdc.Upsert, 2L, 100L, 1000L))

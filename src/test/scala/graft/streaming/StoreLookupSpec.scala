@@ -81,31 +81,4 @@ class StoreLookupSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(listener)
     } finally store.releaseLease()
   }
-
-  test("lookup: MOR sees latest delta, deletes, and prunes deltas by listing") {
-    val dir = Files.createTempDirectory("graft-lookup-mor").toString
-    val store = new UpsertStore(spark, dir, pkCols = Seq("id"),
-      numBuckets = 8, mergeOnRead = true)
-    store.initialize(Cdc.initialLoad(
-      spark.range(1000).toDF("id").withColumn("v", col("id") * 3)))
-    store.merge(Seq((Cdc.Upsert, 1L, 77L, -1L))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "v"))
-    store.merge(Seq((Cdc.Delete, 2L, 500L, 0L))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "v"))
-    try {
-      assert(store.lookup(77L).collect().head.getLong(1) === -1L)
-      assert(store.lookup(500L).collect().isEmpty)
-      // an untouched key still resolves from the base
-      assert(store.lookup(10L).collect().head.getLong(1) === 30L)
-      // a key whose bucket no delta touched reads base files only — the
-      // delta dirs fall out by listing, not by scanning. Find such a key:
-      // its lookup must read strictly fewer files than one that folds.
-      val folded = filesRead(store.lookup(77L))
-      val reads = (0L until 50L)
-        .map(k => filesRead(store.lookup(k)))
-      assert(reads.min < folded,
-        s"some untouched-bucket lookup should skip delta files " +
-          s"(min ${reads.min} vs folded $folded)")
-    } finally store.releaseLease()
-  }
 }

@@ -4,14 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.Cdc
-import graft.streaming.{ManifestUpsertStore, UpsertStore}
+import graft.streaming.ManifestUpsertStore
 
 /** One-off scale probe for the two central at-scale claims (VERDICT r10
   * #8): (1) bucket-selective compaction is O(delta debt), not O(store) —
   * grow the BASE 10× while holding the delta feed fixed and narrow (all
-  * keys hash to one bucket) and compact time must stay ~flat for the MOR
-  * and manifest stores; (2) `changesBetween` is O(range), not O(history)
-  * — time the feed across growing version ranges on one store. A WIDE
+  * keys hash to one bucket) and compact time must stay ~flat for the
+  * merge-on-read manifest store; (2) `changesBetween` is O(range), not
+  * O(history) — time the feed across growing version ranges on one store. A WIDE
   * feed (keys spraying all buckets) is probed too, documenting the
   * claim's boundary: selectivity degrades to a full rewrite exactly when
   * the debt itself touches every bucket.
@@ -63,51 +63,28 @@ object ScaleProbe {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
 
-    def probeCompact(label: String, n: Long, manifest: Boolean,
-        wide: Boolean): Unit = {
+    def probeCompact(label: String, n: Long, wide: Boolean): Unit = {
       val work = java.nio.file.Files.createTempDirectory(s"graft-sp-$label")
       try {
-        val store: graft.streaming.KeyedUpsertStore =
-          if (manifest) {
-            val s = new ManifestUpsertStore(spark, work.resolve("s").toString,
-              pkCols = Seq("id"), numBuckets = NumBuckets)
-            s.initialize(Cdc.initialLoad(base(n))); s
-          } else {
-            val s = new UpsertStore(spark, work.resolve("s").toString,
-              pkCols = Seq("id"), numBuckets = NumBuckets, mergeOnRead = true)
-            s.initialize(Cdc.initialLoad(base(n))); s
-          }
+        val store = new ManifestUpsertStore(spark, work.resolve("s").toString,
+          pkCols = Seq("id"), numBuckets = NumBuckets)
+        store.initialize(Cdc.initialLoad(base(n)))
         (0 until 5).foreach { r =>
           store.merge(if (wide) wideBatch(r, n) else narrowBatch(r))
         }
-        val sec = time {
-          store match {
-            case m: ManifestUpsertStore => m.compact()
-            case u: UpsertStore => u.compact()
-          }
-        }
-        println(f"$label=$sec%.3f")
-        store match {
-          case u: UpsertStore => u.releaseLease()
-          case _ =>
-        }
+        println(f"$label=${time(store.compact())}%.3f")
       } finally graft.util.Fs.rmTree(work.toFile)
     }
 
     // JIT/codegen warmup so the first measured compact isn't taxed
-    probeCompact("warmup", 100000L, manifest = false, wide = false)
-    // ── Claim 1: compact ~O(debt). 1× vs 10× base, identical narrow debt ──
-    for (manifest <- Seq(false, true); n <- Seq(200000L, 2000000L)) {
-      val proto = if (manifest) "manifest" else "mor"
-      probeCompact(s"compact_narrow_${proto}_base$n", n, manifest, wide = false)
-    }
+    probeCompact("warmup", 100000L, wide = false)
+    // ── Claim 1: compact ~O(debt): 1×, 10×, 40× base, same narrow debt ──
+    for (n <- Seq(200000L, 2000000L, 8000000L))
+      probeCompact(s"compact_narrow_manifest_base$n", n, wide = false)
     // boundary: a wide feed touches every bucket — selectivity can't help,
     // and compact degrades to the O(store) full rewrite by design
     for (n <- Seq(200000L, 2000000L, 8000000L))
-      probeCompact(s"compact_wide_mor_base$n", n, manifest = false, wide = true)
-    // the narrow claim at the same 40× base for symmetry
-    probeCompact("compact_narrow_mor_base8000000", 8000000L,
-      manifest = false, wide = false)
+      probeCompact(s"compact_wide_manifest_base$n", n, wide = true)
 
     // ── Claim 2: changesBetween ~O(range), not O(history) ────────────────
     val work = java.nio.file.Files.createTempDirectory("graft-sp-cdf")
