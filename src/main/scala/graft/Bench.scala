@@ -56,15 +56,7 @@ object Bench {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(defaultCpus = 32)
     // warmup: JIT + codegen + filesystem metadata
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
@@ -371,7 +363,7 @@ object StoreReadBench {
     def rm(f: java.io.File): Unit = graft.util.Fs.rmTree(f)
     try {
       val t0 = System.nanoTime()
-      val store = SparkEntry.buildReplayStore(spark, sfDir,
+      val store = graft.gates.StoreGates.buildReplayStore(spark, sfDir,
         work.resolve("store").toString)
       val build = (System.nanoTime() - t0) / 1e9
       def median3(body: => Unit): Double = {
@@ -383,9 +375,9 @@ object StoreReadBench {
       def noop(df: org.apache.spark.sql.DataFrame): Unit =
         df.write.format("noop").mode("overwrite").save()
       val lookup = median3(noop(
-        SparkEntry.LookupProbeKeys.map(store.lookup(_))
+        graft.gates.StoreGates.LookupProbeKeys.map(store.lookup(_))
           .reduce(_.unionByName(_))))
-      val v = SparkEntry.ReplayAfterBatch1
+      val v = graft.gates.StoreGates.ReplayAfterBatch1
       val timeTravel = median3(noop(store.snapshotAt(v)))
       val cdf = median3(noop(store.changesBetween(v, v + 1)))
       Seq("q_store_lookup.build" -> build,

@@ -193,9 +193,9 @@ object LmScore {
       s"fractions must be sorted within (0, 1), got $fractions")
     require(approxCutsAccuracy >= 0,
       s"approxCutsAccuracy must be >= 0 (0 = exact), got $approxCutsAccuracy")
-    val scored = scoreByBigramLm(docs, idCol, textCol, train, broadcastModel)
-      .localCheckpoint(true) // feeds the cuts AND the assignment once
-    try {
+    // pinned: feeds the cuts AND the assignment once
+    graft.util.Checkpoints.pinned(
+        scoreByBigramLm(docs, idCol, textCol, train, broadcastModel)) { scored =>
       val cutExpr =
         if (approxCutsAccuracy == 0)
           s"percentile(avg_nll, array(${fractions.mkString(", ")}))"
@@ -216,6 +216,6 @@ object LmScore {
         round(col("avg_nll"), 6).alias("avg_nll_r"),
         bucket.alias("bucket"))
         .localCheckpoint(true) // survive the scored block's release
-    } finally graft.util.Checkpoints.release(scored) // unpersist was a no-op (r20)
+    }
   }
 }

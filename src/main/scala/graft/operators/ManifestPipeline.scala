@@ -90,18 +90,18 @@ object ManifestPipeline {
   }
 
   /** The merge-free half of [[foldDelta]]: the batch's within-batch
-    * survivors anti-joined against the store's EXISTING keys,
-    * materialized (so later store writes cannot retroactively change the
-    * frame). Exposed separately because a crash-safe maintainer
-    * ([[graft.streaming.VersionedManifestMaintainer]]) must write the
-    * window's spans BEFORE the store merge — replay-forward ordering.
+    * survivors anti-joined against the store's EXISTING keys. Callers
+    * materialize it before merging (so later store writes cannot
+    * retroactively change the frame). Exposed separately because a
+    * crash-safe maintainer ([[graft.streaming.VersionedManifestMaintainer]])
+    * must write the window's spans BEFORE the store merge — replay-forward
+    * ordering.
     */
   def freshSurvivors(store: KeyedUpsertStore, gatedBatch: DataFrame,
       idCol: String, textCol: String): DataFrame =
     survivorRows(gatedBatch, idCol, textCol)
       .join(store.snapshot().select(col("content_hash")),
         Seq("content_hash"), "left_anti")
-      .localCheckpoint(true)
 
   /** Record a fold's new survivors in the store (no-op on an empty
     * fold — an all-duplicate batch writes nothing).
@@ -131,6 +131,7 @@ object ManifestPipeline {
   def foldDelta(store: KeyedUpsertStore, gatedBatch: DataFrame,
       idCol: String, textCol: String, txnId: Long): DataFrame = {
     val fresh = freshSurvivors(store, gatedBatch, idCol, textCol)
+      .localCheckpoint(true)
     mergeSurvivors(store, fresh, idCol, txnId)
     fresh
   }

@@ -643,8 +643,7 @@ object UnigramLm {
       maxPieceLen: Int, seedSize: Int, emIters: Int, pruneFraction: Double,
       estimate: (DataFrame, Seq[(String, Long)]) => Map[String, Long],
       extraSingles: Seq[String] = Nil): Seq[(String, Long)] = {
-    val counts = BpeTrain.wordCounts(docs, textCol).localCheckpoint(true)
-    try {
+    graft.util.Checkpoints.pinned(BpeTrain.wordCounts(docs, textCol)) { counts =>
       val seed = trainSeed(counts, maxPieceLen, seedSize, extraSingles)
       val singles = seed.filter(_._1.length == 1).map(_._1).toSet
       require(singles.size <= vocabSize,
@@ -670,8 +669,6 @@ object UnigramLm {
         model.filter(_._1.length >= 2).sortBy { case (p, c) => (-c, p) }
           .take(multiBudget))
         .sortBy { case (p, c) => (-c, p) }
-    } finally graft.util.Checkpoints.release(counts)
-    // ^ actually frees the checkpoint blocks — Dataset.unpersist is a
-    //   cache-manager call and a no-op on a localCheckpoint'd frame (r20)
+    }
   }
 }

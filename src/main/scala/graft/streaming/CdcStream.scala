@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.Cdc
+import graft.util.Checkpoints
 
 /** Durable last-committed-transaction ledger (ST6) — the checkpoint analog
   * of the reference's watermark storage (Kafka transaction topic; formerly
@@ -169,14 +170,13 @@ class CdcStreamJob(spark: SparkSession, source: () => DataFrame,
       // inside the merge's first action, and both of the fold's
       // references (the broadcast upsert side and the delete candidates)
       // read the same blocks — one keyed shuffle per poll, total.
-      val latest = Cdc.latestPerKey(
-        changeFeed.where(col(Cdc.TransactionId) > from), keyCols)
-        .localCheckpoint(false)
-      try {
+      Checkpoints.pinned(Cdc.latestPerKey(
+          changeFeed.where(col(Cdc.TransactionId) > from), keyCols),
+          eager = false) { latest =>
         store.merge(Cdc.foldChanges(latest, source(), keyJoin))
         appliedHi = math.max(appliedHi, maxLogged)
         if (safe > from) ledger.commit(safe) // only after sink commit
-      } finally graft.util.Checkpoints.release(latest)
+      }
     } else {
       // PUSH MODE: ONE keyed pass carries both the latest-per-key dedup
       // and the batch statistics (max txid beyond the watermark,
@@ -187,27 +187,30 @@ class CdcStreamJob(spark: SparkSession, source: () => DataFrame,
       // blocks — two actions per batch instead of the r19 three (r20,
       // guide §1.2: the eager checkpoint and the stats head were
       // separate jobs over the same materialized data).
-      val keyed = changeFeed.groupBy(keyCols.map(col): _*)
-        .agg(
-          max(when(col(Cdc.TransactionId) > from, col(Cdc.TransactionId)))
-            .alias(Cdc.TransactionId),
-          count(when(col(Cdc.TransactionId) <= from, lit(1))).alias("_stale"))
-        .localCheckpoint(false)
-      try {
+      val folded = Checkpoints.pinned(changeFeed.groupBy(keyCols.map(col): _*)
+          .agg(
+            max(when(col(Cdc.TransactionId) > from, col(Cdc.TransactionId)))
+              .alias(Cdc.TransactionId),
+            count(when(col(Cdc.TransactionId) <= from, lit(1))).alias("_stale")),
+          eager = false) { keyed =>
         val stats = keyed
           .agg(max(col(Cdc.TransactionId)).alias("_max_tx"),
             sum(col("_stale")).alias("_stale"))
           .head()
         warnStale(if (stats.isNullAt(1)) 0L else stats.getLong(1))
-        if (stats.isNullAt(0)) return // nothing beyond the watermark → skip
-        val maxLogged = stats.getLong(0)
-        val safe = Watermark.maxSafe(maxLogged, open, from, now)
-        val latest = keyed.where(col(Cdc.TransactionId).isNotNull)
-          .select(keyCols.map(col) :+ col(Cdc.TransactionId): _*)
-        store.merge(Cdc.foldChanges(latest, source(), keyJoin))
-        appliedHi = math.max(appliedHi, maxLogged)
-        if (safe > from) ledger.commit(safe) // only after sink commit
-      } finally graft.util.Checkpoints.release(keyed)
+        if (stats.isNullAt(0)) false // nothing beyond the watermark → skip
+        else {
+          val maxLogged = stats.getLong(0)
+          val safe = Watermark.maxSafe(maxLogged, open, from, now)
+          val latest = keyed.where(col(Cdc.TransactionId).isNotNull)
+            .select(keyCols.map(col) :+ col(Cdc.TransactionId): _*)
+          store.merge(Cdc.foldChanges(latest, source(), keyJoin))
+          appliedHi = math.max(appliedHi, maxLogged)
+          if (safe > from) ledger.commit(safe) // only after sink commit
+          true
+        }
+      }
+      if (!folded) return
     }
     // maintenance AFTER the commit: a compaction crash must replay the
     // window (deltas re-fold idempotently), never lose it. A compaction

@@ -6,7 +6,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{ManifestPipeline, ServedModel, TokenizerStore}
-import graft.util.Fs
+import graft.util.{Checkpoints, Fs}
 
 /** Streaming maintenance loop for the incremental pre-training manifest:
   * a `foreachBatch` sink (the at-least-once sink model of Structured
@@ -524,8 +524,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     acquireClaim(window, batchId)
     afterClaim()
     val gen = appendGen(window, batchId)
-    val fresh = ManifestPipeline.freshSurvivors(store, batch, idCol, textCol)
-    try {
+    Checkpoints.pinned(
+        ManifestPipeline.freshSurvivors(store, batch, idCol, textCol)) { fresh =>
       val committedGen: Option[String] =
         if (fresh.isEmpty) {
           // `fresh empty + gen holds spans` is ALMOST always a crash
@@ -552,7 +552,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
           packed.write.mode("overwrite").parquet(genDir(gen).getPath)
           // free the pack kernel's internal checkpoint blocks promptly —
           // a long-running stream must not wait for a driver GC (r19)
-          graft.util.Checkpoints.release(packed)
+          Checkpoints.release(packed)
           Fs.fsyncTree(genDir(gen)) // durable BEFORE the store learns keys
           beforeStoreMerge()
           // non-empty was already probed above — skip the second
@@ -574,7 +574,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       }
       claimOf(window).delete() // the manifest entry now guards
       gc()
-    } finally graft.util.Checkpoints.release(fresh)
+    }
   }
 
   // ── Reads ────────────────────────────────────────────────────────────────
@@ -812,31 +812,30 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     val entry = m0.windows(windowId)
     val retracted = retractedIds(spark, m0)
     if (retracted.isEmpty || entry.gen.isEmpty) return
-    val current = spark.read.parquet(servingDir(entry.gen.get, m0.version))
-      .select(col(idCol), col("n_tok")).distinct()
-      .localCheckpoint(true)
-    try {
+    Checkpoints.pinned(
+        spark.read.parquet(servingDir(entry.gen.get, m0.version))
+          .select(col(idCol), col("n_tok")).distinct()) { current =>
       // physical no-op when the window holds none of the retracted docs
-      if (current.join(broadcast(retracted.get), Seq(idCol), "left_semi")
-          .isEmpty) return
-      val remaining = current
-        .join(broadcast(retracted.get), Seq(idCol), "left_anti")
-      // pinned like packWindow's shuffled frame (r20, VERDICT r19 #7):
-      // packSpans references its input across TWO actions (the eager
-      // approxQuantile at plan construction plus the rewrite write), and
-      // each re-ran the shuffle + anti-join subtree from current's blocks
-      val shuf = graft.operators.Sampling.shuffled(remaining, idCol, seed)
-        .localCheckpoint(true)
-      try {
-        val repacked = graft.operators.Shards.packSpans(shuf,
-            "shuffle_pos", "n_tok", budget)
-          .withColumn("window", lit(windowId))
-          .select(spanCols.map(col): _*)
-        // the compacted entry keeps its batchId/model/writer stamps —
-        // compaction rewrites spans, not delivery or token units
-        rewriteWindow(spark, windowId, repacked, entry)(identity)
-      } finally graft.util.Checkpoints.release(shuf)
-    } finally graft.util.Checkpoints.release(current)
+      if (!current.join(broadcast(retracted.get), Seq(idCol), "left_semi")
+          .isEmpty) {
+        val remaining = current
+          .join(broadcast(retracted.get), Seq(idCol), "left_anti")
+        // pinned like packWindow's shuffled frame (r20, VERDICT r19 #7):
+        // packSpans references its input across TWO actions (the eager
+        // approxQuantile at plan construction plus the rewrite write), and
+        // each re-ran the shuffle + anti-join subtree from current's blocks
+        Checkpoints.pinned(graft.operators.Sampling
+            .shuffled(remaining, idCol, seed)) { shuf =>
+          val repacked = graft.operators.Shards.packSpans(shuf,
+              "shuffle_pos", "n_tok", budget)
+            .withColumn("window", lit(windowId))
+            .select(spanCols.map(col): _*)
+          // the compacted entry keeps its batchId/model/writer stamps —
+          // compaction rewrites spans, not delivery or token units
+          rewriteWindow(spark, windowId, repacked, entry)(identity)
+        }
+      }
+    }
   }
 
   /** Shared rewrite commit: write `repacked` to a fresh nonce gen, then
@@ -929,10 +928,9 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       }
       return
     }
-    val idsAll = spark.read.parquet(servingDir(entry.gen.get, m0.version))
-      .select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    try {
+    Checkpoints.pinned(
+        spark.read.parquet(servingDir(entry.gen.get, m0.version))
+          .select(col(idCol)).distinct()) { idsAll =>
       // retracted docs drop during the rewrite, so a caller who legally
       // deleted a taken-down text is not required to supply it
       val ids = retractedIds(spark, m0) match {
@@ -941,14 +939,12 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       }
       // pinned: the missing-count action below AND packWindow's
       // tokenization both read this frame — without the checkpoint the
-      // source batch's scan+dedup+join executed twice (r19). Released in
-      // a finally (r20, ADVICE r19 #3): a failed require/rewrite must
-      // not leak the blocks until a driver GC.
-      val kept = sourceBatch.select(col(idCol), col(textCol))
-        .dropDuplicates(Seq(idCol))
-        .join(ids, Seq(idCol))
-        .localCheckpoint(true)
-      try {
+      // source batch's scan+dedup+join executed twice (r19). The scope
+      // releases it on every exit (r20, ADVICE r19 #3): a failed
+      // require/rewrite must not leak the blocks until a driver GC.
+      Checkpoints.pinned(sourceBatch.select(col(idCol), col(textCol))
+          .dropDuplicates(Seq(idCol))
+          .join(ids, Seq(idCol))) { kept =>
         val missing = ids
           .join(kept.select(col(idCol)), Seq(idCol), "left_anti").count()
         require(missing == 0L,
@@ -958,8 +954,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
         val repacked = ManifestPipeline.packWindow(kept, idCol, textCol,
           model(spark), windowId, seed, budget, byteLevel)
         rewriteWindow(spark, windowId, repacked, entry)(e => e.copy(model = h))
-      } finally graft.util.Checkpoints.release(kept)
-    } finally graft.util.Checkpoints.release(idsAll)
+      }
+    }
   }
 
   /** Explicitly version the manifest onto the artifact's CURRENT model:

@@ -15,6 +15,20 @@ import org.apache.spark.sql.DataFrame
   */
 object Checkpoints {
 
+  /** Checkpoint `df` (eagerly or lazily), run `body` over the pinned
+    * frame, and [[release]] its blocks when `body` returns or throws. The
+    * pin's lifetime is the lexical scope, so a pinned frame cannot be
+    * released twice or outlive its readers by accident. Whatever `body`
+    * returns must not read the pinned frame lazily afterwards: a result
+    * frame must be materialized inside the scope (its own checkpoint or
+    * a write).
+    */
+  def pinned[A](df: DataFrame, eager: Boolean = true)(
+      body: DataFrame => A): A = {
+    val p = df.localCheckpoint(eager)
+    try body(p) finally release(p)
+  }
+
   /** Proactively free the blocks behind a localCheckpoint'd frame by
     * unpersisting the checkpointed RDDs at the plan's leaves. The frame
     * (and anything lazily derived from it) MUST NOT be computed again

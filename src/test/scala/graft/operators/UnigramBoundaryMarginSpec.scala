@@ -150,7 +150,7 @@ class UnigramBoundaryMarginSpec extends SparkSpec {
   }
 
   /** Every corpus a manifest gate TRAINS a tokenizer on, derived from the
-    * SAME builders the gates call (`SparkEntry.manifestCorpus` /
+    * SAME builders the gates call (`ManifestGates.manifestCorpus` /
     * `manifestMixedCorpus` / the incremental gate's window-1 batch) — not
     * a hand-kept copy that can drift (VERDICT r15 #4: the mixed gate's
     * training corpus was previously unscanned).
@@ -160,10 +160,10 @@ class UnigramBoundaryMarginSpec extends SparkSpec {
     val docs = Tables.load(spark, sfDir, "documents")
       .withColumn("doc_id", col("doc_id").cast("long"))
     Seq(
-      "manifest" -> graft.SparkEntry.manifestCorpus(docs),
-      "manifest_mixed" -> graft.SparkEntry.manifestMixedCorpus(docs),
-      "manifest_incremental_w1" -> graft.SparkEntry.manifestCorpus(
-        docs.where(col("doc_id") < graft.SparkEntry.IncrementalSplitId)))
+      "manifest" -> graft.gates.ManifestGates.manifestCorpus(docs),
+      "manifest_mixed" -> graft.gates.ManifestGates.manifestMixedCorpus(docs),
+      "manifest_incremental_w1" -> graft.gates.ManifestGates.manifestCorpus(
+        docs.where(col("doc_id") < graft.gates.ManifestGates.IncrementalSplitId)))
   }
 
   /** One byte-corpus scan: the model the gate trains, plus THE seed it
@@ -195,7 +195,7 @@ class UnigramBoundaryMarginSpec extends SparkSpec {
       // discipline)
       scanByteCorpus(s"$sfDir raw", docs)
       scanByteCorpus(s"$sfDir manifest",
-        graft.SparkEntry.manifestCorpus(docs))
+        graft.gates.ManifestGates.manifestCorpus(docs))
     }
   }
 

@@ -44,9 +44,8 @@ object DedupShuffleProbe {
       shuffleBytes.reset(); shuffleRecords.reset()
       val t0 = System.nanoTime()
       val n = df.count()
-      // listener events are async; give the bus a moment to drain before
-      // reading the adders (an ad-hoc probe — a sleep is fine)
-      Thread.sleep(2000)
+      // listener events are async: drain the bus before reading the adders
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
       println(f"$label: rows=$n shuffle_bytes=${shuffleBytes.sum()}%,d " +
         f"shuffle_records=${shuffleRecords.sum()}%,d " +
         f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
