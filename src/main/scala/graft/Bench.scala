@@ -141,7 +141,7 @@ object Bench {
       // visible even when its retry succeeds (ADVICE r11).
       // reset the contention counters so whatever drains after the runs
       // is attributable strictly to THIS entry
-      graft.streaming.UpsertStore.drainCounts()
+      graft.streaming.StoreTelemetry.drainCounts()
       val gcEntry0 = env.gcMillis
       val firstTry = once()
       val first = if (firstTry < 0) once() else firstTry
@@ -166,7 +166,7 @@ object Bench {
       // carry signal — SCALING §27's entry-level clause now reads:
       // moved alone + own gc_sec elevated → in-sweep pressure, not code.
       val gcSec = (env.gcMillis - gcEntry0) / 1000.0
-      val counts = graft.streaming.UpsertStore.drainCounts()
+      val counts = graft.streaming.StoreTelemetry.drainCounts()
       sweepState()
       Seq(name -> t) ++
         counts.get("commit_conflicts").filter(_ > 0L)
@@ -429,7 +429,7 @@ object StreamBench {
     import org.apache.spark.sql.functions._
     import graft.cdc.Cdc
     import graft.streaming.{CdcStreamJob, KeyedUpsertStore,
-      ManifestUpsertStore, TxidLedger, UpsertStore}
+      ManifestUpsertStore, StoreTelemetry, TxidLedger, UpsertStore}
 
     val customer = Tables.load(spark, sfDir, "customer")
     val feed = Tables.load(spark, sfDir, "events")
@@ -469,7 +469,7 @@ object StreamBench {
         // reaches `compactEvery` every `compactEvery` batches)
         autoCompactDeltas = if (manifest) Some(compactEvery) else None)
       val step = math.max(1L, maxTx / numBatches)
-      UpsertStore.drainPhases() // reset: earlier merges must not leak in
+      StoreTelemetry.drainPhases() // reset: earlier merges must not leak in
       val t0 = System.nanoTime()
       var batch = 0
       var lo = 0L
@@ -489,7 +489,7 @@ object StreamBench {
       }
       store.snapshot().count() // force final state visible before stopping
       val total = (System.nanoTime() - t0) / 1e9
-      val merged = UpsertStore.drainPhases()
+      val merged = StoreTelemetry.drainPhases()
       // merge() and compact() both feed the phase counters (compact's
       // write/swap are separate names, so nothing double-counts). On the
       // manifest store merge_fold reads 0 — there is no changed-bucket
@@ -552,8 +552,8 @@ object StreamBench {
       concurrent: Boolean = true): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import graft.cdc.Cdc
-    import graft.streaming.{CdcStreamJob, ManifestUpsertStore, TxidLedger,
-      UpsertStore}
+    import graft.streaming.{CdcStreamJob, ManifestUpsertStore,
+      StoreTelemetry, TxidLedger}
 
     val q =
       if (concurrent) Bench.StreamManifest2wQueryName
@@ -590,8 +590,8 @@ object StreamBench {
         }
       } catch { case t: Throwable => errors.add(t) })
       val expectKeys = master.count() // feed only upserts existing keys
-      UpsertStore.drainPhases()
-      UpsertStore.drainCounts()
+      StoreTelemetry.drainPhases()
+      StoreTelemetry.drainCounts()
       def gcMillis: Long = {
         import scala.jdk.CollectionConverters._
         java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -626,7 +626,7 @@ object StreamBench {
       require(finalKeys == expectKeys,
         s"two-writer fold lost updates: $finalKeys of $expectKeys keys")
       val total = (System.nanoTime() - t0) / 1e9
-      val merged = UpsertStore.drainPhases()
+      val merged = StoreTelemetry.drainPhases()
       // contention self-disposition (r18, VERDICT r17 #2): the stores
       // absorb rebase conflicts and lost maintenance races silently —
       // reporting the counts plus this entry's own GC seconds lets the
@@ -635,7 +635,7 @@ object StreamBench {
       // contention, not a protocol regression (SCALING §27). The control
       // (`concurrent = false`) reports the same counters; its conflicts
       // are structurally ~0, which is the calibration line.
-      val counts = UpsertStore.drainCounts()
+      val counts = StoreTelemetry.drainCounts()
       Seq(q -> total,
         s"$q.merge_write" -> merged.getOrElse("merge_write", 0.0),
         s"$q.swap" -> merged.getOrElse("swap", 0.0),

@@ -227,7 +227,7 @@ class CdcStreamJob(spark: SparkSession, source: () => DataFrame,
         autoCompactRatio.foreach(store.compactIfDeltaRatio(_))
     } catch {
       case e: CommitConflictException =>
-        UpsertStore.addCount("policy_noops") // counted for the bench (r18)
+        StoreTelemetry.addCount("policy_noops") // counted for the bench (r18)
         log.info(s"batch $batchId: compaction lost a concurrent-maintenance " +
           s"race, skipped (debt re-checked next batch): ${e.getMessage}")
     }

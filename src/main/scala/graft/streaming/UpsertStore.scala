@@ -246,7 +246,7 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
     val typedKey = pkCols.zip(key).map { case (c, v) =>
       lit(v).cast(schema(schema.fieldIndex(c)).dataType)
     }
-    val b = UpsertStore.bucketOf(spark, typedKey, numBuckets)
+    val b = ManifestUpsertStore.bucketOf(spark, typedKey, numBuckets)
     val pred = pkCols.zip(typedKey)
       .map { case (c, v) => col(c) === v }.reduce(_ && _)
     baseRead().where(col(bucketCol) === b).where(pred).drop(bucketCol)
@@ -650,7 +650,7 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
       val tFold = System.nanoTime()
       val changedBuckets = batch.select(bucketCol).distinct()
         .collect().map(_.getInt(0)).toSet
-      UpsertStore.addPhase("merge_fold", (System.nanoTime() - tFold) / 1e9)
+      StoreTelemetry.addPhase("merge_fold", (System.nanoTime() - tFold) / 1e9)
       if (changedBuckets.isEmpty) return
       // read with the persisted schema: after a batch deletes every remaining
       // row the store holds no data files, and schema inference would fail
@@ -712,14 +712,14 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
       merged.write.partitionBy(bucketCol).mode("overwrite")
         .parquet(staging.getPath)
       val tSwap = System.nanoTime()
-      UpsertStore.addPhase("merge_write", (tSwap - tWrite) / 1e9)
+      StoreTelemetry.addPhase("merge_write", (tSwap - tWrite) / 1e9)
       // a COW rewrite destroys the pre-merge version of every touched
       // bucket: advance the sequence and the change-feed horizon WITH it,
       // conservatively before the swap commits (see [[baseSeqFile]])
       val seq = nextSeq()
       writeBaseSeq(seq)
       val survivors = swapStaged(staging)
-      UpsertStore.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
+      StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
       // a bucket whose rows were ALL deleted has no staged dir — drop it
       // (a crash mid-delete leaves partial rows; the replayed deletes
       // remove them again)
@@ -829,112 +829,9 @@ class UpsertStore(spark: SparkSession, dir: String, pkCols: Seq[String],
         .repartition(col(bucketCol)))
       .write.partitionBy(bucketCol).mode("overwrite").parquet(staging.getPath)
     val t1 = System.nanoTime()
-    UpsertStore.addPhase("compact_write", (t1 - t0) / 1e9)
+    StoreTelemetry.addPhase("compact_write", (t1 - t0) / 1e9)
     swapStaged(staging)
-    UpsertStore.addPhase("compact_swap", (System.nanoTime() - t1) / 1e9)
-    UpsertStore.addPhase("compact", (System.nanoTime() - tc) / 1e9)
-  }
-}
-
-/** Incremental consumer of a store's change data feed — the DOWNSTREAM
-  * half of the engine's topology (the reference's consumers tail the Kafka
-  * topic the producer commits into; a lakehouse consumer tails the store's
-  * versions the same way). At-least-once with the same shape as the
-  * producer side (ST4): [[poll]] returns everything after the durable
-  * cursor, [[commit]] advances the cursor only on the caller's ack, so a
-  * crash between effect and ack replays the window and an idempotent /
-  * last-write-wins downstream converges.
-  *
-  * A cursor the store's retention horizon has passed fails loudly on poll
-  * (the Kafka offset-out-of-range / Delta vacuumed-version analog): the
-  * consumer fell behind the store's retention, and silently skipping the
-  * lost span would lose deletes. Retention is the store's: the last
-  * `keepVersions` manifests of a [[ManifestUpsertStore]]; none on the
-  * copy-on-write [[UpsertStore]], whose every merge moves the horizon.
-  */
-class StoreChangeFeed(store: KeyedUpsertStore, cursorPath: String) {
-  private val ledger = new TxidLedger(cursorPath)
-  // BASELINE AT ATTACH (review r9): with no durable cursor the baseline is
-  // the store's CURRENT version, not 0 — a store that has ever compacted
-  // has no version-0 history, so a zero cursor would make every poll()
-  // throw behind-horizon forever. Writing currentSeq BEFORE the caller
-  // snapshots is the safe order: any merge landing in between is ahead of
-  // the cursor and replays (at-least-once), whereas a cursor taken after
-  // the snapshot could silently skip it.
-  if (ledger.read() < 0L) ledger.commit(store.feedVersion)
-
-  /** Last version this consumer has durably acknowledged. Initialized to
-    * the store version at attach time ("the snapshot I am about to take is
-    * my baseline") — take `snapshot()` AFTER constructing the feed.
-    */
-  def cursor: Long = math.max(0L, ledger.read())
-
-  /** `(changes, toSeq)`: the envelope rows in `(cursor, toSeq]`. Apply
-    * downstream, make the effect durable, then [[commit]](toSeq).
-    */
-  def poll(): (DataFrame, Long) = {
-    val to = store.feedVersion
-    (store.changesBetween(cursor, to), to)
-  }
-
-  def commit(seq: Long): Unit = ledger.commit(seq)
-}
-
-object UpsertStore {
-  /** The bucket of one typed probe key, evaluated WITHOUT a Spark job
-    * (r20, VERDICT r19 #3): the expression runs over a one-row
-    * LocalRelation, which the optimizer's ConvertToLocalRelation rule
-    * folds at planning time, so `head()` serves from LocalTableScanExec's
-    * driver-side rows — a point lookup no longer schedules a 1-row
-    * cluster job just to learn which bucket to prune to (the serving
-    * path paid one such job PER PROBE KEY; `q_store_lookup.read` spent
-    * most of its wall there). Still evaluated by Spark's own expression
-    * engine end to end, so the hash semantics can never drift from the
-    * write path's `pmod(hash(pk...))`. Job-freeness is spec-pinned
-    * (StoreLookupSpec counts jobs under a listener).
-    */
-  private[streaming] def bucketOf(spark: SparkSession,
-      typedKey: Seq[org.apache.spark.sql.Column], numBuckets: Int): Int = {
-    import spark.implicits._
-    Seq(0).toDF("_probe")
-      .select(pmod(hash(typedKey: _*), lit(numBuckets)).cast("int"))
-      .head().getInt(0)
-  }
-
-  /** Cumulative per-phase seconds (merge_write = fold compute + staging
-    * IO, swap = commit renames/fsyncs, compact) — nearly-free counters the
-    * stream benchmark drains so a regression in the 100 TB-critical loop
-    * localizes to a phase without re-profiling (VERDICT r7 #6).
-    */
-  private val phaseSeconds =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  private[streaming] def addPhase(name: String, sec: Double): Unit =
-    phaseSeconds.merge(name, sec, (a, b) => a + b)
-  /** Snapshot and reset the accumulated phase seconds. */
-  def drainPhases(): Map[String, Double] = {
-    import scala.jdk.CollectionConverters._
-    val out = phaseSeconds.asScala.map { case (k, v) => k -> v.doubleValue }.toMap
-    phaseSeconds.clear()
-    out
-  }
-
-  /** Cumulative CONTENTION counters (r18, VERDICT r17 #2): commit-slot
-    * conflicts absorbed by [[ManifestUpsertStore]]'s optimistic retry and
-    * maintenance races the [[CdcStreamJob]] policy path turns into
-    * no-ops. The stores absorb both silently by design — counting them
-    * lets a bench entry SELF-DISPOSITION a slow run (elevated conflicts →
-    * in-sweep contention, not a code regression) instead of needing an
-    * isolated re-run for forensics.
-    */
-  private val eventCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[streaming] def addCount(name: String, n: Long = 1L): Unit =
-    eventCounts.merge(name, n, (a, b) => a + b)
-  /** Snapshot and reset the accumulated contention counters. */
-  def drainCounts(): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    val out = eventCounts.asScala.map { case (k, v) => k -> v.longValue }.toMap
-    eventCounts.clear()
-    out
+    StoreTelemetry.addPhase("compact_swap", (System.nanoTime() - t1) / 1e9)
+    StoreTelemetry.addPhase("compact", (System.nanoTime() - tc) / 1e9)
   }
 }

@@ -280,7 +280,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       try return attempt(m, slot)
       catch {
         case e: CommitConflictException =>
-          UpsertStore.addCount("commit_conflicts") // bench contention signal
+          StoreTelemetry.addCount("commit_conflicts") // bench contention signal
           retries += 1
           if (retries > maxRetries) throw new IllegalStateException(
             s"$what under $manifestDir lost the commit race $maxRetries " +
