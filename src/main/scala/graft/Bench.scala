@@ -394,10 +394,10 @@ object StoreReadBench {
 
 /** Streaming merge-throughput benchmark: the engine's core loop (SURVEY.md
   * §3.1) measured end-to-end — initialize a keyed-store replica of
-  * `customer` (the copy-on-write [[graft.streaming.UpsertStore]], or the
-  * merge-on-read [[graft.streaming.ManifestUpsertStore]] with
-  * `manifest = true`), then replay the sf events table as a CDC change
-  * feed through [[graft.streaming.CdcStreamJob.processBatch]] in
+  * `customer` (a [[graft.streaming.ManifestUpsertStore]], copy-on-write,
+  * or merge-on-read with `manifest = true`), then replay the sf events
+  * table as a CDC change feed through
+  * [[graft.streaming.CdcStreamJob.processBatch]] in
   * `numBatches` micro-batch windows (window → latest-per-key fold against
   * the master → bucket-partitioned idempotent merge → ledger advance).
   * Reported seconds cover the full replay, not per-batch bests: throughput
@@ -409,27 +409,26 @@ object StoreReadBench {
 object StreamBench {
   /** Returns the total plus dotted per-phase entries
     * (`stream_cdc_merge.merge_fold` = CDC fold compute into cache,
-    * `.merge_write` = staging IO from cache, `.swap` = commit renames/
-    * fsyncs, `.compact` with its own `.compact_write`/`.compact_swap`
+    * `.merge_write` = generation IO from cache, `.swap` = manifest PUT/
+    * fsyncs/GC, `.compact` with its own `.compact_write`/`.compact_swap`
     * breakdown (VERDICT r9 #2), `.other` = watermark stats/ledger/driver
     * overhead) so a regression in the loop localizes to a phase without
     * re-profiling (VERDICT r7 #6). Phases sum to the total by
     * construction.
     *
-    * The manifest store's compaction is POLICY-DRIVEN from inside
+    * Compaction is POLICY-DRIVEN from inside
     * [[graft.streaming.CdcStreamJob.processBatch]] (`autoCompactDeltas =
     * compactEvery`) — the loop owns its maintenance cadence (VERDICT r9
-    * #5); the COW loop keeps the external hand-scheduled cadence (COW
-    * merges publish no deltas, so a debt policy has nothing to observe
-    * there).
+    * #5). A copy-on-write merge publishes no delta, so the policy never
+    * fires there and `.compact` reads 0.
     */
   def run(spark: SparkSession, sfDir: String, numBatches: Int = 10,
       compactEvery: Int = 5,
       manifest: Boolean = false): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import graft.cdc.Cdc
-    import graft.streaming.{CdcStreamJob, KeyedUpsertStore,
-      ManifestUpsertStore, StoreTelemetry, TxidLedger, UpsertStore}
+    import graft.streaming.{CdcStreamJob, ManifestUpsertStore,
+      StoreTelemetry, TxidLedger, WritePolicy}
 
     val customer = Tables.load(spark, sfDir, "customer")
     val feed = Tables.load(spark, sfDir, "events")
@@ -439,35 +438,26 @@ object StreamBench {
     val q =
       if (manifest) Bench.StreamManifestQueryName else Bench.StreamQueryName
     try {
-      // manifest = the merge-on-read store riding the SAME loop, benched
-      // head-to-head with the copy-on-write store
-      val store: KeyedUpsertStore =
-        if (manifest) {
-          val s = new ManifestUpsertStore(spark,
-            work.resolve("store").toString, pkCols = Seq("user_id"),
-            numBuckets = 32)
-          s.initialize(Cdc.initialLoad(
-            customer.select(col("c_custkey").alias("user_id"), col("c_name"),
-              col("c_acctbal"))))
-          s
-        } else {
-          val s = new UpsertStore(spark, work.resolve("store").toString,
-            pkCols = Seq("user_id"), numBuckets = 32)
-          s.initialize(Cdc.initialLoad(
-            customer.select(col("c_custkey").alias("user_id"), col("c_name"),
-              col("c_acctbal"))))
-          s
-        }
+      // manifest = the merge-on-read policy riding the SAME loop, benched
+      // head-to-head with copy-on-write
+      val store = new ManifestUpsertStore(spark,
+        work.resolve("store").toString, pkCols = Seq("user_id"),
+        numBuckets = 32,
+        writePolicy =
+          if (manifest) WritePolicy.MergeOnRead else WritePolicy.CopyOnWrite)
+      store.initialize(Cdc.initialLoad(
+        customer.select(col("c_custkey").alias("user_id"), col("c_name"),
+          col("c_acctbal"))))
       val ledger = new TxidLedger(work.resolve("txid.ledger").toString)
       val job = new CdcStreamJob(spark,
         source = () => customer.select(col("c_custkey").alias("user_id"),
           col("c_name"), col("c_acctbal")),
         store = store, ledger = ledger,
         keyJoin = Seq("user_id" -> "user_id"),
-        // manifest: the loop compacts itself when the delta debt hits the
-        // threshold — same cadence the hand-scheduler produced (debt
-        // reaches `compactEvery` every `compactEvery` batches)
-        autoCompactDeltas = if (manifest) Some(compactEvery) else None)
+        // the loop compacts itself when the delta debt hits the threshold
+        // (debt reaches `compactEvery` every `compactEvery` batches under
+        // merge-on-read; never under copy-on-write)
+        autoCompactDeltas = Some(compactEvery))
       val step = math.max(1L, maxTx / numBatches)
       StoreTelemetry.drainPhases() // reset: earlier merges must not leak in
       val t0 = System.nanoTime()
@@ -479,27 +469,20 @@ object StreamBench {
           col(Cdc.TransactionId) <= hi), batch.toLong)
         lo = hi
         batch += 1
-        // COW merges are bucket-aligned and publish no deltas — keep the
-        // external maintenance cadence the manifest loop drives via its
-        // policy
-        store match {
-          case cow: UpsertStore if batch % compactEvery == 0 => cow.compact()
-          case _ =>
-        }
       }
       store.snapshot().count() // force final state visible before stopping
       val total = (System.nanoTime() - t0) / 1e9
       val merged = StoreTelemetry.drainPhases()
       // merge() and compact() both feed the phase counters (compact's
       // write/swap are separate names, so nothing double-counts). On the
-      // manifest store merge_fold reads 0 — there is no changed-bucket
-      // probe, so the CDC fold computes lazily INSIDE the delta write
-      // (merge_write covers fold + IO there) — and `other` carries the
-      // read-side snapshot fold, the price MOR trades its O(batch) writes
-      // for.
+      // merge-on-read policy merge_fold reads 0 — there is no
+      // changed-bucket probe, so the CDC fold computes lazily INSIDE the
+      // delta write (merge_write covers fold + IO there) — and `other`
+      // carries the read-side snapshot fold, the price MOR trades its
+      // O(batch) writes for.
       // compact.{write,swap} decompose the compact total the same way
-      // (compact_write = fold compute + staging IO; the remainder is
-      // listing/fsync/lease overhead).
+      // (compact_write = fold compute + generation IO; the remainder is
+      // listing/fsync/PUT overhead).
       val fold = merged.getOrElse("merge_fold", 0.0)
       val write = merged.getOrElse("merge_write", 0.0)
       val swap = merged.getOrElse("swap", 0.0)

@@ -15,7 +15,7 @@ object GraftCatalog {
 
   /** Register every mapping as a temp view. `masters` resolves a mapping's
     * master-table name to its DataFrame (e.g. a parquet load or an
-    * [[graft.streaming.UpsertStore]] snapshot).
+    * [[graft.streaming.ManifestUpsertStore]] snapshot).
     */
   def register(spark: SparkSession, mappings: Seq[TableMapping],
       masters: String => DataFrame): Seq[String] =

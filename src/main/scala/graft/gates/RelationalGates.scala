@@ -490,9 +490,10 @@ object RelationalGates extends GateFamily {
         |FROM nation""".stripMargin),
 
     // Z-order (Morton) key over two join/filter dimensions — the sort key
-    // for clustered compaction (UpsertStore.compact(clusterBy)); pure bit
-    // arithmetic, so the oracle recomputes every key as an unrolled sum of
-    // shifted bit extractions. Codegen'd kernel, map-side, zero shuffle.
+    // for clustered compaction (ManifestUpsertStore.compact(clusterBy));
+    // pure bit arithmetic, so the oracle recomputes every key as an
+    // unrolled sum of shifted bit extractions. Codegen'd kernel,
+    // map-side, zero shuffle.
     // The inputs are BUCKETIZED into [0, 2^31) first (mod; zorder2 raises
     // on wider domains rather than interleave garbage bits): TPC-H
     // o_orderkey's sparse keyspace crosses 2^31 around SF 90, and layout

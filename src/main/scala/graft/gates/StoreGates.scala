@@ -121,8 +121,8 @@ object StoreGates extends GateFamily {
     // generation dirs + digest-validated manifest put — with a manifest
     // COMPACTION between the batches, so the gate exercises generation
     // re-referencing and the post-compact LWW boundary. Same final-state
-    // oracle arithmetic as the rename-based store's gates; crash points
-    // are ManifestStoreSpec's.
+    // oracle arithmetic as the other replay gates; crash points are
+    // ManifestStoreSpec's.
     Gate("q_store_manifest", (s, dir) => {
       val cust = replayCustomers(s, dir)
       withWorkDir("graft-mfstore") { work =>
@@ -147,9 +147,9 @@ object StoreGates extends GateFamily {
     // reference's consumer-side topology — its consumers tail the Kafka
     // topic the producer commits into (README.md:44); here a
     // StoreChangeFeed consumer (durable cursor, at-least-once) tails the
-    // object-store MANIFEST store's version history and maintains a
-    // rename-based copy-on-write replica, i.e. the two commit protocols
-    // composed across the feed seam. Batch 1, a manifest compaction, and
+    // merge-on-read MANIFEST store's version history and maintains a
+    // copy-on-write replica, i.e. the two write policies composed across
+    // the feed seam. Batch 1, a manifest compaction, and
     // batch 2 land behind the attached consumer; every polled window is applied
     // TWICE before its ack (the crash-between-effect-and-ack replay), so
     // idempotent convergence is inside the hash. Oracle = the source's
@@ -166,9 +166,10 @@ object StoreGates extends GateFamily {
         // attach BEFORE snapshotting: a merge landing in between replays
         val feed = new graft.streaming.StoreChangeFeed(source,
           work.resolve("cursor").toString)
-        val replica = new graft.streaming.UpsertStore(s,
+        val replica = new graft.streaming.ManifestUpsertStore(s,
           work.resolve("replica").toString, pkCols = Seq("user_id"),
-          numBuckets = 8)
+          numBuckets = 8,
+          writePolicy = graft.streaming.WritePolicy.CopyOnWrite)
         replica.initialize(Cdc.initialLoad(source.snapshot()))
         def drain(): Unit = {
           val (changes, to) = feed.poll()

@@ -133,7 +133,7 @@ object AvroWire {
     *
     * RENAMES need `readerAliases` (new name → old name, top level):
     * without an alias Avro treats a rename as drop+add and fills the new
-    * field with nulls SILENTLY — the same trap UpsertStore's merge
+    * field with nulls SILENTLY — the same trap ManifestUpsertStore's merge
     * documents — so pass the alias and the old bytes flow into the new
     * column. Per-partition decoder reuse as in [[fromRecords]].
     */

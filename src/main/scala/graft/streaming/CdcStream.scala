@@ -7,26 +7,38 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.Cdc
-import graft.util.Checkpoints
+import graft.util.{Checkpoints, Fs}
 
 /** Durable last-committed-transaction ledger (ST6) — the checkpoint analog
   * of the reference's watermark storage (Kafka transaction topic; formerly
-  * the DELTAINFO table, `S4HanaProducer.java:118-144`). Atomic via
-  * write-temp + move.
+  * the DELTAINFO table, `S4HanaProducer.java:118-144`). Atomic and durable
+  * via write-temp + force + move + parent-dir fsync: a power loss leaves
+  * the old value or the new one, never an empty file. A file that reads
+  * empty or unparseable anyway fails [[read]] loudly rather than
+  * restarting the loop from a guessed watermark.
   */
 class TxidLedger(path: String) {
   def read(): Long = {
     val p = Paths.get(path)
-    if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8").trim.toLong
-    else -1L
+    if (!Files.exists(p)) return -1L
+    val bytes = Files.readAllBytes(p)
+    new String(bytes, "UTF-8").trim.toLongOption.getOrElse(
+      throw new IllegalStateException(
+        s"txid ledger $path holds no txid: ${bytes.length} byte(s) [" +
+          bytes.take(32).map("%02x".format(_)).mkString(" ") +
+          "] — a torn write; refusing to guess the committed watermark"))
   }
   def commit(txid: Long): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
+    val p = Paths.get(path).toAbsolutePath
+    Files.createDirectories(p.getParent)
     val tmp = Paths.get(path + ".tmp")
     Files.write(tmp, txid.toString.getBytes("UTF-8"))
+    // the bytes are durable before the name points at them, and the
+    // rename itself is durable before the caller acts on the commit
+    Fs.fsyncFile(tmp.toFile)
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    Fs.fsyncDir(p.getParent.toFile)
   }
 }
 

@@ -14,11 +14,11 @@ import graft.cdc.Cdc
   */
 class CommitConflictException(msg: String) extends IllegalStateException(msg)
 
-/** The keyed-replica surface [[CdcStreamJob]] drives — implemented by both
-  * stores (the copy-on-write [[UpsertStore]] and the merge-on-read
-  * [[ManifestUpsertStore]]), so the streaming loop, its ledger contract,
-  * and its maintenance policies are store-agnostic: swapping the storage
-  * backend is a constructor argument, not a topology change.
+/** The keyed-replica surface [[CdcStreamJob]] drives — implemented by
+  * [[ManifestUpsertStore]] under either [[WritePolicy]], so the streaming
+  * loop, its ledger contract, and its maintenance policies are
+  * policy-agnostic: switching between copy-on-write and merge-on-read is a
+  * constructor argument, not a topology change.
   */
 trait KeyedUpsertStore {
   /** Replace the store's contents with an initial load (bootstrap). */
@@ -27,10 +27,9 @@ trait KeyedUpsertStore {
   def merge(folded: DataFrame): Unit
   /** Current store contents (no envelope columns). */
   def snapshot(): DataFrame
-  /** Monotone feed position for change-data-feed consumers: the newest
-    * rewrite's seq (copy-on-write store) or the manifest version
-    * (merge-on-read store). [[StoreChangeFeed]] tails either store through
-    * this pair of methods (r13 — the consumer is store-agnostic).
+  /** Monotone feed position for change-data-feed consumers: the manifest
+    * version. [[StoreChangeFeed]] tails a store through this pair of
+    * methods (r13 — the consumer is store-agnostic).
     */
   def feedVersion: Long
   /** CDF envelope rows (payload + `_change_type`) in `(from, to]` of the
@@ -48,21 +47,45 @@ trait KeyedUpsertStore {
   def compactIfDeltaRatio(maxRatio: Double = 0.2): Boolean
 }
 
-/** The engine's MERGE-ON-READ keyed store (VERDICT r9 #9): each merge
-  * APPENDS the folded batch as one sequenced delta — O(batch) regardless
-  * of how much base data the touched buckets hold — and reads fold
-  * base ∪ deltas by (pk, max seq), paying one shuffle; `compact()` folds
-  * the deltas back into the base. The classic lakehouse tradeoff (Hudi
-  * COW vs MOR, Delta deletion vectors): write-heavy loops with infrequent
-  * reads want this store, read-heavy replicas want the copy-on-write
-  * [[UpsertStore]]. Both converge to identical snapshots for the same
-  * batch sequence (spec-pinned).
+/** How a [[ManifestUpsertStore]] applies a merge — the two write modes
+  * of one commit log, as in Delta and Iceberg (Hudi's COW vs MOR table
+  * types).
+  */
+sealed trait WritePolicy
+
+object WritePolicy {
+  /** Each merge APPENDS the folded batch as one sequenced delta —
+    * O(batch) regardless of how much base data the touched buckets hold —
+    * and reads fold base ∪ deltas by (pk, max seq), paying one shuffle;
+    * `compact()` folds the deltas back into the base. For write-heavy
+    * loops with infrequent reads.
+    */
+  case object MergeOnRead extends WritePolicy
+
+  /** Each merge REWRITES the touched buckets into a fresh base generation
+    * and publishes no delta, so reads stay a plain scan. For read-heavy
+    * replicas. Every merge is a rewrite, so the change feed's horizon
+    * moves to the current version with each one.
+    */
+  case object CopyOnWrite extends WritePolicy
+}
+
+/** The engine's keyed store (VERDICT r9 #9): the reference's downstream
+  * compacted-topic / replica-table analog (ST4/ST6), bucketed by
+  * `pmod(hash(pk), numBuckets)`. Merges are idempotent and
+  * last-write-wins by PK, deletes remove the row — the replay guarantee
+  * the reference gets from UPSERT row types
+  * (`S4HanaProducer.java:434-441`). The [[WritePolicy]] picks how a merge
+  * lands: as a delta folded at read (merge-on-read, the default) or as a
+  * rewrite of the touched buckets (copy-on-write). Both converge to
+  * identical snapshots for the same batch sequence (spec-pinned), and
+  * both publish through the one protocol below.
   *
-  * It commits WITHOUT a single rename. [[UpsertStore]]'s staged-swap
-  * protocol is correct on filesystems where rename is atomic (local
-  * POSIX, HDFS); an object store renames by copy+delete, which tears every
-  * one of its crash-ordering arguments. This class uses the commit
-  * protocol object stores actually support — the Iceberg/Delta shape:
+  * It commits WITHOUT a single rename. A staged rename swap is correct
+  * only where rename is atomic (local POSIX, HDFS); an object store
+  * renames by copy+delete, which tears every one of its crash-ordering
+  * arguments. This class uses the commit protocol object stores actually
+  * support — the Iceberg/Delta shape:
   *
   *  - DATA is immutable: every write lands in a fresh `gen-<v>/` directory
   *    that no later operation ever mutates, moves, or overwrites. Crash
@@ -89,9 +112,13 @@ trait KeyedUpsertStore {
   *
   * Semantics: last-write-wins by (pk, max seq), deletes as 'D' marker
   * rows folded at read, bucket-pruned point lookups, bucket-selective
-  * compaction (only buckets the deltas touch get a new base generation;
-  * untouched buckets keep their old gen dirs byte-identical — "don't
-  * rewrite" here means "reference the same immutable dir again").
+  * rewrites (only the buckets a batch or the deltas touch get a new base
+  * generation; untouched buckets keep their old gen dirs byte-identical —
+  * "don't rewrite" here means "reference the same immutable dir again").
+  * A copy-on-write merge is that rewrite fed by the batch. Column
+  * rename/drop and clustered compaction are all-bucket rewrites whose new
+  * schema rides the same manifest PUT, so no crash point shows new-shape
+  * data through an old-shape schema.
   *
   * Multi-writer safety is OPTIMISTIC CONCURRENCY on the manifest slot
   * (the Iceberg commit model): each commit claims its version number with
@@ -99,11 +126,14 @@ trait KeyedUpsertStore {
   * `If-None-Match` PUT on S3 — so two writers racing the same next
   * version produce exactly one winner; the loser throws
   * [[CommitConflictException]] with nothing published (its generation dir
-  * is unreferenced garbage the next GC sweeps) and retries on top of the
-  * winner's manifest. The reference's topology is single-writer anyway
-  * (one producer per replica, `S4HanaProducer.java:392-469`); the fence
-  * turns a misconfigured second writer from silent corruption into a loud
-  * retryable error.
+  * is reclaimed) and rebases on top of the winner's manifest when its
+  * inputs are still what that manifest serves: a delta append always, a
+  * copy-on-write merge when its touched buckets' base entries are
+  * unchanged and the manifest has no deltas. Otherwise the conflict
+  * surfaces. The reference's topology is single-writer anyway (one
+  * producer per replica, `S4HanaProducer.java:392-469`); the fence turns
+  * a misconfigured second writer from silent corruption into a loud
+  * error.
   */
 /** @param orphanGraceMs unreferenced generation dirs younger than this are
   *   NOT garbage-collected: an unreferenced dir may be a CONCURRENT
@@ -119,10 +149,14 @@ trait KeyedUpsertStore {
   *   look stale by its root alone — review r10), and the default is a
   *   day, sized for multi-hour backfill writes at the 100 TB target, not
   *   for laptop jobs.
+  * @param writePolicy how [[merge]] lands: a delta folded at read
+  *   (merge-on-read, the default) or a rewrite of the touched buckets
+  *   (copy-on-write). Every other operation is the same under both.
   */
 class ManifestUpsertStore(spark: SparkSession, dir: String,
     pkCols: Seq[String], numBuckets: Int = 16, keepVersions: Int = 3,
-    orphanGraceMs: Long = 24 * 3600 * 1000L)
+    orphanGraceMs: Long = 24 * 3600 * 1000L,
+    writePolicy: WritePolicy = WritePolicy.MergeOnRead)
     extends KeyedUpsertStore {
 
   // retention counts COMPLETE manifests (torn slot-burners are ignored by
@@ -520,12 +554,44 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       .getOrElse(Array.empty[java.io.File])
       .map(_.getName.stripPrefix(s"$bucketCol=").toInt).toSeq
 
-  /** MOR merge: the folded batch becomes one immutable delta generation;
-    * the commit is the manifest put. Crash before the put → the dir is
-    * unreferenced, the batch invisible, the (un-advanced) upstream ledger
-    * replays it — idempotent under LWW exactly like [[UpsertStore]].
+  /** Apply one folded CDC batch (`_change_type` 'A'/'D' +
+    * `_transactionid` + full row) under the store's [[WritePolicy]]. Crash
+    * before the manifest put → the new generation is unreferenced, the
+    * batch invisible, and the (un-advanced) upstream ledger replays it —
+    * idempotent under LWW.
+    *
+    * ADDITIVE SCHEMA EVOLUTION: a batch may carry columns the store has
+    * never seen (the reference recreates its objects when a source table
+    * changes shape, `S4HanaProducer.java:57-61`) or omit columns the store
+    * has. Both directions fill with null — the engine's all-nullable
+    * contract (`S4HanaTableMapping.java:583`) — and new columns persist
+    * into the store schema; untouched buckets simply read the new column
+    * as null. Columns are never dropped by omission: deletion of a column
+    * is a rewrite ([[dropColumn]]), not a merge.
     */
-  def merge(folded: DataFrame): Unit = {
+  def merge(folded: DataFrame): Unit = writePolicy match {
+    case WritePolicy.MergeOnRead => appendDelta(folded)
+    case WritePolicy.CopyOnWrite => rewriteTouched(folded)
+  }
+
+  /** The manifest schema widened by `incoming`'s new columns (bucket column
+    * kept last), or unchanged when it brings none.
+    */
+  private def widenedSchema(m: Manifest,
+      incoming: org.apache.spark.sql.types.StructType): String = {
+    val existing = schemaOf(m)
+    val newFields = incoming.fields.filter(f =>
+      f.name != Cdc.ChangeType && !existing.fieldNames.contains(f.name))
+    if (newFields.isEmpty) m.schemaJson
+    else org.apache.spark.sql.types.StructType(
+      existing.fields.filterNot(_.name == bucketCol) ++ newFields :+
+        existing(existing.fieldIndex(bucketCol))).json
+  }
+
+  /** MOR merge: the folded batch becomes one immutable delta generation;
+    * the commit is the manifest put.
+    */
+  private def appendDelta(folded: DataFrame): Unit = {
     val data = withBucket(folded.drop(Cdc.TransactionId))
       .repartition(col(bucketCol))
     val gen = genName("delta")
@@ -548,20 +614,87 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       // compact gen) cannot make a later merge reuse an already-folded
       // seq (review r10)
       val seq = (m.deltas.map(_._1) :+ m.floorSeq).max + 1
-      // additive schema evolution, same contract as UpsertStore.merge
-      val existing = schemaOf(m)
-      val newFields = data.schema.fields.filter(f =>
-        f.name != Cdc.ChangeType && !existing.fieldNames.contains(f.name))
-      val schemaJson =
-        if (newFields.isEmpty) m.schemaJson
-        else org.apache.spark.sql.types.StructType(
-          existing.fields.filterNot(_.name == bucketCol) ++ newFields :+
-            existing(existing.fieldIndex(bucketCol))).json
-      putManifest(Manifest(slot, schemaJson, m.base,
+      putManifest(Manifest(slot, widenedSchema(m, data.schema), m.base,
         m.deltas :+ (seq -> gen), floorSeq = m.floorSeq))
     }(validate = _ => true)(onAbort = rmTree(new java.io.File(root, gen)))
     gc()
     StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
+  }
+
+  /** COW merge: the bucket-selective rewrite of [[compact]], fed by the
+    * batch instead of by deltas. The touched buckets' base rows minus the
+    * batch keys, plus the batch's upserts, become ONE fresh generation, and
+    * the manifest put re-points only those buckets and carries no delta. A
+    * bucket whose rows were all deleted leaves the base map.
+    *
+    * Rebase: a commit that loses the slot race re-points on top of the
+    * winner only if the base entries of its touched buckets are unchanged
+    * and the manifest has no deltas (its rewrite read exactly those
+    * inputs); otherwise it throws [[CommitConflictException]] and reclaims
+    * its generation. The same check runs on the first attempt, so a
+    * competitor that committed during the rewrite is caught too.
+    */
+  private def rewriteTouched(changes: DataFrame): Unit = {
+    val batch = withBucket(changes).cache()
+    try {
+      // this probe is the first ACTION over the folded plan: the CDC fold
+      // (join against the master) computes here and lands in the cache, so
+      // it gets its own phase counter — attributing it to the generation
+      // write (which replays from cache) would mislocalize a fold
+      // regression
+      val tFold = System.nanoTime()
+      val touched = batch.select(bucketCol).distinct()
+        .collect().map(_.getInt(0)).toSet
+      StoreTelemetry.addPhase("merge_fold", (System.nanoTime() - tFold) / 1e9)
+      if (touched.isEmpty) return
+      val m0 = currentManifest()
+      val existing = folded(
+        m0.copy(base = m0.base.filter(kv => touched(kv._1))), bucket = None)
+      // the anti-join broadcasts the batch's key set: poll windows are
+      // small by contract, so the store side never shuffles
+      val kept = existing.join(
+        broadcast(batch.select(pkCols.map(col): _*).distinct()),
+        pkCols, "left_anti")
+      val upserts = withBucket(batch
+        .where(col(Cdc.ChangeType) === Cdc.Upsert)
+        .drop(Cdc.ChangeType, Cdc.TransactionId, bucketCol))
+      // evolution is silent null-filling, so make it OBSERVABLE: a renamed
+      // upstream column looks exactly like one dropped + one added
+      val added = upserts.columns.toSet -- existing.columns.toSet
+      val omitted = existing.columns.toSet -- upserts.columns.toSet
+      if (added.nonEmpty || omitted.nonEmpty)
+        org.slf4j.LoggerFactory.getLogger(classOf[ManifestUpsertStore]).warn(
+          s"schema evolution in $dir: batch adds ${added.toSeq.sorted} / " +
+            s"omits ${omitted.toSeq.sorted} vs the store schema — " +
+            "omitted columns null-fill; verify this is not a renamed column")
+      val unioned = kept.unionByName(upserts, allowMissingColumns = true)
+      // bucket-aligning exchange before the write: one file per touched
+      // bucket (r9 — file count, not bytes, dominates a durable write)
+      val merged = unioned
+        .select(unioned.columns.filterNot(_ == bucketCol).map(col)
+          :+ col(bucketCol): _*)
+        .repartition(col(bucketCol))
+      val gen = genName("cow")
+      val genDir = new java.io.File(root, gen)
+      val tWrite = System.nanoTime()
+      merged.write.partitionBy(bucketCol).mode("overwrite")
+        .parquet(genDir.getPath)
+      graft.util.Fs.fsyncTree(genDir)
+      StoreTelemetry.addPhase("merge_write", (System.nanoTime() - tWrite) / 1e9)
+      val survivors = bucketDirsOf(gen).toSet
+      if (survivors.isEmpty) rmTree(genDir)
+      val tSwap = System.nanoTime()
+      commitWithRetry(maxRetries = 100) { (m, slot) =>
+        putManifest(Manifest(slot, widenedSchema(m, merged.schema),
+          (m.base -- touched) ++ survivors.map(_ -> gen), Seq.empty,
+          floorSeq = m.floorSeq))
+      } { next =>
+        next.deltas.isEmpty &&
+          touched.forall(b => next.base.get(b) == m0.base.get(b))
+      }(onAbort = rmTree(genDir))
+      gc()
+      StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
+    } finally batch.unpersist()
   }
 
   /** Base ∪ deltas folded LWW by (pk, max seq), resolved through the
@@ -684,7 +817,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * delta generation its commit added, and GC keeps those generations
     * alive exactly as long as a referencing manifest is retained — so the
     * feed window IS the manifest retention window (`keepVersions`), and a
-    * range beyond it refuses loudly.
+    * range beyond it refuses loudly. So does a range that spans a base
+    * rewrite: a re-initialization, a copy-on-write merge, a column
+    * rename/drop or a clustered compaction. Under copy-on-write every
+    * merge is one, so the only readable range is the empty one at the
+    * current version.
     */
   def changesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -714,17 +851,21 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // across compactions inside the range (a compact drops deltas from
     // LATER manifests but the earlier retained manifests still name them,
     // and their gen dirs survive GC by those references).
-    // a re-initialization inside the range starts a NEW history (its init
-    // generation resets the delta sequence): a per-key change feed across
-    // it is meaningless — refuse rather than mix sequences from two
-    // histories (seq collisions would silently drop post-init deltas)
-    val initGens = inRange.flatMap(_.base.values).toSet
-      .filter(_.contains("-init-"))
+    // a REWRITE inside the range starts a new history: a re-initialization
+    // (its init generation resets the delta sequence), a copy-on-write
+    // merge, a column rename/drop or a clustered compaction replaces base
+    // generations with no delta naming its changes. A per-key feed across
+    // one is unavailable — refuse rather than silently skip those changes
+    // or mix sequences from two histories (seq collisions would drop
+    // post-init deltas)
+    val rewrites = inRange.flatMap(_.base.values).toSet
+      .filter(g =>
+        ManifestUpsertStore.RewriteTags.exists(t => g.contains(s"-$t-")))
       .diff(mFrom.base.values.toSet)
-    if (initGens.nonEmpty) throw new IllegalStateException(
-      s"store $dir: range ($fromVersion, $toVersion] spans a " +
-        s"re-initialization (${initGens.mkString(", ")}) — the feed " +
-        "cannot relate keys across histories; read the full snapshot")
+    if (rewrites.nonEmpty) throw new IllegalStateException(
+      s"store $dir: range ($fromVersion, $toVersion] spans a rewrite " +
+        s"(${rewrites.mkString(", ")}) — the feed cannot relate keys " +
+        "across it; read the full snapshot")
     val atFrom = mFrom.deltas.map(_._1).toSet
     val added = inRange.flatMap(_.deltas)
       .distinct
@@ -747,8 +888,14 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       .drop(bucketCol)
   }
 
-  /** Point lookup: the key's bucket prunes both the base generation read
-    * and the delta list — same shape as [[UpsertStore.lookup]].
+  /** POINT LOOKUP: the current row(s) for one primary key — the
+    * serving-path read. `snapshot().where(pk = v)` cannot prune (it drops
+    * the bucket column before the filter exists); here the key's bucket is
+    * computed up front and prunes both the base generation read and the
+    * delta list, so at 100 TB it reads one bucket's files, not the table.
+    * Values cast to the stored key types first — `hash(5)` ≠ `hash(5L)`,
+    * and a silently mis-typed probe would scan the right bucket and find
+    * nothing.
     */
   def lookup(key: Any*): DataFrame = {
     require(key.length == pkCols.length,
@@ -770,11 +917,34 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * their existing immutable dirs — the new manifest simply references
     * them again (zero IO for the untouched part, not even a listing of
     * their files). Crash before the manifest put → old manifest serves
-    * base+deltas unchanged.
+    * base+deltas unchanged. A store without deltas (every copy-on-write
+    * store) has nothing to fold.
+    *
+    * @param clusterBy optional CLUSTERED rewrite instead: every bucket of
+    *   the folded snapshot is rewritten sorted by these columns within the
+    *   bucket, so parquet's per-row-group min/max statistics become
+    *   selective and a later `snapshot().where(col < x)` prunes row groups
+    *   at the scan (Spark pushes the filter down; unclustered data defeats
+    *   the stats because every row group spans the whole value range). The
+    *   Delta/Iceberg `OPTIMIZE ... ZORDER BY` analog — pass a single
+    *   natural column, or a [[graft.functions.GraftExpressions.zorder2]]
+    *   key materialized as a column for two-dimensional locality (keys
+    *   must fit [0, 2^31): rank wider domains first, or use
+    *   [[graft.functions.GraftExpressions.zorder2_bucketized]] which
+    *   auto-pmods with a documented wrap-locality caveat). Snapshot
+    *   contents are unchanged; the change feed refuses ranges across it.
     */
-  def compact(): Unit = {
+  def compact(clusterBy: Seq[String] = Nil): Unit = {
     val tc = System.nanoTime()
     val m0 = currentManifest()
+    if (clusterBy.nonEmpty) {
+      val schema = schemaOf(m0)
+      val missing = clusterBy.filterNot(schema.fieldNames.contains)
+      require(missing.isEmpty,
+        s"clusterBy columns not in store schema: ${missing.mkString(", ")}")
+      rewriteAll(m0, "cluster", schema, clusterBy)(identity)
+      return
+    }
     if (m0.deltas.isEmpty) return
     val touched: Set[Int] =
       m0.deltas.flatMap { case (_, g) => bucketDirsOf(g) }.toSet
@@ -817,9 +987,86 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     StoreTelemetry.addPhase("compact_swap", (System.nanoTime() - ts) / 1e9)
     StoreTelemetry.addPhase("compact", (System.nanoTime() - tc) / 1e9)
   }
+
+  /** Rename a non-key column — the explicit rewrite [[merge]]'s additive
+    * evolution deliberately refuses to infer (a rename is
+    * indistinguishable from drop+add in a batch's shape; guessing either
+    * way corrupts data, so the copy-on-write merge only WARNS). An
+    * all-bucket rewrite of the folded snapshot whose new schema rides the
+    * same manifest put as the data ([[rewriteAll]]).
+    */
+  def renameColumn(from: String, to: String): Unit = {
+    val m0 = currentManifest()
+    val cur = schemaOf(m0)
+    require(!pkCols.contains(from) && from != bucketCol,
+      s"cannot rename key/internal column $from (row identity)")
+    // the underscore namespace is the engine's: _change_type/_transactionid
+    // are envelope columns every merge re-attaches, _bucket is the layout —
+    // a user column shadowing any of them corrupts merges
+    require(!to.startsWith("_"),
+      s"target $to is in the reserved internal/envelope namespace (_*)")
+    require(cur.fieldNames.contains(from), s"no such column: $from")
+    require(!cur.fieldNames.contains(to), s"column already exists: $to")
+    rewriteAll(m0, "schema", org.apache.spark.sql.types.StructType(
+      cur.fields.map(f => if (f.name == from) f.copy(name = to) else f)))(
+      _.withColumnRenamed(from, to))
+  }
+
+  /** Drop a non-key column — same explicit-rewrite contract as
+    * [[renameColumn]] ("deletion of a column is a rewrite, not a merge").
+    */
+  def dropColumn(name: String): Unit = {
+    val m0 = currentManifest()
+    val cur = schemaOf(m0)
+    require(!pkCols.contains(name) && name != bucketCol,
+      s"cannot drop key/internal column $name")
+    require(cur.fieldNames.contains(name), s"no such column: $name")
+    rewriteAll(m0, "schema", org.apache.spark.sql.types.StructType(
+      cur.fields.filterNot(_.name == name)))(_.drop(name))
+  }
+
+  /** Rewrite EVERY bucket of `m0`'s folded snapshot into one generation
+    * and publish it with `schema` in ONE manifest put, so the data and its
+    * schema commit or roll back together: no crash point serves new-shape
+    * files through an old-shape schema (which would silently null a
+    * renamed column). `shape` maps the snapshot onto `schema`; `clusterBy`
+    * sorts each bucket, bucket first (repartition may co-locate several
+    * buckets in one task, and the partitioned writer keeps task row order
+    * per dir). The folded deltas' highest seq becomes the floor. The
+    * inputs are the whole store, so any concurrent commit aborts the
+    * rewrite loudly, its generation reclaimed.
+    */
+  private def rewriteAll(m0: Manifest, tag: String,
+      schema: org.apache.spark.sql.types.StructType,
+      clusterBy: Seq[String] = Nil)(shape: DataFrame => DataFrame): Unit = {
+    val gen = genName(tag)
+    val genDir = new java.io.File(root, gen)
+    val out = shape(folded(m0, bucket = None))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      .repartition(col(bucketCol))
+    val sorted =
+      if (clusterBy.isEmpty) out
+      else out.sortWithinPartitions((bucketCol +: clusterBy).map(col): _*)
+    sorted.write.partitionBy(bucketCol).mode("overwrite")
+      .parquet(genDir.getPath)
+    graft.util.Fs.fsyncTree(genDir)
+    val survivors = bucketDirsOf(gen)
+    if (survivors.isEmpty) rmTree(genDir)
+    val floor = (m0.deltas.map(_._1) :+ m0.floorSeq).max
+    commitWithRetry(maxRetries = 100) { (_, slot) =>
+      putManifest(Manifest(slot, schema.json, survivors.map(_ -> gen).toMap,
+        Seq.empty, floorSeq = floor))
+    }(validate = _.copy(version = m0.version) == m0)(onAbort = rmTree(genDir))
+    gc()
+  }
 }
 
 object ManifestUpsertStore {
+  /** Generation tags of the base rewrites no delta describes: a change
+    * feed range that spans one refuses.
+    */
+  private val RewriteTags = Seq("init", "cow", "schema", "cluster")
+
   /** The bucket of one typed probe key, evaluated WITHOUT a Spark job
     * (r20, VERDICT r19 #3): the expression runs over a one-row
     * LocalRelation, which the optimizer's ConvertToLocalRelation rule

@@ -14,9 +14,13 @@ import org.apache.spark.sql.DataFrame
   * A cursor the store's retention horizon has passed fails loudly on poll
   * (the Kafka offset-out-of-range / Delta vacuumed-version analog): the
   * consumer fell behind the store's retention, and silently skipping the
-  * lost span would lose deletes. Retention is the store's: the last
-  * `keepVersions` manifests of a [[ManifestUpsertStore]]; none on the
-  * copy-on-write [[UpsertStore]], whose every merge moves the horizon.
+  * lost span would lose deletes. Retention is the store's and depends on
+  * its [[WritePolicy]]: under merge-on-read, the last `keepVersions`
+  * manifests of the [[ManifestUpsertStore]]; under copy-on-write, a
+  * horizon that moves to the current version on every rewrite (each merge
+  * is one), so a consumer keeps up only if it polls between merges. Column
+  * rename/drop, clustered compaction and re-initialization move the
+  * horizon under either policy.
   */
 class StoreChangeFeed(store: KeyedUpsertStore, cursorPath: String) {
   private val ledger = new TxidLedger(cursorPath)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 import graft.cdc.Cdc
 import graft.operators.IncrementalAgg
-import graft.streaming.{CdcStreamJob, TxidLedger, UpsertStore}
+import graft.streaming.{CdcStreamJob, ManifestUpsertStore, TxidLedger,
+  WritePolicy}
 
 /** The whole engine in one scenario: initial load → streamed delta rounds
   * (update, insert, delete, mid-stream ADDITIVE SCHEMA CHANGE) → replica
@@ -32,7 +33,8 @@ class GrandTourSpec extends SparkSpec {
   test("load → stream → evolve → maintain: every layer agrees") {
     val dir = java.nio.file.Files.createTempDirectory("grandtour").toString
     var source = rows((1L, "A", 10.0), (2L, "A", 20.0), (3L, "B", 5.0))
-    val store = new UpsertStore(spark, s"$dir/store", Seq("id"), numBuckets = 4)
+    val store = new ManifestUpsertStore(spark, s"$dir/store", Seq("id"),
+      numBuckets = 4, writePolicy = WritePolicy.CopyOnWrite)
     store.initialize(Cdc.initialLoad(source))
     val ledger = new TxidLedger(s"$dir/txid")
     val job = new CdcStreamJob(spark, () => source, store, ledger,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.cdc.Cdc
 import graft.functions.GraftExpressions
 import graft.streaming.{CdcStreamJob, KeyedUpsertStore, ManifestUpsertStore,
-  TxidLedger, UpsertStore}
+  TxidLedger, WritePolicy}
 
 /** End-to-end replication fidelity, mirroring the reference's integration
   * test (`PerformanceIT.java` + `VBAK.sql`/`VBAK_change.sql`): a VBAK-style
@@ -40,8 +40,9 @@ class VbakScenarioSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("vbak").toString
     var source = vbak(("800", 1, "C1"), ("800", 2, "C2"), ("800", 3, "C3"),
       ("900", 1, "C9"))
-    val store = new UpsertStore(spark, s"$dir/store",
-      Seq("MANDT", "VBELN"), numBuckets = 8)
+    val store = new ManifestUpsertStore(spark, s"$dir/store",
+      Seq("MANDT", "VBELN"), numBuckets = 8,
+      writePolicy = WritePolicy.CopyOnWrite)
     store.initialize(Cdc.initialLoad(source))
     assert(snapshotSet(store) == source.as[Vbak].collect().toSet)
 
@@ -78,8 +79,9 @@ class VbakScenarioSpec extends SparkSpec {
   test("replayed poll after crash converges (at-least-once → exactly-once effect)") {
     val dir = java.nio.file.Files.createTempDirectory("vbak2").toString
     var source = vbak(("800", 1, "A"), ("800", 2, "B"))
-    val store = new UpsertStore(spark, s"$dir/store",
-      Seq("MANDT", "VBELN"), numBuckets = 4)
+    val store = new ManifestUpsertStore(spark, s"$dir/store",
+      Seq("MANDT", "VBELN"), numBuckets = 4,
+      writePolicy = WritePolicy.CopyOnWrite)
     store.initialize(Cdc.initialLoad(source))
     val ledger = new TxidLedger(s"$dir/txid")
     val job = new CdcStreamJob(spark, () => source, store, ledger,
@@ -109,8 +111,9 @@ class VbakScenarioSpec extends SparkSpec {
     val store = new ManifestUpsertStore(spark, s"$dir/store",
       Seq("MANDT", "VBELN"), numBuckets = 8, keepVersions = 3)
     store.initialize(Cdc.initialLoad(source))
-    val downstream = new UpsertStore(spark, s"$dir/replica",
-      Seq("MANDT", "VBELN"), numBuckets = 8)
+    val downstream = new ManifestUpsertStore(spark, s"$dir/replica",
+      Seq("MANDT", "VBELN"), numBuckets = 8,
+      writePolicy = WritePolicy.CopyOnWrite)
     val tail = new StoreChangeFeed(store, s"$dir/cursor") // baseline FIRST
     downstream.initialize(Cdc.initialLoad(store.snapshot()))
     val ledger = new TxidLedger(s"$dir/txid")

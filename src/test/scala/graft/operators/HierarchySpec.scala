@@ -163,13 +163,13 @@ class HierarchySpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("nested business objects ride BOTH store protocols identically (rename COW vs manifest)") {
+  test("nested business objects ride BOTH write policies identically (COW vs MOR)") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.cdc.Cdc
-    import graft.streaming.{ManifestUpsertStore, UpsertStore}
-    // q_hier_cdc_rebuild gates the manifest store; this pins that the
-    // copy-on-write rename store merges the SAME array-of-struct payloads
-    // (LWW over nested schemas) to the identical snapshot
+    import graft.streaming.{ManifestUpsertStore, WritePolicy}
+    // q_hier_cdc_rebuild gates the merge-on-read store; this pins that a
+    // copy-on-write merge rewrites the SAME array-of-struct payloads (LWW
+    // over nested schemas) to the identical snapshot
     val work = java.nio.file.Files.createTempDirectory("graft-hier2s")
     val initial = Hierarchy.nest(header, items,
       Seq(("SALESORDERID", "SALESORDERID")), "items")
@@ -180,8 +180,9 @@ class HierarchySpec extends SparkSpec {
         Seq(("SALESORDERID", "SALESORDERID")), "items")
       .withColumn(Cdc.ChangeType, lit(Cdc.Upsert))
       .withColumn(Cdc.TransactionId, lit(1L))
-    val cow = new UpsertStore(spark, work.resolve("cow").toString,
-      pkCols = Seq("SALESORDERID"), numBuckets = 4)
+    val cow = new ManifestUpsertStore(spark, work.resolve("cow").toString,
+      pkCols = Seq("SALESORDERID"), numBuckets = 4,
+      writePolicy = WritePolicy.CopyOnWrite)
     val man = new ManifestUpsertStore(spark, work.resolve("man").toString,
       pkCols = Seq("SALESORDERID"), numBuckets = 4)
     cow.initialize(Cdc.initialLoad(initial)); cow.merge(rebuilt)
@@ -198,7 +199,6 @@ class HierarchySpec extends SparkSpec {
     // items, SO1/SO3 untouched
     assert(a.find(_._1 == "SO2").get._3 == Seq((1, "gizmo-v2"), (2, "bonus")))
     assert(a.find(_._1 == "SO1").get._3 == Seq((1, "widget"), (2, "gadget")))
-    cow.releaseLease()
     graft.util.Fs.rmTree(work.toFile)
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.cdc.Cdc
-import graft.streaming.UpsertStore
+import graft.streaming.{ManifestUpsertStore, WritePolicy}
 
 /** File-backed stand-in for a transactional Kafka topic — no broker exists
   * in this environment, so the reference's exactly-once produce contract
@@ -82,7 +82,7 @@ class TxnProducer(log: FakeTransactionalLog, txnId: String, epoch: Long) {
 
 /** The transactional produce/consume loop end-to-end: folded CDC batch →
   * KafkaIO records → transactional log → read_committed consume →
-  * KafkaIO.fromRecords → idempotent UpsertStore merge.
+  * KafkaIO.fromRecords → idempotent ManifestUpsertStore merge.
   */
 class KafkaTxnSpec extends SparkSpec {
   import spark.implicits._
@@ -133,8 +133,9 @@ class KafkaTxnSpec extends SparkSpec {
     val consumed = log.readCommitted().toDF("key", "value")
     assert(consumed.count() == 6) // at-least-once: duplicates on the wire
     val rows = KafkaIO.fromRecords(consumed, folded.schema)
-    val store = new UpsertStore(spark,
-      tmpDir("txn-store").resolve("store").toString, Seq("id"), numBuckets = 4)
+    val store = new ManifestUpsertStore(spark,
+      tmpDir("txn-store").resolve("store").toString, Seq("id"), numBuckets = 4,
+      writePolicy = WritePolicy.CopyOnWrite)
     store.initialize(Cdc.initialLoad(
       Seq((1L, "old"), (3L, "doomed")).toDF("id", "name")))
     store.merge(rows)

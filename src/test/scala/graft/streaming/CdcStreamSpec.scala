@@ -20,8 +20,23 @@ class CdcStreamSpec extends SparkSpec {
   private def feed(rows: (Long, String, Long)*) =
     rows.toDF("id", "payload", Cdc.TransactionId)
 
-  private def newStore(dir: String): UpsertStore = {
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4)
+  /** A copy-on-write store over `dir`, not yet initialized. */
+  private def cow(dir: String, numBuckets: Int = 4): ManifestUpsertStore =
+    new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = numBuckets,
+      writePolicy = WritePolicy.CopyOnWrite)
+
+  /** A copy-on-write store that dies after writing its generation and
+    * before its manifest put — the crash window of every commit.
+    */
+  private def crashingBeforePut(dir: String): ManifestUpsertStore =
+    new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4,
+        writePolicy = WritePolicy.CopyOnWrite) {
+      override protected def beforeCommitLoop(): Unit =
+        throw new IllegalStateException("crash before the manifest put")
+    }
+
+  private def newStore(dir: String): ManifestUpsertStore = {
+    val store = cow(dir)
     store.initialize(Cdc.initialLoad(
       Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "payload")))
     store
@@ -33,52 +48,7 @@ class CdcStreamSpec extends SparkSpec {
       Set((1L, "one"), (2L, "two"), (3L, "three")))
   }
 
-  test("writer lease: second live writer fails fast; stale lease steals; release hands over") {
-    val dir = tmp("store")
-    val s1 = newStore(dir) // initialize claims the lease
-    val up = Seq((Cdc.Upsert, 10L, 9L, "nine"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
-    s1.merge(up) // heartbeat
-    // a second writer over the same dir must fail FAST, for merge and
-    // compact both (two interleaved _staging overwrites corrupt a swap)
-    val s2 = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4)
-    val err = intercept[IllegalStateException] { s2.merge(up) }
-    assert(err.getMessage.contains("single-writer"), err.getMessage)
-    intercept[IllegalStateException] { s2.compact() }
-    // a READER through another instance is fine — and must leave the live
-    // writer's state alone (no recovery-driven staging deletes, ADVICE r7)
-    assert(s2.snapshot().as[(Long, String)].collect().toMap.get(9L)
-      .contains("nine"))
-    // clean handover: release, then the second writer proceeds
-    s1.releaseLease()
-    s2.merge(Seq((Cdc.Upsert, 11L, 9L, "NINE"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(s2.snapshot().as[(Long, String)].collect().toMap.get(9L)
-      .contains("NINE"))
-    // crashed-writer takeover: a ttl-0 store treats any foreign lease as
-    // expired and steals it
-    val s3 = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      leaseTtlMs = 0L)
-    s3.merge(Seq((Cdc.Upsert, 12L, 9L, "n9"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(s3.snapshot().as[(Long, String)].collect().toMap.get(9L)
-      .contains("n9"))
-    // restart-with-stable-identity: same writerId resumes its own lease
-    // without waiting out the TTL
-    val jobA = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      writerId = Some("job-A"))
-    intercept[IllegalStateException] { jobA.merge(up) } // s3's lease is live
-    s3.releaseLease()
-    jobA.merge(up)
-    val jobA2 = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      writerId = Some("job-A")) // "restarted" incarnation
-    jobA2.merge(Seq((Cdc.Upsert, 13L, 9L, "again"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(jobA2.snapshot().as[(Long, String)].collect().toMap.get(9L)
-      .contains("again"))
-  }
-
-  // ── Merge-on-read (ManifestUpsertStore) vs copy-on-write ─────────────────
+  // ── Merge-on-read vs copy-on-write ───────────────────────────────────────
 
   private def morStore(dir: String): ManifestUpsertStore = {
     val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4)
@@ -105,37 +75,6 @@ class CdcStreamSpec extends SparkSpec {
       Set((2L, "two2"), (9L, "NINE"), (3L, "back")))
     // the base was never rewritten: three published deltas exist
     assert(mor.deltaCount == 3)
-  }
-
-  test("reader under a crashed foreign mid-swap sees the complete store (read overlay)") {
-    // writer crashes inside swapStaged AFTER the commit marker and the
-    // retire rename but BEFORE promoting the staged copy; its lease stays
-    // fresh for the TTL, so a reader skips recovery — without the overlay
-    // the mid-swap bucket would be invisible for up to leaseTtlMs
-    // (review r8)
-    val dir = tmp("overlay")
-    val s1 = newStore(dir) // holds the lease
-    val before = s1.snapshot().as[(Long, String)].collect().toSet
-    val root = new java.io.File(dir)
-    val bucket = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val b = bucket.getName.stripPrefix("_bucket=")
-    def cp(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs(); src.listFiles().foreach(f => cp(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    cp(bucket, new java.io.File(dir, s"_staging/_bucket=$b"))
-    new java.io.File(dir, "_swap_started").createNewFile()
-    java.nio.file.Files.move(bucket.toPath,
-      new java.io.File(dir, s"_retired_$b").toPath)
-    // a DIFFERENT instance reads within the TTL: recovery is skipped, the
-    // overlay must still serve the mid-swap bucket
-    val reader = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4)
-    assert(reader.snapshot().as[(Long, String)].collect().toSet == before)
-    // the owner's next operation heals the debris for real
-    assert(s1.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(dir, "_swap_started").exists())
   }
 
   test("MOR merge writes O(batch) bytes; COW rewrites touched-bucket data (measured)") {
@@ -168,7 +107,7 @@ class CdcStreamSpec extends SparkSpec {
       val store: KeyedUpsertStore =
         if (mor) new ManifestUpsertStore(spark, tmp("amp"), Seq("id"),
           numBuckets = 2)
-        else new UpsertStore(spark, tmp("amp"), Seq("id"), numBuckets = 2)
+        else cow(tmp("amp"), numBuckets = 2)
       store.initialize(Cdc.initialLoad(base))
       written { store.merge(batch) }
     }
@@ -181,25 +120,37 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("MOR delta is bucket-aligned: one file per touched bucket") {
-    val dir = tmp("morfiles")
-    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 8)
-    store.initialize(Cdc.initialLoad(
-      (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
-    // a wide batch (touches many buckets) written from many partitions:
-    // without the aligning exchange this would write tasks × buckets files
-    store.merge(spark.range(1, 65)
-      .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
-        (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
-        concat(lit("u"), col("id")).alias("payload"))
-      .repartition(16))
-    val delta = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-      n.startsWith("gen-delta-")).head
-    delta.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
-      .foreach { b =>
+    // under either policy: a merge-on-read delta and a copy-on-write
+    // rewrite each land one file per touched bucket in their generation
+    for ((policy, tag) <- Seq(WritePolicy.MergeOnRead -> "gen-delta-",
+        WritePolicy.CopyOnWrite -> "gen-cow-")) {
+      val dir = tmp("morfiles")
+      val store = new ManifestUpsertStore(spark, dir, Seq("id"),
+        numBuckets = 8, writePolicy = policy)
+      store.initialize(Cdc.initialLoad(
+        (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
+      // a wide batch (touches many buckets) written from many partitions:
+      // without the aligning exchange this would write tasks × buckets files
+      store.merge(spark.range(1, 65)
+        .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
+          (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
+          concat(lit("u"), col("id")).alias("payload"))
+        .repartition(16))
+      val gen = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
+        n.startsWith(tag)).head
+      val buckets =
+        gen.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
+      assert(buckets.nonEmpty, s"$policy: ${gen.getName} holds no bucket")
+      buckets.foreach { b =>
         val n = b.listFiles((f: java.io.File) =>
           f.getName.endsWith(".parquet")).length
-        assert(n === 1, s"delta bucket ${b.getName} holds $n files, want 1")
+        assert(n === 1, s"$policy: bucket ${b.getName} holds $n files, want 1")
       }
+      // a copy-on-write store carries no delta debt: both policies are
+      // never due
+      if (policy == WritePolicy.CopyOnWrite)
+        assert(!store.compactIfNeeded(1) && !store.compactIfDeltaRatio(0.01))
+    }
   }
 
   test("MOR: replay of the same batch is idempotent (a later equal delta wins harmlessly)") {
@@ -287,8 +238,7 @@ class CdcStreamSpec extends SparkSpec {
     val cursorPath = tmp("feed-cursor") + "/cursor"
     val feed = new StoreChangeFeed(store, cursorPath)
     // downstream replica seeded from the same initial snapshot
-    val replica = new UpsertStore(spark, tmp("feed-dst"), Seq("id"),
-      numBuckets = 4)
+    val replica = cow(tmp("feed-dst"))
     replica.initialize(Cdc.initialLoad(store.snapshot()))
     def drainOnce(): Unit = {
       val (changes, to) = feed.poll()
@@ -338,12 +288,11 @@ class CdcStreamSpec extends SparkSpec {
     val feed = new StoreChangeFeed(store, tmp("cowfeed-cursor") + "/cursor")
     store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    assert(store.currentSeq == store.earliestSeq) // no retained history
-    val none = store.changesBetween(store.currentSeq, store.currentSeq)
+    // no retained history: only the empty range at now is readable
+    val v = store.currentVersion
+    val none = store.changesBetween(v, v)
     assert(none.isEmpty && none.columns.contains(Cdc.ChangeType))
-    intercept[IllegalStateException] {
-      store.changesBetween(store.earliestSeq - 1, store.currentSeq)
-    }
+    intercept[IllegalStateException] { store.changesBetween(v - 1, v) }
     intercept[IllegalStateException] { feed.poll() }
   }
 
@@ -366,8 +315,7 @@ class CdcStreamSpec extends SparkSpec {
       store.renameColumn("body", "_graft_seq")
     }
     // drop after a merge: the rewrite covers merged and initial buckets
-    val wide = new UpsertStore(spark, tmp("schema-rewrite-drop"), Seq("id"),
-      numBuckets = 4)
+    val wide = cow(tmp("schema-rewrite-drop"))
     wide.initialize(Cdc.initialLoad(
       Seq((1L, "one", 5)).toDF("id", "payload", "extra")))
     wide.merge(Seq((Cdc.Upsert, 10L, 2L, "two", 7))
@@ -377,77 +325,39 @@ class CdcStreamSpec extends SparkSpec {
     assert(wide.snapshot().as[(Long, String)].collect().toSet ==
       Set((1L, "one"), (2L, "two")))
     // rewrites destroy history: horizon at now
-    assert(wide.earliestSeq == wide.currentSeq)
+    intercept[IllegalStateException] {
+      wide.changesBetween(wide.currentVersion - 1, wide.currentVersion)
+    }
   }
 
   test("schema rewrite crash protocol: schema and data commit or roll back TOGETHER") {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    // branch 1 — crash BEFORE the marker: staged data + staged schema are
-    // both uncommitted debris; recovery must roll both back (a promoted
-    // schema over old-shape data would silently null the renamed column)
-    val dir1 = tmp("rewrite-crash1")
-    val s1 = newStore(dir1)
-    val newSchema = StructType(Seq(StructField("id", LongType),
-      StructField("body", StringType), StructField("_bucket", LongType)))
-    val staging = new java.io.File(dir1, "_staging")
-    new java.io.File(staging, "_bucket=0").mkdirs()
-    java.nio.file.Files.writeString(
-      new java.io.File(dir1, "_graft_schema_next").toPath, newSchema.json)
-    assert(s1.snapshot().columns.toSeq == Seq("id", "payload")) // rolled back
-    assert(!new java.io.File(dir1, "_graft_schema_next").exists())
-    // branch 2 — crash AFTER the marker mid-promote: the staged set covers
-    // every bucket; recovery rolls FORWARD (replacing still-live old
-    // buckets) and promotes the schema — no mixed-shape store
-    val dir2 = tmp("rewrite-crash2")
-    val s2 = newStore(dir2)
-    // build the fully-staged rewrite by hand: rename payload -> body (the
-    // read already carries the _bucket partition column)
-    val renamed = spark.read.parquet(dir2)
-      .withColumnRenamed("payload", "body")
-    renamed.write.partitionBy("_bucket").mode("overwrite")
-      .parquet(new java.io.File(dir2, "_staging").getPath)
-    java.nio.file.Files.writeString(
-      new java.io.File(dir2, "_graft_schema_next").toPath,
-      renamed.schema.json)
-    java.nio.file.Files.createFile(
-      new java.io.File(dir2, "_swap_started").toPath)
-    val healed = s2.snapshot() // triggers recovery
-    assert(healed.columns.toSeq == Seq("id", "body"))
-    assert(healed.as[(Long, String)].collect().toSet ==
-      Set((1L, "one"), (2L, "two"), (3L, "three")))
-    assert(!new java.io.File(dir2, "_graft_schema_next").exists())
-    assert(!new java.io.File(dir2, "_swap_started").exists())
-    // a READER under a foreign writer's in-flight rewrite refuses rather
-    // than serving mixed shapes (it cannot run recovery; some buckets may
-    // already be new-shape while the schema is still old)
-    val dir3 = tmp("rewrite-inflight")
-    val owner3 = newStore(dir3) // holds the lease
-    java.nio.file.Files.writeString(
-      new java.io.File(dir3, "_graft_schema_next").toPath, newSchema.json)
-    val reader3 = new UpsertStore(spark, dir3, Seq("id"), numBuckets = 4)
-    val err = intercept[IllegalStateException] { reader3.snapshot() }
-    assert(err.getMessage.contains("schema rewrite"), err.getMessage)
-    // the owner itself heals it (recovery rolls the uncommitted file back)
-    assert(owner3.snapshot().columns.toSeq == Seq("id", "payload"))
-    assert(reader3.snapshot().columns.toSeq == Seq("id", "payload"))
-  }
-
-  test("stats: COW buckets stay at one file, through merges and compaction") {
-    val cow = newStore(tmp("stats-cow"))
-    cow.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
-    def oneFileEach(): Unit = {
-      val rows = cow.stats().as[(Int, Long, Long)].collect()
-      assert(rows.nonEmpty)
-      // bucket-aligned merges: one file per bucket
-      assert(rows.forall { case (_, n, bytes) => n == 1L && bytes > 0L },
-        rows.mkString(","))
+    // the new schema rides the rewrite's own manifest put, so there are
+    // two crash outcomes only: before the put (old shape, old data) and
+    // after it (new shape, new data) — never new-shape files read through
+    // the old-shape schema, which would silently null the renamed column
+    val dir = tmp("rewrite-crash")
+    val before = newStore(dir).snapshot().as[(Long, String)].collect().toSet
+    // crash after the rewrite's data write, before its put
+    intercept[IllegalStateException] {
+      crashingBeforePut(dir).renameColumn("payload", "body")
     }
-    oneFileEach()
-    cow.compact()
-    oneFileEach()
-    // a COW store has no delta debt: both policies are never due
-    assert(!cow.compactIfNeeded(1) && !cow.compactIfDeltaRatio(0.01))
+    assert(new java.io.File(dir).list().exists(_.startsWith("gen-schema-")))
+    val reader = cow(dir)
+    assert(reader.snapshot().columns.toSeq == Seq("id", "payload"))
+    assert(reader.snapshot().as[(Long, String)].collect().toSet == before)
+    // the completed rewrite publishes schema and data together
+    reader.renameColumn("payload", "body")
+    assert(reader.snapshot().columns.toSeq == Seq("id", "body"))
+    assert(reader.snapshot().as[(Long, String)].collect().toSet == before)
+    // a torn rewrite manifest rolls BOTH back: the previous version serves
+    // the old shape over the old data
+    val newest = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
+      n.startsWith("manifest-")).maxBy(_.getName)
+    val bytes = java.nio.file.Files.readAllBytes(newest.toPath)
+    java.nio.file.Files.write(newest.toPath, bytes.take(bytes.length / 2))
+    val torn = cow(dir).snapshot()
+    assert(torn.columns.toSeq == Seq("id", "payload"))
+    assert(torn.as[(Long, String)].collect().toSet == before)
   }
 
   test("merge applies upserts and deletes, only touched buckets rewritten") {
@@ -479,7 +389,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("merge after every row was deleted still works (schema persisted)") {
     val dir = tmp("store")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 2)
+    val store = cow(dir, numBuckets = 2)
     store.initialize(Cdc.initialLoad(Seq((1L, "a"), (2L, "b")).toDF("id", "payload")))
     val wipe = Seq(
       (Cdc.Delete, 5L, 1L, null.asInstanceOf[String]),
@@ -487,8 +397,8 @@ class CdcStreamSpec extends SparkSpec {
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
     store.merge(wipe)
     assert(store.snapshot().count() == 0)
-    // the store dir now holds only the schema file — the next merge must
-    // not fall over on schema inference (ADVICE r1)
+    // the manifest now references no base generation — the next merge
+    // must not fall over on schema inference (ADVICE r1)
     val revive = Seq((Cdc.Upsert, 6L, 7L, "seven"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
     store.merge(revive)
@@ -525,11 +435,11 @@ class CdcStreamSpec extends SparkSpec {
     val dir = tmp("store")
     val store = newStore(dir)
     // r9: the merge write is bucket-aligned (repartition on _bucket before
-    // the staged write), so a COW rewrite leaves each touched bucket at
-    // exactly ONE file — fragmentation no longer accumulates between
+    // the generation write), so a COW rewrite leaves each touched bucket
+    // at exactly ONE file — fragmentation never accumulates between
     // compactions (it used to grow one file per upstream partition per
     // bucket per merge, and the next merge re-read and re-fsynced all of
-    // them). compact() remains the maintenance pass for MOR delta folding.
+    // them). compact() is the maintenance pass for MOR delta folding.
     (10L to 14L).foreach { tx =>
       store.merge(Seq((Cdc.Upsert, tx, tx, s"v$tx"))
         .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
@@ -537,9 +447,11 @@ class CdcStreamSpec extends SparkSpec {
     val before = store.snapshot().as[(Long, String)].collect().toSet
     def filesPerBucket: Map[String, Int] =
       new java.io.File(dir).listFiles((f: java.io.File) =>
-          f.getName.startsWith("_bucket=")).map { d =>
-        d.getName -> d.listFiles((f: java.io.File) =>
-          f.getName.endsWith(".parquet")).length
+          f.getName.startsWith("gen-")).flatMap { g =>
+        g.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
+          .map(d => s"${g.getName}/${d.getName}" ->
+            d.listFiles((f: java.io.File) =>
+              f.getName.endsWith(".parquet")).length)
       }.toMap
     assert(filesPerBucket.values.forall(_ == 1), filesPerBucket.toString)
     store.compact()
@@ -547,151 +459,47 @@ class CdcStreamSpec extends SparkSpec {
     assert(filesPerBucket.values.forall(_ == 1), filesPerBucket.toString)
   }
 
-  test("merge backfill path (broadcastBatchKeys=false) converges identically") {
-    // a backfill batch touching most keys must not broadcast its key set;
-    // the shuffled anti-join produces the same store state (VERDICT r6 #6)
+  test("crash before any swap: leftover staging is discarded, old buckets win") {
+    // the generation was fully written but the writer died before its
+    // manifest put: every bucket still serves its old generation, and the
+    // written one is unreferenced — the ledger never advanced, so the
+    // window replays, and GC discards the leftover
     val dir = tmp("store")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4,
-      broadcastBatchKeys = false)
-    store.initialize(Cdc.initialLoad(
-      Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("id", "payload")))
-    val folded = Seq(
-      (Cdc.Upsert, 10L, 1L, "ONE"), (Cdc.Upsert, 11L, 2L, "TWO"),
-      (Cdc.Delete, 12L, 3L, null.asInstanceOf[String]),
-      (Cdc.Upsert, 13L, 9L, "nine")
-    ).toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
-    store.merge(folded)
-    val first = store.snapshot().as[(Long, String)].collect().toSet
-    assert(first == Set((1L, "ONE"), (2L, "TWO"), (9L, "nine")))
-    store.merge(folded) // replay stays idempotent on the shuffled path
-    assert(store.snapshot().as[(Long, String)].collect().toSet == first)
-  }
-
-  test("crash between retire and promote: staged copy is recovered (ADVICE r6)") {
-    val dir = tmp("store")
-    val store = newStore(dir)
-    val before = store.snapshot().as[(Long, String)].collect().toSet
-    // reconstruct the exact mid-swap crash window: a bucket's staged
-    // replacement is fully written and the live dir was already retired
-    // (renamed aside) when the process died
+    val before = newStore(dir).snapshot().as[(Long, String)].collect().toSet
+    val batch = Seq((Cdc.Upsert, 50L, 2L, "TWO"))
+      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
+    intercept[IllegalStateException](crashingBeforePut(dir).merge(batch))
     val root = new java.io.File(dir)
-    val bucket = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val n = bucket.getName.stripPrefix("_bucket=")
-    val stagedCopy = new java.io.File(new java.io.File(root, "_staging"), bucket.getName)
-    stagedCopy.mkdirs()
-    bucket.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(stagedCopy, f.getName).toPath)
-    }
-    java.nio.file.Files.move(bucket.toPath,
-      new java.io.File(root, s"_retired_$n").toPath)
-    // mid-swap crashes happen after the commit marker is dropped
-    new java.io.File(root, "_swap_started").createNewFile()
-    // live bucket dir is now missing — the old code's crash window would
-    // have lost its rows permanently; recovery must promote the staged copy
+    val leftover = root.listFiles((_: java.io.File, n: String) =>
+      n.startsWith("gen-cow-")).toSeq
+    assert(leftover.size == 1)
+    // no grace: the next commit's GC may sweep any unreferenced dir
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4,
+      orphanGraceMs = 0L, writePolicy = WritePolicy.CopyOnWrite)
     assert(store.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(root, "_staging").exists())
-    assert(!new java.io.File(root, s"_retired_$n").exists())
-    // and a subsequent merge over the healed store behaves normally
-    store.merge(Seq((Cdc.Upsert, 50L, 2L, "TWO"))
-      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
+    store.merge(batch) // the replayed window
     assert(store.snapshot().as[(Long, String)].collect().toSet ==
       Set((1L, "one"), (2L, "TWO"), (3L, "three")))
-  }
-
-  test("crash before any swap: leftover staging is discarded, old buckets win") {
-    val dir = tmp("store")
-    val store = newStore(dir)
-    val before = store.snapshot().as[(Long, String)].collect().toSet
-    // staging fully written but the process died before the first rename:
-    // every live bucket is intact, so the staged (uncommitted) data must be
-    // dropped — the ledger never advanced and the window will replay
-    val root = new java.io.File(dir)
-    val bucket = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val stagedCopy = new java.io.File(new java.io.File(root, "_staging"), bucket.getName)
-    stagedCopy.mkdirs()
-    bucket.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(stagedCopy, f.getName).toPath)
-    }
-    assert(store.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(root, "_staging").exists())
+    assert(!leftover.head.exists())
   }
 
   test("pre-swap crash with a NEW bucket staged: uncommitted batch never leaks") {
-    // the staging write completed (including a bucket the store never had)
-    // but the process died before the commit marker / first rename: the
-    // batch was never committed and the ledger never advanced — recovery
-    // must DISCARD the staged new bucket, not promote it into snapshot()
+    // the crashed rewrite wrote buckets the store never had; with no
+    // manifest put they stay unreferenced, so none of the batch reaches
+    // snapshot() or a lookup
     val dir = tmp("store")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 4)
+    val store = cow(dir)
     store.initialize(Cdc.initialLoad(Seq((1L, "one")).toDF("id", "payload")))
     val before = store.snapshot().as[(Long, String)].collect().toSet
-    val root = new java.io.File(dir)
-    val live = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).map(_.getName).toSet
-    val newBucket = (0 until 4).map(b => s"_bucket=$b").find(!live.contains(_)).get
-    // stage a parquet dir for the never-existing bucket (copy a live one)
-    val src = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val stagedCopy = new java.io.File(new java.io.File(root, "_staging"), newBucket)
-    stagedCopy.mkdirs()
-    src.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(stagedCopy, f.getName).toPath)
-    }
-    // NO _swap_started marker: this is the pre-commit window
+    val wide = (2L to 12L).map(i => (Cdc.Upsert, 60L + i, i, s"v$i"))
+      .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")
+    intercept[IllegalStateException](crashingBeforePut(dir).merge(wide))
+    val written = new java.io.File(dir)
+      .listFiles((_: java.io.File, n: String) => n.startsWith("gen-cow-")).head
+    assert(written.list().count(_.startsWith("_bucket=")) > 1,
+      "the crashed rewrite must have written the batch's new buckets")
     assert(store.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(root, "_staging").exists())
-    assert(!new java.io.File(root, newBucket).exists())
-  }
-
-  test("retire-rename persisted but marker lost: old bucket restored, nothing lost") {
-    // metadata-reordering power loss: the retire rename reached disk but
-    // the _swap_started marker create did not — recovery must treat the
-    // batch as uncommitted (discard staging) AND restore the retired copy,
-    // never delete both
-    val dir = tmp("store")
-    val store = newStore(dir)
-    val before = store.snapshot().as[(Long, String)].collect().toSet
-    val root = new java.io.File(dir)
-    val bucket = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val n = bucket.getName.stripPrefix("_bucket=")
-    val stagedCopy = new java.io.File(new java.io.File(root, "_staging"), bucket.getName)
-    stagedCopy.mkdirs()
-    bucket.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(stagedCopy, f.getName).toPath)
-    }
-    java.nio.file.Files.move(bucket.toPath,
-      new java.io.File(root, s"_retired_$n").toPath)
-    // NO _swap_started marker on disk
-    assert(store.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(root, "_staging").exists())
-    assert(!new java.io.File(root, s"_retired_$n").exists())
-    assert(new java.io.File(root, s"_bucket=$n").exists())
-  }
-
-  test("crash between promote and retired-delete: debris dropped, new data kept") {
-    val dir = tmp("store")
-    val store = newStore(dir)
-    val before = store.snapshot().as[(Long, String)].collect().toSet
-    // staged dir already promoted; the retired old copy was not yet deleted
-    val root = new java.io.File(dir)
-    val bucket = root.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_bucket=")).head
-    val n = bucket.getName.stripPrefix("_bucket=")
-    val retired = new java.io.File(root, s"_retired_$n")
-    retired.mkdirs()
-    bucket.listFiles().foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(retired, f.getName).toPath)
-    }
-    assert(store.snapshot().as[(Long, String)].collect().toSet == before)
-    assert(!retired.exists())
+    (2L to 12L).foreach(i => assert(store.lookup(i).isEmpty, s"key $i leaked"))
   }
 
   test("merge leaves the session partitionOverwriteMode untouched") {
@@ -700,6 +508,22 @@ class CdcStreamSpec extends SparkSpec {
     store.merge(Seq((Cdc.Upsert, 10L, 2L, "TWO"))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload"))
     assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == before)
+  }
+
+  test("txid ledger: an empty or unparseable file fails read() loudly, naming the path and the bytes") {
+    val path = tmp("ledger-torn") + "/txid"
+    val ledger = new TxidLedger(path)
+    assert(ledger.read() == -1L)
+    ledger.commit(42L)
+    assert(ledger.read() == 42L && !new java.io.File(path + ".tmp").exists())
+    // what a power loss between an unforced write and its rename leaves,
+    // and a garbled value: never a bare NumberFormatException
+    for (torn <- Seq("", "4x")) {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), torn)
+      val e = intercept[IllegalStateException](ledger.read())
+      assert(e.getMessage.contains(path) &&
+        e.getMessage.contains(s"${torn.length} byte(s)"), e.getMessage)
+    }
   }
 
   test("stale rows at/below the committed watermark are detected, not silent") {
@@ -724,7 +548,7 @@ class CdcStreamSpec extends SparkSpec {
       val store: KeyedUpsertStore =
         if (mor) new ManifestUpsertStore(spark, tmp("jstore"), Seq("id"),
           numBuckets = 4)
-        else new UpsertStore(spark, tmp("jstore"), Seq("id"), numBuckets = 4)
+        else cow(tmp("jstore"))
       store.initialize(Cdc.initialLoad(
         Seq((1L, "old1"), (9L, "old9")).toDF("id", "payload")))
       val ledger = new TxidLedger(tmp("jled") + "/txid")
@@ -734,15 +558,15 @@ class CdcStreamSpec extends SparkSpec {
       job.processBatch(keyFeed((9L, 12L)), 1)            // 9 gone upstream → delete
       (store.snapshot().as[(Long, String)].collect().toSet, ledger.read())
     }
-    val cow = runWith(false)
-    val mor = runWith(true)
-    assert(cow == mor)
-    assert(cow == ((Set((1L, "one"), (2L, "TWO")), 12L)))
+    val viaCow = runWith(false)
+    val viaMor = runWith(true)
+    assert(viaCow == viaMor)
+    assert(viaCow == ((Set((1L, "one"), (2L, "TWO")), 12L)))
   }
 
   test("delete of a whole bucket leaves no stale rows") {
     val dir = tmp("store")
-    val store = new UpsertStore(spark, dir, Seq("id"), numBuckets = 2)
+    val store = cow(dir, numBuckets = 2)
     store.initialize(Cdc.initialLoad(Seq((1L, "a")).toDF("id", "payload")))
     val folded = Seq((Cdc.Delete, 5L, 1L, null.asInstanceOf[String]))
       .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload")

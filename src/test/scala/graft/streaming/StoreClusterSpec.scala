@@ -28,9 +28,10 @@ class StoreClusterSpec extends SparkSpec {
 
   private val N = 60000
 
-  private def freshStore(clusterBy: Seq[String]): UpsertStore = {
+  private def freshStore(clusterBy: Seq[String]): ManifestUpsertStore = {
     val dir = Files.createTempDirectory("graft-cluster").toString
-    val store = new UpsertStore(spark, dir, pkCols = Seq("id"), numBuckets = 2)
+    val store = new ManifestUpsertStore(spark, dir, pkCols = Seq("id"),
+      numBuckets = 2)
     // pad makes rows wide enough that a bucket spans many 64 KB row
     // groups; v is id-scrambled so raw insert order carries NO v-locality
     val data = spark.range(N).toDF("id")
@@ -63,28 +64,27 @@ class StoreClusterSpec extends SparkSpec {
     val sel = col("v") < 1000 // 1/60 of the value range
     val flat = freshStore(Nil)
     val clustered = freshStore(Seq("v"))
-    try {
-      // same answer either way — clustering is layout only
-      val expect = flat.snapshot().where(sel).agg(sum("id")).head.getLong(0)
-      assert(clustered.snapshot().where(sel).agg(sum("id")).head.getLong(0)
-        === expect)
+    // same answer either way — clustering is layout only
+    val expect = flat.snapshot().where(sel).agg(sum("id")).head.getLong(0)
+    assert(clustered.snapshot().where(sel).agg(sum("id")).head.getLong(0)
+      === expect)
 
-      val flatRows = scanOutputRows(flat.snapshot().where(sel))
-      val clusteredRows = scanOutputRows(clustered.snapshot().where(sel))
-      // unclustered: v is uniform per row group, so NO group is prunable
-      // and the scan surfaces everything
-      assert(flatRows === N.toLong,
-        s"expected unclustered scan to read all rows, got $flatRows")
-      // clustered: only the row groups covering v<1000 survive — allow
-      // generous slack for group-boundary straddle, still an 85%+ skip
-      assert(clusteredRows < N / 6,
-        s"clustered scan read $clusteredRows of $N rows — pruning inert")
-    } finally { flat.releaseLease(); clustered.releaseLease() }
+    val flatRows = scanOutputRows(flat.snapshot().where(sel))
+    val clusteredRows = scanOutputRows(clustered.snapshot().where(sel))
+    // unclustered: v is uniform per row group, so NO group is prunable
+    // and the scan surfaces everything
+    assert(flatRows === N.toLong,
+      s"expected unclustered scan to read all rows, got $flatRows")
+    // clustered: only the row groups covering v<1000 survive — allow
+    // generous slack for group-boundary straddle, still an 85%+ skip
+    assert(clusteredRows < N / 6,
+      s"clustered scan read $clusteredRows of $N rows — pruning inert")
   }
 
   test("zorder2 key clusters two dimensions at once") {
     val dir = Files.createTempDirectory("graft-zcluster").toString
-    val store = new UpsertStore(spark, dir, pkCols = Seq("id"), numBuckets = 2)
+    val store = new ManifestUpsertStore(spark, dir, pkCols = Seq("id"),
+      numBuckets = 2)
     val data = spark.range(N).toDF("id")
       .withColumn("v", pmod(col("id") * 2654435761L, lit(N.toLong)))
       .withColumn("w", pmod(col("id") * 2246822519L, lit(N.toLong)))
@@ -92,17 +92,15 @@ class StoreClusterSpec extends SparkSpec {
       .withColumn("zkey", zorder2(col("v"), col("w")))
     store.initialize(Cdc.initialLoad(data))
     store.compact(clusterBy = Seq("zkey"))
-    try {
-      // a corner box in (v, w): under z-order BOTH columns' row-group
-      // stats tighten, so either single-column predicate already prunes
-      val box = col("v") < 4096 && col("w") < 4096
-      val rows = scanOutputRows(store.snapshot().where(box))
-      assert(rows < N / 2,
-        s"z-ordered scan read $rows of $N rows — no 2-D locality")
-      // and the key itself is the documented interleave: a=101₂ lands on
-      // even positions 0/4, b=011₂ on odd positions 1/3 → 11011₂
-      assert(SketchOps.zorder2(0b101L, 0b011L) === 0b11011L)
-    } finally store.releaseLease()
+    // a corner box in (v, w): under z-order BOTH columns' row-group
+    // stats tighten, so either single-column predicate already prunes
+    val box = col("v") < 4096 && col("w") < 4096
+    val rows = scanOutputRows(store.snapshot().where(box))
+    assert(rows < N / 2,
+      s"z-ordered scan read $rows of $N rows — no 2-D locality")
+    // and the key itself is the documented interleave: a=101₂ lands on
+    // even positions 0/4, b=011₂ on odd positions 1/3 → 11011₂
+    assert(SketchOps.zorder2(0b101L, 0b011L) === 0b11011L)
   }
 
   test("zorder2_bucketized: 2^40-domain keys cluster instead of throwing (VERDICT r10 #9)") {
@@ -119,7 +117,8 @@ class StoreClusterSpec extends SparkSpec {
     assert(messages(wide).exists(_.contains("bucketize")))
     // ...the bucketized variant works end-to-end through compact(clusterBy)
     val dir = Files.createTempDirectory("graft-zwide").toString
-    val store = new UpsertStore(spark, dir, pkCols = Seq("id"), numBuckets = 2)
+    val store = new ManifestUpsertStore(spark, dir, pkCols = Seq("id"),
+      numBuckets = 2)
     val data = spark.range(N).toDF("id")
       // two 2^40-scale dimensions with real low-bits structure
       .withColumn("v", col("id") * 2654435761L + (1L << 40))
@@ -127,8 +126,7 @@ class StoreClusterSpec extends SparkSpec {
       .withColumn("zkey", zorder2_bucketized(col("v"), col("w")))
     store.initialize(Cdc.initialLoad(data))
     store.compact(clusterBy = Seq("zkey")) // no runtime throw mid-rewrite
-    try assert(store.snapshot().count() === N.toLong)
-    finally store.releaseLease()
+    assert(store.snapshot().count() === N.toLong)
     // identity on in-range values: bucketized ≡ plain below 2^31
     val both = spark.range(16).select(
         zorder2(col("id") * 7, col("id") * 13).alias("a"),
@@ -138,8 +136,9 @@ class StoreClusterSpec extends SparkSpec {
   }
 
   test("clusterBy validates columns and preserves merged rows") {
-    val dir = Files.createTempDirectory("graft-cowcluster").toString
-    val store = new UpsertStore(spark, dir, pkCols = Seq("id"),
+    // merge-on-read: the merged row is a delta the clustered rewrite folds
+    val dir = Files.createTempDirectory("graft-morcluster").toString
+    val store = new ManifestUpsertStore(spark, dir, pkCols = Seq("id"),
       numBuckets = 2)
     store.initialize(Cdc.initialLoad(
       spark.range(100).toDF("id").withColumn("v", col("id") * 7)))
@@ -149,10 +148,9 @@ class StoreClusterSpec extends SparkSpec {
       store.compact(clusterBy = Seq("nope"))
     }
     store.compact(clusterBy = Seq("v"))
-    try {
-      val out = store.snapshot().orderBy("id").collect()
-      assert(out.length === 101)
-      assert(out.find(_.getLong(0) == 5L).get.getLong(1) === 999L)
-    } finally store.releaseLease()
+    assert(store.deltaCount === 0)
+    val out = store.snapshot().orderBy("id").collect()
+    assert(out.length === 101)
+    assert(out.find(_.getLong(0) == 5L).get.getLong(1) === 999L)
   }
 }
