@@ -120,37 +120,25 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("MOR delta is bucket-aligned: one file per touched bucket") {
-    // under either policy: a merge-on-read delta and a copy-on-write
-    // rewrite each land one file per touched bucket in their generation
-    for ((policy, tag) <- Seq(WritePolicy.MergeOnRead -> "gen-delta-",
-        WritePolicy.CopyOnWrite -> "gen-cow-")) {
-      val dir = tmp("morfiles")
-      val store = new ManifestUpsertStore(spark, dir, Seq("id"),
-        numBuckets = 8, writePolicy = policy)
-      store.initialize(Cdc.initialLoad(
-        (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
-      // a wide batch (touches many buckets) written from many partitions:
-      // without the aligning exchange this would write tasks × buckets files
-      store.merge(spark.range(1, 65)
-        .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
-          (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
-          concat(lit("u"), col("id")).alias("payload"))
-        .repartition(16))
-      val gen = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-        n.startsWith(tag)).head
-      val buckets =
-        gen.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
-      assert(buckets.nonEmpty, s"$policy: ${gen.getName} holds no bucket")
-      buckets.foreach { b =>
+    val dir = tmp("morfiles")
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 8)
+    store.initialize(Cdc.initialLoad(
+      (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
+    // a wide batch (touches many buckets) written from many partitions:
+    // without the aligning exchange this would write tasks × buckets files
+    store.merge(spark.range(1, 65)
+      .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
+        (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
+        concat(lit("u"), col("id")).alias("payload"))
+      .repartition(16))
+    val delta = new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
+      n.startsWith("gen-delta-")).head
+    delta.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
+      .foreach { b =>
         val n = b.listFiles((f: java.io.File) =>
           f.getName.endsWith(".parquet")).length
-        assert(n === 1, s"$policy: bucket ${b.getName} holds $n files, want 1")
+        assert(n === 1, s"delta bucket ${b.getName} holds $n files, want 1")
       }
-      // a copy-on-write store carries no delta debt: both policies are
-      // never due
-      if (policy == WritePolicy.CopyOnWrite)
-        assert(!store.compactIfNeeded(1) && !store.compactIfDeltaRatio(0.01))
-    }
   }
 
   test("MOR: replay of the same batch is idempotent (a later equal delta wins harmlessly)") {
@@ -358,6 +346,30 @@ class CdcStreamSpec extends SparkSpec {
     val torn = cow(dir).snapshot()
     assert(torn.columns.toSeq == Seq("id", "payload"))
     assert(torn.as[(Long, String)].collect().toSet == before)
+  }
+
+  test("stats: COW buckets stay at one file, through merges and compaction") {
+    val cow = newStore(tmp("stats-cow"))
+    // a wide batch from many partitions: the bucket-aligned rewrite still
+    // lands one file in each touched bucket
+    cow.merge(spark.range(1, 33)
+      .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
+        (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
+        concat(lit("u"), col("id")).alias("payload"))
+      .repartition(16))
+    // the live files per bucket, as the snapshot reads them
+    def oneFileEach(): Unit = {
+      val files = cow.snapshot().inputFiles.toSeq
+      assert(files.nonEmpty && files.forall(_.contains("/_bucket=")),
+        files.toString)
+      val perBucket = files.groupBy(f => "_bucket=[^/]+".r.findFirstIn(f).get)
+      assert(perBucket.values.forall(_.size == 1), perBucket.toString)
+    }
+    oneFileEach()
+    cow.compact()
+    oneFileEach()
+    // a COW store has no delta debt: both policies are never due
+    assert(!cow.compactIfNeeded(1) && !cow.compactIfDeltaRatio(0.01))
   }
 
   test("merge applies upserts and deletes, only touched buckets rewritten") {
