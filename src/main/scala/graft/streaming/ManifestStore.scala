@@ -143,12 +143,13 @@ object WritePolicy {
   *   the distinction (Iceberg's remove_orphan_files ships the same
   *   defense, defaulting to days); a crashed writer's orphan just waits
   *   out the grace before the next GC reclaims it. A writer that LOSES
-  *   the commit race deletes its own generation immediately — the grace
-  *   only covers crashes. Age is the NEWEST mtime in the dir tree (a
-  *   dir's own mtime is set at job START, and a long parquet write would
-  *   look stale by its root alone — review r10), and the default is a
-  *   day, sized for multi-hour backfill writes at the 100 TB target, not
-  *   for laptop jobs.
+  *   the commit race deletes its own generation immediately, and a
+  *   generation that only manifests past retention name is deleted as
+  *   soon as the last of them goes — the grace only covers crashes. Age
+  *   is the NEWEST mtime in the dir tree (a dir's own mtime is set at job
+  *   START, and a long parquet write would look stale by its root alone —
+  *   review r10), and the default is a day, sized for multi-hour backfill
+  *   writes at the 100 TB target, not for laptop jobs.
   * @param writePolicy how [[merge]] lands: a delta folded at read
   *   (merge-on-read, the default) or a rewrite of the touched buckets
   *   (copy-on-write). Every other operation is the same under both.
@@ -180,10 +181,16 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     *   emptied by deletes (no surviving compact-tagged gen → floor fell
     *   back to a stale value → the next merge REUSED an already-folded
     *   seq, silently corrupting changesBetween and LWW ties).
+    * @param rewrite this commit replaced base data with no delta naming
+    *   its changes — a (re-)initialization, a copy-on-write merge, a column
+    *   rename/drop or a clustered compaction — so the change feed cannot
+    *   cross it. Recorded in the manifest rather than read off generation
+    *   names: a rewrite that empties every bucket it touches leaves no
+    *   generation to name it.
     */
   private case class Manifest(version: Long, schemaJson: String,
       base: Map[Int, String], deltas: Seq[(Long, String)],
-      floorSeq: Long = 0L)
+      floorSeq: Long = 0L, rewrite: Boolean = false)
 
   // ObjectMapper is thread-safe after construction and expensive to build —
   // one instance per store, not one per encode/decode (review r10)
@@ -198,6 +205,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val node = mapper.createObjectNode()
     node.put("version", m.version)
     node.put("floorSeq", m.floorSeq)
+    node.put("rewrite", m.rewrite)
     node.put("schema", m.schemaJson)
     val b = node.putObject("base")
     m.base.toSeq.sortBy(_._1).foreach { case (k, v) => b.put(k.toString, v) }
@@ -238,9 +246,13 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         val e = n.get("deltas").get(i)
         (e.get("seq").asLong(), e.get("gen").asText())
       }
-      Some(Manifest(n.get("version").asLong(), n.get("schema").asText(),
-        base, deltas,
-        Option(n.get("floorSeq")).map(_.asLong()).getOrElse(0L)))
+      val version = n.get("version").asLong()
+      Some(Manifest(version, n.get("schema").asText(), base, deltas,
+        Option(n.get("floorSeq")).map(_.asLong()).getOrElse(0L),
+        // a manifest without the field can record only one kind of
+        // rewrite: an initialization, whose generation carries its version
+        Option(n.get("rewrite")).map(_.asBoolean())
+          .getOrElse(base.values.exists(_.startsWith(s"gen-$version-init-")))))
     } catch { case _: Exception => None }
 
   /** All manifest files, descending by version (by NAME — the zero-padded
@@ -405,7 +417,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * manifests beyond `keepVersions`. Runs strictly after the new manifest
     * is readable; crash mid-GC leaves unreferenced garbage that the next
     * GC retries. Unreferenced dirs are also what a crashed WRITE leaves —
-    * same sweep covers both.
+    * same sweep covers both. A generation that only manifests past
+    * retention name is committed data, never an in-flight write, so it
+    * goes at once: every copy-on-write merge and compaction retires the
+    * buckets it rewrites, and waiting out the grace on those would keep a
+    * day of rewrites on disk.
     */
   private def gc(): Unit = {
     // one decode pass; retention counts COMPLETE manifests only — torn
@@ -416,8 +432,10 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val decoded = manifestFiles().map(f => f -> tryReadManifest(f))
     val complete = decoded.collect { case (f, Some(m)) => (f, m) }
     val retained = complete.take(keepVersions)
-    val referenced: Set[String] = retained
-      .flatMap { case (_, m) => m.base.values ++ m.deltas.map(_._2) }.toSet
+    def gensOf(ms: Seq[(java.io.File, Manifest)]): Set[String] =
+      ms.flatMap { case (_, m) => m.base.values ++ m.deltas.map(_._2) }.toSet
+    val referenced = gensOf(retained)
+    val retired = gensOf(complete.drop(keepVersions)) -- referenced
     val now = System.currentTimeMillis()
     // newest mtime anywhere in the tree: an in-flight Spark write keeps
     // touching task files even while the root dir's own mtime goes stale
@@ -429,13 +447,16 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       f.isDirectory && f.getName.startsWith("gen-")))
       .getOrElse(Array.empty[java.io.File])
       .filterNot(d => referenced.contains(d.getName))
-      // age gate: a YOUNG unreferenced dir may be a concurrent writer's
-      // in-flight commit (see orphanGraceMs) — only stale orphans sweep
-      .filter(d => now - newestMtime(d) >= orphanGraceMs)
+      // age gate: a YOUNG dir no manifest ever named may be a concurrent
+      // writer's in-flight commit (see orphanGraceMs) — only stale orphans
+      // sweep
+      .filter(d => retired.contains(d.getName) ||
+        now - newestMtime(d) >= orphanGraceMs)
       .foreach(rmTree)
-    // complete manifests past retention; plus TORN debris (burned version
-    // slots) once it is past the grace too (a young torn file may be a
-    // concurrent writer's put still in flight)
+    // complete manifests past retention, AFTER their generations (a crash
+    // in between leaves them for the next GC to retire); plus TORN debris
+    // (burned version slots) once it is past the grace too (a young torn
+    // file may be a concurrent writer's put still in flight)
     complete.drop(keepVersions).foreach(_._1.delete())
     decoded.collect { case (f, None) => f }
       .filter(f => now - f.lastModified() >= orphanGraceMs)
@@ -483,7 +504,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     graft.util.Fs.fsyncTree(new java.io.File(root, gen))
     val buckets = bucketDirsOf(gen)
     putManifest(Manifest(v, data.schema.json,
-      buckets.map(_ -> gen).toMap, Seq.empty))
+      buckets.map(_ -> gen).toMap, Seq.empty, rewrite = true))
     gc()
   }
 
@@ -674,27 +695,50 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         .select(unioned.columns.filterNot(_ == bucketCol).map(col)
           :+ col(bucketCol): _*)
         .repartition(col(bucketCol))
-      val gen = genName("cow")
-      val genDir = new java.io.File(root, gen)
-      val tWrite = System.nanoTime()
-      merged.write.partitionBy(bucketCol).mode("overwrite")
-        .parquet(genDir.getPath)
-      graft.util.Fs.fsyncTree(genDir)
-      StoreTelemetry.addPhase("merge_write", (System.nanoTime() - tWrite) / 1e9)
-      val survivors = bucketDirsOf(gen).toSet
-      if (survivors.isEmpty) rmTree(genDir)
-      val tSwap = System.nanoTime()
-      commitWithRetry(maxRetries = 100) { (m, slot) =>
-        putManifest(Manifest(slot, widenedSchema(m, merged.schema),
-          (m.base -- touched) ++ survivors.map(_ -> gen), Seq.empty,
-          floorSeq = m.floorSeq))
-      } { next =>
+      writeAndRepoint(merged, "cow", Some(touched), rewrite = true,
+        Some(("merge_write", "swap")))(
+        m => m.copy(schemaJson = widenedSchema(m, merged.schema))) { next =>
         next.deltas.isEmpty &&
           touched.forall(b => next.base.get(b) == m0.base.get(b))
-      }(onAbort = rmTree(genDir))
-      gc()
-      StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
+      }
     } finally batch.unpersist()
+  }
+
+  /** The commit sequence of every base rewrite: write `data` (bucket
+    * column last, already partitioned for the write) as ONE fresh
+    * generation, durable before any manifest names it (ADVICE r10), then
+    * publish a manifest that re-points the buckets the generation holds.
+    * `touched` names the buckets the rewrite replaces (None: every
+    * bucket); those it left empty drop out of the base map, and an empty
+    * generation is removed before the commit. `next` sets the schema,
+    * deltas and floor on top of the manifest the attempt commits over;
+    * `rewrite` marks a commit no delta describes (see [[Manifest]]).
+    * `validate` guards every attempt (see [[commitWithRetry]]); an abort
+    * reclaims the generation. `phases` names the write and swap timers.
+    */
+  private def writeAndRepoint(data: DataFrame, tag: String,
+      touched: Option[Set[Int]], rewrite: Boolean,
+      phases: Option[(String, String)])(next: Manifest => Manifest)(
+      validate: Manifest => Boolean): Unit = {
+    def secondsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
+    val gen = genName(tag)
+    val genDir = new java.io.File(root, gen)
+    val tWrite = System.nanoTime()
+    data.write.partitionBy(bucketCol).mode("overwrite").parquet(genDir.getPath)
+    graft.util.Fs.fsyncTree(genDir)
+    phases.foreach { case (w, _) =>
+      StoreTelemetry.addPhase(w, secondsSince(tWrite)) }
+    val survivors = bucketDirsOf(gen).map(_ -> gen).toMap
+    if (survivors.isEmpty) rmTree(genDir)
+    val tSwap = System.nanoTime()
+    commitWithRetry(maxRetries = 100) { (m, slot) =>
+      val kept = touched.fold(Map.empty[Int, String])(m.base -- _)
+      putManifest(next(m).copy(version = slot, base = kept ++ survivors,
+        rewrite = rewrite))
+    }(validate)(onAbort = rmTree(genDir))
+    gc()
+    phases.foreach { case (_, sw) =>
+      StoreTelemetry.addPhase(sw, secondsSince(tSwap)) }
   }
 
   /** Base ∪ deltas folded LWW by (pk, max seq), resolved through the
@@ -854,18 +898,16 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // a REWRITE inside the range starts a new history: a re-initialization
     // (its init generation resets the delta sequence), a copy-on-write
     // merge, a column rename/drop or a clustered compaction replaces base
-    // generations with no delta naming its changes. A per-key feed across
-    // one is unavailable — refuse rather than silently skip those changes
-    // or mix sequences from two histories (seq collisions would drop
-    // post-init deltas)
-    val rewrites = inRange.flatMap(_.base.values).toSet
-      .filter(g =>
-        ManifestUpsertStore.RewriteTags.exists(t => g.contains(s"-$t-")))
-      .diff(mFrom.base.values.toSet)
+    // data with no delta naming its changes — even when it empties every
+    // bucket it touches and so names no new generation. A per-key feed
+    // across one is unavailable — refuse rather than silently skip those
+    // changes or mix sequences from two histories (seq collisions would
+    // drop post-init deltas)
+    val rewrites = inRange.filter(_.rewrite).map(_.version)
     if (rewrites.nonEmpty) throw new IllegalStateException(
       s"store $dir: range ($fromVersion, $toVersion] spans a rewrite " +
-        s"(${rewrites.mkString(", ")}) — the feed cannot relate keys " +
-        "across it; read the full snapshot")
+        s"(version ${rewrites.sorted.mkString(", ")}) — the feed cannot " +
+        "relate keys across it; read the full snapshot")
     val atFrom = mFrom.deltas.map(_._1).toSet
     val added = inRange.flatMap(_.deltas)
       .distinct
@@ -950,21 +992,10 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       m0.deltas.flatMap { case (_, g) => bucketDirsOf(g) }.toSet
     val maxSeq = m0.deltas.map(_._1).max
     val foldedSeqs = m0.deltas.map(_._1).toSet
-    val gen = genName(s"compact$maxSeq")
     // the touched-only fold: reuse `folded` restricted per-bucket is
     // wasteful (one plan per bucket); restrict by dropping untouched from
     // the base map instead
     val touchedOnly = m0.copy(base = m0.base.filter(kv => touched(kv._1)))
-    val tw = System.nanoTime()
-    folded(touchedOnly, bucket = None)
-      .repartition(col(bucketCol))
-      .write.partitionBy(bucketCol).mode("overwrite")
-      .parquet(new java.io.File(root, gen).getPath)
-    // data durable BEFORE the commit record references it (ADVICE r10)
-    graft.util.Fs.fsyncTree(new java.io.File(root, gen))
-    StoreTelemetry.addPhase("compact_write", (System.nanoTime() - tw) / 1e9)
-    val survivors = bucketDirsOf(gen).toSet
-    val ts = System.nanoTime()
     // A compaction REBASES like Iceberg's rewrite_data_files (VERDICT r10
     // #1): on losing the slot race it revalidates that its folded inputs
     // are still exactly what the current manifest serves — concurrent
@@ -972,19 +1003,17 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // deltas live on top of our fresh base; a concurrent COMPACT or
     // re-initialize invalidates the fold (our inputs were replaced) and
     // aborts loudly with the staged generation reclaimed.
-    commitWithRetry(maxRetries = 100) { (m, slot) =>
-      val newBase = (m.base -- touched.diff(survivors)) ++
-        survivors.map(_ -> gen)
-      val rest = m.deltas.filterNot { case (s, _) => foldedSeqs(s) }
+    writeAndRepoint(
+      folded(touchedOnly, bucket = None).repartition(col(bucketCol)),
+      s"compact$maxSeq", Some(touched), rewrite = false,
+      Some(("compact_write", "compact_swap"))) { m =>
       // the folded maxSeq becomes the recorded compaction floor — survives
       // even when every touched bucket was emptied (review r10)
-      putManifest(Manifest(slot, m.schemaJson, newBase, rest,
-        floorSeq = math.max(m.floorSeq, maxSeq)))
+      m.copy(deltas = m.deltas.filterNot { case (s, _) => foldedSeqs(s) },
+        floorSeq = math.max(m.floorSeq, maxSeq))
     } { next =>
       next.base == m0.base && m0.deltas.forall(next.deltas.contains)
-    }(onAbort = rmTree(new java.io.File(root, gen)))
-    gc()
-    StoreTelemetry.addPhase("compact_swap", (System.nanoTime() - ts) / 1e9)
+    }
     StoreTelemetry.addPhase("compact", (System.nanoTime() - tc) / 1e9)
   }
 
@@ -1039,34 +1068,21 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   private def rewriteAll(m0: Manifest, tag: String,
       schema: org.apache.spark.sql.types.StructType,
       clusterBy: Seq[String] = Nil)(shape: DataFrame => DataFrame): Unit = {
-    val gen = genName(tag)
-    val genDir = new java.io.File(root, gen)
     val out = shape(folded(m0, bucket = None))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .repartition(col(bucketCol))
     val sorted =
       if (clusterBy.isEmpty) out
       else out.sortWithinPartitions((bucketCol +: clusterBy).map(col): _*)
-    sorted.write.partitionBy(bucketCol).mode("overwrite")
-      .parquet(genDir.getPath)
-    graft.util.Fs.fsyncTree(genDir)
-    val survivors = bucketDirsOf(gen)
-    if (survivors.isEmpty) rmTree(genDir)
-    val floor = (m0.deltas.map(_._1) :+ m0.floorSeq).max
-    commitWithRetry(maxRetries = 100) { (_, slot) =>
-      putManifest(Manifest(slot, schema.json, survivors.map(_ -> gen).toMap,
-        Seq.empty, floorSeq = floor))
-    }(validate = _.copy(version = m0.version) == m0)(onAbort = rmTree(genDir))
-    gc()
+    writeAndRepoint(sorted, tag, touched = None, rewrite = true,
+      phases = None) { m =>
+      m.copy(schemaJson = schema.json, deltas = Seq.empty,
+        floorSeq = (m.deltas.map(_._1) :+ m.floorSeq).max)
+    }(_.copy(version = m0.version) == m0)
   }
 }
 
 object ManifestUpsertStore {
-  /** Generation tags of the base rewrites no delta describes: a change
-    * feed range that spans one refuses.
-    */
-  private val RewriteTags = Seq("init", "cow", "schema", "cluster")
-
   /** The bucket of one typed probe key, evaluated WITHOUT a Spark job
     * (r20, VERDICT r19 #3): the expression runs over a one-row
     * LocalRelation, which the optimizer's ConvertToLocalRelation rule

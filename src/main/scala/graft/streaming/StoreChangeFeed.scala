@@ -17,10 +17,11 @@ import org.apache.spark.sql.DataFrame
   * lost span would lose deletes. Retention is the store's and depends on
   * its [[WritePolicy]]: under merge-on-read, the last `keepVersions`
   * manifests of the [[ManifestUpsertStore]]; under copy-on-write, a
-  * horizon that moves to the current version on every rewrite (each merge
-  * is one), so a consumer keeps up only if it polls between merges. Column
-  * rename/drop, clustered compaction and re-initialization move the
-  * horizon under either policy.
+  * horizon that moves to the current version on every rewrite. Each
+  * copy-on-write merge is one, so a feed over a copy-on-write store serves
+  * only the empty range at its current version: a consumer should tail a
+  * merge-on-read store. Column rename/drop, clustered compaction and
+  * re-initialization move the horizon under either policy.
   */
 class StoreChangeFeed(store: KeyedUpsertStore, cursorPath: String) {
   private val ledger = new TxidLedger(cursorPath)

@@ -843,4 +843,55 @@ class ManifestStoreSpec extends SparkSpec {
     assert(state(store) === Set((1L, "one"), (2L, "TWO"), (3L, "three"),
       (4L, "four"), (5L, "five")))
   }
+
+  test("a copy-on-write merge that empties every bucket it touches still breaks the change feed") {
+    // such a merge writes no generation, so only the manifest can say that
+    // it rewrote: an empty feed here would silently lose the deletes
+    val initial = Seq((1L, "one"), (2L, "two"), (3L, "three"))
+    def bucket(id: Long): Int = spark.range(1)
+      .select(pmod(hash(lit(id)), lit(4)).cast("int")).head().getInt(0)
+    val gone = initial.map(_._1).filter(bucket(_) == bucket(1L))
+    val deletes = batch(gone.map(id =>
+      (Cdc.Delete, 10L + id, id, null.asInstanceOf[String])): _*)
+    val dir = tmp("mfcowempty")
+    val store = cowStore(dir)
+    store.initialize(Cdc.initialLoad(initial.toDF("id", "payload")))
+    val feed = new StoreChangeFeed(store, tmp("mfcowempty-cursor") + "/cursor")
+    val v0 = store.currentVersion
+    store.merge(deletes)
+    val v = store.currentVersion
+    assert(v === v0 + 1 && cowGens(dir).isEmpty,
+      "the merge published a manifest and wrote no generation")
+    assert(state(store) === initial.filterNot(r => gone.contains(r._1)).toSet)
+    val e = intercept[IllegalStateException](store.changesBetween(v - 1, v))
+    assert(e.getMessage.contains("spans a rewrite"), e.getMessage)
+    intercept[IllegalStateException](feed.poll())
+    // the same deletes through merge-on-read, compacted into an emptied
+    // bucket, stay in the feed: a compaction is not a rewrite
+    val mor = newStore(tmp("mfmorempty"))
+    val m0 = mor.currentVersion
+    mor.merge(deletes)
+    mor.compact()
+    assert(mor.changesBetween(m0, mor.currentVersion)
+      .select("id", Cdc.ChangeType).as[(Long, String)].collect().toSet ===
+      gone.map(_ -> Cdc.Delete).toSet)
+  }
+
+  test("GC deletes retired copy-on-write generations at once: the dir count stays bounded by keepVersions") {
+    // default orphanGraceMs (a day): only generations no manifest ever
+    // named wait it out; a merge's retired buckets are committed data
+    val dir = tmp("mfcowgc")
+    val store = cowStore(dir)
+    val ids = 1L to 40L
+    store.initialize(Cdc.initialLoad(ids.map(i => (i, "v0")).toDF("id", "payload")))
+    def genDirs = new java.io.File(dir).list().count(_.startsWith("gen-"))
+    (1 to 8).foreach { n =>
+      // every merge rewrites all four buckets
+      store.merge(batch(ids.map(i => (Cdc.Upsert, 100L * n + i, i, s"v$n")): _*))
+      assert(genDirs <= 3, s"$genDirs generation dirs after merge $n")
+    }
+    assert(state(store) === ids.map(_ -> "v8").toSet)
+    assert(store.snapshotAt(store.currentVersion - 2).count() === ids.size,
+      "the retained history still reads")
+  }
 }
