@@ -548,6 +548,24 @@ class ManifestStoreSpec extends SparkSpec {
     intercept[IllegalStateException](store.changesBetween(v, store.currentVersion))
     // ...but within the new history it works
     assert(store.changesBetween(v + 1, store.currentVersion).count() === 1)
+    // the same store with manifests that carry no rewrite flag (the format
+    // before the flag): the re-initialization is still found, by the init
+    // generation named after its own version
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
+      n.matches("manifest-\\d{12}\\.json")).foreach { f =>
+      val s = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      val node = mapper.readTree(s.substring(0, s.lastIndexOf('\n', s.length - 2)))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      assert(node.remove("rewrite") != null, s"${f.getName} has no flag")
+      val payload = mapper.writeValueAsString(node)
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.nio.file.Files.write(f.toPath, s"$payload\n$digest\n".getBytes("UTF-8"))
+    }
+    assert(state(store) === Set((50L, "fresh"), (51L, "post")))
+    intercept[IllegalStateException](store.changesBetween(v, store.currentVersion))
+    assert(store.changesBetween(v + 1, store.currentVersion).count() === 1)
   }
 
   test("schema evolves additively through the manifest") {
