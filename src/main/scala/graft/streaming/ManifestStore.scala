@@ -744,13 +744,25 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   /** Base ∪ deltas folded LWW by (pk, max seq), resolved through the
     * manifest. Deltas carry `_bucket=N` subdirs, so base buckets no delta
     * touches bypass the fold and union in as a plain scan; only the
-    * touched slice pays the PK shuffle. Each
+    * touched slice pays the PK shuffle. In the `aligned` write form that
+    * shuffle is one exchange, shared with the write layout. Each
     * generation dir is ONE partitioned parquet read with a bucket
     * partition filter (directory pruning) — never a per-bucket union,
     * whose plan (one scan node per bucket dir) made the compaction fold
     * ~8× slower at 32 buckets.
+    *
+    * @param aligned the write form, for a rewrite that lands the result
+    *   one file per bucket: every row read (untouched base buckets
+    *   included) passes ONE exchange, hash-partitioned by `_bucket`, and
+    *   the fold groups by (`_bucket`, pk) on top of it. That partitioning
+    *   already satisfies the aggregate's clustering, so Spark plans no
+    *   second shuffle by key, and the output arrives bucket-aligned for
+    *   the partitioned writer. Correct because the bucket is a pure
+    *   function of the key (the invariant [[lookup]]'s pruning relies
+    *   on): grouping by (bucket, pk) groups exactly as by pk.
     */
-  private def folded(m: Manifest, bucket: Option[Int]): DataFrame = {
+  private def folded(m: Manifest, bucket: Option[Int],
+      aligned: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val schema = schemaOf(m)
     val withEnvelope = StructType(
@@ -769,8 +781,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val deltas = m.deltas.filter { case (_, g) =>
       bucket.forall(b => new java.io.File(root, s"$g/$bucketCol=$b").exists())
     }
-    val touched: Set[Int] = deltas.flatMap { case (_, g) => bucketDirsOf(g) }
-      .toSet.filter(t => bucket.forall(_ == t))
+    val deltaBuckets: Set[Int] =
+      deltas.flatMap { case (_, g) => bucketDirsOf(g) }
+        .toSet.filter(t => bucket.forall(_ == t))
     // base read: group buckets by serving generation, one read per gen
     val wantBuckets = bucket.map(Seq(_)).getOrElse(m.base.keys.toSeq.sorted)
       .filter(m.base.contains)
@@ -780,9 +793,14 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         val keep = bs.filter(buckets).toSet
         if (keep.isEmpty) None else Some(readGen(g, keep, envelope = false))
       }.reduceOption(_.unionByName(_))
+    if (deltaBuckets.isEmpty) {
+      val base = baseFor(wantBuckets.toSet).getOrElse(emptyDf)
+      return if (aligned) base.repartition(col(bucketCol)) else base
+    }
+    // the aligned form folds every bucket it reads: untouched base rows
+    // then share the one exchange instead of needing their own
+    val touched = if (aligned) deltaBuckets ++ wantBuckets else deltaBuckets
     val untouchedBase = baseFor(wantBuckets.toSet -- touched)
-    if (deltas.isEmpty || touched.isEmpty)
-      return untouchedBase.getOrElse(emptyDf)
     val touchedBase = baseFor(wantBuckets.toSet.intersect(touched))
       .getOrElse(emptyDf)
       .withColumn(Cdc.ChangeType, lit(Cdc.Upsert))
@@ -794,7 +812,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         allowMissingColumns = true)
     }
     val payload = struct(withEnvelope.fieldNames.map(col).toIndexedSeq: _*)
-    val foldedTouched = all.groupBy(pkCols.map(col): _*)
+    val grouped =
+      if (aligned) all.repartition(col(bucketCol))
+        .groupBy((bucketCol +: pkCols).map(col): _*)
+      else all.groupBy(pkCols.map(col): _*)
+    val foldedTouched = grouped
       .agg(max_by(payload, col(seqCol)).alias("_r"))
       .select(col("_r.*"))
       .where(col(Cdc.ChangeType) === Cdc.Upsert)
@@ -960,7 +982,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * them again (zero IO for the untouched part, not even a listing of
     * their files). Crash before the manifest put → old manifest serves
     * base+deltas unchanged. A store without deltas (every copy-on-write
-    * store) has nothing to fold.
+    * store) has nothing to fold. The fold is [[folded]]'s aligned form:
+    * the touched buckets' base ∪ deltas pass ONE exchange by bucket, which
+    * serves both the LWW fold and the one-file-per-bucket write.
     *
     * @param clusterBy optional CLUSTERED rewrite instead: every bucket of
     *   the folded snapshot is rewritten sorted by these columns within the
@@ -1003,8 +1027,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // deltas live on top of our fresh base; a concurrent COMPACT or
     // re-initialize invalidates the fold (our inputs were replaced) and
     // aborts loudly with the staged generation reclaimed.
-    writeAndRepoint(
-      folded(touchedOnly, bucket = None).repartition(col(bucketCol)),
+    writeAndRepoint(folded(touchedOnly, bucket = None, aligned = true),
       s"compact$maxSeq", Some(touched), rewrite = false,
       Some(("compact_write", "compact_swap"))) { m =>
       // the folded maxSeq becomes the recorded compaction floor — survives
@@ -1058,8 +1081,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * and publish it with `schema` in ONE manifest put, so the data and its
     * schema commit or roll back together: no crash point serves new-shape
     * files through an old-shape schema (which would silently null a
-    * renamed column). `shape` maps the snapshot onto `schema`; `clusterBy`
-    * sorts each bucket, bucket first (repartition may co-locate several
+    * renamed column). The snapshot is [[folded]]'s aligned form, so the
+    * whole store passes one exchange by bucket, shared by the fold and
+    * the write layout. `shape` maps the snapshot onto `schema` (row-wise
+    * only: it must not re-partition); `clusterBy`
+    * sorts each bucket, bucket first (the exchange may co-locate several
     * buckets in one task, and the partitioned writer keeps task row order
     * per dir). The folded deltas' highest seq becomes the floor. The
     * inputs are the whole store, so any concurrent commit aborts the
@@ -1068,9 +1094,8 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   private def rewriteAll(m0: Manifest, tag: String,
       schema: org.apache.spark.sql.types.StructType,
       clusterBy: Seq[String] = Nil)(shape: DataFrame => DataFrame): Unit = {
-    val out = shape(folded(m0, bucket = None))
+    val out = shape(folded(m0, bucket = None, aligned = true))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      .repartition(col(bucketCol))
     val sorted =
       if (clusterBy.isEmpty) out
       else out.sortWithinPartitions((bucketCol +: clusterBy).map(col): _*)

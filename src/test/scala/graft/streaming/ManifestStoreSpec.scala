@@ -209,6 +209,81 @@ class ManifestStoreSpec extends SparkSpec {
     assert(state(store) === want)
   }
 
+  /** Shuffle-map stages that `body` runs, counted by a listener. Skipped
+    * stages (AQE resubmits a finished map stage as skipped) never complete,
+    * so each exchange counts once.
+    */
+  private def shuffleMapStages(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (org.apache.spark.ListenerBusDrain.isShuffleMap(e.stageInfo)) {
+          n.incrementAndGet(); ()
+        }
+    }
+    // earlier jobs' events must not reach the new listener
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    n.get()
+  }
+
+  /** Bucket dir name → `.parquet` file count, for the one generation of
+    * `dir` whose name starts with `prefix`.
+    */
+  private def filesPerBucket(dir: String, prefix: String): Map[String, Int] = {
+    val gens = new java.io.File(dir).listFiles(
+      (_: java.io.File, n: String) => n.startsWith(prefix))
+    assert(gens.length === 1, gens.map(_.getName).toSeq)
+    gens.head.listFiles((f: java.io.File) => f.getName.startsWith("_bucket="))
+      .map(b => b.getName -> b.listFiles((f: java.io.File) =>
+        f.getName.endsWith(".parquet")).length).toMap
+  }
+
+  test("compaction folds in one exchange: one shuffle-map stage, one file per touched bucket") {
+    val dir = tmp("mfonce")
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"),
+      numBuckets = 8, keepVersions = 2)
+    store.initialize(Cdc.initialLoad(
+      (1L to 64L).map(i => (i, s"v$i")).toDF("id", "payload")))
+    // two wide deltas written from many partitions: upserts over half the
+    // keys, then deletes and inserts
+    store.merge(spark.range(1, 33)
+      .select(lit(Cdc.Upsert).alias(Cdc.ChangeType),
+        (col("id") + 100L).alias(Cdc.TransactionId), col("id"),
+        concat(lit("u"), col("id")).alias("payload"))
+      .repartition(16))
+    store.merge(batch((Cdc.Delete, 200L, 3L, null.asInstanceOf[String]),
+      (Cdc.Delete, 201L, 40L, null.asInstanceOf[String]),
+      (Cdc.Upsert, 202L, 70L, "seventy")))
+    val touched = new java.io.File(dir).listFiles(
+      (_: java.io.File, n: String) => n.startsWith("gen-delta-"))
+      .flatMap(_.list().filter(_.startsWith("_bucket="))).toSet
+    assert(touched.size >= 2, touched)
+    val want = state(store)
+    // the key fold and the bucket layout share ONE exchange: a fold by key
+    // followed by a repartition by bucket would run two
+    assert(shuffleMapStages(store.compact()) === 1)
+    assert(store.deltaCount === 0)
+    val compacted = filesPerBucket(dir, "gen-compact")
+    assert(compacted.keySet === touched)
+    assert(compacted.values.forall(_ == 1), compacted)
+    assert(state(store) === want)
+
+    // the clustered all-bucket rewrite folds a live delta the same way
+    store.merge(batch((Cdc.Upsert, 300L, 5L, "FIVE"),
+      (Cdc.Upsert, 301L, 50L, "FIFTY")))
+    val want2 = state(store)
+    assert(shuffleMapStages(store.compact(clusterBy = Seq("payload"))) === 1)
+    val clustered = filesPerBucket(dir, "gen-cluster")
+    assert(clustered.size === 8 && clustered.values.forall(_ == 1), clustered)
+    assert(state(store) === want2)
+  }
+
   test("version history: snapshotAt serves retained manifests; expiry refuses older") {
     val dir = tmp("mfhist")
     val store = newStore(dir, keep = 3)
