@@ -1,11 +1,12 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftExpressions._
+import graft.util.{Fs, ManifestLog}
 
 /** PERSISTED IVF index: the production shape of [[Similarity.ivfTopK]] —
   * fit the coarse quantizer once, lay the corpus out cell-partitioned on
@@ -16,10 +17,20 @@ import graft.functions.GraftExpressions._
   * assignment pass alone reads the corpus, so an index queried twice has
   * already paid for itself.
   *
-  * On-disk layout under `path`:
-  *   - `assignments/_cell=N/` — (id, vec) parquet, one dir per cell
-  *   - `centroids/`           — (cell, centroid float[], in-cell count)
-  *   - `_meta.json`           — numCells/seed/fitSampleSize + column names
+  * On-disk layout under `path`: immutable generation dirs plus one
+  * digest-checked manifest per version, published through the shared
+  * protocol ([[graft.util.ManifestLog]]) the keyed store, the manifest
+  * maintainer and the tokenizer store commit through:
+  *   - `manifest-<v>.json` — the build meta (numCells/seed/fitSampleSize,
+  *     PQ shape, column names), the quantizer generation, the base
+  *     generation, the ordered append/tombstone deltas, and the folded
+  *     batch ids (the replay high-water record)
+  *   - `gen-quantizer-<nonce>/model/` (+ `codebooks/` for IVF-PQ) — the fitted
+  *     coarse quantizer, written by a build and re-referenced by every
+  *     later compaction
+  *   - `gen-base-<nonce>/assignments/_cell=N/` — (id, vec, attrs) parquet, one
+  *     dir per cell, and `gen-base-<nonce>/centroids/` — (cell, centroid, count)
+  *   - `gen-append-<nonce>/_cell=N/`, `gen-tomb-<nonce>/` — one per un-folded delta
   *
   * Search reads `centroids` (numCells rows — broadcast), picks each
   * query's `nprobe` nearest cells by cosine, and scans ONLY the probed
@@ -31,49 +42,146 @@ import graft.functions.GraftExpressions._
   * equals `ivfTopK(data)` row-for-row for equal parameters — the spec
   * pins that identity plus the file-level pruning.
   *
-  * Builds publish by staged rename with the old index retired ASIDE, not
-  * deleted first: `<path>_tmp` is fully written (its `_meta.json` lands
-  * last, so a tmp WITH meta is complete by construction), the live dir is
-  * renamed to `<path>_old`, tmp moves into place, and only then is the
-  * aside copy dropped — so no crash point leaves zero complete copies on
-  * disk (the previous delete-then-rename protocol lost the only copy in
-  * the delete→rename window — ADVICE r9). [[recoverCrash]] runs at the
-  * head of every WRITE-path entry point and rolls forward (complete tmp)
-  * or back (aside copy) as the surviving artifacts dictate; READ paths
-  * are passive ([[ensureLive]], ADVICE r10) — they serve the live dir or
-  * throw retryably, never renaming, so a reader can't roll a healthy
-  * writer's in-flight swap out from under it.
+  * Every build, append, delete and compaction writes its generation(s),
+  * fsyncs them, and publishes ONE manifest with a conditional PUT; no
+  * file is ever renamed. A crash before the PUT leaves an unreferenced
+  * generation and the previous version serves; there is nothing to heal,
+  * and a reader resolves one manifest and serves exactly its generations.
+  * Only the serving manifest is retained (there is no time-travel API),
+  * so what a compaction retires — the old base, the folded deltas, the
+  * deleted vectors' bytes — is gone when the call returns. A generation
+  * no manifest ever named (a crashed write) is swept once a day old.
+  * The index is single-writer by contract: a concurrent rebuild or
+  * compaction makes the other writer's commit fail loudly
+  * ([[graft.streaming.CommitConflictException]]), never corrupts it.
   */
 object AnnIndex {
 
-  /** `pqM`/`pqKsub` are 0 for a plain (full-width) IVF index; a PQ index
-    * stores codes alongside the refine vectors and sets both.
+  /** Build-time configuration. `pqM`/`pqKsub` are 0 for a plain
+    * (full-width) IVF index; a PQ index stores codes alongside the refine
+    * vectors and sets both. `columns` are the data columns every row
+    * persists (id, vector, build-time attributes): appends must carry
+    * exactly these.
     */
   private case class Meta(idCol: String, vecCol: String, numCells: Int,
-      seed: Long, fitSampleSize: Int, pqM: Int = 0, pqKsub: Int = 0)
+      seed: Long, fitSampleSize: Int, pqM: Int, pqKsub: Int,
+      columns: Seq[String])
 
-  private def rmTree(f: java.io.File): Unit = graft.util.Fs.rmTree(f)
+  /** One un-folded delta: appended rows (`kind` "a") or deleted ids ("t"),
+    * its visibility sequence, its generation, and the batch id when the
+    * batch API published it.
+    */
+  private case class Delta(kind: String, seq: Long, gen: String,
+      batch: Option[Long])
+
+  /** One index version.
+    * @param folded batch halves (`a<id>`, `t<id>`) a compaction folded
+    *   into the base — the replay high-water record
+    */
+  private case class Index(version: Long, meta: Meta, quantizer: String,
+      base: String, deltas: Seq[Delta], folded: Set[String])
+
+  private def manifests(path: String) =
+    new ManifestLog[Index](new java.io.File(path), keepVersions = 1,
+        ManifestLog.DefaultOrphanGraceMs) {
+      protected def encodeFields(ix: Index, node: ObjectNode): Unit = {
+        node.put("version", ix.version)
+        val m = node.putObject("meta")
+        m.put("idCol", ix.meta.idCol)
+        m.put("vecCol", ix.meta.vecCol)
+        m.put("numCells", ix.meta.numCells)
+        m.put("seed", ix.meta.seed)
+        m.put("fitSampleSize", ix.meta.fitSampleSize)
+        m.put("pqM", ix.meta.pqM)
+        m.put("pqKsub", ix.meta.pqKsub)
+        val c = m.putArray("columns")
+        ix.meta.columns.foreach(c.add)
+        node.put("quantizer", ix.quantizer)
+        node.put("base", ix.base)
+        val d = node.putArray("deltas")
+        ix.deltas.foreach { x =>
+          val e = d.addObject()
+          e.put("kind", x.kind); e.put("seq", x.seq); e.put("gen", x.gen)
+          x.batch.foreach(e.put("batch", _))
+        }
+        val f = node.putArray("folded")
+        ix.folded.toSeq.sortBy(e => (e.drop(1).toLong, e.head)).foreach(f.add)
+      }
+      protected def decodeFields(n: JsonNode): Index = {
+        def strings(a: JsonNode) = (0 until a.size()).map(a.get(_).asText())
+        val m = n.get("meta")
+        Index(n.get("version").asLong(),
+          Meta(m.get("idCol").asText(), m.get("vecCol").asText(),
+            m.get("numCells").asInt(), m.get("seed").asLong(),
+            m.get("fitSampleSize").asInt(), m.get("pqM").asInt(),
+            m.get("pqKsub").asInt(), strings(m.get("columns"))),
+          n.get("quantizer").asText(), n.get("base").asText(),
+          (0 until n.get("deltas").size()).map { i =>
+            val e = n.get("deltas").get(i)
+            Delta(e.get("kind").asText(), e.get("seq").asLong(),
+              e.get("gen").asText(), Option(e.get("batch")).map(_.asLong()))
+          },
+          strings(n.get("folded")).toSet)
+      }
+      protected def versionOf(ix: Index): Long = ix.version
+      protected def generationsOf(ix: Index): Iterable[String] =
+        Seq(ix.quantizer, ix.base) ++ ix.deltas.map(_.gen)
+      protected def isGeneration(name: String): Boolean =
+        name.startsWith("gen-")
+    }
+
+  private def refuseLegacy(path: String): Unit =
+    ManifestLog.refuseLegacyLayout(new java.io.File(path), "ANN index",
+      "delete it and rebuild with buildIvf/buildIvfPq")
+
+  /** The serving index version; a missing or legacy path fails loudly. */
+  private def open(path: String): Index = {
+    refuseLegacy(path)
+    manifests(path).current().getOrElse(
+      throw new IllegalStateException(s"no ANN index at $path"))
+  }
+
+  /** Publish `next(current, slot)` (None: nothing to publish) with one
+    * conditional PUT, retried on a lost slot race, then GC: with only the
+    * serving manifest retained, every generation the new version no
+    * longer names goes at once.
+    */
+  private def publish(path: String)(
+      next: (Option[Index], Long) => Option[Index]): Unit = {
+    val log = manifests(path)
+    log.commit { (cur, slot) => next(cur, slot).foreach(log.put) }
+    log.gc()
+  }
+
+  /** Writes one fresh generation under `path` and fsyncs it, so it is
+    * durable before any manifest names it.
+    */
+  private def writeGen(path: String, tag: String)(
+      write: java.io.File => Unit): String = {
+    val name = ManifestLog.generationName(tag)
+    write(new java.io.File(path, name))
+    Fs.fsyncTree(new java.io.File(path, name))
+    name
+  }
+
+  private def genDir(path: String, gen: String, sub: String = ""): String =
+    new java.io.File(new java.io.File(path, gen), sub).getPath
 
   /** GENERATION-KEYED immutable-artifact cache (r19, optimization round —
     * guide §1.2 "per-task work": cut redundant driver actions). The
-    * quantizer model, PQ codebooks, and base-layout column list of a
-    * persisted index are IMMUTABLE for the lifetime of one index
-    * generation: appends/tombstones never touch them, and every operation
-    * that can change them ([[buildIvf]]/[[buildIvfPq]]/[[compactIvf]])
-    * publishes a WHOLE new directory via [[swapInto]]. The cache key is
-    * (canonical path, the generation token in `_meta.json`): a build
-    * writes a fresh token, and a compaction copies the meta with its
-    * token because the artifacts it serves are byte-identical. A legacy
-    * meta without a token falls back to its mtime+size. Before this
-    * cache, EVERY per-batch append re-ran `KMeansModel.load` (several
-    * driver actions through the ML reader), re-collected the codebooks
-    * parquet, and re-read the base footer schema — measured as ~35 of the 146 jobs in one
-    * `q_ann_stream_maintain_pq` run, pure fixed overhead at any scale
-    * (the artifacts are KB-sized; the reload tax is per-BATCH, so it
-    * also rides every production micro-batch). Entries are dropped
-    * wholesale past a small cap — correctness never depends on a hit.
+    * quantizer model and PQ codebooks of an index live in one immutable
+    * quantizer generation: appends and tombstones never touch it, a
+    * compaction re-references it, and only a build writes a new one. The
+    * cache key is (canonical path, quantizer generation name), and a
+    * generation name carries a fresh UUID, so two builds at one path can
+    * never alias. Before this cache, EVERY per-batch append re-ran
+    * `KMeansModel.load` (several driver actions through the ML reader) and
+    * re-collected the codebooks parquet — measured as ~35 of the 146 jobs
+    * in one `q_ann_stream_maintain_pq` run, pure fixed overhead at any
+    * scale. Entries are dropped wholesale past a small cap — correctness
+    * never depends on a hit.
     */
-  private class IndexArtifacts(path: String) {
+  private class QuantizerArtifacts(dir: String) {
     // resolve the ACTIVE session at read time, never capture one (r20,
     // ADVICE r19 #1): the cache is JVM-global, so a cached entry whose
     // lazy member is first forced after its creating session was stopped
@@ -81,131 +189,65 @@ object AnnIndex {
     // live NOW — the on-disk artifacts are the same either way
     lazy val model: org.apache.spark.ml.clustering.KMeansModel =
       org.apache.spark.ml.clustering.KMeansModel
-        .load(new java.io.File(path, "model").getPath)
+        .load(new java.io.File(dir, "model").getPath)
     lazy val codebooks: Array[Array[Array[Float]]] =
-      readCodebooksUncached(SparkSession.active, path)
-    lazy val dataColumns: Seq[String] =
-      SparkSession.active.read
-        .parquet(new java.io.File(path, "assignments").getPath)
-        .schema.fieldNames.toSeq.filterNot(n => n == "_cell" || n == "_code")
+      readCodebooks(SparkSession.active, dir)
   }
 
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), IndexArtifacts]()
+  private val artifactCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), QuantizerArtifacts]()
 
-  private def artifacts(spark: SparkSession, path: String): IndexArtifacts = {
-    // generation key: the monotonic token [[writeMeta]] embeds (r20,
-    // ADVICE r19 #2 — filesystem mtime has 1s resolution on some FSes,
-    // so a rebuild inside the granularity window could serve the stale
-    // quantizer); legacy metas without a token fall back to mtime+size
-    val meta = new java.io.File(path, "_meta.json")
-    val gen = Option(jsonMapper.readTree(meta).get("gen")).map(_.asText())
-      .getOrElse(s"legacy:${meta.lastModified()}:${meta.length()}")
-    val key = (new java.io.File(path).getCanonicalPath, gen)
+  private def artifacts(path: String, ix: Index): QuantizerArtifacts = {
+    val key = (new java.io.File(path).getCanonicalPath, ix.quantizer)
     if (artifactCache.size > 16) artifactCache.clear()
-    artifactCache.computeIfAbsent(key, _ => new IndexArtifacts(path))
+    artifactCache.computeIfAbsent(key,
+      _ => new QuantizerArtifacts(genDir(path, ix.quantizer)))
   }
 
-  /** Heal a crashed [[buildIvf]]/[[compactIvf]] swap. Branches, derived
-    * from the strict artifact order (tmp completed → live retired aside →
-    * tmp promoted → aside dropped):
-    *  - live missing + tmp complete (has `_meta.json`): the crash hit
-    *    between retire and promote — roll FORWARD (tmp is a full index).
-    *  - live missing + only the aside copy: promote crashed some other way
-    *    (or forward-roll's own rename tore) — roll BACK to the aside copy.
-    *  - live present: nothing to heal. Debris cleanup (`cleanDebris`) is
-    *    WRITER-ONLY: a read path deleting `<path>_tmp` would destroy a
-    *    concurrent build/compact's in-flight staged dir and break the
-    *    "old index serves reads until the final rename" contract (review
-    *    r10) — readers never mutate a healthy index; the single writer
-    *    sweeps its own debris at its next build/compact/append.
-    * Idempotent; a crash during recovery re-runs it.
-    */
-  /** READ-path guard: PASSIVE (ADVICE r10). A reader that performed the
-    * recovery renames itself raced the single WRITER's healthy
-    * [[swapInto]]: in the window between move(live→aside) and
-    * move(tmp→live), live is briefly absent while tmp is complete, so an
-    * active reader would roll the in-flight swap forward underneath the
-    * writer — whose own promote then dies with NoSuchFileException (or,
-    * racing the rollback branch, FileAlreadyExistsException), failing a
-    * perfectly healthy build/compact. Readers therefore never rename:
-    * live present → serve it; live absent → a retryable "mid-swap or
-    * crashed" error. Crash HEALING stays writer-only ([[recoverCrash]]
-    * at the head of every mutating entry point).
-    */
-  private def ensureLive(path: String): Unit = {
-    val live = new java.io.File(path)
-    if (!live.exists()) {
-      val tmp = new java.io.File(path + "_tmp")
-      val aside = new java.io.File(path + "_old")
-      if (new java.io.File(tmp, "_meta.json").exists() || aside.exists())
-        throw new IllegalStateException(
-          s"ANN index at $path is mid-swap (or a crashed writer left it " +
-            "recoverable) — retry, or run a write-path operation to heal")
-      throw new IllegalStateException(s"no ANN index at $path")
-    }
-  }
-
-  private def recoverCrash(path: String, cleanDebris: Boolean = false): Unit = {
-    val live = new java.io.File(path)
-    val tmp = new java.io.File(path + "_tmp")
-    val aside = new java.io.File(path + "_old")
-    if (!live.exists()) {
-      if (new java.io.File(tmp, "_meta.json").exists())
-        java.nio.file.Files.move(tmp.toPath, live.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else if (aside.exists())
-        java.nio.file.Files.move(aside.toPath, live.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    if (cleanDebris && live.exists()) { rmTree(tmp); rmTree(aside) }
-  }
-
-  /** Retire-aside swap: publish the COMPLETE staged dir `tmp` as `path`.
-    * Precondition: tmp's `_meta.json` exists (the completeness marker
-    * recovery keys on).
-    */
-  private def swapInto(path: String, tmp: java.io.File): Unit = {
-    require(new java.io.File(tmp, "_meta.json").exists(),
-      s"internal: staged index $tmp is incomplete (no _meta.json)")
-    val live = new java.io.File(path)
-    val aside = new java.io.File(path + "_old")
-    rmTree(aside)
-    if (live.exists())
-      java.nio.file.Files.move(live.toPath, aside.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    java.nio.file.Files.move(tmp.toPath, live.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    rmTree(aside)
-  }
-
-  /** Fit + assign + write. Overwrites an existing index atomically (the
-    * old index serves reads until the final rename). The fitted quantizer
-    * model is persisted inside the index, so [[appendIvf]] can assign new
-    * vectors to the SAME cells later without refitting.
+  /** Fit + assign + write. Replaces an existing index atomically (its
+    * version serves reads until the new manifest's PUT). The fitted
+    * quantizer model is persisted inside the index, so [[appendIvf]] can
+    * assign new vectors to the SAME cells later without refitting.
     */
   def buildIvf(path: String, data: DataFrame, idCol: String, vecCol: String,
       numCells: Int, seed: Long = 42L, fitSampleSize: Int = 20000,
       attrCols: Seq[String] = Nil): Unit = {
-    recoverCrash(path, cleanDebris = true)
+    refuseLegacy(path)
     val model = Similarity.fitCoarseQuantizer(data, idCol, vecCol, numCells,
       seed, fitSampleSize)
-    val tmp = new java.io.File(path + "_tmp")
-    rmTree(tmp) // a crashed previous build's debris
     // attrCols ride next to (id, vector) in the cell layout — parquet
     // column pruning keeps them free for unfiltered searches, and
     // filtered searches push predicates straight into the probed-cell
     // scan; appends must carry the same columns (schema is the record)
-    assign(model, data.select((Seq(idCol, vecCol) ++ attrCols)
-        .distinct.map(col): _*), idCol, vecCol)
-      .write.partitionBy("_cell")
-      .mode("overwrite").parquet(new java.io.File(tmp, "assignments").getPath)
-    model.write.overwrite().save(new java.io.File(tmp, "model").getPath)
-    writeCentroids(data.sparkSession, tmp, model,
-      new java.io.File(tmp, "assignments").getPath)
-    writeFoldedBatches(tmp, Set.empty) // a fresh build has folded nothing
-    writeMeta(tmp, Meta(idCol, vecCol, numCells, seed, fitSampleSize))
-    swapInto(path, tmp)
+    val rows = data.select((Seq(idCol, vecCol) ++ attrCols).distinct.map(col): _*)
+    publishBuild(path, Meta(idCol, vecCol, numCells, seed, fitSampleSize,
+      pqM = 0, pqKsub = 0, rows.columns.toSeq), model, None,
+      assign(model, rows, idCol, vecCol))
+  }
+
+  /** A build's commit: the base generation (cell-partitioned assignments
+    * plus centroid counts), the quantizer generation, then ONE manifest
+    * naming both, with no deltas and nothing folded.
+    */
+  private def publishBuild(path: String, meta: Meta,
+      model: org.apache.spark.ml.clustering.KMeansModel,
+      codebooks: Option[Array[Array[Array[Float]]]],
+      assigned: DataFrame): Unit = {
+    val spark = assigned.sparkSession
+    val root = new java.io.File(path)
+    if (root.mkdirs()) Fs.fsyncDir(root.getAbsoluteFile.getParentFile)
+    val base = writeGen(path, "base") { d =>
+      val assignments = new java.io.File(d, "assignments").getPath
+      assigned.write.partitionBy("_cell").mode("overwrite").parquet(assignments)
+      writeCentroids(spark, d, model, assignments)
+    }
+    val quantizer = writeGen(path, "quantizer") { d =>
+      model.write.overwrite().save(new java.io.File(d, "model").getPath)
+      codebooks.foreach(writeCodebooks(spark, d, _))
+    }
+    publish(path) { (_, slot) =>
+      Some(Index(slot, meta, quantizer, base, Seq.empty, Set.empty))
+    }
   }
 
   /** PERSISTED IVF-PQ — the 25B-embedding serving layout ([[Similarity
@@ -228,7 +270,7 @@ object AnnIndex {
       seed: Long = 42L, fitSampleSize: Int = 20000,
       attrCols: Seq[String] = Nil): Unit = {
     import graft.functions.SketchOps
-    recoverCrash(path, cleanDebris = true)
+    refuseLegacy(path)
     require(m > 0 && ksub > 1 && ksub <= 256,
       s"need m > 0 and ksub in 2..256, got m=$m ksub=$ksub")
     val spark = data.sparkSession
@@ -241,42 +283,32 @@ object AnnIndex {
       .orderBy(col("_h")).limit(fitSampleSize)
       .select(col("_v")).as[Array[Float]].collect()
     val codebooks = SketchOps.pqTrain(sample, m, ksub)
-    val tmp = new java.io.File(path + "_tmp")
-    rmTree(tmp)
-    assign(model, data.select((Seq(idCol, vecCol) ++ attrCols)
-        .distinct.map(col): _*), idCol, vecCol)
-      .withColumn("_code", pq_encode(col(vecCol), codebooks))
-      .write.partitionBy("_cell")
-      .mode("overwrite").parquet(new java.io.File(tmp, "assignments").getPath)
-    model.write.overwrite().save(new java.io.File(tmp, "model").getPath)
-    writeCentroids(data.sparkSession, tmp, model,
-      new java.io.File(tmp, "assignments").getPath)
-    writeCodebooks(spark, tmp, codebooks)
-    writeFoldedBatches(tmp, Set.empty)
-    writeMeta(tmp, Meta(idCol, vecCol, numCells, seed, fitSampleSize,
-      pqM = m, pqKsub = ksub))
-    swapInto(path, tmp)
+    val rows = data.select((Seq(idCol, vecCol) ++ attrCols).distinct.map(col): _*)
+    publishBuild(path, Meta(idCol, vecCol, numCells, seed, fitSampleSize,
+      pqM = m, pqKsub = ksub, rows.columns.toSeq), model, Some(codebooks),
+      assign(model, rows, idCol, vecCol)
+        .withColumn("_code", pq_encode(col(vecCol), codebooks)))
   }
 
   /** Codebooks as one tiny parquet (m × ksub rows of subvector centers) —
     * readable by any engine, reloaded into the literal shape the codegen
     * kernels take.
     */
-  private def writeCodebooks(spark: SparkSession, indexDir: java.io.File,
+  private def writeCodebooks(spark: SparkSession, quantizerDir: java.io.File,
       codebooks: Array[Array[Array[Float]]]): Unit = {
     import spark.implicits._
     codebooks.zipWithIndex.flatMap { case (sub, s) =>
       sub.zipWithIndex.map { case (center, c) => (s, c, center) }
     }.toSeq.toDF("sub", "code", "center")
       .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(indexDir, "codebooks").getPath)
+      .parquet(new java.io.File(quantizerDir, "codebooks").getPath)
   }
 
-  private def readCodebooksUncached(spark: SparkSession,
-      path: String): Array[Array[Array[Float]]] = {
+  private def readCodebooks(spark: SparkSession,
+      quantizerDir: String): Array[Array[Array[Float]]] = {
     import spark.implicits._
     val rows = spark.read
-      .parquet(new java.io.File(path, "codebooks").getPath)
+      .parquet(new java.io.File(quantizerDir, "codebooks").getPath)
       .as[(Int, Int, Array[Float])].collect()
     val m = rows.map(_._1).max + 1
     Array.tabulate(m) { s =>
@@ -296,22 +328,22 @@ object AnnIndex {
       where: Option[Column] = None,
       bruteForcePoolPerCell: Double = 10.0): DataFrame = {
     val spark = queries.sparkSession
-    ensureLive(path)
-    val meta = readMeta(spark, path)
+    val ix = open(path)
+    val meta = ix.meta
     require(meta.pqM > 0,
       s"index at $path is plain IVF (no PQ codes) — use searchIvf")
     // the selective-predicate hatch (see searchIvf) applies BEFORE the
     // ADC stage: a tiny qualifying pool is scanned exactly against the
     // full-width refine vectors — more accurate than compressed-domain
     // scoring AND cheaper than probing
-    filteredBruteForceHatch(spark, path, meta, queries, queryIdCol, k,
+    filteredBruteForceHatch(spark, path, ix, queries, queryIdCol, k,
       where, bruteForcePoolPerCell) match {
       case Some(exact) => return exact
       case None =>
     }
-    val codebooks = artifacts(spark, path).codebooks
+    val codebooks = artifacts(path, ix).codebooks
     val cellDf = broadcast(
-      spark.read.parquet(new java.io.File(path, "centroids").getPath)
+      spark.read.parquet(genDir(path, ix.base, "centroids"))
         .select(col("_cell"), col("_centroid")))
     val q = queries.select(col(queryIdCol).alias("query_id"),
       col(meta.vecCol).alias("_qvec"))
@@ -328,7 +360,7 @@ object AnnIndex {
     // the filtered-search predicate applies BEFORE the ADC candidate
     // top-k (see searchIvf) — disqualified vectors must not consume
     // candidate slots, or the refined k under-fills
-    val visible = visibleAssignments(spark, path, meta.idCol)
+    val visible = visibleAssignments(spark, path, ix)
       .where(col("_cell").isin(probedCells: _*))
     val indexed = where.fold(visible)(visible.where)
     // ADC candidate scan: only (id, _cell, _code) columns are read
@@ -364,12 +396,13 @@ object AnnIndex {
     * on local[32] — exactness is the product, not speed.
     */
   private def filteredBruteForceHatch(spark: SparkSession, path: String,
-      meta: Meta, queries: DataFrame, queryIdCol: String, k: Int,
+      ix: Index, queries: DataFrame, queryIdCol: String, k: Int,
       where: Option[Column], poolPerCell: Double): Option[DataFrame] =
     where.flatMap { pred =>
+      val meta = ix.meta
       if (poolPerCell <= 0) None
       else {
-        val qual = visibleAssignments(spark, path, meta.idCol).where(pred)
+        val qual = visibleAssignments(spark, path, ix).where(pred)
         if (qual.count() >= poolPerCell * meta.numCells) None
         else Some(Similarity.bruteForceTopK(
           qual.select(col(meta.idCol), col(meta.vecCol)),
@@ -389,13 +422,6 @@ object AnnIndex {
           array_to_vector(col(vecCol).cast("array<double>"))))
       .drop("_features")
   }
-
-  /** The data columns this index persists per row (from the base layout's
-    * schema — the one authority appends must match), minus the layout
-    * internals. */
-  private def indexDataColumns(spark: SparkSession, path: String): Seq[String] =
-    spark.read.parquet(new java.io.File(path, "assignments").getPath)
-      .schema.fieldNames.toSeq.filterNot(n => n == "_cell" || n == "_code")
 
   /** (cell, centroid, count) table — the stats an nprobe/numCells tuning
     * pass reads without touching the assignments.
@@ -417,7 +443,7 @@ object AnnIndex {
         f.isDirectory && f.getName.startsWith("_cell=")))
         .getOrElse(Array.empty[java.io.File])
         .map(d => d.getName.stripPrefix("_cell=").toInt ->
-          graft.util.Fs.parquetRowCount(d))
+          Fs.parquetRowCount(d))
         .toMap
     model.clusterCenters.zipWithIndex
       .map { case (c, i) =>
@@ -429,101 +455,63 @@ object AnnIndex {
       .parquet(new java.io.File(indexDir, "centroids").getPath)
   }
 
-  /** Delta-dir name → visibility sequence. Base rows are seq 0, so batch
-    * dirs map to `batchId + 1` — without the shift, Structured
-    * Streaming's FIRST micro-batch (id 0) produced tombstones at seq 0
-    * that the `_seq >= _tomb_seq` rule let every base row survive: the
-    * delete silently no-opped (r11 adversarial review). Manual dirs
-    * carry their literal number (one past every existing seq, from the
-    * caller's single listing); accidental manual-vs-batch seq ties are
-    * impossible because an index is maintained by exactly ONE of the two
-    * APIs ([[requireManualLineage]]/[[requireBatchLineage]]).
-    */
-  private def dirSeq(name: String): Long = {
-    val tail = name.substring(name.lastIndexOf('_') + 1)
-    if (tail.startsWith("b")) tail.stripPrefix("b").toLong + 1
-    else tail.toLong
-  }
-
-  private def deltaDirs(path: String): Seq[(Long, java.io.File)] =
-    Option(new java.io.File(path).listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.matches("assignments_delta_b?\\d+")))
-      .getOrElse(Array.empty[java.io.File])
-      .map(f => (dirSeq(f.getName), f))
-      .sortBy(_._1).toSeq
-
-  /** Tombstone delta dirs (CDC-driven deletion, VERDICT r10 #7): each is
-    * one parquet of deleted ids, sequenced in the SAME number space as
-    * the append deltas so delete-then-re-append resolves by order.
-    */
-  private def tombDirs(path: String): Seq[(Long, java.io.File)] =
-    Option(new java.io.File(path).listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.matches("tombstones_delta_b?\\d+")))
-      .getOrElse(Array.empty[java.io.File])
-      .map(f => (dirSeq(f.getName), f))
-      .sortBy(_._1).toSeq
-
   /** An index is maintained by the MANUAL API (appendIvf/deleteIvf) or
     * the BATCH API (appendIvfBatch/deleteIvfBatch), never both: the two
-    * number sequences independently (nextSeq vs batchId), and a seq tie
+    * number sequences independently (next seq vs batchId), and a seq tie
     * across them would make deletion ordering accidental — a delete
     * issued strictly after a manual append could silently fail to hide
     * it (r11 adversarial review). Mixing refuses loudly instead.
     */
-  private def requireManualLineage(path: String,
-      dirs: Seq[(Long, java.io.File)]): Unit = {
-    val hasBatch = dirs.exists(_._2.getName.matches(".*_b\\d+")) ||
-      readFoldedBatches(path).nonEmpty
-    require(!hasBatch, s"index at $path is batch-maintained " +
-      "(appendIvfBatch/deleteIvfBatch) — manual appendIvf/deleteIvf " +
-      "would interleave an unrelated sequence; keep one maintenance API")
-  }
+  private def requireManualLineage(path: String, ix: Index): Unit =
+    require(!ix.deltas.exists(_.batch.isDefined) && ix.folded.isEmpty,
+      s"index at $path is batch-maintained " +
+        "(appendIvfBatch/deleteIvfBatch) — manual appendIvf/deleteIvf " +
+        "would interleave an unrelated sequence; keep one maintenance API")
 
-  private def requireBatchLineage(path: String): Unit = {
-    val hasManual = (deltaDirs(path) ++ tombDirs(path))
-      .exists(!_._2.getName.matches(".*_b\\d+"))
-    require(!hasManual, s"index at $path is manually maintained " +
-      "(appendIvf/deleteIvf) — batch ids would interleave an unrelated " +
-      "sequence; keep one maintenance API")
-  }
+  private def requireBatchLineage(path: String, ix: Index): Unit =
+    require(ix.deltas.forall(_.batch.isDefined),
+      s"index at $path is manually maintained " +
+        "(appendIvf/deleteIvf) — batch ids would interleave an unrelated " +
+        "sequence; keep one maintenance API")
+
+  /** Whether the `kind` half of batch `batchId` is already published — a
+    * live delta, or folded by a past compaction. The two halves of one
+    * batch id are recorded SEPARATELY: a compaction that runs between a
+    * crashed batch's tombstone publish and its append publish folds only
+    * the tombstone half, and the replayed [[appendIvfBatch]] must still
+    * land its never-published append (ADVICE r13).
+    */
+  private def published(ix: Index, kind: String, batchId: Long): Boolean =
+    ix.deltas.exists(d => d.kind == kind && d.batch.contains(batchId)) ||
+      ix.folded(s"$kind$batchId")
 
   /** INCREMENTAL append: assign `newData` with the index's OWN persisted
     * quantizer (no refit — cells stay stable, which is what makes the
-    * append O(batch) instead of O(corpus)) and publish it as one
-    * atomically-renamed delta dir, cell-partitioned exactly like the
-    * base so search prunes it the same way. The ManifestUpsertStore MOR
-    * shape applied to an index: appends are cheap, [[compactIvf]] folds them
-    * back. Contract: ids are append-only NEW ids — replacing a vector
-    * under an existing id needs a rebuild (the search would return both).
-    * Centroid `n_vectors` counts stay base-only until the next compact.
+    * append O(batch) instead of O(corpus)) and publish it as one delta
+    * generation, cell-partitioned exactly like the base so search prunes
+    * it the same way. The ManifestUpsertStore MOR shape applied to an
+    * index: appends are cheap, [[compactIvf]] folds them back. Contract:
+    * ids are append-only NEW ids — replacing a vector under an existing id
+    * needs a rebuild (the search would return both). Centroid `n_vectors`
+    * counts stay base-only until the next compact.
     */
   def appendIvf(path: String, newData: DataFrame): Unit = {
-    recoverCrash(path)
-    // ONE listing feeds both the lineage guard and the next-seq compute
-    val dirs = deltaDirs(path) ++ tombDirs(path)
-    requireManualLineage(path, dirs)
-    // the sequence counter is SHARED with tombstones: an append landing
-    // after a delete must outrank it (deletion is order-resolved)
-    appendDelta(path, newData,
-      s"assignments_delta_${(dirs.map(_._1) :+ 0L).max + 1}")
+    val ix = open(path)
+    requireManualLineage(path, ix)
+    appendDelta(path, ix, newData, batch = None)
   }
 
-  /** Replay-IDEMPOTENT append for streaming maintenance: the delta dir
-    * name is a pure function of `batchId`, so a foreachBatch sink that
-    * crashed between append and checkpoint commit simply re-publishes the
-    * SAME dir on replay — already-published batches are a no-op, and the
-    * index converges to exactly-once contents under an at-least-once
-    * driver. This is the contract plain [[appendIvf]] cannot give (its
-    * sequential naming would duplicate every replayed row).
+  /** Replay-IDEMPOTENT append for streaming maintenance: the manifest
+    * records the batch id with the delta, so a foreachBatch sink that
+    * crashed between append and checkpoint commit replays into a no-op,
+    * and the index converges to exactly-once contents under an
+    * at-least-once driver. This is the contract plain [[appendIvf]]
+    * cannot give (it would duplicate every replayed row).
     *
-    * The published marker survives COMPACTION: [[compactIvf]] folds the
-    * delta dirs away, but records their batch ids in the index's
-    * `_folded_batches.json` (written inside the staged swap, so "deltas
-    * gone" and "ids recorded" commit atomically) — a replay arriving
-    * after the compact still sees the id and no-ops, instead of
-    * re-publishing and duplicating every row of the batch (ADVICE r9:
-    * the delta dir's existence alone was the marker, and compaction
-    * destroyed it).
+    * The record survives COMPACTION: [[compactIvf]] folds the delta away
+    * and moves its batch id into the manifest's folded set in the SAME
+    * PUT, so a replay arriving after the compact still sees the id and
+    * no-ops instead of duplicating every row of the batch (ADVICE r9).
     *
     * {{{
     * stream.writeStream.foreachBatch { (batch, id) =>
@@ -533,161 +521,123 @@ object AnnIndex {
     */
   def appendIvfBatch(path: String, newData: DataFrame, batchId: Long): Unit = {
     require(batchId >= 0, s"batchId must be non-negative, got $batchId")
-    recoverCrash(path)
-    requireBatchLineage(path)
-    val name = s"assignments_delta_b$batchId"
-    if (new java.io.File(path, name).exists() || // replay: still a delta
-      readFoldedBatches(path).contains(s"a$batchId")) // replay: compacted
-      return
-    appendDelta(path, newData, name)
+    val ix = open(path)
+    requireBatchLineage(path, ix)
+    if (!published(ix, "a", batchId))
+      appendDelta(path, ix, newData, Some(batchId))
   }
 
-  /** Folded-half entries (`a<id>` = append delta, `t<id>` = tombstone
-    * delta) a past [[compactIvf]] folded into the base — the replay
-    * high-water record. The two halves of one batch id are recorded
-    * SEPARATELY: a compaction that runs between a crashed batch's
-    * tombstone publish and its append publish folds only the tombstone
-    * half, and the replayed [[appendIvfBatch]] must still land its
-    * never-published append — a shared bare-number record made it skip
-    * permanently (ADVICE r13, silent data loss under manual compaction
-    * interleaved with a crash). Legacy bare-number entries (pre-split
-    * indexes) read as both halves folded — exactly what the shared
-    * record used to assert. Absent file reads as empty.
-    */
-  private def readFoldedBatches(path: String): Set[String] = {
-    val f = new java.io.File(path, "_folded_batches.json")
-    if (!f.exists()) return Set.empty
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-    (0 until node.size()).flatMap { i =>
-      val e = node.get(i)
-      if (e.isNumber) Seq(s"a${e.asLong()}", s"t${e.asLong()}")
-      else Seq(e.asText())
-    }.toSet
-  }
+  private def hasCells(dir: java.io.File): Boolean =
+    Option(dir.listFiles((f: java.io.File) =>
+      f.isDirectory && f.getName.startsWith("_cell="))).exists(_.nonEmpty)
 
-  private def writeFoldedBatches(indexDir: java.io.File,
-      ids: Set[String]): Unit =
-    java.nio.file.Files.write(
-      new java.io.File(indexDir, "_folded_batches.json").toPath,
-      ids.toSeq.sortBy(e => (e.drop(1).toLong, e.head))
-        .map(e => s""""$e"""").mkString("[", ",", "]")
-        .getBytes(StandardCharsets.UTF_8))
-
-  private def appendDelta(path: String, newData: DataFrame,
-      dirName: String): Unit = {
-    val spark = newData.sparkSession
-    val meta = readMeta(spark, path)
-    // model/codebooks/base-columns are generation-immutable: served from
-    // the artifact cache instead of re-loaded per batch (r19)
-    val arts = artifacts(spark, path)
-    val tmp = new java.io.File(path, s"${dirName}_tmp")
-    rmTree(tmp)
-    // appends persist EXACTLY the base layout's data columns (the schema
-    // is the record of build-time attrCols) — a batch missing one fails
-    // the select loudly instead of forking the layout
+  private def appendDelta(path: String, ix: Index, newData: DataFrame,
+      batch: Option[Long]): Unit = {
+    // model/codebooks are quantizer-generation immutable: served from the
+    // artifact cache instead of re-loaded per batch (r19)
+    val arts = artifacts(path, ix)
+    // appends persist EXACTLY the build's data columns — a batch missing
+    // one fails the select loudly instead of forking the layout
     val assigned = assign(arts.model,
-      newData.select(arts.dataColumns.map(col): _*),
-      meta.idCol, meta.vecCol)
+      newData.select(ix.meta.columns.map(col): _*),
+      ix.meta.idCol, ix.meta.vecCol)
     // a PQ index encodes appends with its PERSISTED codebooks — codes stay
     // comparable to the base's forever (no refit, same as the cells)
     val encoded =
-      if (meta.pqM > 0) assigned.withColumn("_code",
-        pq_encode(col(meta.vecCol), arts.codebooks))
+      if (ix.meta.pqM > 0) assigned.withColumn("_code",
+        pq_encode(col(ix.meta.vecCol), arts.codebooks))
       else assigned
-    encoded
-      .write.partitionBy("_cell").mode("overwrite").parquet(tmp.getPath)
-    // an empty batch must not publish: a rows-less delta dir (bare
-    // _SUCCESS) has no inferable schema and would break every later read
-    val wroteCells = Option(tmp.listFiles((f: java.io.File) =>
-      f.getName.startsWith("_cell="))).exists(_.nonEmpty)
-    if (!wroteCells) { rmTree(tmp); return }
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(path, dirName).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val gen = writeGen(path, "append") { d =>
+      encoded.write.partitionBy("_cell").mode("overwrite").parquet(d.getPath)
+    }
+    // an empty batch must not publish: a rows-less delta (bare _SUCCESS)
+    // has no inferable schema and would break every later read
+    if (!hasCells(new java.io.File(path, gen)))
+      Fs.rmTree(new java.io.File(path, gen))
+    else addDelta(path, ix, "a", gen, batch)
   }
 
-  /** Fold every append delta into the base layout (and refresh the
-    * centroid counts). Layout-only: search results are IDENTICAL before
-    * and after (spec-pinned) — what changes is that the per-query scan
-    * goes back to one dir per probed cell. The rewrite stages into a full
-    * new index dir and renames over, same publish story as [[buildIvf]].
+  /** Publish one delta on top of the serving version. Appends and
+    * tombstones always rebase over a concurrent delta (the sequence is
+    * assigned at the PUT); a rebuild in between invalidates the delta,
+    * which was assigned with the old quantizer. A batch half that a
+    * concurrent replay already published is not published twice.
+    */
+  private def addDelta(path: String, read: Index, kind: String, gen: String,
+      batch: Option[Long]): Unit =
+    publish(path) { (cur, slot) =>
+      val ix = cur.filter(_.quantizer == read.quantizer).getOrElse(
+        throw new ManifestLog.InputsReplaced(s"ANN index at $path was " +
+          "rebuilt while a delta was being written — re-run it"))
+      // base rows are seq 0, so a batch delta sequences at batchId + 1:
+      // without the shift, Structured Streaming's FIRST micro-batch (id 0)
+      // produced tombstones at seq 0 that the `_seq >= _tomb_seq` rule let
+      // every base row survive (r11 adversarial review). A manual delta
+      // takes one past every existing seq, appends and tombstones sharing
+      // the counter, so an append landing after a delete outranks it.
+      val seq = batch.fold((ix.deltas.map(_.seq) :+ 0L).max + 1)(_ + 1)
+      if (batch.exists(published(ix, kind, _))) None
+      else Some(ix.copy(version = slot,
+        deltas = ix.deltas :+ Delta(kind, seq, gen, batch)))
+    }
+
+  /** Fold every append and tombstone delta into a new base generation
+    * (and refresh the centroid counts). Layout-only: search results are
+    * IDENTICAL before and after (spec-pinned) — what changes is that the
+    * per-query scan goes back to one dir per probed cell. The quantizer
+    * generation is re-referenced, never copied. One PUT replaces the base,
+    * drops the folded deltas and records their batch ids as folded; the
+    * GC after it deletes the old base and the folded deltas at once, so a
+    * deleted vector's bytes are gone when this returns. A delta published
+    * concurrently stays live on top of the new base; a concurrent rebuild
+    * or compaction aborts this one loudly.
     */
   def compactIvf(path: String): Unit = {
-    import org.apache.spark.ml.clustering.KMeansModel
-    recoverCrash(path, cleanDebris = true)
-    val src = new java.io.File(path)
-    require(src.exists(), s"no ANN index at $path")
-    val meta = readMeta(SparkSession.active, path)
-    if (deltaDirs(path).isEmpty && tombDirs(path).isEmpty) return
+    val ix = open(path)
+    if (ix.deltas.isEmpty) return
     val spark = SparkSession.active
-    val model = artifacts(spark, path).model
-    val tmp = new java.io.File(path + "_tmp")
-    rmTree(tmp)
-    // tombstones FOLD here: the new base holds only visible rows, and the
-    // tombstone dirs are not copied into the staged index — deletion
-    // becomes physical at the swap (GDPR-grade: the bytes are gone)
-    val visible = visibleAssignments(spark, path, meta.idCol)
-    val stagedAssign = new java.io.File(tmp, "assignments")
-    visible.write.partitionBy("_cell")
-      .mode("overwrite").parquet(stagedAssign.getPath)
-    // All-deleted case: the partitioned write above emitted ZERO part
-    // files (schema-less dir, unreadable). Detected from the dir listing
-    // AFTER the single write — not via a visible.isEmpty pre-probe, which
-    // doubled the compaction read work whenever tombstones existed
-    // (ADVICE r11). The empty rewrite scans an empty plan; one empty
-    // unpartitioned file keeps the schema on disk and reads fine (_cell
-    // becomes a data column).
-    val emittedCells = Option(stagedAssign.listFiles(
-      (f: java.io.File) => f.isDirectory && f.getName.startsWith("_cell=")))
-      .getOrElse(Array.empty[java.io.File])
-    if (emittedCells.isEmpty)
-      visible.repartition(1).write.mode("overwrite")
-        .parquet(stagedAssign.getPath)
-    // the quantizer model is immutable across a compact: copy the bytes
-    // instead of an ML-reader load + writer save round trip (r19)
-    graft.util.Fs.copyTree(new java.io.File(path, "model"),
-      new java.io.File(tmp, "model"))
-    writeCentroids(spark, tmp, model,
-      new java.io.File(tmp, "assignments").getPath)
-    // replay high-water: the batch-named deltas AND batch-named tombstones
-    // this compact folds join the already-folded set, INSIDE the staged
-    // dir — the swap below makes "delta dirs gone" and "their ids
-    // recorded" a single atomic event (appendIvfBatch/deleteIvfBatch's
-    // idempotence contract, ADVICE r9)
-    writeFoldedBatches(tmp, readFoldedBatches(path) ++
-      Option(src.listFiles((_: java.io.File, n: String) =>
-        n.matches("(assignments|tombstones)_delta_b\\d+")))
-        .getOrElse(Array.empty[java.io.File])
-        .map(f => (if (f.getName.startsWith("assignments")) "a" else "t") +
-          f.getName.replaceAll("^(assignments|tombstones)_delta_b", "")))
-    // a PQ index's codebooks ride along unchanged (codes in the folded
-    // assignments were produced by them)
-    val cb = new java.io.File(path, "codebooks")
-    if (cb.exists()) graft.util.Fs.copyTree(cb, new java.io.File(tmp, "codebooks"))
-    // meta is the staged dir's completeness marker — written LAST
-    java.nio.file.Files.copy(new java.io.File(path, "_meta.json").toPath,
-      new java.io.File(tmp, "_meta.json").toPath)
-    swapInto(path, tmp)
+    val model = artifacts(path, ix).model
+    // tombstones FOLD here: the new base holds only visible rows
+    val visible = visibleAssignments(spark, path, ix)
+    val base = writeGen(path, "base") { d =>
+      val assignments = new java.io.File(d, "assignments")
+      visible.write.partitionBy("_cell")
+        .mode("overwrite").parquet(assignments.getPath)
+      // All-deleted case: the partitioned write above emitted ZERO part
+      // files (schema-less dir, unreadable). Detected from the dir listing
+      // AFTER the single write — not via a visible.isEmpty pre-probe, which
+      // doubled the compaction read work whenever tombstones existed
+      // (ADVICE r11). One empty unpartitioned file keeps the schema on
+      // disk and reads fine (_cell becomes a data column).
+      if (!hasCells(assignments))
+        visible.repartition(1).write.mode("overwrite")
+          .parquet(assignments.getPath)
+      writeCentroids(spark, d, model, assignments.getPath)
+    }
+    val folded = ix.deltas.flatMap(d => d.batch.map(b => s"${d.kind}$b"))
+    publish(path) { (cur, slot) =>
+      val now = cur.filter(c => c.base == ix.base &&
+          c.quantizer == ix.quantizer && ix.deltas.forall(c.deltas.contains))
+        .getOrElse(throw new ManifestLog.InputsReplaced(s"ANN index at " +
+          s"$path was rebuilt or compacted concurrently — re-run"))
+      Some(now.copy(version = slot, base = base,
+        deltas = now.deltas.filterNot(ix.deltas.contains),
+        folded = now.folded ++ folded))
+    }
   }
 
-  /** Un-folded maintenance debt: count of append-delta plus tombstone
-    * dirs (the per-query scan cost [[searchIvf]] pays is one extra dir
+  /** Un-folded maintenance debt: the count of append plus tombstone
+    * deltas (the per-query scan cost [[searchIvf]] pays is one extra dir
     * per entry, and the tombstone anti-filter's broadcast grows with the
-    * tombstone side). Driver-side listing — no Spark job.
+    * tombstone side). Read from the manifest — no Spark job.
     */
-  def deltaDebt(path: String): Int =
-    (deltaDirs(path) ++ tombDirs(path)).size
+  def deltaDebt(path: String): Int = open(path).deltas.size
 
   /** Debt-count compaction policy — the index twin of
     * [[graft.streaming.ManifestUpsertStore.compactIfNeeded]] (VERDICT r12 #3):
-    * fold when the un-compacted dir count reaches `maxDeltas`. Returns
+    * fold when the un-compacted delta count reaches `maxDeltas`. Returns
     * whether a compaction ran, so a caller can short-circuit a ratio
     * policy behind it exactly like `CdcStreamJob`'s store maintenance.
-    * Racing maintainers resolve naturally: the loser's [[compactIvf]]
-    * observes zero remaining debt and no-ops (the ANN index is
-    * single-writer by contract — see [[recoverCrash]] — so "race" here
-    * means a policy re-check after another call already folded, not a
-    * concurrent foreign process).
     */
   def compactIvfIfNeeded(path: String, maxDeltas: Int = 16): Boolean = {
     require(maxDeltas > 0, s"maxDeltas must be positive, got $maxDeltas")
@@ -709,52 +659,45 @@ object AnnIndex {
     */
   def compactIvfIfDebtRatio(path: String, maxRatio: Double = 0.2): Boolean = {
     require(maxRatio > 0, s"maxRatio must be positive, got $maxRatio")
-    val debt = (deltaDirs(path) ++ tombDirs(path))
-      .map { case (_, d) => dirBytes(d) }.sum
-    val base = dirBytes(new java.io.File(path, "assignments"))
+    val ix = open(path)
+    val debt = ix.deltas.map(d => dirBytes(new java.io.File(path, d.gen))).sum
+    val base = dirBytes(new java.io.File(genDir(path, ix.base, "assignments")))
     val due = debt > 0 && (base == 0L || debt.toDouble / base >= maxRatio)
     if (due) compactIvf(path)
     due
   }
 
-  /** The index's persisted id column (from `_meta.json`) — lets a generic
-    * maintenance loop split a CDC envelope without the caller re-stating
-    * build-time configuration.
+  /** The index's persisted id column — lets a generic maintenance loop
+    * split a CDC envelope without the caller re-stating build-time
+    * configuration.
     */
   def indexIdCol(spark: SparkSession, path: String): String =
-    readMeta(spark, path).idCol
+    open(path).meta.idCol
 
-  /** Base ∪ appended deltas, all cell-partitioned. */
-  private def allAssignments(spark: SparkSession, path: String): DataFrame =
-    deltaDirs(path).foldLeft(
-      spark.read.parquet(new java.io.File(path, "assignments").getPath)) {
-      case (acc, (_, d)) => acc.unionByName(spark.read.parquet(d.getPath))
-    }
-
-  /** Base ∪ deltas with tombstones APPLIED — the rows a search may serve.
-    * Visibility: a row is hidden iff its sequence is strictly below the
-    * id's highest tombstone sequence (base rows carry seq 0), so a
+  /** Base ∪ append deltas with tombstones APPLIED — the rows a search may
+    * serve. Visibility: a row is hidden iff its sequence is strictly below
+    * the id's highest tombstone sequence (base rows carry seq 0), so a
     * delete hides everything before it and a later re-append of the same
     * id serves again. The tombstone side is the union of the tombstone
-    * dirs folded to one (id, max seq) row per deleted id — bounded by
+    * deltas folded to one (id, max seq) row per deleted id — bounded by
     * delta debt (compaction applies and clears it), hence broadcast: the
     * corpus-side scan never shuffles for deletion.
     */
   private def visibleAssignments(spark: SparkSession, path: String,
-      idCol: String): DataFrame = {
-    val tombs = tombDirs(path)
-    // no tombstones: the plain base-plus-deltas union (also keeps
-    // allAssignments as the single definition of that read)
-    if (tombs.isEmpty) return allAssignments(spark, path)
-    val rows = deltaDirs(path).foldLeft(
-      spark.read.parquet(new java.io.File(path, "assignments").getPath)
-        .withColumn("_seq", lit(0L))) {
-      case (acc, (n, d)) => acc.unionByName(
-        spark.read.parquet(d.getPath).withColumn("_seq", lit(n)))
+      ix: Index): DataFrame = {
+    def read(gen: String) = spark.read.parquet(genDir(path, gen))
+    val base = spark.read.parquet(genDir(path, ix.base, "assignments"))
+    val appends = ix.deltas.filter(_.kind == "a").sortBy(_.seq)
+    val tombs = ix.deltas.filter(_.kind == "t").sortBy(_.seq)
+    if (tombs.isEmpty)
+      return appends.foldLeft(base)((acc, d) => acc.unionByName(read(d.gen)))
+    val rows = appends.foldLeft(base.withColumn("_seq", lit(0L))) {
+      (acc, d) => acc.unionByName(read(d.gen).withColumn("_seq", lit(d.seq)))
     }
-    val tombDf = tombs.map { case (n, d) =>
-        spark.read.parquet(d.getPath).withColumn("_tomb_seq", lit(n))
-      }.reduce(_.unionByName(_))
+    val idCol = ix.meta.idCol
+    val tombDf = tombs.map(d =>
+        read(d.gen).withColumn("_tomb_seq", lit(d.seq)))
+      .reduce(_.unionByName(_))
       .groupBy(col(idCol)).agg(max(col("_tomb_seq")).alias("_tomb_seq"))
     rows.join(broadcast(tombDf), Seq(idCol), "left")
       .where(col("_tomb_seq").isNull || col("_seq") >= col("_tomb_seq"))
@@ -769,90 +712,42 @@ object AnnIndex {
     * index's id column.
     */
   def deleteIvf(path: String, ids: DataFrame): Unit = {
-    recoverCrash(path)
-    val dirs = deltaDirs(path) ++ tombDirs(path)
-    requireManualLineage(path, dirs)
-    publishTombstone(path, ids,
-      s"tombstones_delta_${(dirs.map(_._1) :+ 0L).max + 1}")
+    val ix = open(path)
+    requireManualLineage(path, ix)
+    publishTombstone(path, ix, ids, batch = None)
   }
 
   /** Replay-idempotent tombstone publish for streaming CDC maintenance —
-    * the deletion twin of [[appendIvfBatch]]: dir name is a pure function
-    * of `batchId`; an existing dir or an already-folded batch id no-ops.
-    * A CDC micro-batch applies as delete-batch THEN append-batch under
-    * the same id: the folded batch has one row per key, appends sequence
-    * at the same number as the tombstone, and visibility is
-    * `seq >= tombstone seq` — so a batch that replaces a key's vector
-    * hides the old row and serves the new one.
+    * the deletion twin of [[appendIvfBatch]]: a batch id whose tombstone
+    * half is already published (live or folded) no-ops. A CDC micro-batch
+    * applies as delete-batch THEN append-batch under the same id: the
+    * folded batch has one row per key, appends sequence at the same
+    * number as the tombstone, and visibility is `seq >= tombstone seq` —
+    * so a batch that replaces a key's vector hides the old row and serves
+    * the new one.
     */
   def deleteIvfBatch(path: String, ids: DataFrame, batchId: Long): Unit = {
     require(batchId >= 0, s"batchId must be non-negative, got $batchId")
-    recoverCrash(path)
-    requireBatchLineage(path)
-    val name = s"tombstones_delta_b$batchId"
-    if (new java.io.File(path, name).exists() ||
-      readFoldedBatches(path).contains(s"t$batchId"))
-      return
-    publishTombstone(path, ids, name)
+    val ix = open(path)
+    requireBatchLineage(path, ix)
+    if (!published(ix, "t", batchId))
+      publishTombstone(path, ix, ids, Some(batchId))
   }
 
-  private def publishTombstone(path: String, ids: DataFrame,
-      dirName: String): Unit = {
-    val meta = readMeta(ids.sparkSession, path)
-    val tmp = new java.io.File(path, s"${dirName}_tmp")
-    rmTree(tmp)
-    ids.select(col(meta.idCol)).distinct().coalesce(1)
-      .write.mode("overwrite").parquet(tmp.getPath)
+  private def publishTombstone(path: String, ix: Index, ids: DataFrame,
+      batch: Option[Long]): Unit = {
+    val gen = writeGen(path, "tomb") { d =>
+      ids.select(col(ix.meta.idCol)).distinct().coalesce(1)
+        .write.mode("overwrite").parquet(d.getPath)
+    }
     // an EMPTY delete batch must not publish (it would add one dir read
     // per search and one debt unit for nothing). Emptiness is read from
     // the written part's parquet FOOTER — driver-side metadata — instead
-    // of the r19 pre-write isEmpty, which was a Spark job per micro-batch
-    // over the very frame the write then re-ran (r20, guide §1.2/§6).
-    if (graft.util.Fs.parquetRowCount(tmp) == 0L) { rmTree(tmp); return }
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(path, dirName).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Real JSON via the Jackson Spark ships — substring splitting silently
-    * misparsed column names containing quotes or keys that suffix another
-    * key (ADVICE r9), and writing them unescaped corrupted the file.
-    */
-  private def jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def writeMeta(indexDir: java.io.File, m: Meta): Unit = {
-    val node = jsonMapper.createObjectNode()
-    // monotonic generation token for the artifact cache (r20, ADVICE r19
-    // #2): a fresh UUID per meta write, so two builds at the same path
-    // can never alias — unlike filesystem mtime, whose resolution can be
-    // 1s. compactIvf COPIES the meta byte-for-byte, which is correct:
-    // the quantizer/codebooks it serves are byte-identical across a
-    // compaction, so the cached artifacts stay valid.
-    node.put("gen", java.util.UUID.randomUUID().toString)
-    node.put("idCol", m.idCol)
-    node.put("vecCol", m.vecCol)
-    node.put("numCells", m.numCells)
-    node.put("seed", m.seed)
-    node.put("fitSampleSize", m.fitSampleSize)
-    node.put("pqM", m.pqM)
-    node.put("pqKsub", m.pqKsub)
-    java.nio.file.Files.write(new java.io.File(indexDir, "_meta.json").toPath,
-      jsonMapper.writeValueAsString(node).getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def readMeta(spark: SparkSession, path: String): Meta = {
-    val f = new java.io.File(path, "_meta.json")
-    require(f.exists(), s"no ANN index at $path (missing _meta.json)")
-    val n = jsonMapper.readTree(f)
-    def req(k: String) = {
-      val v = n.get(k)
-      require(v != null, s"ANN index meta at $path lacks key $k")
-      v
-    }
-    def opt(k: String) = Option(n.get(k)).map(_.asInt()).getOrElse(0)
-    Meta(req("idCol").asText(), req("vecCol").asText(),
-      req("numCells").asInt(), req("seed").asLong(),
-      req("fitSampleSize").asInt(), opt("pqM"), opt("pqKsub"))
+    // of a pre-write isEmpty, which was a Spark job per micro-batch over
+    // the very frame the write then re-ran (r20, guide §1.2/§6).
+    if (Fs.parquetRowCount(new java.io.File(path, gen)) == 0L)
+      Fs.rmTree(new java.io.File(path, gen))
+    else addDelta(path, ix, "t", gen, batch)
   }
 
   /** Top-k cosine search against a persisted index. Reads only the probed
@@ -889,15 +784,15 @@ object AnnIndex {
       k: Int, nprobe: Int = 4, where: Option[Column] = None,
       bruteForcePoolPerCell: Double = 10.0): DataFrame = {
     val spark = queries.sparkSession
-    ensureLive(path)
-    val meta = readMeta(spark, path)
-    filteredBruteForceHatch(spark, path, meta, queries, queryIdCol, k,
+    val ix = open(path)
+    val meta = ix.meta
+    filteredBruteForceHatch(spark, path, ix, queries, queryIdCol, k,
       where, bruteForcePoolPerCell) match {
       case Some(exact) => return exact
       case None =>
     }
     val cellDf = broadcast(
-      spark.read.parquet(new java.io.File(path, "centroids").getPath)
+      spark.read.parquet(genDir(path, ix.base, "centroids"))
         .select(col("_cell"), col("_centroid")))
     val q = queries.select(col(queryIdCol).alias("query_id"),
       col(meta.vecCol).alias("_qvec"))
@@ -914,7 +809,7 @@ object AnnIndex {
     // Bounded driver collect: ≤ numCells ints.
     val probedCells = probes.select(col("_cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val visible = visibleAssignments(spark, path, meta.idCol)
+    val visible = visibleAssignments(spark, path, ix)
       .where(col("_cell").isin(probedCells: _*))
     val indexed = where.fold(visible)(visible.where)
     val scored = indexed.join(broadcast(probes),

@@ -1,8 +1,11 @@
 package graft.operators
 
-import graft.util.Fs
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.{Fs, ManifestLog}
 
 /** Durable tokenizer-model artifacts — the missing "train once, serve for
   * months" half of the trainer triple ([[BpeTrain]] merge table,
@@ -10,41 +13,30 @@ import org.apache.spark.sql.functions._
   * model). A real pipeline fits the tokenizer on one corpus snapshot and
   * then serves every later batch from the SAME artifact; holding the
   * model as an in-memory `Seq` ties its lifetime to one driver. This
-  * store gives the model the [[AnnIndex]] treatment: a parquet payload
-  * (readable by any engine — the artifact doubles as the audit record of
-  * what the tokenizer IS) plus a `_meta.json` completeness marker,
-  * published by the same crash-safe retire-aside swap, so a reader
-  * NEVER observes a torn model and a crashed save is healed by the next
-  * writer or tolerated by the next reader.
+  * store persists the model as parquet (readable by any engine — the
+  * artifact doubles as the audit record of what the tokenizer IS) and
+  * publishes it through the shared generation + manifest protocol
+  * ([[graft.util.ManifestLog]]), as the keyed store, the manifest
+  * maintainer and the ANN index do: a reader NEVER observes a torn model,
+  * and no crash point needs healing.
   *
-  * Layout (`<path>` is the live artifact):
+  * Layout (`<path>` is the artifact):
   * {{{
-  *   <path>/model/      parquet — merges: (rank, l, r, …extras);
-  *                                 unigram: (ord, piece, cnt)
-  *   <path>/_meta.json  kind + version — written LAST into the staged
-  *                      dir (the completeness marker the crash protocol
-  *                      keys on, as in AnnIndex)
-  *   <path>_tmp/        staged build (invisible to readers)
-  *   <path>_old/        retire-aside of the previous generation during a
-  *                      replace (recoverable if the final rename crashes)
+  *   <path>/manifest-<v>.json  kind + the generation holding the model,
+  *                             digest-checked; the newest complete one
+  *                             serves
+  *   <path>/gen-model-<nonce>/ parquet — merges: (rank, l, r, …extras);
+  *                             unigram: (ord, piece, cnt)
   * }}}
   *
-  * Durability: the staged tree is fsynced bottom-up ([[Fs.fsyncTree]])
-  * BEFORE the publishing rename, so a power cut after publish cannot
-  * reveal a live model with torn parquet bytes (data-before-visibility,
-  * the `ManifestStore` ordering argument applied to a tiny artifact).
-  *
-  * SINGLE-WRITER contract (as [[AnnIndex]], which shares this protocol):
-  * the staging path `<path>_tmp` is well-known — that is what lets
-  * [[recoverCrash]] finish a crashed publish without any registry — so
-  * two CONCURRENT saves to the same artifact race it (writer B's
-  * entry-point debris sweep can delete writer A's half-staged tree;
-  * the failure is loud, not silent — A's write or swap throws — but the
-  * winner is arbitrary). Tokenizer training is a single-job artifact:
-  * serialize retrains externally, and use the
-  * [[graft.streaming.ManifestStore]] protocol where genuinely
-  * concurrent committers are the requirement. Readers are always safe:
-  * they only ever observe a complete live generation or fail loudly.
+  * A save writes a fresh generation, fsyncs it ([[Fs.fsyncTree]]) BEFORE
+  * any manifest names it, and publishes with one conditional PUT. A crash
+  * before the PUT leaves an unreferenced generation (the previous model
+  * serves; GC sweeps it once aged); a crash after it is a completed save.
+  * Only the serving manifest is retained — there is no history API — so
+  * the replaced model's generation is gone when the save returns. Two
+  * concurrent saves both publish, one after the other (the later slot
+  * wins); readers always see one complete model.
   *
   * Scale: every model here is vocabulary-bounded (merge tables = the
   * learned ranks; unigram = singles + seed pieces) — the same
@@ -60,55 +52,37 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerStore {
 
-  /** Model kinds — recorded in meta and checked on load so a BPE serving
-    * path handed a unigram artifact fails loudly instead of
+  /** Model kinds — recorded in the manifest and checked on load so a BPE
+    * serving path handed a unigram artifact fails loudly instead of
     * mis-deserializing.
     */
   val KindBpe = "bpe"
   val KindWordPiece = "wordpiece"
   val KindUnigram = "unigram"
 
-  private def metaOf(dir: java.io.File) = new java.io.File(dir, "_meta.json")
+  /** One published model: its kind and the generation holding its rows. */
+  private case class Artifact(version: Long, kind: String, model: String)
 
-  private def writeMeta(dir: java.io.File, kind: String): Unit =
-    java.nio.file.Files.write(metaOf(dir).toPath,
-      s"""{"kind":"$kind","version":1}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readKind(dir: java.io.File): String = {
-    val txt = new String(java.nio.file.Files.readAllBytes(metaOf(dir).toPath),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // one string field in a one-line file this module itself wrote —
-    // a regex pull keeps the store dependency-free
-    "\"kind\"\\s*:\\s*\"([a-z]+)\"".r.findFirstMatchIn(txt)
-      .map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"tokenizer artifact meta at $dir has no kind: $txt"))
-  }
-
-  /** Writer-side crash healing + reader-side tolerance, the
-    * [[AnnIndex]] protocol verbatim: live missing + complete tmp → the
-    * crash hit inside the publish rename, finish it; live missing + aside
-    * present → the crash hit between retire and publish, restore the
-    * previous generation. Writers also clean debris. Promoting on
-    * `_meta.json` presence is sound because [[publishModel]] fsyncs the
-    * payload tree BEFORE writing the marker: a durable meta implies a
-    * durable, un-torn payload (ADVICE r15).
-    */
-  private def recoverCrash(path: String, cleanDebris: Boolean): Unit = {
-    val live = new java.io.File(path)
-    val tmp = new java.io.File(path + "_tmp")
-    val aside = new java.io.File(path + "_old")
-    if (!live.exists()) {
-      if (metaOf(tmp).exists())
-        java.nio.file.Files.move(tmp.toPath, live.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else if (aside.exists())
-        java.nio.file.Files.move(aside.toPath, live.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def manifests(path: String) =
+    new ManifestLog[Artifact](new java.io.File(path), keepVersions = 1,
+        ManifestLog.DefaultOrphanGraceMs) {
+      protected def encodeFields(a: Artifact, node: ObjectNode): Unit = {
+        node.put("version", a.version)
+        node.put("kind", a.kind)
+        node.put("model", a.model)
+      }
+      protected def decodeFields(n: JsonNode): Artifact = Artifact(
+        n.get("version").asLong(), n.get("kind").asText(),
+        n.get("model").asText())
+      protected def versionOf(a: Artifact): Long = a.version
+      protected def generationsOf(a: Artifact): Iterable[String] = Seq(a.model)
+      protected def isGeneration(name: String): Boolean =
+        name.startsWith("gen-")
     }
-    if (cleanDebris && live.exists()) { Fs.rmTree(tmp); Fs.rmTree(aside) }
-  }
+
+  private def refuseLegacy(path: String): Unit =
+    ManifestLog.refuseLegacyLayout(new java.io.File(path),
+      "tokenizer artifact", "re-save the model to this path from its trainer")
 
   /** Merge-table artifact ([[BpeTrain.train]] / [[WordPieceTrain.train]]
     * output): any DataFrame with `rank`, `l`, `r` columns (extra columns —
@@ -149,68 +123,71 @@ object TokenizerStore {
 
   private def publishModel(path: String, kind: String)(
       write: java.io.File => Unit): Unit = {
-    recoverCrash(path, cleanDebris = true)
-    val tmp = new java.io.File(path + "_tmp")
-    Fs.rmTree(tmp)
-    tmp.mkdirs()
-    write(new java.io.File(tmp, "model"))
-    // DATA-DURABLE-BEFORE-MARKER (ADVICE r15): the payload tree is
-    // fsynced BEFORE _meta.json exists, so a durable meta file PROVES a
-    // durable payload — recoverCrash promotes a staged tree on meta
-    // presence alone, and the old order (meta written in program order
-    // before the tree fsync) let a power cut persist the marker over
-    // torn parquet bytes
-    Fs.fsyncTree(tmp)
-    writeMeta(tmp, kind) // completeness marker LAST, after payload durability
-    Fs.fsyncFile(metaOf(tmp))
-    Fs.fsyncDir(tmp)
-    // retire-aside swap (AnnIndex.swapInto): old generation serves reads
-    // until the atomic publish rename
-    val live = new java.io.File(path)
-    val aside = new java.io.File(path + "_old")
-    Fs.rmTree(aside)
-    if (live.exists())
-      java.nio.file.Files.move(live.toPath, aside.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    java.nio.file.Files.move(tmp.toPath, live.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Fs.fsyncDir(live.getParentFile)
-    Fs.rmTree(aside)
+    refuseLegacy(path)
+    val root = new java.io.File(path)
+    if (root.mkdirs()) Fs.fsyncDir(root.getAbsoluteFile.getParentFile)
+    val gen = ManifestLog.generationName("model")
+    write(new java.io.File(root, gen))
+    // data durable BEFORE the manifest names it
+    Fs.fsyncTree(new java.io.File(root, gen))
+    val log = manifests(path)
+    log.commit { (_, slot) => log.put(Artifact(slot, kind, gen)) }
+    log.gc()
+  }
+
+  /** The serving artifact; a missing, empty or legacy path fails loudly. */
+  private def open(path: String): Artifact = {
+    refuseLegacy(path)
+    manifests(path).current().getOrElse(
+      throw new IllegalStateException(s"no tokenizer artifact at $path"))
+  }
+
+  private def modelRows(spark: SparkSession, path: String,
+      a: Artifact): DataFrame =
+    spark.read.parquet(new java.io.File(path, a.model).getPath)
+
+  private def mergeTable(spark: SparkSession, path: String,
+      a: Artifact): DataFrame = {
+    require(a.kind == KindBpe || a.kind == KindWordPiece,
+      s"artifact at $path is a '${a.kind}' model, not a merge table")
+    modelRows(spark, path, a).orderBy(col("rank"))
+  }
+
+  private def merges(spark: SparkSession, path: String,
+      a: Artifact): Seq[(String, String)] =
+    mergeTable(spark, path, a)
+      .select("l", "r").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+
+  private def unigram(spark: SparkSession, path: String,
+      a: Artifact): Seq[(String, Long)] = {
+    require(a.kind == KindUnigram,
+      s"artifact at $path is a '${a.kind}' model, not a unigram model")
+    modelRows(spark, path, a)
+      .orderBy(col("ord"))
+      .select("piece", "cnt").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
   }
 
   /** The raw persisted merge table, rank-ordered — for audit/inspection
     * and the gate's cross-engine read.
     */
-  def loadMergeTable(spark: SparkSession, path: String): DataFrame = {
-    val kind = openKind(spark, path)
-    require(kind == KindBpe || kind == KindWordPiece,
-      s"artifact at $path is a '$kind' model, not a merge table")
-    spark.read.parquet(new java.io.File(path, "model").getPath)
-      .orderBy(col("rank"))
-  }
+  def loadMergeTable(spark: SparkSession, path: String): DataFrame =
+    mergeTable(spark, path, open(path))
 
   /** The merge rules in learned order — the exact `Seq` the in-memory
     * serving paths take ([[BpeTrain.tokenCounts]] /
     * [[BpeTrain.tokenCountsCompiled]]).
     */
   def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] =
-    loadMergeTable(spark, path)
-      .select("l", "r").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    merges(spark, path, open(path))
 
   /** The unigram model in its saved order — the exact `Seq`
     * [[UnigramLm.tokenCounts]] / [[UnigramLm.sampleTokenCounts]] serve
     * with.
     */
-  def loadUnigram(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val kind = openKind(spark, path)
-    require(kind == KindUnigram,
-      s"artifact at $path is a '$kind' model, not a unigram model")
-    spark.read.parquet(new java.io.File(path, "model").getPath)
-      .orderBy(col("ord"))
-      .select("piece", "cnt").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-  }
+  def loadUnigram(spark: SparkSession, path: String): Seq[(String, Long)] =
+    unigram(spark, path, open(path))
 
   /** Load whatever model kind the artifact holds, as the manifest
     * family's serving ADT (the VERDICT r16 #2 seam): a unigram artifact
@@ -229,18 +206,18 @@ object TokenizerStore {
     */
   def loadServedWithHash(spark: SparkSession,
       path: String): (ServedModel, String) = {
-    val kind = openKind(spark, path)
+    val a = open(path)
     // length-prefixed hash fields: pieces may contain ANY non-whitespace
     // char, so no separator character is collision-safe — a length prefix is
-    kind match {
+    a.kind match {
       case KindUnigram =>
-        val pieces = loadUnigram(spark, path)
-        (ServedUnigram(pieces), hashOf(kind,
+        val pieces = unigram(spark, path, a)
+        (ServedUnigram(pieces), hashOf(a.kind,
           pieces.map { case (p, c) => s"${p.length}:$p:$c;" }.mkString))
       case _ =>
-        val merges = loadMerges(spark, path)
-        (ServedBpe(merges), hashOf(kind,
-          merges.map { case (l, r) => s"${l.length}:$l:${r.length}:$r;" }
+        val rules = merges(spark, path, a)
+        (ServedBpe(rules), hashOf(a.kind,
+          rules.map { case (l, r) => s"${l.length}:$l:${r.length}:$r;" }
             .mkString))
     }
   }
@@ -254,9 +231,9 @@ object TokenizerStore {
   }
 
   /** The artifact's model kind ([[KindBpe]]/[[KindWordPiece]]/
-    * [[KindUnigram]]) — reader-side, crash-tolerant like every load.
+    * [[KindUnigram]]), read from the serving manifest.
     */
-  def kindOf(spark: SparkSession, path: String): String = openKind(spark, path)
+  def kindOf(spark: SparkSession, path: String): String = open(path).kind
 
   /** Content hash of the model's LOGICAL content (kind + ordered rows),
     * not its parquet bytes — two engines (or two parquet writer configs)
@@ -292,12 +269,12 @@ object TokenizerStore {
     */
   def exportGpt2(spark: SparkSession, path: String,
       exportDir: String): Unit = {
-    val kind = openKind(spark, path)
-    require(kind == KindBpe || kind == KindWordPiece,
-      s"artifact at $path is a '$kind' model; the GPT-2 pair encodes a " +
+    val a = open(path)
+    require(a.kind == KindBpe || a.kind == KindWordPiece,
+      s"artifact at $path is a '${a.kind}' model; the GPT-2 pair encodes a " +
         "merge table")
-    val merges = loadMerges(spark, path)
-    merges.foreach { case (l, r) =>
+    val rules = merges(spark, path, a)
+    rules.foreach { case (l, r) =>
       require(!(l + r).exists(_.isWhitespace),
         s"merge ('$l','$r') contains whitespace — not representable in " +
           "the space-separated vocab.bpe line format (byte-level models " +
@@ -308,7 +285,7 @@ object TokenizerStore {
     val bpe = new java.io.File(dir, "vocab.bpe")
     java.nio.file.Files.write(bpe.toPath,
       ("#version: 0.2\n" +
-        merges.map { case (l, r) => s"$l $r" }.mkString("", "\n", "\n"))
+        rules.map { case (l, r) => s"$l $r" }.mkString("", "\n", "\n"))
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
@@ -324,7 +301,7 @@ object TokenizerStore {
     // would reject the pair this engine itself just exported. For a
     // byte-level model every leaf is already present (alphabet or an
     // earlier fused symbol), so its ids are unchanged.
-    merges.foreach { case (l, r) => add(l); add(r); add(l + r) }
+    rules.foreach { case (l, r) => add(l); add(r); add(l + r) }
     val enc = new java.io.File(dir, "encoder.json")
     java.nio.file.Files.write(enc.toPath,
       mapper.writeValueAsBytes(node))
@@ -376,27 +353,5 @@ object TokenizerStore {
           "encoder.json — the artifact pair is torn or mismatched")
     }
     saveMerges(path, merges.toDF("rank", "l", "r"), kind)
-  }
-
-  /** Reader-side open: tolerate a crashed writer WITHOUT healing in place
-    * (healing is the writer's job — a read-only consumer may lack write
-    * permission): if live is missing but a complete tmp or an aside
-    * exists, the writer crashed mid-publish; fail with a precise message
-    * telling the operator to re-run the save (which heals), exactly the
-    * [[AnnIndex]] reader contract.
-    */
-  private def openKind(spark: SparkSession, path: String): String = {
-    val live = new java.io.File(path)
-    if (!metaOf(live).exists()) {
-      val tmp = new java.io.File(path + "_tmp")
-      val aside = new java.io.File(path + "_old")
-      if (metaOf(tmp).exists() || aside.exists())
-        throw new IllegalStateException(
-          s"tokenizer artifact at $path has no live generation but a " +
-            "recoverable staged/retired one exists — a writer crashed " +
-            "mid-publish; re-run the save to heal")
-      throw new IllegalStateException(s"no tokenizer artifact at $path")
-    }
-    readKind(live)
   }
 }

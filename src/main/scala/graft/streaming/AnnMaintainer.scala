@@ -21,14 +21,14 @@ import graft.operators.AnnIndex
   *    ([[AnnIndex.compactIvfIfNeeded]]) short-circuits the byte-ratio
   *    policy ([[AnnIndex.compactIvfIfDebtRatio]]) exactly like
   *    `CdcStreamJob.processBatch`'s store maintenance, so a long
-  *    append+delete stream keeps its folded-dir debt bounded with no
+  *    append+delete stream keeps its un-folded delta debt bounded with no
   *    explicit compact call anywhere in the pipeline;
   *  - lost-race absorption: a policy-triggered compaction that finds its
   *    debt already paid is a no-op inside [[AnnIndex.compactIvf]] itself
-  *    (zero remaining delta dirs → return), and a
-  *    [[CommitConflictException]] surfacing through a conflict-checked
-  *    store front-end is absorbed as "the winner paid the debt" — data
-  *    publishes never take this path.
+  *    (no delta left in the manifest → return), and a
+  *    [[CommitConflictException]] from a compaction whose inputs a
+  *    concurrent one replaced is absorbed as "the winner paid the debt" —
+  *    data publishes never take this path.
   *
   * Batch shape: the folded envelope — one row per key — with the index's
   * id column, its vector column (plus any build-time attribute columns),

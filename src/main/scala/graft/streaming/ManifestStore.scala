@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -192,54 +190,32 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       base: Map[Int, String], deltas: Seq[(Long, String)],
       floorSeq: Long = 0L, rewrite: Boolean = false)
 
-  // ObjectMapper is thread-safe after construction and expensive to build —
-  // one instance per store, not one per encode/decode (review r10)
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def manifestName(v: Long): String = f"manifest-$v%012d.json"
-
-  /** Serialize with an embedded payload digest: the LAST thing appended,
-    * so any torn prefix fails validation.
+  /** The store's manifest history on the shared publish core
+    * ([[graft.util.ManifestLog]]: digest envelope, single-listing state,
+    * conditional PUT, retry loop, GC). Only the fields are the store's.
     */
-  private def encodeManifest(m: Manifest): Array[Byte] = {
-    val node = mapper.createObjectNode()
-    node.put("version", m.version)
-    node.put("floorSeq", m.floorSeq)
-    node.put("rewrite", m.rewrite)
-    node.put("schema", m.schemaJson)
-    val b = node.putObject("base")
-    m.base.toSeq.sortBy(_._1).foreach { case (k, v) => b.put(k.toString, v) }
-    val d = node.putArray("deltas")
-    m.deltas.foreach { case (s, g) =>
-      val e = d.addObject(); e.put("seq", s); e.put("gen", g)
+  private val manifests = new graft.util.ManifestLog[Manifest](root, keepVersions,
+      orphanGraceMs) {
+    protected def encodeFields(m: Manifest,
+        node: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
+      node.put("version", m.version)
+      node.put("floorSeq", m.floorSeq)
+      node.put("rewrite", m.rewrite)
+      node.put("schema", m.schemaJson)
+      val b = node.putObject("base")
+      m.base.toSeq.sortBy(_._1).foreach { case (k, v) => b.put(k.toString, v) }
+      val d = node.putArray("deltas")
+      m.deltas.foreach { case (s, g) =>
+        val e = d.addObject(); e.put("seq", s); e.put("gen", g)
+      }
     }
-    val payload = mapper.writeValueAsString(node)
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(payload.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"$payload\n$digest\n".getBytes(StandardCharsets.UTF_8)
-  }
-
-  /** None when torn/corrupt — the reader's skip signal. */
-  private def decodeManifest(bytes: Array[Byte]): Option[Manifest] =
-    try {
-      val s = new String(bytes, StandardCharsets.UTF_8)
-      val nl = s.lastIndexOf('\n', s.length - 2)
-      if (nl < 0) return None
-      val payload = s.substring(0, nl)
-      val digest = s.substring(nl + 1).trim
-      val want = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(payload.getBytes(StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      if (digest != want) return None
-      val n = mapper.readTree(payload)
+    protected def decodeFields(
+        n: com.fasterxml.jackson.databind.JsonNode): Manifest = {
+      val bn = n.get("base")
       val base = {
-        val bn = n.get("base")
         val it = bn.fieldNames()
         val buf = scala.collection.mutable.Map.empty[Int, String]
-        while (it.hasNext) {
-          val k = it.next(); buf(k.toInt) = bn.get(k).asText()
-        }
+        while (it.hasNext) { val k = it.next(); buf(k.toInt) = bn.get(k).asText() }
         buf.toMap
       }
       val deltas = (0 until n.get("deltas").size()).map { i =>
@@ -247,136 +223,35 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         (e.get("seq").asLong(), e.get("gen").asText())
       }
       val version = n.get("version").asLong()
-      Some(Manifest(version, n.get("schema").asText(), base, deltas,
+      Manifest(version, n.get("schema").asText(), base, deltas,
         Option(n.get("floorSeq")).map(_.asLong()).getOrElse(0L),
         // a manifest without the field can record only one kind of
         // rewrite: an initialization, whose generation carries its version
         Option(n.get("rewrite")).map(_.asBoolean())
-          .getOrElse(base.values.exists(_.startsWith(s"gen-$version-init-")))))
-    } catch { case _: Exception => None }
+          .getOrElse(base.values.exists(_.startsWith(s"gen-$version-init-"))))
+    }
+    protected def versionOf(m: Manifest): Long = m.version
+    protected def generationsOf(m: Manifest): Iterable[String] =
+      m.base.values ++ m.deltas.map(_._2)
+    protected def isGeneration(name: String): Boolean = name.startsWith("gen-")
+    override protected def betweenGcDeletes(): Unit =
+      ManifestUpsertStore.this.betweenGcDeletes()
+  }
 
-  /** All manifest files, descending by version (by NAME — the zero-padded
-    * number makes lexical order numeric, the object-store LIST trick).
-    */
-  private def manifestFiles(): Seq[java.io.File] =
-    Option(root.listFiles((_: java.io.File, n: String) =>
-      n.matches("manifest-\\d{12}\\.json")))
-      .getOrElse(Array.empty[java.io.File]).sortBy(_.getName).reverse.toSeq
+  private def noManifest = new IllegalStateException(
+    s"store $dir has no complete manifest (not initialized, or every " +
+      "manifest is torn)")
 
   /** The newest COMPLETE manifest: torn/corrupt ones (a crashed or
     * in-flight PUT) are skipped, older complete versions serve.
     */
   private def currentManifest(): Manifest =
-    manifestFiles().iterator
-      .flatMap(tryReadManifest)
-      .nextOption()
-      .getOrElse(throw new IllegalStateException(
-        s"store $dir has no complete manifest (not initialized, or every " +
-          "manifest is torn)"))
+    manifests.current().getOrElse(throw noManifest)
 
   private def manifestAt(version: Long): Manifest =
-    manifestFiles().iterator
-      .flatMap(tryReadManifest)
-      .find(_.version == version)
-      .getOrElse(throw new IllegalStateException(
-        s"store $dir: version $version is not retained (keepVersions=" +
-          s"$keepVersions) or never existed"))
-
-  /** Publish via CONDITIONAL create — the S3 `If-None-Match` PUT (the
-    * commit primitive Iceberg/Delta builds optimistic concurrency on): the
-    * version slot is claimed create-exclusive, so two writers racing the
-    * same next version produce exactly ONE winner; the loser gets
-    * [[CommitConflictException]], re-reads the new current manifest, and
-    * retries its commit on top (or surfaces the conflict).
-    *
-    * An OCCUPIED slot always conflicts — even a torn occupant. Nothing is
-    * EVER overwritten: the r10 review showed an "replace torn debris"
-    * branch lets two writers that both observe the same torn slot both
-    * succeed (one unconditional write clobbering the other — a silent lost
-    * commit). Instead a torn occupant simply burns its version number:
-    * readers skip torn files by digest, [[nextVersion]] counts them, and
-    * version-number GAPS are part of the format's contract. GC removes
-    * aged torn debris.
-    *
-    * The publish is CONTENT-ATOMIC (r14): the manifest bytes are written
-    * and forced into a dot-staging file OUTSIDE the `manifest-*` listing
-    * namespace, then the slot is claimed by hard-LINKING the staging file
-    * in — link creation is atomic and create-exclusive, so the slot's
-    * FULL content is present at the instant its name becomes visible,
-    * exactly like an object store's conditional PUT. The previous
-    * emulation (claim the slot with CREATE_NEW, then write+force into it)
-    * had a lost-update race the three-writer stress caught flaking: a
-    * concurrent writer listing during the in-flight put saw the newest
-    * slot as a TORN file, burned it, built its commit on the PREVIOUS
-    * manifest, and published one slot past the victim — both writers
-    * reported success, but the victim's delta was referenced by no
-    * retained manifest and its batch silently vanished. Torn-visible
-    * in-flight commits are now impossible; a torn manifest can only be
-    * pre-existing crash debris, and the burn rule remains for that. A
-    * crash between write and link leaves an invisible staging file (GC
-    * sweeps it aged); a crash after link is a completed commit.
-    */
-  private def putManifest(m: Manifest): Unit = {
-    // the shared content-atomic conditional-create (graft.util
-    // .ConditionalPut, extracted r18): staged forced write + create-
-    // exclusive hard link, durability-before-visibility (ADVICE r10)
-    val f = new java.io.File(root, manifestName(m.version))
-    if (!graft.util.ConditionalPut.claim(f, encodeManifest(m)))
-      throw new CommitConflictException(
-        s"store $dir: version slot ${m.version} is occupied (a committed " +
-          "manifest, or a crashed writer's torn put) — re-read the " +
-          "current manifest and retry on top; torn slots burn their " +
-          "version number")
-    // ... and persist the manifest's DIRECTORY ENTRY: without this a crash
-    // can lose the just-created name even with its bytes forced, silently
-    // dropping a CDC window whose ledger already advanced (ADVICE r10)
-    graft.util.Fs.fsyncDir(root)
-  }
-
-  /** Read a manifest file, tolerating it VANISHING between list and read:
-    * the single writer's gc() deletes retired complete manifests and aged
-    * torn debris while concurrent READERS (the multi-reader topology this
-    * protocol serves) are iterating the same listing — a vanished file is
-    * treated exactly like a torn one, skip and continue (ADVICE r10).
-    */
-  private def tryReadManifest(f: java.io.File): Option[Manifest] =
-    try decodeManifest(java.nio.file.Files.readAllBytes(f.toPath))
-    catch {
-      case _: java.nio.file.NoSuchFileException |
-           _: java.io.FileNotFoundException => None
-    }
-
-  /** The next free version slot: one past the highest manifest FILE
-    * (complete or torn — torn puts burn their number, see [[putManifest]]).
-    */
-  private def nextVersion(): Long =
-    manifestFiles().headOption
-      .map(_.getName.stripPrefix("manifest-").stripSuffix(".json").toLong + 1)
-      .getOrElse(1L)
-
-  /** ONE list pass → (newest complete manifest, next free version slot).
-    * The pair MUST come from a single listing: the conditional PUT only
-    * fences commits that target the SAME slot, so a writer that re-listed
-    * between reading the manifest and choosing its slot could observe an
-    * interleaved commit in the second listing only — and would then PUT
-    * one slot past it, succeeding while silently DROPPING that commit's
-    * deltas from its own manifest (found building the r11 rebase spec).
-    * From one listing, any commit that lands after it necessarily
-    * occupies a slot >= ours (slots are claimed one past the highest
-    * *visible* file, and files are never removed from the top), so our
-    * PUT conflicts instead of skipping.
-    */
-  private def currentState(): (Manifest, Long) = {
-    val files = manifestFiles()
-    val next = files.headOption
-      .map(_.getName.stripPrefix("manifest-").stripSuffix(".json").toLong + 1)
-      .getOrElse(1L)
-    val m = files.iterator.flatMap(tryReadManifest).nextOption()
-      .getOrElse(throw new IllegalStateException(
-        s"store $dir has no complete manifest (not initialized, or every " +
-          "manifest is torn)"))
-    (m, next)
-  }
+    manifests.at(version).getOrElse(throw new IllegalStateException(
+      s"store $dir: version $version is not retained (keepVersions=" +
+        s"$keepVersions) or never existed"))
 
   // ── Generations ──────────────────────────────────────────────────────────
 
@@ -390,86 +265,24 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   private def genName(v: Long, tag: String): String =
     s"gen-$v-$tag-" + java.util.UUID.randomUUID().toString
 
-  /** Nonce-only generation name for rebasable commits (merge/compact):
-    * their manifest slot is chosen INSIDE the commit loop and can move
-    * under rebase, so a version embedded in the dir name — taken from a
-    * pre-loop listing — could disagree with the slot that finally wins,
-    * which is harmless but misleading when debugging on-disk state
-    * (ADVICE r11). The manifest entry is the sole authority; the name
-    * carries only the tag and the anti-collision nonce. The nonce is the
-    * FULL 122-bit UUID: generation dirs are written with
-    * mode("overwrite"), so a nonce collision with a live referenced
-    * generation would silently clobber committed data while the manifest
-    * still references it — at 32 bits (the pre-r13 `take(8)`) a busy
-    * store crosses birthday odds around ~2^16 commits; at 122 bits the
-    * failure mode is gone for any physically possible commit count
-    * (ADVICE r12).
-    */
-  private def genName(tag: String): String =
-    s"gen-$tag-" + java.util.UUID.randomUUID().toString
-
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(bucketCol, pmod(hash(pkCols.map(col): _*), lit(numBuckets)))
 
   private def rmTree(f: java.io.File): Unit = graft.util.Fs.rmTree(f)
 
-  /** Drop generation dirs referenced by NO retained manifest, and retired
-    * manifests beyond `keepVersions`. Runs strictly after the new manifest
-    * is readable; crash mid-GC leaves unreferenced garbage that the next
-    * GC retries. Unreferenced dirs are also what a crashed WRITE leaves —
-    * same sweep covers both. A generation that only manifests past
-    * retention name is committed data, never an in-flight write, so it
-    * goes at once: every copy-on-write merge and compaction retires the
-    * buckets it rewrites, and waiting out the grace on those would keep a
-    * day of rewrites on disk.
+  /** The shared GC pass ([[graft.util.ManifestLog.gc]]): manifests past
+    * `keepVersions` first, then the generations only they named (at once:
+    * every copy-on-write merge and compaction retires the buckets it
+    * rewrites, and waiting out the grace on those would keep a day of
+    * rewrites on disk), then aged orphans, torn debris and staging files.
     */
-  private def gc(): Unit = {
-    // one decode pass; retention counts COMPLETE manifests only — torn
-    // files burn version numbers (putManifest) and may pile up above the
-    // newest complete one after repeated crashed puts, and counting them
-    // toward the newest-K window would push the SERVING manifest out of
-    // retention and free its generations (review r10)
-    val decoded = manifestFiles().map(f => f -> tryReadManifest(f))
-    val complete = decoded.collect { case (f, Some(m)) => (f, m) }
-    val retained = complete.take(keepVersions)
-    def gensOf(ms: Seq[(java.io.File, Manifest)]): Set[String] =
-      ms.flatMap { case (_, m) => m.base.values ++ m.deltas.map(_._2) }.toSet
-    val referenced = gensOf(retained)
-    val retired = gensOf(complete.drop(keepVersions)) -- referenced
-    val now = System.currentTimeMillis()
-    // newest mtime anywhere in the tree: an in-flight Spark write keeps
-    // touching task files even while the root dir's own mtime goes stale
-    def newestMtime(f: java.io.File): Long =
-      math.max(f.lastModified(),
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .map(newestMtime).maxOption.getOrElse(0L))
-    Option(root.listFiles((f: java.io.File) =>
-      f.isDirectory && f.getName.startsWith("gen-")))
-      .getOrElse(Array.empty[java.io.File])
-      .filterNot(d => referenced.contains(d.getName))
-      // age gate: a YOUNG dir no manifest ever named may be a concurrent
-      // writer's in-flight commit (see orphanGraceMs) — only stale orphans
-      // sweep
-      .filter(d => retired.contains(d.getName) ||
-        now - newestMtime(d) >= orphanGraceMs)
-      .foreach(rmTree)
-    // complete manifests past retention, AFTER their generations (a crash
-    // in between leaves them for the next GC to retire); plus TORN debris
-    // (burned version slots) once it is past the grace too (a young torn
-    // file may be a concurrent writer's put still in flight)
-    complete.drop(keepVersions).foreach(_._1.delete())
-    decoded.collect { case (f, None) => f }
-      .filter(f => now - f.lastModified() >= orphanGraceMs)
-      .foreach(_.delete())
-    // staging debris: a crash between a putManifest's staged write and its
-    // link (or between link and unlink) leaves a .staging file — invisible
-    // to the manifest listing, swept once aged like other orphans
-    Option(root.listFiles((_: java.io.File, n: String) =>
-      n.startsWith(".staging-")))
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => now - f.lastModified() >= orphanGraceMs)
-      .foreach(_.delete())
-  }
+  private def gc(): Unit = manifests.gc()
+
+  /** Test seam: runs inside GC after manifests past retention are deleted
+    * and before their generations are. No-op in production; the GC spec
+    * crashes there.
+    */
+  protected def betweenGcDeletes(): Unit = {}
 
   private def schemaOf(m: Manifest): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
@@ -477,7 +290,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
 
   // ── Public surface ───────────────────────────────────────────────────────
 
-  def exists: Boolean = manifestFiles().nonEmpty
+  def exists: Boolean = manifests.manifestFiles().nonEmpty
 
   def currentVersion: Long = currentManifest().version
 
@@ -494,7 +307,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     */
   def initialize(initialLoad: DataFrame): Unit = {
     root.mkdirs()
-    val v = nextVersion()
+    val v = manifests.state()._2
     val data = withBucket(initialLoad.drop(Cdc.ChangeType, Cdc.TransactionId))
       .repartition(col(bucketCol))
     val gen = genName(v, "init")
@@ -503,21 +316,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // data durable BEFORE the commit record references it (ADVICE r10)
     graft.util.Fs.fsyncTree(new java.io.File(root, gen))
     val buckets = bucketDirsOf(gen)
-    putManifest(Manifest(v, data.schema.json,
+    manifests.put(Manifest(v, data.schema.json,
       buckets.map(_ -> gen).toMap, Seq.empty, rewrite = true))
     gc()
   }
 
-  /** Bounded optimistic-commit loop (the Iceberg retry model, VERDICT r10
-    * #1): `attempt(current)` builds and PUTs the next manifest on top of
-    * `current`; on [[CommitConflictException]] the loop re-reads the new
-    * current manifest, lets the caller REVALIDATE + REBASE via
-    * `validate` (return false to abort — e.g. a compaction whose
-    * folded inputs were themselves compacted away), and retries on the
-    * next free slot. The retry bound turns a pathological livelock (N
-    * writers in perfect lockstep) into a loud error instead of an
-    * unbounded spin; `onAbort` reclaims the caller's staged generation.
-    */
   /** Test seam: runs between a commit attempt's (manifest, slot) snapshot
     * and its conditional PUT — the window a concurrent commit must land in
     * to force the retry/rebase path. No-op in production; the concurrency
@@ -533,40 +336,30 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     */
   protected def beforeCommitLoop(): Unit = {}
 
-  private def commitWithRetry(maxRetries: Int)(
-      attempt: (Manifest, Long) => Unit)(
+  /** The store's commit on the shared retry loop
+    * ([[graft.util.ManifestLog.commit]]): `attempt(current, slot)` PUTs the
+    * next manifest on top of `current`, after `validate` REVALIDATES the
+    * state it would rebase onto (false aborts — e.g. a compaction whose
+    * folded inputs were themselves compacted away). Every state is
+    * validated, the first included: a compaction's fold inputs were
+    * snapshotted BEFORE its (long) fold/write, and a competitor that
+    * committed inside that window is already visible in the first
+    * listing, where no slot conflict would ever fire (r11 adversarial
+    * review). An abort, or a conflict past the retry bound, runs `onAbort`
+    * (which reclaims the staged generation) and surfaces as
+    * [[CommitConflictException]].
+    */
+  private def commitWithRetry(attempt: (Manifest, Long) => Unit)(
       validate: Manifest => Boolean)(onAbort: => Unit): Unit = {
     beforeCommitLoop()
-    var (m, slot) = currentState()
-    var retries = 0
-    while (true) {
+    try manifests.commit { (m, slot) =>
       beforeCommitAttempt()
-      // validate EVERY state — including the first: a compaction's fold
-      // inputs were snapshotted BEFORE its (long) fold/write, and a
-      // competitor that committed inside that window is already visible
-      // in the first currentState(), where no slot conflict would ever
-      // fire (r11 adversarial review: the unvalidated first attempt
-      // silently published a stale base over a concurrent compact)
-      if (!validate(m)) {
-        onAbort
-        throw new CommitConflictException(
-          s"store $dir: commit inputs were invalidated by a concurrent " +
-            "commit (fold inputs replaced) — re-read and re-run")
-      }
-      try { attempt(m, slot); return }
-      catch {
-        case e: CommitConflictException =>
-          // absorbed-and-rebased conflicts are counted (r18, VERDICT r17
-          // #2) so the bench can report contention per entry
-          StoreTelemetry.addCount("commit_conflicts")
-          retries += 1
-          if (retries > maxRetries) { onAbort; throw e }
-          // brief jittered backoff so lockstep racers desynchronize
-          Thread.sleep(1L + scala.util.Random.nextInt(8))
-          val (nm, ns) = currentState()
-          m = nm; slot = ns
-      }
-    }
+      val cur = m.getOrElse(throw noManifest)
+      if (!validate(cur)) throw new graft.util.ManifestLog.InputsReplaced(
+        s"store $dir: commit inputs were invalidated by a concurrent " +
+          "commit (fold inputs replaced) — re-read and re-run")
+      attempt(cur, slot)
+    } catch { case e: CommitConflictException => onAbort; throw e }
   }
 
   private def bucketDirsOf(gen: String): Seq[Int] =
@@ -615,7 +408,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   private def appendDelta(folded: DataFrame): Unit = {
     val data = withBucket(folded.drop(Cdc.TransactionId))
       .repartition(col(bucketCol))
-    val gen = genName("delta")
+    val gen = graft.util.ManifestLog.generationName("delta")
     val tWrite = System.nanoTime()
     data.write.partitionBy(bucketCol).mode("overwrite")
       .parquet(new java.io.File(root, gen).getPath)
@@ -629,13 +422,13 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // losing writer simply recomputes (seq, version, schema) against the
     // winner's manifest and re-points the SAME dir. Deltas append; nothing
     // to revalidate.
-    commitWithRetry(maxRetries = 100) { (m, slot) =>
+    commitWithRetry { (m, slot) =>
       // seq clears both the live deltas AND the manifest-recorded
       // compaction floor — so an all-deletes compaction (no surviving
       // compact gen) cannot make a later merge reuse an already-folded
       // seq (review r10)
       val seq = (m.deltas.map(_._1) :+ m.floorSeq).max + 1
-      putManifest(Manifest(slot, widenedSchema(m, data.schema), m.base,
+      manifests.put(Manifest(slot, widenedSchema(m, data.schema), m.base,
         m.deltas :+ (seq -> gen), floorSeq = m.floorSeq))
     }(validate = _ => true)(onAbort = rmTree(new java.io.File(root, gen)))
     gc()
@@ -721,7 +514,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       phases: Option[(String, String)])(next: Manifest => Manifest)(
       validate: Manifest => Boolean): Unit = {
     def secondsSince(t: Long): Double = (System.nanoTime() - t) / 1e9
-    val gen = genName(tag)
+    val gen = graft.util.ManifestLog.generationName(tag)
     val genDir = new java.io.File(root, gen)
     val tWrite = System.nanoTime()
     data.write.partitionBy(bucketCol).mode("overwrite").parquet(genDir.getPath)
@@ -731,9 +524,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val survivors = bucketDirsOf(gen).map(_ -> gen).toMap
     if (survivors.isEmpty) rmTree(genDir)
     val tSwap = System.nanoTime()
-    commitWithRetry(maxRetries = 100) { (m, slot) =>
+    commitWithRetry { (m, slot) =>
       val kept = touched.fold(Map.empty[Int, String])(m.base -- _)
-      putManifest(next(m).copy(version = slot, base = kept ++ survivors,
+      manifests.put(next(m).copy(version = slot, base = kept ++ survivors,
         rewrite = rewrite))
     }(validate)(onAbort = rmTree(genDir))
     gc()
@@ -896,9 +689,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // ONE listing pass, each manifest decoded once (review r10 — the
     // per-version manifestAt loop re-read and re-digested every file
     // twice per version in the range). Version-number GAPS are expected:
-    // torn puts burn their slot (see putManifest), so the range resolves
+    // torn puts burn their slot (see graft.util.ManifestLog.put), so the range resolves
     // over the retained COMPLETE manifests whose version falls inside it.
-    val retained = manifestFiles().flatMap(tryReadManifest)
+    val retained = manifests.complete()
     def at(v: Long): Manifest = retained.find(_.version == v)
       .getOrElse(throw new IllegalStateException(
         s"store $dir: version $v is not retained (keepVersions=" +

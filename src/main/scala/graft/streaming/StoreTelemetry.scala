@@ -24,7 +24,8 @@ object StoreTelemetry {
   }
 
   /** Cumulative CONTENTION counters (r18, VERDICT r17 #2): commit-slot
-    * conflicts absorbed by [[ManifestUpsertStore]]'s optimistic retry and
+    * conflicts absorbed by the shared optimistic retry
+    * ([[graft.util.ManifestLog.commit]]) and
     * maintenance races the [[CdcStreamJob]] policy path turns into
     * no-ops. The stores absorb both silently by design — counting them
     * lets a bench entry SELF-DISPOSITION a slow run (elevated conflicts →
@@ -33,7 +34,7 @@ object StoreTelemetry {
     */
   private val eventCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[streaming] def addCount(name: String, n: Long = 1L): Unit =
+  private[graft] def addCount(name: String, n: Long = 1L): Unit =
     eventCounts.merge(name, n, (a, b) => a + b)
   /** Snapshot and reset the accumulated contention counters. */
   def drainCounts(): Map[String, Long] = {

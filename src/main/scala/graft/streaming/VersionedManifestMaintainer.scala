@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{ManifestPipeline, ServedModel, TokenizerStore}
-import graft.util.{Checkpoints, Fs}
+import graft.util.{Checkpoints, Fs, ManifestLog}
 
 /** Streaming maintenance loop for the incremental pre-training manifest:
   * a `foreachBatch` sink (the at-least-once sink model of Structured
@@ -43,9 +45,9 @@ import graft.util.{Checkpoints, Fs}
   *    with an embedded SHA-256 so a torn newest manifest degrades to
   *    "commit never happened" (the previous version serves). Publishing
   *    any state change = ONE conditional PUT (emulated locally by
-  *    staged-write + create-exclusive hard link, exactly
-  *    [[ManifestUpsertStore.putManifest]]'s content-atomic primitive; on
-  *    S3 it is the `If-None-Match` PUT). Two writers racing a slot
+  *    staged-write + create-exclusive hard link, the shared
+  *    [[graft.util.ManifestLog.put]] the survivor store commits through
+  *    too; on S3 it is the `If-None-Match` PUT). Two writers racing a slot
   *    produce exactly one winner; the loser rebases its entry onto the
   *    winner's manifest and retries — disjoint windows always merge.
   *  - CLAIMS are conditional PUTs too: `claim-<window>` objects created
@@ -62,7 +64,7 @@ import graft.util.{Checkpoints, Fs}
   *    leaves either an unreferenced generation (invisible; aged GC
   *    reclaims it), an un-deleted claim (its owner's replay takes over),
   *    or a torn manifest (readers skip it; the slot number burns, the
-  *    version-gap contract of [[ManifestUpsertStore.putManifest]]).
+  *    version-gap contract of [[graft.util.ManifestLog.put]]).
   *    There is no recovery pass and no reader-side torn-state check —
   *    there is nothing to recover.
   *
@@ -168,48 +170,29 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       history: Seq[String], windows: Map[Long, WindowEntry],
       retractions: Seq[String])
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def manifestName(v: Long): String = f"manifest-$v%012d.json"
-
-  /** Digest appended LAST, so any torn prefix fails validation — the
-    * [[ManifestUpsertStore]] torn-write defense verbatim.
+  /** The manifest history on the shared publish core
+    * ([[graft.util.ManifestLog]]: digest envelope, single-listing state,
+    * conditional PUT, retry loop, GC). Only the fields and the GC pin are
+    * the maintainer's.
     */
-  private def encodeManifest(m: VManifest): Array[Byte] = {
-    val node = mapper.createObjectNode()
-    node.put("version", m.version)
-    node.put("model", m.model)
-    val h = node.putArray("history")
-    m.history.foreach(h.add)
-    val w = node.putArray("windows")
-    m.windows.toSeq.sortBy(_._1).foreach { case (id, e) =>
-      val o = w.addObject()
-      o.put("w", id); o.put("batch", e.batchId)
-      o.put("model", e.model); o.put("writer", e.writer)
-      e.gen.foreach(o.put("gen", _))
+  private val manifests = new ManifestLog[VManifest](root, keepVersions,
+      orphanGraceMs) {
+    protected def encodeFields(m: VManifest, node: ObjectNode): Unit = {
+      node.put("version", m.version)
+      node.put("model", m.model)
+      val h = node.putArray("history")
+      m.history.foreach(h.add)
+      val w = node.putArray("windows")
+      m.windows.toSeq.sortBy(_._1).foreach { case (id, e) =>
+        val o = w.addObject()
+        o.put("w", id); o.put("batch", e.batchId)
+        o.put("model", e.model); o.put("writer", e.writer)
+        e.gen.foreach(o.put("gen", _))
+      }
+      val r = node.putArray("retractions")
+      m.retractions.foreach(r.add)
     }
-    val r = node.putArray("retractions")
-    m.retractions.foreach(r.add)
-    val payload = mapper.writeValueAsString(node)
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(payload.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    s"$payload\n$digest\n".getBytes(StandardCharsets.UTF_8)
-  }
-
-  /** None when torn/corrupt — the reader's skip signal. */
-  private def decodeManifest(bytes: Array[Byte]): Option[VManifest] =
-    try {
-      val s = new String(bytes, StandardCharsets.UTF_8)
-      val nl = s.lastIndexOf('\n', s.length - 2)
-      if (nl < 0) return None
-      val payload = s.substring(0, nl)
-      val digest = s.substring(nl + 1).trim
-      val want = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(payload.getBytes(StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      if (digest != want) return None
-      val n = mapper.readTree(payload)
+    protected def decodeFields(n: JsonNode): VManifest = {
       val history = (0 until n.get("history").size())
         .map(n.get("history").get(_).asText())
       val windows = (0 until n.get("windows").size()).map { i =>
@@ -221,76 +204,37 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       }.toMap
       val retractions = (0 until n.get("retractions").size())
         .map(n.get("retractions").get(_).asText())
-      Some(VManifest(n.get("version").asLong(), n.get("model").asText(),
-        history, windows, retractions))
-    } catch { case _: Exception => None }
-
-  private def manifestFiles(): Seq[java.io.File] =
-    Option(root.listFiles((_: java.io.File, n: String) =>
-      n.matches("manifest-\\d{12}\\.json")))
-      .getOrElse(Array.empty[java.io.File]).sortBy(_.getName).reverse.toSeq
-
-  private def tryReadManifest(f: java.io.File): Option[VManifest] =
-    try decodeManifest(java.nio.file.Files.readAllBytes(f.toPath))
-    catch {
-      case _: java.nio.file.NoSuchFileException |
-           _: java.io.FileNotFoundException => None
+      VManifest(n.get("version").asLong(), n.get("model").asText(),
+        history, windows, retractions)
     }
-
-  /** ONE list pass → (newest complete manifest or None pre-bootstrap,
-    * next free slot) — the pair MUST come from a single listing, for the
-    * same interleaved-commit reason as [[ManifestUpsertStore
-    * .currentState]].
-    */
-  private def currentState(): (Option[VManifest], Long) = {
-    val files = manifestFiles()
-    val next = files.headOption
-      .map(_.getName.stripPrefix("manifest-").stripSuffix(".json").toLong + 1)
-      .getOrElse(1L)
-    (files.iterator.flatMap(tryReadManifest).nextOption(), next)
+    protected def versionOf(m: VManifest): Long = m.version
+    protected def generationsOf(m: VManifest): Iterable[String] =
+      m.windows.values.flatMap(_.gen) ++ m.retractions
+    protected def isGeneration(name: String): Boolean =
+      name.startsWith("wgen-") || name.startsWith("rgen-")
+    // an APPEND generation whose window has NO committed entry is never
+    // swept, however old: it may hold the ONLY packed copy of a batch
+    // whose store merge already ran (the crash-between-merge-and-PUT
+    // state) — the survivor store has banned the content as duplicate, so
+    // if GC ate the dir, the dead writer's replay would fold to empty
+    // fresh, find no spans, and commit the window SPANLESS: silent
+    // permanent loss of the batch's documents (r18 review #1). Such a dir
+    // becomes sweepable only once its window commits (then it is either
+    // the referenced generation, or a superseded predecessor). Rewrite
+    // (`-rw-`) and retraction generations carry no such liability —
+    // their data exists elsewhere until the PUT references them.
+    override protected def pinned(serving: Option[VManifest],
+        name: String): Boolean = name match {
+      case appendGenName(w) => !serving.exists(_.windows.contains(w.toLong))
+      case _ => false
+    }
   }
+
+  private val appendGenName = "wgen-(-?\\d+)-b-?\\d+".r // window ids may be negative
 
   private def currentManifest(): VManifest =
-    currentState()._1.getOrElse(throw new IllegalStateException(
+    manifests.current().getOrElse(throw new IllegalStateException(
       s"no committed manifest windows under $manifestDir"))
-
-  /** Conditional PUT: content-atomic via staged write + create-exclusive
-    * hard link; an occupied slot — even a torn occupant — conflicts and
-    * burns its number (torn debris is skipped by digest and GC'd aged).
-    * Identical protocol to [[ManifestUpsertStore.putManifest]].
-    */
-  private def putManifest(m: VManifest): Unit = {
-    val f = new java.io.File(root, manifestName(m.version))
-    if (!graft.util.ConditionalPut.claim(f, encodeManifest(m)))
-      throw new CommitConflictException(
-        s"manifest $manifestDir: version slot ${m.version} is occupied " +
-          "— re-read the current manifest and retry on top")
-    Fs.fsyncDir(root)
-  }
-
-  /** Bounded optimistic-commit loop (the Iceberg retry model): `attempt`
-    * re-runs its own guards against each re-read state, PUTs at the free
-    * slot, and may return WITHOUT putting (a replay no-op).
-    */
-  private def commitWithRetry[A](what: String, maxRetries: Int = 100)(
-      attempt: (Option[VManifest], Long) => A): A = {
-    var (m, slot) = currentState()
-    var retries = 0
-    while (true) {
-      try return attempt(m, slot)
-      catch {
-        case e: CommitConflictException =>
-          StoreTelemetry.addCount("commit_conflicts") // bench contention signal
-          retries += 1
-          if (retries > maxRetries) throw new IllegalStateException(
-            s"$what under $manifestDir lost the commit race $maxRetries " +
-              "times — pathological contention", e)
-          Thread.sleep(1L + scala.util.Random.nextInt(8))
-          val (nm, ns) = currentState(); m = nm; slot = ns
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
 
   // ── Claims (conditional-PUT objects) ─────────────────────────────────────
 
@@ -338,7 +282,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
           // claim the owner is about to delete post-commit must not be
           // treated as abandoned work.
           val age = System.currentTimeMillis() - claim.lastModified()
-          val committed = currentState()._1.exists(_.windows.contains(window))
+          val committed = manifests.current().exists(_.windows.contains(window))
           if (!committed && autoReclaimAfterMs.exists(age >= _)) {
             logWarning(s"window $window: auto-reclaiming stale claim by " +
               s"writer '${lines.headOption.getOrElse("")}' (age ${age}ms " +
@@ -384,7 +328,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   def reclaimWindow(window: Long, force: Boolean = false): Boolean = {
     val claim = claimOf(window)
     if (!claim.exists()) return false
-    val committed = currentState()._1.exists(_.windows.contains(window))
+    val committed = manifests.current().exists(_.windows.contains(window))
     if (!committed) require(force,
       s"window $window has an UNCOMMITTED claim — reclaiming it while " +
         "its owner is alive would let two writers pack the window " +
@@ -514,7 +458,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     val spark = batch.sparkSession
     val window = windowOf(batchId)
     val h = modelHash(spark)
-    val (m0, _) = currentState()
+    val m0 = manifests.current()
     if (checkCommitted(m0, window, batchId)) {
       logInfo(s"batch $batchId: window $window already committed, skipping")
       claimOf(window).delete() // sweep a claim a crash left behind
@@ -562,12 +506,12 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
           Some(gen)
         }
       beforeWindowCommit()
-      commitWithRetry(s"window $window commit") { (m, slot) =>
+      manifests.commit { (m, slot) =>
         if (!checkCommitted(m, window, batchId)) {
           checkModel(m, h)
           val base = m.getOrElse(
             VManifest(0L, h, Seq.empty, Map.empty, Seq.empty))
-          putManifest(base.copy(version = slot,
+          manifests.put(base.copy(version = slot,
             windows = base.windows +
               (window -> WindowEntry(committedGen, batchId, h, writerId))))
         }
@@ -637,9 +581,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     * [[ManifestUpsertStore.snapshotAt]]'s contract applied to windows.
     */
   def readManifestAt(spark: SparkSession, version: Long): DataFrame = {
-    val m = manifestFiles().iterator.flatMap(tryReadManifest)
-      .find(_.version == version)
-      .getOrElse(throw new IllegalStateException(
+    val m = manifests.at(version).getOrElse(throw new IllegalStateException(
         s"manifest $manifestDir: version $version is not retained " +
           s"(keepVersions=$keepVersions) or never committed"))
     visibleSpans(spark, m)
@@ -684,7 +626,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     import org.apache.spark.sql.functions._
     require(fromVersion <= toVersion,
       s"empty range: $fromVersion > $toVersion")
-    val retained = manifestFiles().flatMap(tryReadManifest)
+    val retained = manifests.complete()
     def at(v: Long): VManifest = retained.find(_.version == v)
       .getOrElse(throw new IllegalStateException(
         s"manifest $manifestDir: version $v is not retained " +
@@ -784,10 +726,10 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       .write.mode("overwrite").parquet(genDir(gen).getPath)
     Fs.fsyncTree(genDir(gen))
     if (!hasSpans(gen)) { Fs.rmTree(genDir(gen)); return }
-    commitWithRetry("retraction commit") { (m, slot) =>
+    manifests.commit { (m, slot) =>
       val base = m.getOrElse(VManifest(0L, modelHash(ids.sparkSession),
         Seq.empty, Map.empty, Seq.empty))
-      putManifest(base.copy(version = slot,
+      manifests.put(base.copy(version = slot,
         retractions = base.retractions :+ gen))
     }
     gc()
@@ -864,40 +806,33 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       }
     // staged-generation cleanup happens ONLY on the paths where the PUT
     // provably never published (validation abort, conflict retries
-    // exceeded) — a blanket catch-all would also fire when putManifest
+    // exceeded) — a blanket catch-all would also fire when the PUT
     // failed AFTER its createLink (e.g. a transient fsync error), i.e.
     // after the new manifest became visible, and would delete a
     // generation a committed manifest references: silent data loss on
     // read (r18 review #5). Any other failure leaves the dir for aged
     // GC, which never sweeps a referenced generation.
-    try commitWithRetry(s"window $windowId rewrite") { (m, slot) =>
+    try manifests.commit { (m, slot) =>
       val cur = m.flatMap(_.windows.get(windowId)).getOrElse(
-        throw new RewriteAbort(
+        throw new ManifestLog.InputsReplaced(
           s"window $windowId vanished from the manifest mid-rewrite"))
       if (cur.gen != readEntry.gen)
-        throw new RewriteAbort(
+        throw new ManifestLog.InputsReplaced(
           s"window $windowId was rewritten concurrently (generation " +
             s"${cur.gen} != ${readEntry.gen}) — rewrite inputs were " +
             "replaced; re-read and re-run")
       val base = m.get
-      putManifest(base.copy(version = slot,
+      manifests.put(base.copy(version = slot,
         windows = base.windows +
           (windowId -> stamp(cur).copy(gen = newGen))))
     } catch {
-      case e: RewriteAbort =>
-        newGen.foreach(g => Fs.rmTree(genDir(g))); throw e
-      case e: IllegalStateException
-          if e.getCause.isInstanceOf[CommitConflictException] =>
+      // an abort (inputs replaced) or an exhausted retry: the PUT provably
+      // never published
+      case e: CommitConflictException =>
         newGen.foreach(g => Fs.rmTree(genDir(g))); throw e
     }
     gc()
   }
-
-  /** A rewrite whose fold inputs were replaced by a concurrent commit —
-    * the one abort class where the staged generation is provably
-    * unpublished and safe to reclaim.
-    */
-  private class RewriteAbort(msg: String) extends IllegalStateException(msg)
 
   /** Physically re-pack one committed window under the manifest's
     * CURRENT model — the uniform-units restore after [[adoptModel]]. The
@@ -919,11 +854,11 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     if (entry.gen.isEmpty) {
       // spanless: restamp the adopted model so the uniform-units-restored
       // record holds for every window, spanless ones included
-      if (entry.model != h) commitWithRetry(s"window $windowId restamp") {
+      if (entry.model != h) manifests.commit {
         (m, slot) =>
           val base = m.getOrElse(m0)
           val cur = base.windows.getOrElse(windowId, entry)
-          putManifest(base.copy(version = slot,
+          manifests.put(base.copy(version = slot,
             windows = base.windows + (windowId -> cur.copy(model = h))))
       }
       return
@@ -967,21 +902,21 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     cached = null
     val h = modelHash(spark)
     root.mkdirs()
-    commitWithRetry("model adoption") { (m, slot) =>
+    manifests.commit { (m, slot) =>
       val base = m.getOrElse(VManifest(0L, h, Seq.empty, Map.empty,
         Seq.empty))
       if (base.model != h)
-        putManifest(base.copy(version = slot, model = h,
+        manifests.put(base.copy(version = slot, model = h,
           history = base.history :+ base.model))
       else if (m.isEmpty)
-        putManifest(base.copy(version = slot))
+        manifests.put(base.copy(version = slot))
     }
     gc()
   }
 
   /** Adopted-model audit trail, oldest first, read from the manifest. */
   def modelHistory(): Seq[String] =
-    currentState()._1.map(_.history).getOrElse(Seq.empty)
+    manifests.current().map(_.history).getOrElse(Seq.empty)
 
   /** The takedown SWEEP: find every window still physically holding a
     * retracted document (broadcast semi-join vs the ledger), compact
@@ -993,7 +928,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   def compactRetracted(spark: SparkSession,
       seedOf: Long => Long): Seq[Long] = {
     import org.apache.spark.sql.functions._
-    val m = currentState()._1.getOrElse(return Seq.empty)
+    val m = manifests.current().getOrElse(return Seq.empty)
     if (m.windows.isEmpty) return Seq.empty
     val retracted = retractedIds(spark, m)
     if (retracted.isEmpty) return Seq.empty
@@ -1007,69 +942,15 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
 
   // ── GC ───────────────────────────────────────────────────────────────────
 
-  /** Drop generation dirs referenced by NO retained manifest (aged past
-    * the orphan grace — a young unreferenced dir may be a concurrent
-    * writer's in-flight pack), retired manifests beyond `keepVersions`,
-    * aged torn manifest debris, aged staging files, and claims whose
-    * window is committed. Safe-by-construction: deletion happens
-    * strictly after the serving manifest is readable, so a crash
-    * anywhere in GC leaves retryable garbage, never a dangling
-    * reference. Exactly [[ManifestUpsertStore]]'s gc, over window/
-    * retraction generations.
+  /** The shared GC pass ([[graft.util.ManifestLog.gc]]: manifests past
+    * `keepVersions` first, then the generations only they named, then aged
+    * orphans, torn debris and staging files, never an uncommitted append
+    * generation), plus the maintainer's own claims whose window is
+    * committed.
     */
   private def gc(): Unit = {
-    val decoded = manifestFiles().map(f => f -> tryReadManifest(f))
-    val complete = decoded.collect { case (f, Some(m)) => (f, m) }
-    val retained = complete.take(keepVersions)
-    val referenced: Set[String] = retained.flatMap { case (_, m) =>
-      m.windows.values.flatMap(_.gen) ++ m.retractions
-    }.toSet
-    val committedWindows: Set[Long] =
-      retained.headOption.map(_._2.windows.keySet).getOrElse(Set.empty)
-    val now = System.currentTimeMillis()
-    def newestMtime(f: java.io.File): Long =
-      math.max(f.lastModified(),
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .map(newestMtime).maxOption.getOrElse(0L))
-    // an APPEND generation whose window has NO committed entry is never
-    // age-swept: it may hold the ONLY packed copy of a batch whose store
-    // merge already ran (the crash-between-merge-and-PUT state) — the
-    // survivor store has banned the content as duplicate, so if GC ate
-    // the dir, the dead writer's replay would fold to empty fresh, find
-    // no spans, and commit the window SPANLESS: silent permanent loss of
-    // the batch's documents (r18 review #1). Such a dir becomes
-    // sweepable only once its window commits (then it is either the
-    // referenced generation, or a superseded predecessor). Rewrite
-    // (`-rw-`) and retraction generations carry no such liability —
-    // their data exists elsewhere until the PUT references them.
-    val appendGen = "wgen-(-?\\d+)-b-?\\d+".r // window ids may be negative
-    def holdsUncommittedBatch(name: String): Boolean = name match {
-      case appendGen(w) => !committedWindows.contains(w.toLong)
-      case _ => false
-    }
-    // over-retention manifests delete BEFORE their generations sweep
-    // (ADVICE r18): the reverse order crashed between the two steps
-    // leaves a READABLE stale manifest whose generations are gone — a
-    // time-travel read of that version would hit servingDir's loud
-    // refusal for a state that was merely retired, not violated. This
-    // order crashed between the two leaves unreferenced generations,
-    // which the next gc re-sweeps.
-    complete.drop(keepVersions).foreach(_._1.delete())
-    Option(root.listFiles((f: java.io.File) => f.isDirectory &&
-      (f.getName.startsWith("wgen-") || f.getName.startsWith("rgen-"))))
-      .getOrElse(Array.empty[java.io.File])
-      .filterNot(d => referenced.contains(d.getName))
-      .filterNot(d => holdsUncommittedBatch(d.getName))
-      .filter(d => now - newestMtime(d) >= orphanGraceMs)
-      .foreach(Fs.rmTree)
-    decoded.collect { case (f, None) => f }
-      .filter(f => now - f.lastModified() >= orphanGraceMs)
-      .foreach(_.delete())
-    Option(root.listFiles((_: java.io.File, n: String) =>
-      n.startsWith(".staging-")))
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => now - f.lastModified() >= orphanGraceMs)
-      .foreach(_.delete())
+    val committedWindows =
+      manifests.gc().map(_.windows.keySet).getOrElse(Set.empty[Long])
     Option(root.listFiles((_: java.io.File, n: String) =>
       n.startsWith("claim-")))
       .getOrElse(Array.empty[java.io.File])

@@ -1,17 +1,18 @@
 package graft.util
 
-/** The content-atomic conditional-create publish primitive shared by the
-  * manifest-versioned commit protocols
-  * ([[graft.streaming.ManifestUpsertStore]]'s manifest slots,
-  * [[graft.streaming.VersionedManifestMaintainer]]'s manifests and window
-  * claims): the bytes are written and FORCED into a dot-staging file
-  * outside the target's listing namespace, then the target name is
-  * claimed by hard-LINKING the staging file in — link creation is atomic
-  * and create-exclusive, so the slot's full content is present at the
-  * instant its name becomes visible, exactly an object store's
-  * `If-None-Match` conditional PUT. Nothing is ever overwritten: an
-  * occupied slot — even torn debris — refuses, which is what lets
-  * version-number burn be part of the callers' format contract.
+/** The content-atomic conditional-create publish primitive: the bytes are
+  * written and FORCED into a dot-staging file outside the target's
+  * listing namespace, then the target name is claimed by hard-LINKING the
+  * staging file in — link creation is atomic and create-exclusive, so the
+  * slot's full content is present at the instant its name becomes
+  * visible, exactly an object store's `If-None-Match` conditional PUT.
+  * Nothing is ever overwritten: an occupied slot — even torn debris —
+  * refuses, which is what lets version-number burn be part of the
+  * callers' format contract.
+  *
+  * Callers: [[ManifestLog.put]], the one manifest PUT of the keyed store,
+  * the manifest maintainer, the ANN index and the tokenizer store; and
+  * [[graft.streaming.VersionedManifestMaintainer]]'s window claims.
   *
   * Returns true when the slot was claimed, false when occupied. A crash
   * between write and link leaves an invisible `stagingPrefix*` file the
@@ -19,10 +20,6 @@ package graft.util
   * Durability of the PARENT DIRENT (the just-created name) is the
   * caller's ordering decision — call [[Fs.fsyncDir]] after a successful
   * claim.
-  *
-  * Extracted in r18 (review #7) from the two byte-identical private
-  * copies so the CAS primitive cannot silently diverge between the
-  * store and the maintainer.
   */
 object ConditionalPut {
 

@@ -12,17 +12,6 @@ object Fs {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
   }
 
-  /** Recursive copy (dirs created as needed; files must not pre-exist). */
-  def copyTree(src: java.io.File, dst: java.io.File): Unit =
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).foreach(_.foreach(c =>
-        copyTree(c, new java.io.File(dst, c.getName))))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath)
-      ()
-    }
-
   /** One warning per JVM when the filesystem rejects directory fsync. */
   private val fsyncDirUnsupported =
     new java.util.concurrent.atomic.AtomicBoolean(false)

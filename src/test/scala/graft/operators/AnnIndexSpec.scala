@@ -56,7 +56,7 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.buildIvf(dir, emb, "vec_id", "embedding", numCells = 8,
       seed = 42L, fitSampleSize = 2000)
     // count data files per cell dir on disk
-    val cellDirs = new java.io.File(dir, "assignments")
+    val cellDirs = ServingManifest.assignments(dir)
       .listFiles((f: java.io.File) => f.getName.startsWith("_cell="))
     assert(cellDirs.length === 8)
     val totalFiles = cellDirs.map(d =>
@@ -67,7 +67,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(read < totalFiles,
       s"expected pruned scan, read $read of $totalFiles assignment files")
     // centroid stats: counts sum to the corpus
-    val n = spark.read.parquet(s"$dir/centroids")
+    val n = spark.read.parquet(ServingManifest.centroids(dir))
       .agg(sum(col("n_vectors"))).head().getLong(0)
     assert(n === emb.count())
   }
@@ -97,13 +97,12 @@ class AnnIndexSpec extends SparkSpec {
     val before = AnnIndex.searchIvf(dir, queries, "qid", k = 5, nprobe = 3)
       .collect().map(_.toSeq).toSet
     AnnIndex.compactIvf(dir)
-    assert(new java.io.File(dir).listFiles()
-      .forall(f => !f.getName.startsWith("assignments_delta_")))
+    assert(ServingManifest.deltas(dir, "a").isEmpty)
     val after = AnnIndex.searchIvf(dir, queries, "qid", k = 5, nprobe = 3)
       .collect().map(_.toSeq).toSet
     assert(after === before)
     // counts refreshed to base+appended
-    val n = spark.read.parquet(s"$dir/centroids")
+    val n = spark.read.parquet(ServingManifest.centroids(dir))
       .agg(sum(col("n_vectors"))).head().getLong(0)
     assert(n === emb.count())
   }
@@ -114,15 +113,13 @@ class AnnIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-annsx").resolve("ix").toString
     AnnIndex.buildIvf(dir, emb.where(col("vec_id") < 400), "vec_id",
       "embedding", numCells = 4, fitSampleSize = 1000)
-    // direct replay: same batch id twice publishes ONE delta dir
+    // direct replay: same batch id twice publishes ONE delta
     val batch = emb.where(col("vec_id") >= 400 && col("vec_id") < 450)
       .select((col("vec_id") + 50000L).alias("vec_id"), col("embedding"),
         col("label"))
     AnnIndex.appendIvfBatch(dir, batch, batchId = 1L)
     AnnIndex.appendIvfBatch(dir, batch, batchId = 1L) // crash-replay
-    val deltas = new java.io.File(dir).listFiles(
-      (f: java.io.File) => f.getName.startsWith("assignments_delta_"))
-    assert(deltas.map(_.getName).toSet === Set("assignments_delta_b1"))
+    assert(ServingManifest.batches(dir, "a") === Seq(1L))
     // probing with an appended vector finds exactly ONE copy of it
     val probe = emb.where(col("vec_id") === 400)
       .select(col("vec_id").alias("qid"), col("embedding"))
@@ -171,7 +168,7 @@ class AnnIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-annpq2").resolve("ix").toString
     AnnIndex.buildIvfPq(dir, emb.where(col("vec_id") < 400), "vec_id",
       "embedding", numCells = 8, m = 8, ksub = 16, fitSampleSize = 1000)
-    val cellDirs = new java.io.File(dir, "assignments")
+    val cellDirs = ServingManifest.assignments(dir)
       .listFiles((f: java.io.File) => f.getName.startsWith("_cell="))
     val totalFiles = cellDirs.map(d => d.listFiles((f: java.io.File) =>
       f.getName.endsWith(".parquet")).length.toLong).sum
@@ -188,8 +185,7 @@ class AnnIndexSpec extends SparkSpec {
         col("label"))
     AnnIndex.appendIvfBatch(dir, tail, batchId = 3L)
     AnnIndex.appendIvfBatch(dir, tail, batchId = 3L) // replay no-op
-    assert(new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-      n.startsWith("assignments_delta_")).length === 1)
+    assert(ServingManifest.deltas(dir, "a").length === 1)
     val probeVec = emb.where(col("vec_id") >= 400).orderBy(col("vec_id"))
       .limit(1)
     val probe = probeVec.select(col("vec_id").alias("qid"), col("embedding"))
@@ -202,14 +198,13 @@ class AnnIndexSpec extends SparkSpec {
     val before = AnnIndex.searchIvfPq(dir, queries, "qid", k = 5, nprobe = 3)
       .collect().map(_.toSeq).toSet
     AnnIndex.compactIvf(dir)
-    assert(new java.io.File(dir, "codebooks").exists())
+    assert(new java.io.File(ServingManifest.quantizer(dir), "codebooks").exists())
     val after = AnnIndex.searchIvfPq(dir, queries, "qid", k = 5, nprobe = 3)
       .collect().map(_.toSeq).toSet
     assert(after === before)
     // a replay of the compacted batch still no-ops (high-water carried)
     AnnIndex.appendIvfBatch(dir, tail, batchId = 3L)
-    assert(new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-      n.startsWith("assignments_delta_")).isEmpty)
+    assert(ServingManifest.deltas(dir, "a").isEmpty)
     // plain searchIvf refuses nothing here, but a plain index refuses PQ
     val plain = Files.createTempDirectory("graft-annpq3").resolve("ix").toString
     AnnIndex.buildIvf(plain, emb.limit(100), "vec_id", "embedding",
@@ -231,8 +226,7 @@ class AnnIndexSpec extends SparkSpec {
     // a restart from an older checkpoint replays the batch post-compact:
     // the folded-batch record must absorb it, or every row duplicates
     AnnIndex.appendIvfBatch(dir, batch, batchId = 7L)
-    assert(new java.io.File(dir).listFiles()
-      .forall(f => !f.getName.startsWith("assignments_delta_")),
+    assert(ServingManifest.deltas(dir, "a").isEmpty,
       "replayed already-compacted batch must not re-publish a delta")
     val probe = emb.where(col("vec_id") === 400)
       .select(col("vec_id").alias("qid"), col("embedding"))
@@ -244,67 +238,105 @@ class AnnIndexSpec extends SparkSpec {
       .select((col("vec_id") + 91000L).alias("vec_id"), col("embedding"),
         col("label"))
     AnnIndex.appendIvfBatch(dir, batch2, batchId = 8L)
-    assert(new java.io.File(dir, "assignments_delta_b8").exists())
+    assert(ServingManifest.batches(dir, "a") === Seq(8L))
   }
 
-  test("crashed swap never loses the only index copy (retire-aside, ADVICE r9)") {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    def mv(a: java.io.File, b: java.io.File): Unit =
-      java.nio.file.Files.move(a.toPath, b.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val dir = Files.createTempDirectory("graft-anncx").resolve("ix").toString
-    AnnIndex.buildIvf(dir, emb, "vec_id", "embedding", numCells = 4,
-      seed = 1L, fitSampleSize = 500)
-    val want = AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
+  // ── Publish protocol: generations + one manifest PUT ───────────────────
+
+  private def neighborSet(dir: String): Set[Seq[Any]] =
+    AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
       .collect().map(_.toSeq).toSet
-    val live = new java.io.File(dir)
-    val tmp = new java.io.File(dir + "_tmp")
-    val aside = new java.io.File(dir + "_old")
 
-    // crash BETWEEN retire and promote: live missing, complete tmp + aside
-    // both on disk → roll FORWARD to the staged copy (it is a full index)
-    def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        Option(src.listFiles()).foreach(_.foreach(c =>
-          copyTree(c, new java.io.File(dst, c.getName))))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    copyTree(live, tmp) // a "newly built" complete staged index
-    mv(live, aside)     // the retire rename happened...
-    // ...and the process died here. A READER is now PASSIVE (ADVICE r10:
-    // an active reader racing a HEALTHY writer's swap in this exact state
-    // would roll the in-flight swap forward underneath it and fail the
-    // build spuriously) — it throws retryably and touches nothing...
-    intercept[IllegalStateException] {
-      AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
-    }
-    assert(tmp.exists() && aside.exists(),
-      "a passive reader must not move or delete crash artifacts")
-    // ...and the next WRITE-path operation heals: rolls FORWARD to the
-    // complete staged copy (it is a full index) and sweeps the aside
-    AnnIndex.compactIvf(dir) // no deltas: heal + no-op
-    assert(AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
-      .collect().map(_.toSeq).toSet === want)
-    assert(!tmp.exists() && !aside.exists())
+  test("a crash after the generation write, before the PUT: the previous version serves and a replay converges") {
+    val work = Files.createTempDirectory("graft-anncrash")
+    val live = work.resolve("live").toString
+    val crashed = work.resolve("crashed").toString
+    AnnIndex.buildIvf(live, emb.where(col("vec_id") < 300), "vec_id",
+      "embedding", numCells = 2, seed = 1L, fitSampleSize = 300)
+    val before = neighborSet(live)
+    // the crashed writer's disk: the version before the append, plus the
+    // complete, fsynced generation the append wrote, named by no manifest
+    ServingManifest.copyTree(new java.io.File(live), new java.io.File(crashed))
+    val batch = emb.where(col("vec_id") >= 300)
+      .select((col("vec_id") + 50000L).alias("vec_id"), col("embedding"),
+        col("label"))
+    AnnIndex.appendIvfBatch(live, batch, batchId = 4L)
+    val staged = ServingManifest.deltaDirs(live, "a").head
+    ServingManifest.copyTree(staged, new java.io.File(crashed, staged.getName))
+    assert(neighborSet(crashed) === before)
+    assert(AnnIndex.deltaDebt(crashed) === 0)
+    // the replay publishes its own generation; the crashed one is young,
+    // so its GC keeps it (it could be a concurrent writer's in-flight one)
+    AnnIndex.appendIvfBatch(crashed, batch, batchId = 4L)
+    assert(neighborSet(crashed) === neighborSet(live))
+    assert(ServingManifest.batches(crashed, "a") === Seq(4L))
+    assert(new java.io.File(crashed, staged.getName).exists())
+  }
 
-    // crash MID-BUILD after the live dir went aside some other way:
-    // incomplete tmp (no _meta.json), aside holds the only copy → the
-    // reader again refuses, and the writer rolls BACK to the aside copy
-    copyTree(live, aside)
-    rm(live)
-    tmp.mkdirs() // torn staged dir: no _meta.json
-    new java.io.File(tmp, "assignments").mkdirs()
-    intercept[IllegalStateException] {
-      AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
-    }
+  test("a torn newest manifest is skipped: the previous version serves and its slot burns") {
+    val dir = Files.createTempDirectory("graft-anntorn").resolve("ix").toString
+    AnnIndex.buildIvf(dir, emb.limit(200), "vec_id", "embedding",
+      numCells = 2, seed = 1L, fitSampleSize = 200)
+    val want = neighborSet(dir)
+    val newest = ServingManifest.files(dir).head
+    val bytes = java.nio.file.Files.readAllBytes(newest.toPath)
+    val torn = new java.io.File(dir, "manifest-000000000002.json")
+    java.nio.file.Files.write(torn.toPath, bytes.take(bytes.length / 2))
+    assert(neighborSet(dir) === want)
+    assert(AnnIndex.deltaDebt(dir) === 0)
+    AnnIndex.appendIvf(dir, emb.where(col("vec_id") === 250L))
+    assert(ServingManifest.files(dir).head.getName ===
+      "manifest-000000000003.json", "the torn slot burns its number")
+    assert(AnnIndex.deltaDebt(dir) === 1)
+  }
+
+  test("GC: a young unreferenced generation survives, retired ones go at once, an aged orphan sweeps") {
+    val dir = Files.createTempDirectory("graft-anngc").resolve("ix").toString
+    AnnIndex.buildIvf(dir, emb.limit(200), "vec_id", "embedding",
+      numCells = 2, seed = 1L, fitSampleSize = 200)
+    val orphan = new java.io.File(dir, "gen-append-orphan")
+    new java.io.File(orphan, "_cell=0").mkdirs()
+    AnnIndex.appendIvf(dir, emb.where(col("vec_id") === 250L))
+    assert(orphan.exists(), "a young orphan may be an in-flight write")
     AnnIndex.compactIvf(dir)
-    val healed = AnnIndex.searchIvf(dir, queries, "qid", k = 3, nprobe = 2)
-      .collect().map(_.toSeq).toSet
-    assert(healed === want)
-    assert(!aside.exists())
+    assert(ServingManifest.generationDirs(dir) ===
+      Set(ServingManifest.quantizer(dir).getName,
+        ServingManifest.base(dir).getName, orphan.getName))
+    ServingManifest.age(orphan)
+    AnnIndex.appendIvf(dir, emb.where(col("vec_id") === 251L))
+    assert(!orphan.exists(), "an orphan past the grace sweeps")
+  }
+
+  test("a pre-manifest index layout fails loudly at every entry point and is never overwritten") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-annlegacy").resolve("ix").toFile
+    new java.io.File(dir, "assignments").mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(dir, "_meta.json").toPath,
+      """{"idCol":"vec_id","vecCol":"embedding","numCells":2}""")
+    val path = dir.getPath
+    val rows = emb.limit(20)
+    val calls: Seq[() => Any] = Seq(
+      () => AnnIndex.searchIvf(path, queries, "qid", k = 3),
+      () => AnnIndex.searchIvfPq(path, queries, "qid", k = 3),
+      () => AnnIndex.appendIvf(path, rows),
+      () => AnnIndex.appendIvfBatch(path, rows, 0L),
+      () => AnnIndex.deleteIvf(path, Seq(1L).toDF("vec_id")),
+      () => AnnIndex.deleteIvfBatch(path, Seq(1L).toDF("vec_id"), 0L),
+      () => AnnIndex.compactIvf(path),
+      () => AnnIndex.compactIvfIfNeeded(path),
+      () => AnnIndex.compactIvfIfDebtRatio(path),
+      () => AnnIndex.deltaDebt(path),
+      () => AnnIndex.indexIdCol(spark, path),
+      () => AnnIndex.buildIvf(path, rows, "vec_id", "embedding", numCells = 2),
+      () => AnnIndex.buildIvfPq(path, rows, "vec_id", "embedding",
+        numCells = 2, m = 8, ksub = 4))
+    calls.foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(path) && e.getMessage.contains("rebuild"),
+        e.getMessage)
+    }
+    assert(dir.list().toSet === Set("assignments", "_meta.json"),
+      "the legacy layout must be left exactly as it was")
   }
 
   test("meta survives awkward column names (real JSON, ADVICE r9)") {
@@ -318,23 +350,6 @@ class AnnIndexSpec extends SparkSpec {
     val q = odd.limit(3).select(col("id\"col").alias("qid"), col("Col"))
     val got = AnnIndex.searchIvf(dir, q, "qid", k = 2, nprobe = 2)
     assert(got.count() === 6L)
-  }
-
-  test("read paths never mutate a healthy index (a concurrent build's staged dir survives)") {
-    val dir = Files.createTempDirectory("graft-annro").resolve("ix").toString
-    AnnIndex.buildIvf(dir, emb.limit(200), "vec_id", "embedding",
-      numCells = 2, fitSampleSize = 200)
-    // a concurrent build/compact is mid-write: its staged dir exists while
-    // the live index serves reads
-    val tmp = new java.io.File(dir + "_tmp")
-    new java.io.File(tmp, "assignments").mkdirs()
-    AnnIndex.searchIvf(dir, queries, "qid", k = 2, nprobe = 2).collect()
-    assert(tmp.exists(),
-      "a READ deleted a concurrent writer's in-flight staged dir")
-    // the WRITER itself sweeps its own debris before staging
-    AnnIndex.buildIvf(dir, emb.limit(200), "vec_id", "embedding",
-      numCells = 2, fitSampleSize = 200)
-    assert(!new java.io.File(dir + "_old").exists())
   }
 
   // ── CDC-driven deletion (VERDICT r10 #7) ────────────────────────────────
@@ -354,13 +369,19 @@ class AnnIndexSpec extends SparkSpec {
     AnnIndex.deleteIvf(dir, Seq(victim).toDF("vec_id"))
     // filtered at search, pre-compact
     assert(!neighbors().contains(victim))
-    // folded at compact: still invisible AND physically absent
+    // folded at compact: still invisible AND physically absent — the new
+    // base lacks the row, and the retired base and tombstone generations
+    // are already deleted when the compaction returns
     AnnIndex.compactIvf(dir)
     assert(!neighbors().contains(victim))
     val onDisk = spark.read
-      .parquet(new java.io.File(dir, "assignments").getPath)
+      .parquet(ServingManifest.assignments(dir).getPath)
       .where(col("vec_id") === victim).count()
     assert(onDisk === 0L, "compaction must remove the deleted bytes")
+    assert(ServingManifest.generationDirs(dir) ===
+      Set(ServingManifest.quantizer(dir).getName,
+        ServingManifest.base(dir).getName),
+      "the retired base and tombstone generations must be gone")
     // other results unaffected: delete+compact ≡ building without the row
     val rebuilt = Files.createTempDirectory("graft-anndel2").resolve("ix").toString
     AnnIndex.buildIvf(rebuilt, emb.where(col("vec_id") =!= victim),
@@ -550,12 +571,10 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   private def tombCount(dir: String): Int =
-    Option(new java.io.File(dir).listFiles((f: java.io.File) =>
-      f.getName.startsWith("tombstones_delta_"))).map(_.length).getOrElse(0)
+    ServingManifest.deltas(dir, "t").length
 
   private def deltaCount(dir: String): Int =
-    Option(new java.io.File(dir).listFiles((f: java.io.File) =>
-      f.getName.startsWith("assignments_delta_"))).map(_.length).getOrElse(0)
+    ServingManifest.deltas(dir, "a").length
 
   test("artifact cache invalidates per generation: append + search after a " +
       "rebuild use the NEW model (r19)") {
@@ -580,9 +599,7 @@ class AnnIndexSpec extends SparkSpec {
     // quantizer: a stale cached generation-A model can place rows in at
     // most its 3 cells, so the delta spreading over >3 distinct cells is
     // the stale-model detector (deterministic data, deterministic fit)
-    val deltas = Option(new java.io.File(dir).listFiles(
-      (f: java.io.File) => f.getName.startsWith("assignments_delta_")))
-      .getOrElse(Array.empty[java.io.File])
+    val deltas = ServingManifest.deltaDirs(dir, "a")
     assert(deltas.nonEmpty)
     val deltaCells = deltas.flatMap(d => spark.read.parquet(d.getPath)
       .select(col("_cell")).distinct().collect().map(_.getInt(0))).toSet

@@ -242,45 +242,100 @@ class TokenizerStoreSpec extends SparkSpec {
     }
   }
 
-  test("replace is atomic: a crash between retire and publish is healed by the next save, and the old generation restores for readers' writers") {
+  // ── Publish protocol: a model generation + one manifest PUT ────────────
+
+  private def modelGen(path: String): String =
+    ServingManifest(path).get("model").asText()
+
+  test("a crash after the model generation write, before the PUT: the previous model serves and a re-save converges") {
     withWork { work =>
-      val path = work.resolve("g").toString
-      TokenizerStore.saveMerges(path,
-        BpeTrain.train(docs, "text", 3))
-      val gen1 = TokenizerStore.loadMerges(spark, path)
-      // simulate the crash window: retire live to _old, no publish
-      val live = new java.io.File(path)
-      val aside = new java.io.File(path + "_old")
-      java.nio.file.Files.move(live.toPath, aside.toPath)
-      // reader: fails loudly, names the recovery
-      val e = intercept[IllegalStateException](
-        TokenizerStore.loadMerges(spark, path))
-      assert(e.getMessage.contains("crashed mid-publish"))
-      // next writer heals: recoverCrash restores _old as live before
-      // staging, so even if the new save ALSO crashed pre-publish the
-      // artifact would be gen1, never nothing
-      TokenizerStore.saveMerges(path,
-        BpeTrain.train(docs, "text", 5))
-      val gen2 = TokenizerStore.loadMerges(spark, path)
+      val live = work.resolve("live").toString
+      val crashed = work.resolve("crashed").toString
+      TokenizerStore.saveMerges(live, BpeTrain.train(docs, "text", 3))
+      val gen1 = TokenizerStore.loadMerges(spark, live)
+      // the crashed save's disk: the previous version plus the complete,
+      // fsynced generation of the new model, named by no manifest
+      ServingManifest.copyTree(new java.io.File(live), new java.io.File(crashed))
+      TokenizerStore.saveMerges(live, BpeTrain.train(docs, "text", 5))
+      val staged = modelGen(live)
+      ServingManifest.copyTree(new java.io.File(live, staged),
+        new java.io.File(crashed, staged))
+      assert(TokenizerStore.loadMerges(spark, crashed) == gen1)
+      // the re-run save publishes its own generation; the crashed one is
+      // young, so GC keeps it (it could be a concurrent save in flight)
+      TokenizerStore.saveMerges(crashed, BpeTrain.train(docs, "text", 5))
+      val gen2 = TokenizerStore.loadMerges(spark, crashed)
+      assert(gen2 == TokenizerStore.loadMerges(spark, live))
       assert(gen2.size == 5 && gen2.take(3) == gen1)
-      assert(!aside.exists() && !new java.io.File(path + "_tmp").exists())
+      assert(new java.io.File(crashed, staged).exists())
     }
   }
 
-  test("a crash after staging completes (before the swap) publishes on the next writer touch") {
+  test("a torn newest manifest is skipped: the previous model serves and its slot burns") {
     withWork { work =>
-      val path = work.resolve("h").toString
-      // hand-build the post-crash state: complete _tmp, no live
+      val path = work.resolve("t").toString
       val trained = WordPieceTrain.train(docs, "text", numMerges = 2)
-      TokenizerStore.saveMerges(path, trained)
-      val tmp = new java.io.File(path + "_tmp")
-      java.nio.file.Files.move(new java.io.File(path).toPath, tmp.toPath)
-      intercept[IllegalStateException](TokenizerStore.loadMerges(spark, path))
-      // any writer entry heals — saving something else first recovers tmp
-      // as live, then replaces it
-      TokenizerStore.saveMerges(path, trained)
-      assert(TokenizerStore.loadMergeTable(spark, path).count() == 2)
-      assert(!tmp.exists())
+      TokenizerStore.saveMerges(path, trained, TokenizerStore.KindWordPiece)
+      val want = TokenizerStore.loadMerges(spark, path)
+      val bytes = java.nio.file.Files.readAllBytes(
+        ServingManifest.files(path).head.toPath)
+      java.nio.file.Files.write(
+        new java.io.File(path, "manifest-000000000002.json").toPath,
+        bytes.take(bytes.length - 3))
+      assert(TokenizerStore.loadMerges(spark, path) == want)
+      assert(TokenizerStore.kindOf(spark, path) == TokenizerStore.KindWordPiece)
+      TokenizerStore.saveUnigram(path, Seq(("a", 1L)), spark)
+      assert(ServingManifest.files(path).head.getName ==
+        "manifest-000000000003.json", "the torn slot burns its number")
+      assert(TokenizerStore.loadUnigram(spark, path) == Seq(("a", 1L)))
+    }
+  }
+
+  test("GC: a young unreferenced generation survives, the replaced model goes at once, an aged orphan sweeps") {
+    withWork { work =>
+      val path = work.resolve("g").toString
+      TokenizerStore.saveUnigram(path, Seq(("a", 2L), ("b", 1L)), spark)
+      val first = modelGen(path)
+      val orphan = new java.io.File(path, "gen-model-orphan")
+      orphan.mkdirs()
+      TokenizerStore.saveUnigram(path, Seq(("c", 3L)), spark)
+      assert(ServingManifest.generationDirs(path) ===
+        Set(modelGen(path), orphan.getName),
+        s"the replaced model $first must be gone, the young orphan kept")
+      ServingManifest.age(orphan)
+      TokenizerStore.saveUnigram(path, Seq(("d", 4L)), spark)
+      assert(ServingManifest.generationDirs(path) === Set(modelGen(path)))
+    }
+  }
+
+  test("a pre-manifest tokenizer layout fails loudly at every entry point and is never overwritten") {
+    withWork { work =>
+      val dir = work.resolve("legacy").toFile
+      new java.io.File(dir, "model").mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(dir, "_meta.json").toPath,
+        """{"kind":"bpe","version":1}""")
+      val path = dir.getPath
+      val merges = BpeTrain.train(docs, "text", 3)
+      val calls: Seq[() => Any] = Seq(
+        () => TokenizerStore.loadMergeTable(spark, path),
+        () => TokenizerStore.loadMerges(spark, path),
+        () => TokenizerStore.loadUnigram(spark, path),
+        () => TokenizerStore.loadServed(spark, path),
+        () => TokenizerStore.loadServedWithHash(spark, path),
+        () => TokenizerStore.kindOf(spark, path),
+        () => TokenizerStore.contentHash(spark, path),
+        () => TokenizerStore.exportGpt2(spark, path,
+          work.resolve("x").toString),
+        () => TokenizerStore.saveMerges(path, merges),
+        () => TokenizerStore.saveUnigram(path, Seq(("a", 1L)), spark))
+      calls.foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(path) && e.getMessage.contains("re-save"),
+          e.getMessage)
+      }
+      assert(dir.list().toSet == Set("model", "_meta.json"),
+        "the legacy layout must be left exactly as it was")
     }
   }
 

@@ -987,4 +987,59 @@ class ManifestStoreSpec extends SparkSpec {
     assert(store.snapshotAt(store.currentVersion - 2).count() === ids.size,
       "the retained history still reads")
   }
+
+  test("GC crashed between its two deletes: an expired version refuses as not retained, never a missing path") {
+    // one bucket under copy-on-write: every merge retires the previous
+    // generation, so once version 1 expires its init generation is retired
+    val dir = tmp("mfgccrash")
+    @volatile var crash = false
+    val store = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 1,
+        keepVersions = 2, writePolicy = WritePolicy.CopyOnWrite) {
+      override protected def betweenGcDeletes(): Unit =
+        if (crash) throw new RuntimeException("crash inside GC")
+    }
+    store.initialize(Cdc.initialLoad(Seq((1L, "one")).toDF("id", "payload")))
+    val init = new java.io.File(dir).list().filter(_.startsWith("gen-")).head
+    store.merge(batch((Cdc.Upsert, 10L, 2L, "two")))
+    crash = true
+    // version 3 publishes, then its GC dies after deleting the manifests
+    // past retention and before deleting the generations they retired
+    intercept[RuntimeException](store.merge(batch((Cdc.Upsert, 11L, 3L, "three"))))
+    crash = false
+    assert(store.currentVersion === 3L)
+    assert(state(store) === Set(1L -> "one", 2L -> "two", 3L -> "three"))
+    val e = intercept[IllegalStateException](store.snapshotAt(1L).collect())
+    assert(e.getMessage.contains("not retained"), e.getMessage)
+    // the retired generation is left named by no manifest: like a crashed
+    // write's, it sweeps once past the orphan grace
+    val left = new java.io.File(dir, init)
+    store.merge(batch((Cdc.Upsert, 12L, 4L, "four")))
+    assert(left.exists())
+    def age(f: java.io.File): Unit = {
+      f.setLastModified(System.currentTimeMillis() - 25 * 3600 * 1000L)
+      Option(f.listFiles()).foreach(_.foreach(age))
+    }
+    age(left)
+    store.merge(batch((Cdc.Upsert, 13L, 5L, "five")))
+    assert(!left.exists())
+  }
+
+  test("manifest bytes are pinned: a golden encoded store manifest") {
+    val dir = tmp("mfgolden")
+    val store = newStore(dir)
+    store.merge(batch((Cdc.Upsert, 10L, 4L, "four")))
+    val f = new java.io.File(dir, "manifest-000000000002.json")
+    val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val Array(payload, digest) = text.stripSuffix("\n").split("\n")
+    assert(digest === java.security.MessageDigest.getInstance("SHA-256")
+      .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    // generation names carry random nonces: pin everything else
+    val gens = "gen-[0-9a-z-]+".r.findAllIn(payload).toSeq.distinct
+    val canon = gens.zipWithIndex.foldLeft(payload) {
+      case (p, (g, i)) => p.replace(g, s"GEN$i") }
+    assert(canon === StoreGolden, canon)
+  }
+
+  private val StoreGolden =
+    """{"version":2,"floorSeq":0,"rewrite":false,"schema":"{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",\"nullable\":false,\"metadata\":{}},{\"name\":\"payload\",\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"_bucket\",\"type\":\"integer\",\"nullable\":true,\"metadata\":{}}]}","base":{"0":"GEN0","1":"GEN0","3":"GEN0"},"deltas":[{"seq":1,"gen":"GEN1"}]}"""
 }

@@ -911,4 +911,24 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
         === 0L, "window 1 is empty after its only doc retracted")
     } finally graft.util.Fs.rmTree(work.toFile)
   }
+
+  test("manifest bytes are pinned: a golden encoded maintainer manifest") {
+    val work = java.nio.file.Files.createTempDirectory("graft-vmmgold")
+    try {
+      val (_, maint) = fixture(work)
+      maint.processBatch(Seq((10L, "aa bb"), (11L, "cc aa")).toDF("doc_id", "text"), 0L)
+      maint.retract(Seq(10L).toDF("doc_id"))
+      val text = new String(java.nio.file.Files.readAllBytes(
+        manifestFilesIn(work).last.toPath), "UTF-8")
+      // the retraction generation carries a random nonce: pin the rest
+      val rgen = "rgen-[0-9a-f-]+".r.findFirstIn(text).get
+      val Array(payload, digest) = text.stripSuffix("\n").split("\n")
+      assert(digest === java.security.MessageDigest.getInstance("SHA-256")
+        .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+      assert(payload.replace(rgen, "RGEN") === MaintainerGolden, payload)
+    } finally graft.util.Fs.rmTree(work.toFile)
+  }
+
+  private val MaintainerGolden =
+    """{"version":2,"model":"d3c214860867fbd91eb278f8d30f30f9","history":[],"windows":[{"w":1,"batch":0,"model":"d3c214860867fbd91eb278f8d30f30f9","writer":"writer-0","gen":"wgen-1-b0"}],"retractions":["RGEN"]}"""
 }
