@@ -366,11 +366,12 @@ object ManifestGates extends GateFamily {
         maint.processBatch(run.batch2, 1L)
         // attach BEFORE materializing: a commit landing in between
         // would be ahead of the cursor and replay (at-least-once)
-        val feed = new graft.streaming.ManifestChangeFeed(maint,
+        val feed = new graft.streaming.StoreChangeFeed(
+          () => maint.currentVersion, maint.windowsBetween(s, _, _),
           run.path("cursor"))
         var replica = maint.readManifest(s).localCheckpoint(true)
         def drain(): Unit = {
-          val (changes, to) = feed.poll(s)
+          val (changes, to) = feed.poll()
           if (feed.cursor < to) Checkpoints.pinned(changes) { w =>
             // each poll applied TWICE before its ack — the crash-replay
             // between effect and commit must converge. Superseded

@@ -12,8 +12,8 @@ import graft.streaming.KeyedUpsertStore
   * tokens, not only unigram counts, so the packing stages dispatch on
   * this ADT instead of hard-wiring `Seq[(String, Long)]`. Constructed
   * directly after training, or loaded from a persisted artifact with
-  * [[TokenizerStore.loadServed]] (which dispatches on the artifact's
-  * own `_meta.json` kind).
+  * [[TokenizerStore.loadServed]] (which dispatches on the kind the
+  * artifact's manifest records).
   */
 sealed trait ServedModel
 

@@ -39,10 +39,6 @@ trait KeyedUpsertStore {
     * whether a compaction ran (never, on a store without deltas).
     */
   def compactIfNeeded(maxDeltas: Int = 16): Boolean
-  /** Byte-ratio sibling (delta bytes / base bytes); returns whether a
-    * compaction ran.
-    */
-  def compactIfDeltaRatio(maxRatio: Double = 0.2): Boolean
 }
 
 /** How a [[ManifestUpsertStore]] applies a merge — the two write modes
@@ -225,8 +221,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       val version = n.get("version").asLong()
       Manifest(version, n.get("schema").asText(), base, deltas,
         Option(n.get("floorSeq")).map(_.asLong()).getOrElse(0L),
-        // a manifest without the field can record only one kind of
-        // rewrite: an initialization, whose generation carries its version
+        // a manifest without the field predates it and can record only
+        // one kind of rewrite: an initialization, whose generation was
+        // then named `gen-<version>-init-<nonce>`
         Option(n.get("rewrite")).map(_.asBoolean())
           .getOrElse(base.values.exists(_.startsWith(s"gen-$version-init-"))))
     }
@@ -254,16 +251,6 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         s"$keepVersions) or never existed"))
 
   // ── Generations ──────────────────────────────────────────────────────────
-
-  /** Generation names carry a random nonce so CONCURRENT writers racing
-    * the same commit never collide on the data write either — without it
-    * both racers computed the same dir name and corrupted each other's
-    * parquet output before the manifest conflict could fire (found by the
-    * race spec). A crashed/lost racer's uniquely-named dir is unreferenced
-    * garbage the next GC sweeps.
-    */
-  private def genName(v: Long, tag: String): String =
-    s"gen-$v-$tag-" + java.util.UUID.randomUUID().toString
 
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(bucketCol, pmod(hash(pkCols.map(col): _*), lit(numBuckets)))
@@ -310,7 +297,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val v = manifests.state()._2
     val data = withBucket(initialLoad.drop(Cdc.ChangeType, Cdc.TransactionId))
       .repartition(col(bucketCol))
-    val gen = genName(v, "init")
+    val gen = graft.util.ManifestLog.generationName("init")
     data.write.partitionBy(bucketCol).mode("overwrite")
       .parquet(new java.io.File(root, gen).getPath)
     // data durable BEFORE the commit record references it (ADVICE r10)

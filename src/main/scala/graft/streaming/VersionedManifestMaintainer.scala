@@ -589,7 +589,9 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
 
   /** CHANGE FEED over manifest versions — the training consumer's tail
     * ("give me everything that changed since the version my last run
-    * trained at"), the [[StoreChangeFeed]] idea applied to the manifest.
+    * trained at"). A durable consumer tails it with the one change-feed
+    * cursor class, [[StoreChangeFeed]], built over `currentVersion` and
+    * this method.
     * Since r19 the feed carries the DELETION delta too (VERDICT r18 #1):
     * the pre-r19 feed reported only new/rewritten span sets, so a
     * replica materialized at `fromVersion` and patched with the feed
@@ -959,47 +961,6 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
         .exists(committedWindows.contains))
       .foreach(_.delete())
   }
-}
-
-/** Incremental consumer of the MANIFEST change feed — [[StoreChangeFeed]]
-  * applied to [[VersionedManifestMaintainer]] versions, so a
-  * training-serving replica is a deployable LOOP, not an API: [[poll]]
-  * returns the deletion-propagating [[VersionedManifestMaintainer
-  * .windowsBetween]] frame in `(cursor, current]`, the caller applies it
-  * with [[VersionedManifestMaintainer.applyFeed]] and makes the effect
-  * durable, then [[commit]] advances the durable cursor ([[TxidLedger]] —
-  * fsynced, restart-safe). At-least-once: a crash between effect and ack
-  * replays the window, and applyFeed's replace-then-delete converges on
-  * the replay — the same contract as the store feed, gated by
-  * `q_manifest_feed_replica`.
-  *
-  * Attach BEFORE materializing the replica (the [[StoreChangeFeed]]
-  * baseline rule): the cursor baselines at the manifest version current
-  * at attach, so a commit landing between attach and the snapshot is
-  * AHEAD of the cursor and replays — which applyFeed absorbs (replacing
-  * a window the replica already holds is idempotent). A cursor the
-  * retention horizon has passed fails loudly at poll (windowsBetween
-  * refuses an unretained fromVersion): the consumer fell behind
-  * `keepVersions` — retention is the polling-cadence contract, exactly
-  * the store feed's compaction-horizon rule.
-  */
-class ManifestChangeFeed(maint: VersionedManifestMaintainer,
-    cursorPath: String) {
-  private val ledger = new TxidLedger(cursorPath)
-  if (ledger.read() < 0L) ledger.commit(maint.currentVersion)
-
-  /** Last manifest version this consumer durably acknowledged. */
-  def cursor: Long = math.max(0L, ledger.read())
-
-  /** `(changes, toVersion)`: the feed rows in `(cursor, toVersion]`.
-    * Apply downstream, make the effect durable, then [[commit]](to).
-    */
-  def poll(spark: SparkSession): (DataFrame, Long) = {
-    val to = maint.currentVersion
-    (maint.windowsBetween(spark, cursor, to), to)
-  }
-
-  def commit(version: Long): Unit = ledger.commit(version)
 }
 
 object VersionedManifestMaintainer {

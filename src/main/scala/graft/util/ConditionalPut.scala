@@ -11,7 +11,9 @@ package graft.util
   * callers' format contract.
   *
   * Callers: [[ManifestLog.put]], the one manifest PUT of the keyed store,
-  * the manifest maintainer, the ANN index and the tokenizer store; and
+  * the manifest maintainer, the ANN index, the tokenizer store and the
+  * txid ledger ([[graft.streaming.TxidLedger]], the CDC watermark and
+  * every change-feed cursor); and
   * [[graft.streaming.VersionedManifestMaintainer]]'s window claims.
   *
   * Returns true when the slot was claimed, false when occupied. A crash

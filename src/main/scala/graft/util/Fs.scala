@@ -131,13 +131,19 @@ object Fs {
     * protocol step, which the join guarantees.
     */
   def fsyncFiles(files: Seq[java.io.File]): Unit =
-    if (files.size <= 1) files.foreach(fsyncFile)
+    inParallel(files)(fsyncFile)
+
+  /** Runs `op` on every item on [[fsyncPool]] and waits for all of them;
+    * one item or none runs on the caller's thread. The first failure, in
+    * item order, surfaces unwrapped from its `ExecutionException`, so
+    * callers see the original `IOException`.
+    */
+  private def inParallel[A](items: Seq[A])(op: A => Unit): Unit =
+    if (items.size <= 1) items.foreach(op)
     else {
       import scala.jdk.CollectionConverters._
       val tasks: Seq[java.util.concurrent.Callable[Unit]] =
-        files.map(f => (() => fsyncFile(f)): java.util.concurrent.Callable[Unit])
-      // invokeAll waits for every task; failures surface at .get —
-      // unwrapped so callers still see the original IOException
+        items.map(a => (() => op(a)): java.util.concurrent.Callable[Unit])
       fsyncPool.invokeAll(tasks.asJava).asScala.foreach { f =>
         try f.get()
         catch {
@@ -169,20 +175,7 @@ object Fs {
     * handles (and latches) unsupported-FS errors itself, so the parallel
     * form is behaviorally identical to the serial loop it replaces.
     */
-  def fsyncDirs(dirs: Seq[java.io.File]): Unit =
-    if (dirs.size <= 1) dirs.foreach(fsyncDir)
-    else {
-      import scala.jdk.CollectionConverters._
-      val tasks: Seq[java.util.concurrent.Callable[Unit]] =
-        dirs.map(d => (() => fsyncDir(d)): java.util.concurrent.Callable[Unit])
-      fsyncPool.invokeAll(tasks.asJava).asScala.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      }
-    }
+  def fsyncDirs(dirs: Seq[java.io.File]): Unit = inParallel(dirs)(fsyncDir)
 
   /** fsync every regular file and directory under `root` (bottom-up), so
     * a commit record published AFTER this call can never reference torn

@@ -10,8 +10,9 @@ import graft.streaming.{CommitConflictException, StoreTelemetry}
 /** The one publish protocol every durable artifact commits through: the
   * keyed store ([[graft.streaming.ManifestUpsertStore]]), the manifest
   * maintainer ([[graft.streaming.VersionedManifestMaintainer]]), the ANN
-  * index ([[graft.operators.AnnIndex]]) and the tokenizer store
-  * ([[graft.operators.TokenizerStore]]). It is the Iceberg/Delta shape,
+  * index ([[graft.operators.AnnIndex]]), the tokenizer store
+  * ([[graft.operators.TokenizerStore]]) and the txid ledger
+  * ([[graft.streaming.TxidLedger]]). It is the Iceberg/Delta shape,
   * with no rename anywhere, so it is as correct on an object store as on a
   * local file system:
   *
@@ -43,7 +44,7 @@ import graft.streaming.{CommitConflictException, StoreTelemetry}
   *
   * @param keepVersions complete manifests retained, newest first: the
   *   time-travel horizon of the store and the maintainer; 1 for artifacts
-  *   with no history API (the ANN index, the tokenizer)
+  *   with no history API (the ANN index, the tokenizer, the txid ledger)
   * @param orphanGraceMs a dir NO manifest ever named is swept only once its
   *   newest mtime is this old: it may be a concurrent writer's in-flight
   *   commit (its PUT comes after its data write). Age is the only signal

@@ -198,8 +198,8 @@ class CdcStreamSpec extends SparkSpec {
       "debt hit the threshold: processBatch must have compacted")
     assert(store.snapshot().as[(Long, String)].collect().toSet ===
       Set((1L, "ONE"), (2L, "TWO")))
-    // byte-ratio policy: one huge backfill delta triggers compaction even
-    // at delta-count 1 (the case the count policy misses)
+    // byte-ratio policy, called on the store: one huge backfill delta is
+    // due even at delta-count 1 (the case the count policy misses)
     val dir2 = tmp("morauto2")
     val store2 = new ManifestUpsertStore(spark, dir2, Seq("id"), numBuckets = 4)
     store2.initialize(Cdc.initialLoad(
@@ -208,12 +208,13 @@ class CdcStreamSpec extends SparkSpec {
     val big = (1L to 500L).map(i => (i, s"p$i"))
     val job2 = new CdcStreamJob(spark,
       source = () => big.toDF("id", "payload"),
-      store = store2, ledger = ledger2, keyJoin = Seq("id" -> "id"),
-      autoCompactRatio = Some(0.5))
+      store = store2, ledger = ledger2, keyJoin = Seq("id" -> "id"))
     job2.processBatch(big.map { case (i, _) => (i, 10L) }
       .toDF("id", Cdc.TransactionId), 0L)
-    assert(store2.deltaCount === 0,
-      "backfill delta >> base: ratio policy must have compacted")
+    assert(store2.deltaCount === 1)
+    assert(store2.compactIfDeltaRatio(0.5),
+      "backfill delta >> base: the ratio policy must be due")
+    assert(store2.deltaCount === 0)
     assert(store2.snapshot().count() === 500L)
   }
 
@@ -522,20 +523,85 @@ class CdcStreamSpec extends SparkSpec {
     assert(spark.conf.getOption("spark.sql.sources.partitionOverwriteMode") == before)
   }
 
-  test("txid ledger: an empty or unparseable file fails read() loudly, naming the path and the bytes") {
+  /** A ledger's manifest files, oldest first. */
+  private def ledgerManifests(path: String): Seq[java.io.File] =
+    Option(new java.io.File(path).listFiles((_: java.io.File, n: String) =>
+      n.startsWith("manifest-"))).toSeq.flatten.sortBy(_.getName)
+
+  test("txid ledger: a pre-manifest single-file ledger is refused by read() and commit(), naming the path, and left byte-identical") {
+    for (held <- Seq("", "4x", "42")) {
+      val path = tmp("ledger-file") + "/txid"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), held)
+      val ledger = new TxidLedger(path)
+      for (op <- Seq[() => Unit](() => ledger.read(), () => ledger.commit(7L))) {
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains(path) &&
+          e.getMessage.contains(s"'$held'"), e.getMessage)
+      }
+      assert(java.nio.file.Files.readString(java.nio.file.Paths.get(path)) == held)
+    }
+  }
+
+  test("txid ledger: a dir of only torn entries is refused; a torn newest entry over a complete one reads the complete one") {
     val path = tmp("ledger-torn") + "/txid"
     val ledger = new TxidLedger(path)
-    assert(ledger.read() == -1L)
+    assert(ledger.read() == -1L, "no manifest: nothing committed yet")
     ledger.commit(42L)
-    assert(ledger.read() == 42L && !new java.io.File(path + ".tmp").exists())
-    // what a power loss between an unforced write and its rename leaves,
-    // and a garbled value: never a bare NumberFormatException
-    for (torn <- Seq("", "4x")) {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), torn)
-      val e = intercept[IllegalStateException](ledger.read())
-      assert(e.getMessage.contains(path) &&
-        e.getMessage.contains(s"${torn.length} byte(s)"), e.getMessage)
+    val complete = ledgerManifests(path).last
+    val bytes = java.nio.file.Files.readAllBytes(complete.toPath)
+    // a torn newest entry: a prefix of a complete one, in the next slot
+    val next = new java.io.File(path, "manifest-000000000002.json")
+    java.nio.file.Files.write(next.toPath, bytes.take(bytes.length / 2))
+    assert(ledger.read() == 42L)
+    // every entry torn: refused by both, never read as -1
+    java.nio.file.Files.write(complete.toPath, bytes.take(bytes.length - 3))
+    for (op <- Seq[() => Unit](() => ledger.read(), () => ledger.commit(43L))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(path) && e.getMessage.contains("torn"),
+        e.getMessage)
     }
+    assert(ledgerManifests(path).map(_.getName) ==
+      Seq("manifest-000000000001.json", "manifest-000000000002.json"))
+  }
+
+  test("txid ledger: each commit leaves exactly one complete manifest after GC") {
+    val path = tmp("ledger-gc") + "/txid"
+    val ledger = new TxidLedger(path)
+    for (txid <- Seq(5L, 9L, 12L)) {
+      ledger.commit(txid)
+      assert(ledger.read() == txid)
+      val files = ledgerManifests(path)
+      assert(files.size == 1, files.map(_.getName).toString)
+      assert(new String(java.nio.file.Files.readAllBytes(files.head.toPath),
+        "UTF-8").contains(s""""txid":$txid"""))
+    }
+    // a restarted process reads the same watermark
+    assert(new TxidLedger(path).read() == 12L)
+    assert(new java.io.File(path).list().toSeq ==
+      Seq("manifest-000000000003.json"), "no staging debris is left")
+  }
+
+  test("txid ledger: a reader racing the writer's commits always reads a committed watermark") {
+    val path = tmp("ledger-race") + "/txid"
+    val ledger = new TxidLedger(path)
+    ledger.commit(0L)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    var reads = 0L
+    val reader = new Thread(() => {
+      val other = new TxidLedger(path)
+      var last = 0L
+      try while (!stop.get()) {
+        val v = other.read()
+        assert(v >= last, s"read $v after $last")
+        last = v; reads += 1
+      } catch { case t: Throwable => failures.add(t) }
+    })
+    reader.start()
+    try (1L to 300L).foreach(ledger.commit)
+    finally { stop.set(true); reader.join() }
+    assert(failures.isEmpty, s"${failures.peek()}")
+    assert(reads > 0 && ledger.read() == 300L)
   }
 
   test("stale rows at/below the committed watermark are detected, not silent") {
@@ -989,7 +1055,6 @@ class CdcStreamSpec extends SparkSpec {
       if (compactFails) throw new CommitConflictException("lost maintenance race")
       false
     }
-    def compactIfDeltaRatio(maxRatio: Double): Boolean = false
   }
 
   test("compaction losing the concurrent-maintenance race is a policy no-op (r12)") {

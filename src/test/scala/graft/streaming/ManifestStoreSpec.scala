@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.cdc.Cdc
@@ -197,7 +198,7 @@ class ManifestStoreSpec extends SparkSpec {
       }.toMap
     }
     val initGen = new java.io.File(dir).listFiles(
-      (_: java.io.File, n: String) => n.startsWith("gen-1-init")).head
+      (_: java.io.File, n: String) => n.startsWith("gen-init-")).head
     val before = md5All(initGen)
     val want = state(store)
     store.compact()
@@ -623,20 +624,39 @@ class ManifestStoreSpec extends SparkSpec {
     intercept[IllegalStateException](store.changesBetween(v, store.currentVersion))
     // ...but within the new history it works
     assert(store.changesBetween(v + 1, store.currentVersion).count() === 1)
-    // the same store with manifests that carry no rewrite flag (the format
-    // before the flag): the re-initialization is still found, by the init
-    // generation named after its own version
+    // the same store in the format before the flag: manifests carry no
+    // rewrite flag, and an initialization's generation is named after its
+    // own version (`gen-<v>-init-<nonce>`). The re-initialization is still
+    // found, by that name
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val oldNames = scala.collection.mutable.Map.empty[String, String]
     new java.io.File(dir).listFiles((_: java.io.File, n: String) =>
-      n.matches("manifest-\\d{12}\\.json")).foreach { f =>
+      n.matches("manifest-\\d{12}\\.json")).sortBy(_.getName).foreach { f =>
       val s = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       val node = mapper.readTree(s.substring(0, s.lastIndexOf('\n', s.length - 2)))
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      assert(node.remove("rewrite") != null, s"${f.getName} has no flag")
+      val flag = node.remove("rewrite")
+      assert(flag != null, s"${f.getName} has no flag")
+      // oldest manifest first: an init generation first named by a rewrite
+      // was written by it; one first named by a merge predates the
+      // retained window and was written by the first initialization, v1
+      val version = if (flag.asBoolean()) node.get("version").asLong() else 1L
+      val base = node.get("base").asInstanceOf[
+        com.fasterxml.jackson.databind.node.ObjectNode]
+      base.fieldNames().asScala.toList.foreach { k =>
+        val g = base.get(k).asText()
+        if (g.startsWith("gen-init-"))
+          base.put(k, oldNames.getOrElseUpdate(g,
+            s"gen-$version-init-" + g.stripPrefix("gen-init-")))
+      }
       val payload = mapper.writeValueAsString(node)
       val digest = java.security.MessageDigest.getInstance("SHA-256")
         .digest(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
       java.nio.file.Files.write(f.toPath, s"$payload\n$digest\n".getBytes("UTF-8"))
+    }
+    assert(oldNames.size === 2, s"two initializations: $oldNames")
+    oldNames.foreach { case (g, old) =>
+      assert(new java.io.File(dir, g).renameTo(new java.io.File(dir, old)))
     }
     assert(state(store) === Set((50L, "fresh"), (51L, "post")))
     intercept[IllegalStateException](store.changesBetween(v, store.currentVersion))

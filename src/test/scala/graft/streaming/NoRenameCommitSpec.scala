@@ -5,13 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every durable artifact commits by generation dirs plus one conditional
   * manifest PUT, never by renaming files into place. This guard keeps a
   * rename-based protocol from coming back: no source file under
-  * `src/main/scala/graft/` may call `Files.move` or use `ATOMIC_MOVE`,
-  * except `CdcStream.scala`, whose `TxidLedger` still renames its temp
-  * file.
+  * `src/main/scala/graft/` may call `Files.move` or use `ATOMIC_MOVE`.
   */
 class NoRenameCommitSpec extends AnyFunSuite {
 
-  test("no rename-based commit under graft/ (TxidLedger excepted)") {
+  test("no rename-based commit under graft/") {
     val root = new java.io.File("src/main/scala/graft")
     def sources(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
@@ -25,7 +23,7 @@ class NoRenameCommitSpec extends AnyFunSuite {
       all.exists(_.getName == "AnnIndex.scala"),
       s"no sources found under ${root.getAbsolutePath}")
     val offenders = for {
-      f <- all if f.getName != "CdcStream.scala"
+      f <- all
       (line, n) <- java.nio.file.Files.readString(f.toPath)
         .linesIterator.zipWithIndex
       if line.contains("ATOMIC_MOVE") || line.contains("Files.move")

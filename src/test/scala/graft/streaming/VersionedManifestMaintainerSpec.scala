@@ -621,27 +621,27 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
     } finally graft.util.Fs.rmTree(work.toFile)
   }
 
-  test("ManifestChangeFeed: the cursor is durable across restarts, a replayed poll converges, and falling behind retention is loud") {
+  test("StoreChangeFeed over the maintainer: the cursor is durable across restarts, a replayed poll converges, and falling behind retention is loud") {
     val work = java.nio.file.Files.createTempDirectory("graft-vmm18")
     try {
       val (_, maint) = fixture(work) // keepVersions = 3 default
       maint.processBatch(
         Seq((10L, "ab ba"), (11L, "aa cc")).toDF("doc_id", "text"), 0L)
-      val feed = new ManifestChangeFeed(maint,
-        work.resolve("cursor").toString)
+      val feed = new StoreChangeFeed(() => maint.currentVersion,
+        maint.windowsBetween(spark, _, _), work.resolve("cursor").toString)
       var replica = maint.readManifest(spark).localCheckpoint(true)
       assert(feed.cursor === maint.currentVersion,
         "the cursor baselines at the attach-time version")
-      val (c0, t0) = feed.poll(spark)
+      val (c0, t0) = feed.poll()
       assert(feed.cursor === t0 && c0.isEmpty, "nothing to poll yet")
       // a window commit AND a retraction land; the consumer restarts
       // (same cursor path) before draining — the cursor must persist
       maint.processBatch(Seq((20L, "ca bc")).toDF("doc_id", "text"), 1L)
       maint.retract(Seq(11L).toDF("doc_id"))
-      val feed2 = new ManifestChangeFeed(maint,
-        work.resolve("cursor").toString)
+      val feed2 = new StoreChangeFeed(() => maint.currentVersion,
+        maint.windowsBetween(spark, _, _), work.resolve("cursor").toString)
       assert(feed2.cursor === feed.cursor, "cursor survives the restart")
-      val (c1, t1) = feed2.poll(spark)
+      val (c1, t1) = feed2.poll()
       val w = c1.localCheckpoint(true)
       assert(w.select("change").as[String].collect().toSet ===
         Set("new", "retracted"))
@@ -659,7 +659,7 @@ class VersionedManifestMaintainerSpec extends SparkSpec {
           Seq((30L + b, s"${"a" * (b + 1)} ${"b" * (b + 2)}"))
             .toDF("doc_id", "text"), b.toLong)
       }
-      val ex = intercept[IllegalStateException](feed2.poll(spark))
+      val ex = intercept[IllegalStateException](feed2.poll())
       assert(ex.getMessage.contains("not retained"), ex.getMessage)
     } finally graft.util.Fs.rmTree(work.toFile)
   }

@@ -19,4 +19,21 @@ class FsSpec extends AnyFunSuite {
         ex.getMessage.contains(s"'$bad'"), ex.getMessage)
     }
   }
+
+  test("parallel fsync: the first failure surfaces as the original IOException, serially or in parallel") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fsync").toFile
+    try {
+      val ok = (1 to 3).map { i =>
+        val f = new java.io.File(dir, s"f$i"); f.createNewFile(); f
+      }
+      val missing = new java.io.File(dir, "missing")
+      Fs.fsyncFiles(ok)
+      Fs.fsyncDirs(Seq(dir, dir))
+      for (batch <- Seq(Seq(missing), ok :+ missing, missing +: ok)) {
+        val e = intercept[java.io.IOException](Fs.fsyncFiles(batch))
+        assert(e.isInstanceOf[java.nio.file.NoSuchFileException] &&
+          e.getMessage.contains("missing"), e.toString)
+      }
+    } finally Fs.rmTree(dir)
+  }
 }
