@@ -238,7 +238,7 @@ object AnnIndex {
     if (root.mkdirs()) Fs.fsyncDir(root.getAbsoluteFile.getParentFile)
     val base = writeGen(path, "base") { d =>
       val assignments = new java.io.File(d, "assignments").getPath
-      assigned.write.partitionBy("_cell").mode("overwrite").parquet(assignments)
+      Fs.writeParquet(assigned, assignments, "_cell")
       writeCentroids(spark, d, model, assignments)
     }
     val quantizer = writeGen(path, "quantizer") { d =>
@@ -297,11 +297,10 @@ object AnnIndex {
   private def writeCodebooks(spark: SparkSession, quantizerDir: java.io.File,
       codebooks: Array[Array[Array[Float]]]): Unit = {
     import spark.implicits._
-    codebooks.zipWithIndex.flatMap { case (sub, s) =>
+    Fs.writeParquet(codebooks.zipWithIndex.flatMap { case (sub, s) =>
       sub.zipWithIndex.map { case (center, c) => (s, c, center) }
-    }.toSeq.toDF("sub", "code", "center")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(quantizerDir, "codebooks").getPath)
+    }.toSeq.toDF("sub", "code", "center").coalesce(1),
+      new java.io.File(quantizerDir, "codebooks").getPath)
   }
 
   private def readCodebooks(spark: SparkSession,
@@ -445,14 +444,14 @@ object AnnIndex {
         .map(d => d.getName.stripPrefix("_cell=").toInt ->
           Fs.parquetRowCount(d))
         .toMap
-    model.clusterCenters.zipWithIndex
+    val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) =>
         (i, c.toArray.map(_.toFloat), counts.getOrElse(i, 0L))
       }.toSeq
       .toDF("_cell", "_centroid", "n_vectors")
       .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(new java.io.File(indexDir, "centroids").getPath)
+    Fs.writeParquet(centroids,
+      new java.io.File(indexDir, "centroids").getPath)
   }
 
   /** An index is maintained by the MANUAL API (appendIvf/deleteIvf) or
@@ -548,7 +547,7 @@ object AnnIndex {
         pq_encode(col(ix.meta.vecCol), arts.codebooks))
       else assigned
     val gen = writeGen(path, "append") { d =>
-      encoded.write.partitionBy("_cell").mode("overwrite").parquet(d.getPath)
+      Fs.writeParquet(encoded, d.getPath, "_cell")
     }
     // an empty batch must not publish: a rows-less delta (bare _SUCCESS)
     // has no inferable schema and would break every later read
@@ -601,8 +600,7 @@ object AnnIndex {
     val visible = visibleAssignments(spark, path, ix)
     val base = writeGen(path, "base") { d =>
       val assignments = new java.io.File(d, "assignments")
-      visible.write.partitionBy("_cell")
-        .mode("overwrite").parquet(assignments.getPath)
+      Fs.writeParquet(visible, assignments.getPath, "_cell")
       // All-deleted case: the partitioned write above emitted ZERO part
       // files (schema-less dir, unreadable). Detected from the dir listing
       // AFTER the single write — not via a visible.isEmpty pre-probe, which
@@ -610,8 +608,7 @@ object AnnIndex {
       // (ADVICE r11). One empty unpartitioned file keeps the schema on
       // disk and reads fine (_cell becomes a data column).
       if (!hasCells(assignments))
-        visible.repartition(1).write.mode("overwrite")
-          .parquet(assignments.getPath)
+        Fs.writeParquet(visible.repartition(1), assignments.getPath)
       writeCentroids(spark, d, model, assignments.getPath)
     }
     val folded = ix.deltas.flatMap(d => d.batch.map(b => s"${d.kind}$b"))
@@ -737,8 +734,8 @@ object AnnIndex {
   private def publishTombstone(path: String, ix: Index, ids: DataFrame,
       batch: Option[Long]): Unit = {
     val gen = writeGen(path, "tomb") { d =>
-      ids.select(col(ix.meta.idCol)).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(d.getPath)
+      Fs.writeParquet(ids.select(col(ix.meta.idCol)).distinct().coalesce(1),
+        d.getPath)
     }
     // an EMPTY delete batch must not publish (it would add one dir read
     // per search and one debt unit for nothing). Emptiness is read from

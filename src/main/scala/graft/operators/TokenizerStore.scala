@@ -99,7 +99,7 @@ object TokenizerStore {
       s"merge table needs rank/l/r columns, got ${merges.columns.mkString(",")}")
     publishModel(path, kind) { modelDir =>
       // vocabulary-bounded rows → one file; readable by any engine
-      merges.coalesce(1).write.mode("overwrite").parquet(modelDir.getPath)
+      Fs.writeParquet(merges.coalesce(1), modelDir.getPath)
     }
   }
 
@@ -114,10 +114,9 @@ object TokenizerStore {
     require(model.nonEmpty, "refusing to persist an empty unigram model")
     import spark.implicits._
     publishModel(path, KindUnigram) { modelDir =>
-      model.zipWithIndex
+      Fs.writeParquet(model.zipWithIndex
         .map { case ((p, c), i) => (i.toLong, p, c) }
-        .toDF("ord", "piece", "cnt")
-        .coalesce(1).write.mode("overwrite").parquet(modelDir.getPath)
+        .toDF("ord", "piece", "cnt").coalesce(1), modelDir.getPath)
     }
   }
 

@@ -138,8 +138,8 @@ object WritePolicy {
   *   defense, defaulting to days); a crashed writer's orphan just waits
   *   out the grace before the next GC reclaims it. A writer that LOSES
   *   the commit race deletes its own generation immediately, and a
-  *   generation that only manifests past retention name is deleted as
-  *   soon as the last of them goes — the grace only covers crashes. Age
+  *   generation that only manifests past retention name is deleted by
+  *   the first GC that sees them expired — the grace only covers crashes. Age
   *   is the NEWEST mtime in the dir tree (a dir's own mtime is set at job
   *   START, and a long parquet write would look stale by its root alone —
   *   review r10), and the default is a day, sized for multi-hour backfill
@@ -257,17 +257,18 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
 
   private def rmTree(f: java.io.File): Unit = graft.util.Fs.rmTree(f)
 
-  /** The shared GC pass ([[graft.util.ManifestLog.gc]]): manifests past
-    * `keepVersions` first, then the generations only they named (at once:
-    * every copy-on-write merge and compaction retires the buckets it
-    * rewrites, and waiting out the grace on those would keep a day of
-    * rewrites on disk), then aged orphans, torn debris and staging files.
+  /** The shared GC pass ([[graft.util.ManifestLog.gc]]): the generations
+    * only manifests past `keepVersions` name first (at once: every
+    * copy-on-write merge and compaction retires the buckets it rewrites,
+    * and waiting out the grace on those would keep a day of rewrites on
+    * disk), then those manifests, then aged orphans, torn debris and
+    * staging files.
     */
   private def gc(): Unit = manifests.gc()
 
-  /** Test seam: runs inside GC after manifests past retention are deleted
-    * and before their generations are. No-op in production; the GC spec
-    * crashes there.
+  /** Test seam: runs inside GC after the generations only manifests past
+    * retention name are deleted and before those manifests are. No-op in
+    * production; the GC spec crashes there.
     */
   protected def betweenGcDeletes(): Unit = {}
 
@@ -298,8 +299,8 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val data = withBucket(initialLoad.drop(Cdc.ChangeType, Cdc.TransactionId))
       .repartition(col(bucketCol))
     val gen = graft.util.ManifestLog.generationName("init")
-    data.write.partitionBy(bucketCol).mode("overwrite")
-      .parquet(new java.io.File(root, gen).getPath)
+    graft.util.Fs.writeParquet(data, new java.io.File(root, gen).getPath,
+      bucketCol)
     // data durable BEFORE the commit record references it (ADVICE r10)
     graft.util.Fs.fsyncTree(new java.io.File(root, gen))
     val buckets = bucketDirsOf(gen)
@@ -397,8 +398,8 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       .repartition(col(bucketCol))
     val gen = graft.util.ManifestLog.generationName("delta")
     val tWrite = System.nanoTime()
-    data.write.partitionBy(bucketCol).mode("overwrite")
-      .parquet(new java.io.File(root, gen).getPath)
+    graft.util.Fs.writeParquet(data, new java.io.File(root, gen).getPath,
+      bucketCol)
     // data durable BEFORE the commit record references it (ADVICE r10)
     graft.util.Fs.fsyncTree(new java.io.File(root, gen))
     StoreTelemetry.addPhase("merge_write", (System.nanoTime() - tWrite) / 1e9)
@@ -504,7 +505,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     val gen = graft.util.ManifestLog.generationName(tag)
     val genDir = new java.io.File(root, gen)
     val tWrite = System.nanoTime()
-    data.write.partitionBy(bucketCol).mode("overwrite").parquet(genDir.getPath)
+    graft.util.Fs.writeParquet(data, genDir.getPath, bucketCol)
     graft.util.Fs.fsyncTree(genDir)
     phases.foreach { case (w, _) =>
       StoreTelemetry.addPhase(w, secondsSince(tWrite)) }

@@ -493,7 +493,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
           val packed = ManifestPipeline
             .packWindow(fresh, idCol, textCol, model(spark), window,
               seedOf(batchId), budget, byteLevel)
-          packed.write.mode("overwrite").parquet(genDir(gen).getPath)
+          Fs.writeParquet(packed, genDir(gen).getPath)
           // free the pack kernel's internal checkpoint blocks promptly —
           // a long-running stream must not wait for a driver GC (r19)
           Checkpoints.release(packed)
@@ -723,9 +723,9 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
   def retract(ids: DataFrame): Unit = {
     root.mkdirs()
     val gen = s"rgen-${java.util.UUID.randomUUID()}"
-    ids.select(idCol).distinct()
-      .coalesce(1) // ledger entries are takedown-batch-sized
-      .write.mode("overwrite").parquet(genDir(gen).getPath)
+    // ledger entries are takedown-batch-sized
+    Fs.writeParquet(ids.select(idCol).distinct().coalesce(1),
+      genDir(gen).getPath)
     Fs.fsyncTree(genDir(gen))
     if (!hasSpans(gen)) { Fs.rmTree(genDir(gen)); return }
     manifests.commit { (m, slot) =>
@@ -792,7 +792,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       repacked: DataFrame, readEntry: WindowEntry)(
       stamp: WindowEntry => WindowEntry): Unit = {
     val gen = s"wgen-$windowId-rw-${java.util.UUID.randomUUID()}"
-    repacked.write.mode("overwrite").parquet(genDir(gen).getPath)
+    Fs.writeParquet(repacked, genDir(gen).getPath)
     Fs.fsyncTree(genDir(gen))
     // emptiness is a ROW property, not a file property: Spark may write a
     // zero-row part file for an empty frame, and a window emptied by a

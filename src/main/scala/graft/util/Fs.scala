@@ -1,11 +1,35 @@
 package graft.util
 
-/** Local-filesystem tree helpers shared by the store/index publish
-  * protocols and the bench/gate temp-dir hygiene — one definition, so a
-  * future behavioral fix (symlink safety, retry semantics) lands once
-  * (review r10: six private copies had accumulated).
+/** Local-filesystem helpers shared by the store/index publish protocols
+  * (the one parquet write, fsync, tree walks) and the bench/gate temp-dir
+  * hygiene — one definition, so a future behavioral fix (symlink
+  * safety, retry semantics) lands once (review r10: six private copies
+  * had accumulated).
   */
 object Fs {
+
+  /** The two Hadoop options [[writeParquet]] puts on each write: the
+    * `file:` scheme resolves to [[ForkFreeLocalFileSystem]], and past the
+    * FileSystem cache, whose key ignores the conf and would hand back the
+    * stock instance.
+    */
+  private[util] val ForkFreeWriteOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The one way engine code writes a DataFrame to parquet: overwrite
+    * `path`, optionally partitioned, with [[ForkFreeWriteOptions]] on the
+    * writer. Spark copies writer options into the write job's Hadoop conf,
+    * so the driver-side committer and the task-side parquet writers both
+    * set permissions through NIO and fork no `chmod`. The override is per
+    * write: the session, its conf and other schemes are untouched, and
+    * `.crc` sidecars are still written. Durability (`fsyncTree`) and the
+    * commit stay with the caller.
+    */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, path: String,
+      partitionBy: String*): Unit =
+    df.write.options(ForkFreeWriteOptions).partitionBy(partitionBy: _*)
+      .mode("overwrite").parquet(path)
 
   /** Recursive delete; tolerates a missing path. */
   def rmTree(f: java.io.File): Unit = {

@@ -33,10 +33,14 @@ import graft.streaming.{CommitConflictException, StoreTelemetry}
   *    slot always conflicts, even a torn occupant, so torn slots BURN their
   *    number and version gaps are part of the format. [[commit]] is the
   *    bounded, jittered retry loop callers rebase in.
-  *  - GC ([[gc]]) runs strictly after a publish is readable: manifests past
-  *    retention go first, then the generations only they named, so a crash
-  *    between the two leaves unreferenced garbage, never a readable
-  *    manifest whose data is gone.
+  *  - RETENTION: readers serve only the newest `keepVersions` complete
+  *    manifests ([[complete]], [[at]]); an older complete manifest is
+  *    expired even while its file still exists.
+  *  - GC ([[gc]]) runs strictly after a publish is readable: the
+  *    generations only expired manifests name go first, then those
+  *    manifests. A crash between the two leaves expired manifests that
+  *    readers already refuse, and the next pass deletes whatever they
+  *    still name at once, with no wait for the orphan grace.
   *
   * A caller supplies only its manifest fields ([[encodeFields]] /
   * [[decodeFields]]), the generations a manifest names, which dirs its GC
@@ -71,9 +75,9 @@ abstract class ManifestLog[M](dir: java.io.File, keepVersions: Int,
   /** Generations GC must never sweep, given the serving manifest. */
   protected def pinned(serving: Option[M], name: String): Boolean = false
 
-  /** Test seam: runs inside [[gc]] after manifests past retention are
-    * deleted and before their generations are — the crash point whose
-    * order the GC spec pins. No-op in production.
+  /** Test seam: runs inside [[gc]] after the generations only expired
+    * manifests name are deleted and before those manifests are — the crash
+    * point whose order the GC spec pins. No-op in production.
     */
   protected def betweenGcDeletes(): Unit = {}
 
@@ -123,12 +127,17 @@ abstract class ManifestLog[M](dir: java.io.File, keepVersions: Int,
            _: java.io.FileNotFoundException => None
     }
 
-  /** Every complete manifest, newest first. */
-  final def complete(): Seq[M] = manifestFiles().flatMap(tryRead)
+  /** The retained manifests, newest first: the newest `keepVersions`
+    * complete ones, the same split [[gc]] makes. An older complete
+    * manifest (a GC that crashed before deleting it) is never served: its
+    * generations may already be gone.
+    */
+  final def complete(): Seq[M] =
+    manifestFiles().iterator.flatMap(tryRead).take(keepVersions).toSeq
 
   /** The complete manifest of `version`, if retained. */
   final def at(version: Long): Option[M] =
-    manifestFiles().iterator.flatMap(tryRead).find(versionOf(_) == version)
+    complete().find(versionOf(_) == version)
 
   /** ONE list pass → (newest complete manifest, next free slot). The pair
     * MUST come from a single listing: the conditional PUT only fences
@@ -194,18 +203,20 @@ abstract class ManifestLog[M](dir: java.io.File, keepVersions: Int,
   }
 
   /** The one GC pass, every set computed from ONE listing:
-    *  1. complete manifests past `keepVersions` are deleted FIRST (torn
-    *     files do not count toward retention: a pile of them must not push
-    *     the serving manifest out);
-    *  2. then generation dirs no retained manifest names: at once when
-    *     only those expired manifests named them (committed data, never an
-    *     in-flight write), and only once aged past the grace when no
-    *     manifest ever named them. [[pinned]] dirs are never swept.
+    *  1. generation dirs no retained manifest names go FIRST: at once when
+    *     expired manifests (complete ones past `keepVersions`) named them
+    *     (committed data, never an in-flight write), and only once aged
+    *     past the grace when no manifest names them. [[pinned]] dirs are
+    *     never swept. Torn files do not count toward retention: a pile of
+    *     them must not push the serving manifest out.
+    *  2. then the expired manifests;
     *  3. aged torn manifests and aged `.staging-*` files (a crash inside a
     *     [[ConditionalPut.claim]]).
-    * A crash between 1 and 2 leaves unreferenced generations the next pass
-    * sweeps; the reverse order would leave a readable manifest whose data
-    * is gone. Returns the serving manifest of that same listing.
+    * A crash between 1 and 2 leaves expired manifests that readers refuse
+    * as not retained, and the next pass still knows what they named. The
+    * reverse order left generations that no manifest names, which waited
+    * out the whole orphan grace. Returns the serving manifest of that same
+    * listing.
     */
   final def gc(): Option[M] = {
     val decoded = manifestFiles().map(f => f -> tryRead(f))
@@ -216,14 +227,14 @@ abstract class ManifestLog[M](dir: java.io.File, keepVersions: Int,
     val serving = retained.headOption.map(_._2)
     val now = System.currentTimeMillis()
     def aged(f: java.io.File): Boolean = now - newestMtime(f) >= orphanGraceMs
-    expired.foreach(_._1.delete())
-    betweenGcDeletes()
     Option(dir.listFiles((f: java.io.File) =>
       f.isDirectory && isGeneration(f.getName)))
       .getOrElse(Array.empty[java.io.File])
       .filterNot(d => referenced(d.getName) || pinned(serving, d.getName))
       .filter(d => retired(d.getName) || aged(d))
       .foreach(Fs.rmTree)
+    betweenGcDeletes()
+    expired.foreach(_._1.delete())
     decoded.collect { case (f, None) => f }.filter(aged).foreach(_.delete())
     Option(dir.listFiles((_: java.io.File, n: String) =>
       n.startsWith(".staging-")))

@@ -1022,26 +1022,24 @@ class ManifestStoreSpec extends SparkSpec {
     val init = new java.io.File(dir).list().filter(_.startsWith("gen-")).head
     store.merge(batch((Cdc.Upsert, 10L, 2L, "two")))
     crash = true
-    // version 3 publishes, then its GC dies after deleting the manifests
-    // past retention and before deleting the generations they retired
+    // version 3 publishes, then its GC dies between its two deletes
     intercept[RuntimeException](store.merge(batch((Cdc.Upsert, 11L, 3L, "three"))))
     crash = false
     assert(store.currentVersion === 3L)
     assert(state(store) === Set(1L -> "one", 2L -> "two", 3L -> "three"))
+    // version 1's manifest is still on disk: retention, not absence, refuses it
+    val expired = new java.io.File(dir, "manifest-000000000001.json")
+    assert(expired.exists())
     val e = intercept[IllegalStateException](store.snapshotAt(1L).collect())
     assert(e.getMessage.contains("not retained"), e.getMessage)
-    // the retired generation is left named by no manifest: like a crashed
-    // write's, it sweeps once past the orphan grace
+    // the next merge's GC leaves neither the retired init generation nor
+    // the expired manifest behind, with no wait for the orphan grace
     val left = new java.io.File(dir, init)
     store.merge(batch((Cdc.Upsert, 12L, 4L, "four")))
-    assert(left.exists())
-    def age(f: java.io.File): Unit = {
-      f.setLastModified(System.currentTimeMillis() - 25 * 3600 * 1000L)
-      Option(f.listFiles()).foreach(_.foreach(age))
-    }
-    age(left)
-    store.merge(batch((Cdc.Upsert, 13L, 5L, "five")))
-    assert(!left.exists())
+    assert(!left.exists(), s"$init outlived the next GC")
+    assert(!expired.exists())
+    assert(state(store) === Set(1L -> "one", 2L -> "two", 3L -> "three",
+      4L -> "four"))
   }
 
   test("manifest bytes are pinned: a golden encoded store manifest") {
