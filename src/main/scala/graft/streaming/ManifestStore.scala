@@ -50,7 +50,8 @@ sealed trait WritePolicy
 object WritePolicy {
   /** Each merge APPENDS the folded batch as one sequenced delta —
     * O(batch) regardless of how much base data the touched buckets hold —
-    * and reads fold base ∪ deltas by (pk, max seq), paying one shuffle;
+    * and reads fold base ∪ deltas by (pk, max seq) with no shuffle, each
+    * bucket within one task;
     * `compact()` folds the deltas back into the base. For write-heavy
     * loops with infrequent reads.
     */
@@ -255,6 +256,19 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn(bucketCol, pmod(hash(pkCols.map(col): _*), lit(numBuckets)))
 
+  /** `df` with its key columns cast to the store's key types before it is
+    * bucketed: `hash(5)` ≠ `hash(5L)`, and the bucket scan declares the
+    * bucket of the STORED types, so a batch keyed by a narrower type must
+    * not land its rows in another bucket.
+    */
+  private def storedKeys(df: DataFrame, m: Manifest): DataFrame = {
+    val schema = schemaOf(m)
+    pkCols.foldLeft(df) { (d, c) =>
+      schema.fields.find(_.name.equalsIgnoreCase(c))
+        .fold(d)(f => d.withColumn(c, col(c).cast(f.dataType)))
+    }
+  }
+
   private def rmTree(f: java.io.File): Unit = graft.util.Fs.rmTree(f)
 
   /** The shared GC pass ([[graft.util.ManifestLog.gc]]): the generations
@@ -394,8 +408,8 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * the commit is the manifest put.
     */
   private def appendDelta(folded: DataFrame): Unit = {
-    val data = withBucket(folded.drop(Cdc.TransactionId))
-      .repartition(col(bucketCol))
+    val data = withBucket(storedKeys(folded.drop(Cdc.TransactionId),
+      currentManifest())).repartition(col(bucketCol))
     val gen = graft.util.ManifestLog.generationName("delta")
     val tWrite = System.nanoTime()
     graft.util.Fs.writeParquet(data, new java.io.File(root, gen).getPath,
@@ -437,7 +451,8 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * competitor that committed during the rewrite is caught too.
     */
   private def rewriteTouched(changes: DataFrame): Unit = {
-    val batch = withBucket(changes).cache()
+    val m0 = currentManifest()
+    val batch = withBucket(storedKeys(changes, m0)).cache()
     try {
       // this probe is the first ACTION over the folded plan: the CDC fold
       // (join against the master) computes here and lands in the cache, so
@@ -449,7 +464,6 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         .collect().map(_.getInt(0)).toSet
       StoreTelemetry.addPhase("merge_fold", (System.nanoTime() - tFold) / 1e9)
       if (touched.isEmpty) return
-      val m0 = currentManifest()
       val existing = folded(
         m0.copy(base = m0.base.filter(kv => touched(kv._1))), bucket = None)
       // the anti-join broadcasts the batch's key set: poll windows are
@@ -522,90 +536,122 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       StoreTelemetry.addPhase(sw, secondsSince(tSwap)) }
   }
 
-  /** Base ∪ deltas folded LWW by (pk, max seq), resolved through the
-    * manifest. Deltas carry `_bucket=N` subdirs, so base buckets no delta
-    * touches bypass the fold and union in as a plain scan; only the
-    * touched slice pays the PK shuffle. In the `aligned` write form that
-    * shuffle is one exchange, shared with the write layout. Each
-    * generation dir is ONE partitioned parquet read with a bucket
-    * partition filter (directory pruning) — never a per-bucket union,
-    * whose plan (one scan node per bucket dir) made the compaction fold
-    * ~8× slower at 32 buckets.
-    *
-    * @param aligned the write form, for a rewrite that lands the result
-    *   one file per bucket: every row read (untouched base buckets
-    *   included) passes ONE exchange, hash-partitioned by `_bucket`, and
-    *   the fold groups by (`_bucket`, pk) on top of it. That partitioning
-    *   already satisfies the aggregate's clustering, so Spark plans no
-    *   second shuffle by key, and the output arrives bucket-aligned for
-    *   the partitioned writer. Correct because the bucket is a pure
-    *   function of the key (the invariant [[lookup]]'s pruning relies
-    *   on): grouping by (bucket, pk) groups exactly as by pk.
+  /** The `.parquet` files of bucket `b` in generation `gen` (none when the
+    * generation holds no rows of that bucket).
     */
-  private def folded(m: Manifest, bucket: Option[Int],
-      aligned: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+  private def bucketFiles(gen: String, b: Int): Seq[java.io.File] =
+    Option(new java.io.File(root, s"$gen/$bucketCol=$b").listFiles(
+      (f: java.io.File) => f.getName.endsWith(".parquet")))
+      .toSeq.flatten.sortBy(_.getName)
+
+  /** `base` ∪ `deltas` of `buckets` as ONE hash-partitioned scan,
+    * unfolded: input partition `i` of `k` reads exactly the files of the
+    * buckets `b ≡ i (mod k)` — each one's base file and its files in every
+    * delta — so no exchange has to bring a bucket's rows together. Every
+    * generation is written `partitionBy(_bucket)` with the bucket
+    * `pmod(hash(pk), numBuckets)` of the stored key types, and `k` divides
+    * `numBuckets`, so every row of partition `i` has
+    * `pmod(hash(pk), k) == i`: the scan declares `HashPartitioning(pk, k)`,
+    * which is Spark's own partition-id expression — true by construction.
+    * `k` is the smallest divisor of `numBuckets` that gives every core a
+    * partition (`numBuckets` when none does). More partitions than cores
+    * add only per-task cost (a rewrite commits one task per partition): at
+    * 32 buckets on 4 cores, one partition per bucket took twice as long to
+    * compact. A scan of one bucket is one partition. Rows carry the
+    * payload, `_change_type` (null in base files, which store none),
+    * `_bucket`, and `_graft_seq` (0 for base files, the delta's seq
+    * otherwise); the last two are per-file constants, and the schema comes
+    * from the manifest, so nothing is inferred. Its `sizeInBytes` is the
+    * bytes of its files.
+    */
+  private def bucketScan(schema: org.apache.spark.sql.types.StructType,
+      base: Map[Int, String], deltas: Seq[(Long, String)],
+      buckets: Set[Int]): DataFrame = {
+    import org.apache.spark.sql.graftbridge.PartitionedParquetScan
+    import org.apache.spark.sql.types._
+    val foreign = buckets.filter(b => b < 0 || b >= numBuckets)
+    require(foreign.isEmpty, s"store $dir holds buckets " +
+      s"${foreign.toSeq.sorted.mkString(", ")}, outside numBuckets=$numBuckets")
+    def files(gen: String, b: Int, seq: Long) = bucketFiles(gen, b).map(f =>
+      PartitionedParquetScan.ScanFile(f.getPath, f.length(), Seq[Any](b, seq)))
+    val cores = spark.sparkContext.defaultParallelism
+    val k = (1 to numBuckets).find(d => numBuckets % d == 0 && d >= cores)
+      .getOrElse(numBuckets)
+    val slots =
+      if (buckets.size == 1) Seq(buckets.toSeq)
+      else (0 until k).map(i => (i until numBuckets by k).filter(buckets))
+    PartitionedParquetScan(spark,
+      StructType(schema.fields.filterNot(_.name == bucketCol) :+
+        StructField(Cdc.ChangeType, StringType)),
+      StructType(Seq(StructField(bucketCol, IntegerType),
+        StructField(seqCol, LongType))),
+      slots.map(_.flatMap { b =>
+        base.get(b).toSeq.flatMap(files(_, b, 0L)) ++
+          deltas.flatMap { case (seq, g) => files(g, b, seq) }
+      }).toIndexedSeq,
+      pkCols)
+  }
+
+  /** Last-write-wins by (pk, max `_graft_seq`) over a [[bucketScan]]: one
+    * row per key, all of the scan's columns but the seq. Keyed by pk over a
+    * scan declared hash-partitioned by pk, the aggregate runs inside the
+    * task that reads each bucket and plans no exchange. It groups by (`_bucket`, pk),
+    * which groups exactly as by pk (the bucket is a function of the key),
+    * and passes those grouping columns through: its output is then sorted
+    * by bucket, the order the partitioned writer requires, so a rewrite
+    * sorts each bucket once, not a second time for the write.
+    */
+  private def lww(rows: DataFrame): DataFrame = {
+    val keys = bucketCol +: pkCols
+    val rest = rows.columns.filterNot(c =>
+      c == seqCol || keys.exists(_.equalsIgnoreCase(c)))
+    rows.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(rest.map(col).toIndexedSeq: _*), col(seqCol)).alias("_r"))
+      .select(keys.map(col) ++ rest.map(c => col("_r").getField(c).alias(c)): _*)
+  }
+
+  /** Base ∪ deltas folded LWW by (pk, max seq), resolved through the
+    * manifest, deletes dropped, in the manifest's column order (bucket
+    * column last). The buckets some delta touches are ONE [[bucketScan]]
+    * folded by [[lww]]: each bucket is read and folded within one task,
+    * and nothing is shuffled. Base buckets no delta touches bypass the
+    * fold as a plain parquet read (one per generation, pruned to those
+    * buckets by a partition filter), which keeps filter pushdown and
+    * column pruning for them. `bucket` narrows every read to one bucket
+    * (a point lookup).
+    *
+    * Every rewrite writes this frame `partitionBy(_bucket)`. A folded
+    * bucket's rows are all in one task, in bucket order, so it lands one
+    * file; a bypassed bucket's file is one task too unless it is larger
+    * than a read split (`spark.sql.files.maxPartitionBytes`), in which case
+    * its rows land one file per split — in the same bucket dir, so the
+    * layout holds.
+    */
+  private def folded(m: Manifest, bucket: Option[Int]): DataFrame = {
     val schema = schemaOf(m)
-    val withEnvelope = StructType(
-      schema.fields :+ StructField(Cdc.ChangeType, StringType))
-    def emptyDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    /** One partitioned read of a whole generation dir, pruned to
-      * `buckets` by a partition filter.
-      */
-    def readGen(gen: String, buckets: Set[Int], envelope: Boolean): DataFrame = {
-      val df = spark.read.schema(if (envelope) withEnvelope else schema)
-        .parquet(new java.io.File(root, gen).getPath)
-      if (buckets == null) df
-      else df.where(col(bucketCol).isin(buckets.toSeq: _*))
-    }
-    val deltas = m.deltas.filter { case (_, g) =>
-      bucket.forall(b => new java.io.File(root, s"$g/$bucketCol=$b").exists())
-    }
-    val deltaBuckets: Set[Int] =
-      deltas.flatMap { case (_, g) => bucketDirsOf(g) }
-        .toSet.filter(t => bucket.forall(_ == t))
-    // base read: group buckets by serving generation, one read per gen
-    val wantBuckets = bucket.map(Seq(_)).getOrElse(m.base.keys.toSeq.sorted)
-      .filter(m.base.contains)
-    val byGen = wantBuckets.groupBy(m.base).toSeq.sortBy(_._1)
-    def baseFor(buckets: Set[Int]): Option[DataFrame] =
-      byGen.flatMap { case (g, bs) =>
-        val keep = bs.filter(buckets).toSet
-        if (keep.isEmpty) None else Some(readGen(g, keep, envelope = false))
-      }.reduceOption(_.unionByName(_))
-    if (deltaBuckets.isEmpty) {
-      val base = baseFor(wantBuckets.toSet).getOrElse(emptyDf)
-      return if (aligned) base.repartition(col(bucketCol)) else base
-    }
-    // the aligned form folds every bucket it reads: untouched base rows
-    // then share the one exchange instead of needing their own
-    val touched = if (aligned) deltaBuckets ++ wantBuckets else deltaBuckets
-    val untouchedBase = baseFor(wantBuckets.toSet -- touched)
-    val touchedBase = baseFor(wantBuckets.toSet.intersect(touched))
-      .getOrElse(emptyDf)
-      .withColumn(Cdc.ChangeType, lit(Cdc.Upsert))
-      .withColumn(seqCol, lit(0L))
-    val all = deltas.foldLeft(touchedBase) { case (acc, (seq, g)) =>
-      acc.unionByName(
-        readGen(g, bucket.map(Set(_)).orNull, envelope = true)
-          .withColumn(seqCol, lit(seq)),
-        allowMissingColumns = true)
-    }
-    val payload = struct(withEnvelope.fieldNames.map(col).toIndexedSeq: _*)
-    val grouped =
-      if (aligned) all.repartition(col(bucketCol))
-        .groupBy((bucketCol +: pkCols).map(col): _*)
-      else all.groupBy(pkCols.map(col): _*)
-    val foldedTouched = grouped
-      .agg(max_by(payload, col(seqCol)).alias("_r"))
-      .select(col("_r.*"))
-      .where(col(Cdc.ChangeType) === Cdc.Upsert)
-      .drop(Cdc.ChangeType)
-    untouchedBase match {
-      case Some(u) => foldedTouched.unionByName(u)
-      case None => foldedTouched
-    }
+    def readGen(gen: String, buckets: Set[Int]): DataFrame =
+      spark.read.schema(schema).parquet(new java.io.File(root, gen).getPath)
+        .where(col(bucketCol).isin(buckets.toSeq.sorted: _*))
+    val touched: Set[Int] = m.deltas.flatMap { case (_, g) => bucketDirsOf(g) }
+      .toSet.filter(t => bucket.forall(_ == t))
+    val bypassed = bucket.fold(m.base.keySet)(Set(_).intersect(m.base.keySet)) -- touched
+    val plain = bypassed.groupBy(m.base).toSeq.sortBy(_._1)
+      .map { case (g, bs) => readGen(g, bs) }
+    val foldedTouched = if (touched.isEmpty) None else Some(
+      lww(bucketScan(schema, m.base, m.deltas, touched))
+        .where(coalesce(col(Cdc.ChangeType), lit(Cdc.Upsert)) === Cdc.Upsert)
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*))
+    (foldedTouched ++ plain).reduceOption(_.unionByName(_)).getOrElse(
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  }
+
+  /** The raw [[bucketScan]] of every bucket of a retained version, for
+    * specs that check the scan's declared partitioning row by row.
+    */
+  private[streaming] def bucketScanAt(version: Long): DataFrame = {
+    val m = manifestAt(version)
+    bucketScan(schemaOf(m), m.base, m.deltas, (0 until numBuckets).toSet)
   }
 
   def snapshot(): DataFrame =
@@ -719,18 +765,9 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     if (added.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withEnvelope)
-    val onDisk = StructType(
-      schema.fields :+ StructField(Cdc.ChangeType, StringType))
-    val all = added.map { case (sq, g) =>
-      spark.read.schema(onDisk)
-        .parquet(new java.io.File(root, g).getPath)
-        .withColumn(seqCol, lit(sq))
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    val payload = struct(onDisk.fieldNames.map(col).toIndexedSeq: _*)
-    all.groupBy(pkCols.map(col): _*)
-      .agg(max_by(payload, col(seqCol)).alias("_r"))
-      .select(col("_r.*"))
-      .drop(bucketCol)
+    // the added deltas alone, one bucket scan folded by key: no exchange
+    lww(bucketScan(schema, Map.empty, added, (0 until numBuckets).toSet))
+      .select(withEnvelope.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** POINT LOOKUP: the current row(s) for one primary key — the
@@ -763,9 +800,10 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * them again (zero IO for the untouched part, not even a listing of
     * their files). Crash before the manifest put → old manifest serves
     * base+deltas unchanged. A store without deltas (every copy-on-write
-    * store) has nothing to fold. The fold is [[folded]]'s aligned form:
-    * the touched buckets' base ∪ deltas pass ONE exchange by bucket, which
-    * serves both the LWW fold and the one-file-per-bucket write.
+    * store) has nothing to fold. The fold is [[folded]] over the touched
+    * buckets: each bucket's base ∪ deltas is read and folded within one
+    * task, so the compaction shuffles nothing, and the partitioned write
+    * lands one file per touched bucket.
     *
     * @param clusterBy optional CLUSTERED rewrite instead: every bucket of
     *   the folded snapshot is rewritten sorted by these columns within the
@@ -808,7 +846,7 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     // deltas live on top of our fresh base; a concurrent COMPACT or
     // re-initialize invalidates the fold (our inputs were replaced) and
     // aborts loudly with the staged generation reclaimed.
-    writeAndRepoint(folded(touchedOnly, bucket = None, aligned = true),
+    writeAndRepoint(folded(touchedOnly, bucket = None),
       s"compact$maxSeq", Some(touched), rewrite = false,
       Some(("compact_write", "compact_swap"))) { m =>
       // the folded maxSeq becomes the recorded compaction floor — survives
@@ -862,20 +900,20 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * and publish it with `schema` in ONE manifest put, so the data and its
     * schema commit or roll back together: no crash point serves new-shape
     * files through an old-shape schema (which would silently null a
-    * renamed column). The snapshot is [[folded]]'s aligned form, so the
-    * whole store passes one exchange by bucket, shared by the fold and
-    * the write layout. `shape` maps the snapshot onto `schema` (row-wise
-    * only: it must not re-partition); `clusterBy`
-    * sorts each bucket, bucket first (the exchange may co-locate several
-    * buckets in one task, and the partitioned writer keeps task row order
-    * per dir). The folded deltas' highest seq becomes the floor. The
-    * inputs are the whole store, so any concurrent commit aborts the
-    * rewrite loudly, its generation reclaimed.
+    * renamed column). The snapshot is [[folded]], which shuffles nothing
+    * and keeps each bucket in one task (see there for a bypassed bucket
+    * larger than a read split), so the write lands one file per bucket.
+    * `shape` maps the snapshot onto `schema` (row-wise only: it must not
+    * re-partition); `clusterBy` sorts each task, bucket first, which is
+    * the order the partitioned writer requires, so it adds no sort of its
+    * own that could reorder the rows. The folded deltas' highest seq
+    * becomes the floor. The inputs are the whole store, so any concurrent
+    * commit aborts the rewrite loudly, its generation reclaimed.
     */
   private def rewriteAll(m0: Manifest, tag: String,
       schema: org.apache.spark.sql.types.StructType,
       clusterBy: Seq[String] = Nil)(shape: DataFrame => DataFrame): Unit = {
-    val out = shape(folded(m0, bucket = None, aligned = true))
+    val out = shape(folded(m0, bucket = None))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     val sorted =
       if (clusterBy.isEmpty) out

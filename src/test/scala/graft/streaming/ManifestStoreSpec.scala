@@ -245,7 +245,7 @@ class ManifestStoreSpec extends SparkSpec {
         f.getName.endsWith(".parquet")).length).toMap
   }
 
-  test("compaction folds in one exchange: one shuffle-map stage, one file per touched bucket") {
+  test("compaction folds in no exchange: no shuffle-map stage, one file per touched bucket") {
     val dir = tmp("mfonce")
     val store = new ManifestUpsertStore(spark, dir, Seq("id"),
       numBuckets = 8, keepVersions = 2)
@@ -266,9 +266,10 @@ class ManifestStoreSpec extends SparkSpec {
       .flatMap(_.list().filter(_.startsWith("_bucket="))).toSet
     assert(touched.size >= 2, touched)
     val want = state(store)
-    // the key fold and the bucket layout share ONE exchange: a fold by key
-    // followed by a repartition by bucket would run two
-    assert(shuffleMapStages(store.compact()) === 1)
+    // each touched bucket is read and folded within one task: the scan is
+    // hash-partitioned by the key, which is the fold's clustering and keeps
+    // every bucket in one task for the write, so nothing is shuffled
+    assert(shuffleMapStages(store.compact()) === 0)
     assert(store.deltaCount === 0)
     val compacted = filesPerBucket(dir, "gen-compact")
     assert(compacted.keySet === touched)
@@ -279,7 +280,7 @@ class ManifestStoreSpec extends SparkSpec {
     store.merge(batch((Cdc.Upsert, 300L, 5L, "FIVE"),
       (Cdc.Upsert, 301L, 50L, "FIFTY")))
     val want2 = state(store)
-    assert(shuffleMapStages(store.compact(clusterBy = Seq("payload"))) === 1)
+    assert(shuffleMapStages(store.compact(clusterBy = Seq("payload"))) === 0)
     val clustered = filesPerBucket(dir, "gen-cluster")
     assert(clustered.size === 8 && clustered.values.forall(_ == 1), clustered)
     assert(state(store) === want2)

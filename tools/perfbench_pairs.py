@@ -11,11 +11,13 @@ the same arguments; the side that runs first alternates from pair to pair
 (the parent in pairs 1, 3, 5, ...). It then prints, per end-to-end metric,
 every run's value, each side's median with its quartiles (Q1-Q3, the
 exclusive method), the change in the median and in how many pairs the
-change was better (ties count for neither side). The metrics and their
-directions come from PARENT_DIR/BENCHMARK.json. A run that printed no
-result, was not `correct` or failed an op is listed. --json keeps every
-raw result line and each run's `perfbench:` log lines on disk, rewritten
-after each pair.
+change was better (ties count for neither side), and whether the change
+median is inside the metric's `bound` of the parent median. The metrics,
+their directions and bounds come from PARENT_DIR/BENCHMARK.json. A run that
+printed no result, was not `correct` or failed an op is bad: it is listed,
+left out of the medians (and its pair out of the win count), and the tool
+exits 1. --json keeps every raw result line and each run's `perfbench:`
+log lines on disk, rewritten after each pair.
 """
 
 import argparse
@@ -54,41 +56,67 @@ def fmt(x):
     return f"{x:.4g}" if abs(x) < 1000 else f"{x:.0f}"
 
 
-def report(results, metrics, better):
-    """Markdown tables of the per-run values and the per-metric summary."""
-    ok = [r for r in results if r["parent"] and r["change"]]
+def good(run):
+    """A run counts only if it printed a result, is correct and failed no op."""
+    return bool(run) and run["correct"] and not run["failed"]
+
+
+def inside_bound(pmed, cmed, better, bound):
+    """Whether the change median is no worse than `bound` (a fraction) of
+    the parent median in the metric's direction; None without a bound."""
+    if bound is None:
+        return None
+    if better == "lower":
+        return cmed <= pmed * (1.0 + bound)
+    return cmed >= pmed * (1.0 - bound)
+
+
+def report(results, metrics, better, bounds):
+    """Markdown tables of the per-run values and the per-metric summary.
+    Returns whether every run was good."""
     bad = [(r["seed"], side) for r in results for side in ("parent", "change")
-           if not r[side] or not r[side]["correct"] or r[side]["failed"]]
+           if not good(r[side])]
+    pairs = [r for r in results if good(r["parent"]) and good(r["change"])]
     print("| seed | first | " + " | ".join(f"{m} parent | {m} change"
                                            for m in metrics) + " |")
     print("|---|---|" + "---|---|" * len(metrics))
-    for r in ok:
+    for r in results:
         cells = []
         for m in metrics:
-            cells += [fmt(r[s]["metrics"][m]["value"]) for s in ("parent", "change")]
+            cells += [fmt(r[s]["metrics"][m]["value"]) if good(r[s]) else "bad"
+                      for s in ("parent", "change")]
         print(f"| {r['seed']} | {r['first']} | " + " | ".join(cells) + " |")
     print()
     print("| metric | parent median (Q1-Q3) | change median (Q1-Q3) | "
-          "delta median | change better |")
-    print("|---|---|---|---|---|")
+          "delta median | change better | inside bound |")
+    print("|---|---|---|---|---|---|")
     for m in metrics:
-        p = [r["parent"]["metrics"][m]["value"] for r in ok]
-        c = [r["change"]["metrics"][m]["value"] for r in ok]
-        if not p:
+        p = [r["parent"]["metrics"][m]["value"] for r in results
+             if good(r["parent"])]
+        c = [r["change"]["metrics"][m]["value"] for r in results
+             if good(r["change"])]
+        if not p or not c:
             continue
         pq1, pmed, pq3 = quartiles(p)
         cq1, cmed, cq3 = quartiles(c)
         sign = -1.0 if better[m] == "lower" else 1.0
-        wins = sum(1 for a, b in zip(p, c) if sign * (b - a) > 0)
+        wins = sum(1 for r in pairs if sign * (
+            r["change"]["metrics"][m]["value"] -
+            r["parent"]["metrics"][m]["value"]) > 0)
         delta = (cmed - pmed) / pmed * 100.0 if pmed else float("nan")
+        inside = inside_bound(pmed, cmed, better[m], bounds.get(m))
+        verdict = ("n/a" if inside is None else
+                   f"{'yes' if inside else 'NO'} (±{bounds[m]:g})")
         print(f"| {m} | {fmt(pmed)} ({fmt(pq1)}-{fmt(pq3)}) | "
               f"{fmt(cmed)} ({fmt(cq1)}-{fmt(cq3)}) | {delta:+.1f}% | "
-              f"{wins}/{len(p)} |")
+              f"{wins}/{len(pairs)} | {verdict} |")
     print()
     print(f"runs: {2 * len(results)}; every run correct with 0 failed ops: "
           f"{'yes' if not bad else 'no'}")
     for seed, side in bad:
-        print(f"  seed {seed} {side}: no result, not correct or failed ops")
+        print(f"  seed {seed} {side}: no result, not correct or failed ops "
+              "(left out of the medians)")
+    return not bad
 
 
 def main():
@@ -105,8 +133,9 @@ def main():
     args = p.parse_args()
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    better = {m["name"]: m["better"]
-              for m in bench["end_to_end"] + bench.get("per_layer", [])}
+    declared = bench["end_to_end"] + bench.get("per_layer", [])
+    better = {m["name"]: m["better"] for m in declared}
+    bounds = {m["name"]: m["bound"] for m in declared if "bound" in m}
     metrics = args.metrics or [m["name"] for m in bench["end_to_end"]]
     unknown = [m for m in metrics if m not in better]
     if unknown:
@@ -129,7 +158,8 @@ def main():
     print(f"{args.workload}, --seconds {args.seconds}, --trace {args.trace}, "
           f"seeds {' '.join(map(str, args.seeds))}")
     print()
-    report(results, metrics, better)
+    if not report(results, metrics, better, bounds):
+        sys.exit(1)
 
 
 if __name__ == "__main__":
