@@ -241,7 +241,7 @@ object Bench {
     val streamDetailTiers: Seq[String => Boolean] = Seq(
       _ => true, // tier 0: every stream dotted entry
       k => !(k.endsWith(".compact_swap") || k.endsWith(".compact_write") ||
-        k.endsWith(".merge_fold") || k.endsWith(".other")),
+        k.endsWith(".other")),
       k => !k.contains(".") || k.endsWith(".swap") ||
         k.endsWith(".spread") || k.endsWith(".failed_repeats"))
     def lineAt(n: Int, streamKeep: String => Boolean): String = {
@@ -408,13 +408,13 @@ object StoreReadBench {
   */
 object StreamBench {
   /** Returns the total plus dotted per-phase entries
-    * (`stream_cdc_merge.merge_fold` = CDC fold compute into cache,
-    * `.merge_write` = generation IO from cache, `.swap` = manifest PUT/
-    * fsyncs/GC, `.compact` with its own `.compact_write`/`.compact_swap`
-    * breakdown (VERDICT r9 #2), `.other` = watermark stats/ledger/driver
-    * overhead) so a regression in the loop localizes to a phase without
-    * re-profiling (VERDICT r7 #6). Phases sum to the total by
-    * construction.
+    * (`stream_cdc_merge.merge_write` = CDC fold compute + the staged
+    * delta write, plus the touched-bucket rewrite under copy-on-write,
+    * `.swap` = manifest PUT/fsyncs/GC, `.compact` with its own
+    * `.compact_write`/`.compact_swap` breakdown (VERDICT r9 #2), `.other`
+    * = watermark stats/ledger/driver overhead) so a regression in the
+    * loop localizes to a phase without re-profiling (VERDICT r7 #6).
+    * Phases sum to the total by construction.
     *
     * Compaction is POLICY-DRIVEN from inside
     * [[graft.streaming.CdcStreamJob.processBatch]] (`autoCompactDeltas =
@@ -474,28 +474,25 @@ object StreamBench {
       val total = (System.nanoTime() - t0) / 1e9
       val merged = StoreTelemetry.drainPhases()
       // merge() and compact() both feed the phase counters (compact's
-      // write/swap are separate names, so nothing double-counts). On the
-      // merge-on-read policy merge_fold reads 0 — there is no
-      // changed-bucket probe, so the CDC fold computes lazily INSIDE the
-      // delta write (merge_write covers fold + IO there) — and `other`
-      // carries the read-side snapshot fold, the price MOR trades its
-      // O(batch) writes for.
+      // write/swap are separate names, so nothing double-counts). The CDC
+      // fold computes lazily INSIDE the staged delta write, so merge_write
+      // covers it; on the merge-on-read policy `other` carries the
+      // read-side snapshot fold, the price MOR trades its O(batch) writes
+      // for.
       // compact.{write,swap} decompose the compact total the same way
       // (compact_write = fold compute + generation IO; the remainder is
       // listing/fsync/PUT overhead).
-      val fold = merged.getOrElse("merge_fold", 0.0)
       val write = merged.getOrElse("merge_write", 0.0)
       val swap = merged.getOrElse("swap", 0.0)
       val compactSec = merged.getOrElse("compact", 0.0)
       Seq(q -> total,
-        s"$q.merge_fold" -> fold,
         s"$q.merge_write" -> write,
         s"$q.swap" -> swap,
         s"$q.compact" -> compactSec,
         s"$q.compact_write" -> merged.getOrElse("compact_write", 0.0),
         s"$q.compact_swap" -> merged.getOrElse("compact_swap", 0.0),
         s"$q.other" ->
-          math.max(0.0, total - fold - write - swap - compactSec))
+          math.max(0.0, total - write - swap - compactSec))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] $q failed: ${e.getMessage}")

@@ -57,8 +57,10 @@ object WritePolicy {
     */
   case object MergeOnRead extends WritePolicy
 
-  /** Each merge REWRITES the touched buckets into a fresh base generation
-    * and publishes no delta, so reads stay a plain scan. For read-heavy
+  /** Each merge stages the folded batch as the same delta, then folds it
+    * at once with the touched buckets' base into a fresh base generation —
+    * the read fold moved to write time, shuffling only the batch — and
+    * publishes no delta, so reads stay a plain scan. For read-heavy
     * replicas. Every merge is a rewrite, so the change feed's horizon
     * moves to the current version with each one.
     */
@@ -70,11 +72,13 @@ object WritePolicy {
   * `pmod(hash(pk), numBuckets)`. Merges are idempotent and
   * last-write-wins by PK, deletes remove the row — the replay guarantee
   * the reference gets from UPSERT row types
-  * (`S4HanaProducer.java:434-441`). The [[WritePolicy]] picks how a merge
-  * lands: as a delta folded at read (merge-on-read, the default) or as a
-  * rewrite of the touched buckets (copy-on-write). Both converge to
-  * identical snapshots for the same batch sequence (spec-pinned), and
-  * both publish through the one protocol below.
+  * (`S4HanaProducer.java:434-441`). Every merge stages its batch as one
+  * delta generation; the [[WritePolicy]] picks when that delta is folded:
+  * at read (merge-on-read, the default) or at once, into a rewrite of the
+  * touched buckets (copy-on-write). Both fold through the one LWW fold, so
+  * they converge to identical snapshots for the same batch sequence by
+  * construction (spec-pinned), and both publish through the one protocol
+  * below.
   *
   * It commits WITHOUT a single rename. A staged rename swap is correct
   * only where rename is atomic (local POSIX, HDFS); an object store
@@ -110,7 +114,8 @@ object WritePolicy {
   * rewrites (only the buckets a batch or the deltas touch get a new base
   * generation; untouched buckets keep their old gen dirs byte-identical —
   * "don't rewrite" here means "reference the same immutable dir again").
-  * A copy-on-write merge is that rewrite fed by the batch. Column
+  * A copy-on-write merge is that rewrite with its batch staged as the one
+  * delta. Column
   * rename/drop and clustered compaction are all-bucket rewrites whose new
   * schema rides the same manifest PUT, so no crash point shows new-shape
   * data through an old-shape schema.
@@ -145,9 +150,10 @@ object WritePolicy {
   *   START, and a long parquet write would look stale by its root alone —
   *   review r10), and the default is a day, sized for multi-hour backfill
   *   writes at the 100 TB target, not for laptop jobs.
-  * @param writePolicy how [[merge]] lands: a delta folded at read
-  *   (merge-on-read, the default) or a rewrite of the touched buckets
-  *   (copy-on-write). Every other operation is the same under both.
+  * @param writePolicy when [[merge]]'s staged delta is folded: at read
+  *   (merge-on-read, the default) or at once, into a rewrite of the
+  *   touched buckets (copy-on-write). Every other operation is the same
+  *   under both.
   */
 class ManifestUpsertStore(spark: SparkSession, dir: String,
     pkCols: Seq[String], numBuckets: Int = 16, keepVersions: Int = 3,
@@ -371,7 +377,11 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
       .map(_.getName.stripPrefix(s"$bucketCol=").toInt).toSeq
 
   /** Apply one folded CDC batch (`_change_type` 'A'/'D' +
-    * `_transactionid` + full row) under the store's [[WritePolicy]]. Crash
+    * `_transactionid` + full row). Both policies stage the batch the same
+    * way, as ONE bucket-aligned delta generation; the [[WritePolicy]]
+    * decides only when that delta is folded. Merge-on-read makes it
+    * durable and publishes it as a delta, folded at read and by
+    * [[compact]]. Copy-on-write folds it at once ([[foldStaged]]). Crash
     * before the manifest put → the new generation is unreferenced, the
     * batch invisible, and the (un-advanced) upstream ledger replays it —
     * idempotent under LWW.
@@ -385,10 +395,46 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
     * as null. Columns are never dropped by omission: deletion of a column
     * is a rewrite ([[dropColumn]]), not a merge.
     */
-  def merge(folded: DataFrame): Unit = writePolicy match {
-    case WritePolicy.MergeOnRead => appendDelta(folded)
-    case WritePolicy.CopyOnWrite => rewriteTouched(folded)
+  def merge(folded: DataFrame): Unit = {
+    val m0 = currentManifest()
+    val data = withBucket(storedKeys(folded.drop(Cdc.TransactionId), m0))
+      .repartition(col(bucketCol))
+    val gen = graft.util.ManifestLog.generationName("delta")
+    val genDir = new java.io.File(root, gen)
+    val tWrite = System.nanoTime()
+    graft.util.Fs.writeParquet(data, genDir.getPath, bucketCol)
+    // data durable BEFORE the commit record references it (ADVICE r10); a
+    // copy-on-write merge's staged delta is never referenced
+    if (writePolicy == WritePolicy.MergeOnRead) graft.util.Fs.fsyncTree(genDir)
+    StoreTelemetry.addPhase("merge_write", (System.nanoTime() - tWrite) / 1e9)
+    val touched = bucketDirsOf(gen).toSet
+    if (touched.isEmpty) { rmTree(genDir); return }
+    writePolicy match {
+      case WritePolicy.CopyOnWrite =>
+        try foldStaged(m0, gen, touched, data.schema) finally rmTree(genDir)
+      case WritePolicy.MergeOnRead =>
+        val tSwap = System.nanoTime()
+        // A merge is ALWAYS rebasable (VERDICT r10 #1): the generation dir
+        // is immutable and carries no seq — the manifest entry assigns it —
+        // so a losing writer simply recomputes (seq, version, schema)
+        // against the winner's manifest and re-points the SAME dir. Deltas
+        // append; nothing to revalidate.
+        commitWithRetry { (m, slot) =>
+          manifests.put(Manifest(slot, widenedSchema(m, data.schema), m.base,
+            m.deltas :+ (nextSeq(m) -> gen), floorSeq = m.floorSeq))
+        }(validate = _ => true)(onAbort = rmTree(genDir))
+        gc()
+        StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
+    }
   }
+
+  /** The seq of the next delta: above both the live deltas AND the
+    * manifest-recorded compaction floor — so an all-deletes compaction (no
+    * surviving compact gen) cannot make a later merge reuse an
+    * already-folded seq.
+    */
+  private def nextSeq(m: Manifest): Long =
+    (m.deltas.map(_._1) :+ m.floorSeq).max + 1
 
   /** The manifest schema widened by `incoming`'s new columns (bucket column
     * kept last), or unchanged when it brings none.
@@ -404,105 +450,49 @@ class ManifestUpsertStore(spark: SparkSession, dir: String,
         existing(existing.fieldIndex(bucketCol))).json
   }
 
-  /** MOR merge: the folded batch becomes one immutable delta generation;
-    * the commit is the manifest put.
-    */
-  private def appendDelta(folded: DataFrame): Unit = {
-    val data = withBucket(storedKeys(folded.drop(Cdc.TransactionId),
-      currentManifest())).repartition(col(bucketCol))
-    val gen = graft.util.ManifestLog.generationName("delta")
-    val tWrite = System.nanoTime()
-    graft.util.Fs.writeParquet(data, new java.io.File(root, gen).getPath,
-      bucketCol)
-    // data durable BEFORE the commit record references it (ADVICE r10)
-    graft.util.Fs.fsyncTree(new java.io.File(root, gen))
-    StoreTelemetry.addPhase("merge_write", (System.nanoTime() - tWrite) / 1e9)
-    if (bucketDirsOf(gen).isEmpty) { rmTree(new java.io.File(root, gen)); return }
-    val tSwap = System.nanoTime()
-    // A merge is ALWAYS rebasable (VERDICT r10 #1): the generation dir is
-    // immutable and carries no seq — the manifest entry assigns it — so a
-    // losing writer simply recomputes (seq, version, schema) against the
-    // winner's manifest and re-points the SAME dir. Deltas append; nothing
-    // to revalidate.
-    commitWithRetry { (m, slot) =>
-      // seq clears both the live deltas AND the manifest-recorded
-      // compaction floor — so an all-deletes compaction (no surviving
-      // compact gen) cannot make a later merge reuse an already-folded
-      // seq (review r10)
-      val seq = (m.deltas.map(_._1) :+ m.floorSeq).max + 1
-      manifests.put(Manifest(slot, widenedSchema(m, data.schema), m.base,
-        m.deltas :+ (seq -> gen), floorSeq = m.floorSeq))
-    }(validate = _ => true)(onAbort = rmTree(new java.io.File(root, gen)))
-    gc()
-    StoreTelemetry.addPhase("swap", (System.nanoTime() - tSwap) / 1e9)
-  }
-
-  /** COW merge: the bucket-selective rewrite of [[compact]], fed by the
-    * batch instead of by deltas. The touched buckets' base rows minus the
-    * batch keys, plus the batch's upserts, become ONE fresh generation, and
-    * the manifest put re-points only those buckets and carries no delta. A
-    * bucket whose rows were all deleted leaves the base map.
+  /** COW merge: the touched buckets' base ∪ the `staged` delta, folded by
+    * [[folded]] — the fold every read and compaction runs, so nothing is
+    * shuffled — become ONE fresh generation, and the manifest put
+    * re-points only those buckets and carries no delta. The staged delta
+    * takes the seq the next delta would, above every base row. A bucket
+    * whose rows were all deleted leaves the base map.
     *
     * Rebase: a commit that loses the slot race re-points on top of the
     * winner only if the base entries of its touched buckets are unchanged
-    * and the manifest has no deltas (its rewrite read exactly those
-    * inputs); otherwise it throws [[CommitConflictException]] and reclaims
-    * its generation. The same check runs on the first attempt, so a
-    * competitor that committed during the rewrite is caught too.
+    * and the manifest has no deltas (its fold read exactly those inputs);
+    * otherwise it throws [[CommitConflictException]] and reclaims its
+    * generation. The same check runs on the first attempt, so a
+    * competitor that committed during the fold is caught too.
     */
-  private def rewriteTouched(changes: DataFrame): Unit = {
-    val m0 = currentManifest()
-    val batch = withBucket(storedKeys(changes, m0)).cache()
-    try {
-      // this probe is the first ACTION over the folded plan: the CDC fold
-      // (join against the master) computes here and lands in the cache, so
-      // it gets its own phase counter — attributing it to the generation
-      // write (which replays from cache) would mislocalize a fold
-      // regression
-      val tFold = System.nanoTime()
-      val touched = batch.select(bucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet
-      StoreTelemetry.addPhase("merge_fold", (System.nanoTime() - tFold) / 1e9)
-      if (touched.isEmpty) return
-      val existing = folded(
-        m0.copy(base = m0.base.filter(kv => touched(kv._1))), bucket = None)
-      // the anti-join broadcasts the batch's key set: poll windows are
-      // small by contract, so the store side never shuffles
-      val kept = existing.join(
-        broadcast(batch.select(pkCols.map(col): _*).distinct()),
-        pkCols, "left_anti")
-      val upserts = withBucket(batch
-        .where(col(Cdc.ChangeType) === Cdc.Upsert)
-        .drop(Cdc.ChangeType, Cdc.TransactionId, bucketCol))
-      // evolution is silent null-filling, so make it OBSERVABLE: a renamed
-      // upstream column looks exactly like one dropped + one added
-      val added = upserts.columns.toSet -- existing.columns.toSet
-      val omitted = existing.columns.toSet -- upserts.columns.toSet
-      if (added.nonEmpty || omitted.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(classOf[ManifestUpsertStore]).warn(
-          s"schema evolution in $dir: batch adds ${added.toSeq.sorted} / " +
-            s"omits ${omitted.toSeq.sorted} vs the store schema — " +
-            "omitted columns null-fill; verify this is not a renamed column")
-      val unioned = kept.unionByName(upserts, allowMissingColumns = true)
-      // bucket-aligning exchange before the write: one file per touched
-      // bucket (r9 — file count, not bytes, dominates a durable write)
-      val merged = unioned
-        .select(unioned.columns.filterNot(_ == bucketCol).map(col)
-          :+ col(bucketCol): _*)
-        .repartition(col(bucketCol))
-      writeAndRepoint(merged, "cow", Some(touched), rewrite = true,
-        Some(("merge_write", "swap")))(
-        m => m.copy(schemaJson = widenedSchema(m, merged.schema))) { next =>
-        next.deltas.isEmpty &&
-          touched.forall(b => next.base.get(b) == m0.base.get(b))
-      }
-    } finally batch.unpersist()
+  private def foldStaged(m0: Manifest, staged: String, touched: Set[Int],
+      batch: org.apache.spark.sql.types.StructType): Unit = {
+    // evolution is silent null-filling, so make it OBSERVABLE: a renamed
+    // upstream column looks exactly like one dropped + one added
+    val stored = schemaOf(m0).fieldNames.toSet
+    val incoming = batch.fieldNames.toSet - Cdc.ChangeType
+    val (added, omitted) = (incoming -- stored, stored -- incoming)
+    if (added.nonEmpty || omitted.nonEmpty)
+      org.slf4j.LoggerFactory.getLogger(classOf[ManifestUpsertStore]).warn(
+        s"schema evolution in $dir: batch adds ${added.toSeq.sorted} / " +
+          s"omits ${omitted.toSeq.sorted} vs the store schema — " +
+          "omitted columns null-fill; verify this is not a renamed column")
+    val merged = folded(m0.copy(schemaJson = widenedSchema(m0, batch),
+      base = m0.base.filter(kv => touched(kv._1)),
+      deltas = Seq(nextSeq(m0) -> staged)), bucket = None)
+    writeAndRepoint(merged, "cow", Some(touched), rewrite = true,
+      Some(("merge_write", "swap")))(
+      m => m.copy(schemaJson = widenedSchema(m, batch))) { next =>
+      next.deltas.isEmpty &&
+        touched.forall(b => next.base.get(b) == m0.base.get(b))
+    }
   }
 
-  /** The commit sequence of every base rewrite: write `data` (bucket
-    * column last, already partitioned for the write) as ONE fresh
-    * generation, durable before any manifest names it (ADVICE r10), then
-    * publish a manifest that re-points the buckets the generation holds.
+  /** The commit sequence of every base rewrite (a compaction, a
+    * copy-on-write merge, a clustered compaction, a column rename/drop):
+    * write `data` (bucket column last, a [[folded]] frame, so each bucket
+    * already sits in one task) as ONE fresh generation, durable before any
+    * manifest names it (ADVICE r10), then publish a manifest that
+    * re-points the buckets the generation holds.
     * `touched` names the buckets the rewrite replaces (None: every
     * bucket); those it left empty drop out of the base map, and an empty
     * generation is removed before the commit. `next` sets the schema,

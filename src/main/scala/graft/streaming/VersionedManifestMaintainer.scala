@@ -287,7 +287,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
             logWarning(s"window $window: auto-reclaiming stale claim by " +
               s"writer '${lines.headOption.getOrElse("")}' (age ${age}ms " +
               s">= lease ${autoReclaimAfterMs.get}ms)")
-            claim.delete()
+            Fs.rmTree(claim)
             if (attempt >= 5) throw new IllegalStateException(
               s"window $window claim kept flapping across $attempt " +
                 s"auto-reclaim attempts by writer '$writerId' — a live " +
@@ -334,7 +334,8 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
         "its owner is alive would let two writers pack the window " +
         "concurrently; pass force = true only after confirming the " +
         "owner is dead")
-    claim.delete()
+    Fs.rmTree(claim)
+    !claim.exists()
   }
 
   /** Test seam: after the claim, before any span write. */
@@ -461,7 +462,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
     val m0 = manifests.current()
     if (checkCommitted(m0, window, batchId)) {
       logInfo(s"batch $batchId: window $window already committed, skipping")
-      claimOf(window).delete() // sweep a claim a crash left behind
+      Fs.rmTree(claimOf(window)) // sweep a claim a crash left behind
       return
     }
     checkModel(m0, h)
@@ -516,7 +517,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
               (window -> WindowEntry(committedGen, batchId, h, writerId))))
         }
       }
-      claimOf(window).delete() // the manifest entry now guards
+      Fs.rmTree(claimOf(window)) // the manifest entry now guards
       gc()
     }
   }
@@ -959,7 +960,7 @@ class VersionedManifestMaintainer(store: KeyedUpsertStore,
       .filter(f => scala.util.Try(
         f.getName.stripPrefix("claim-").toLong).toOption
         .exists(committedWindows.contains))
-      .foreach(_.delete())
+      .foreach(Fs.rmTree)
   }
 }
 

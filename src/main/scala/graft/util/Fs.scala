@@ -31,7 +31,10 @@ object Fs {
     df.write.options(ForkFreeWriteOptions).partitionBy(partitionBy: _*)
       .mode("overwrite").parquet(path)
 
-  /** Recursive delete; tolerates a missing path. */
+  /** Recursive delete of a directory or a plain file; tolerates a missing
+    * path. The one delete seam of `streaming`, `operators` and `util`
+    * (`ConditionalPut`'s staging file excepted), which FsSpec guards.
+    */
   def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
   }
@@ -122,31 +125,13 @@ object Fs {
     * the 2-writer merge path at a 0.94 ratio from 8→32 cores — the
     * writers were queueing on this loop, not on compute). fdatasync is
     * pure IO wait, so overlapping requests lets the device coalesce
-    * flushes. Sized by `SPARK_GRAFT_FSYNC_THREADS` (a deployment tunes it
-    * to its storage: object stores never reach here, NVMe likes more,
-    * a single spinning disk wants 1); default min(8, cores). Daemon
-    * threads — the pool must never block JVM exit.
+    * flushes. It runs min(8, cores) daemon threads — the pool must never
+    * block JVM exit.
     */
   private lazy val fsyncPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(fsyncThreads,
+    java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, Runtime.getRuntime.availableProcessors()),
       r => { val t = new Thread(r, "graft-fsync"); t.setDaemon(true); t })
-
-  /** Parsed once when `Fs` initialises, so a bad deployment setting
-    * fails before the first commit instead of in the middle of one.
-    */
-  private val fsyncThreads: Int = parseFsyncThreads(
-    sys.env.get("SPARK_GRAFT_FSYNC_THREADS"),
-    Runtime.getRuntime.availableProcessors())
-
-  /** `SPARK_GRAFT_FSYNC_THREADS`: unset means min(8, cores); anything
-    * but an integer >= 1 is rejected, naming the variable and the value.
-    */
-  private[util] def parseFsyncThreads(raw: Option[String], cores: Int): Int =
-    raw.map { v =>
-      v.trim.toIntOption.filter(_ >= 1).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_FSYNC_THREADS must be an integer >= 1, got '$v'"))
-    }.getOrElse(math.min(8, cores))
 
   /** fsync a batch of regular files in parallel, propagating the FIRST
     * failure (a durability failure must fail the commit that depends on

@@ -234,11 +234,11 @@ abstract class ManifestLog[M](dir: java.io.File, keepVersions: Int,
       .filter(d => retired(d.getName) || aged(d))
       .foreach(Fs.rmTree)
     betweenGcDeletes()
-    expired.foreach(_._1.delete())
-    decoded.collect { case (f, None) => f }.filter(aged).foreach(_.delete())
+    expired.foreach(x => Fs.rmTree(x._1))
+    decoded.collect { case (f, None) => f }.filter(aged).foreach(Fs.rmTree)
     Option(dir.listFiles((_: java.io.File, n: String) =>
       n.startsWith(".staging-")))
-      .getOrElse(Array.empty[java.io.File]).filter(aged).foreach(_.delete())
+      .getOrElse(Array.empty[java.io.File]).filter(aged).foreach(Fs.rmTree)
     serving
   }
 

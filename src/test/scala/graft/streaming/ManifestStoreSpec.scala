@@ -210,17 +210,21 @@ class ManifestStoreSpec extends SparkSpec {
     assert(state(store) === want)
   }
 
-  /** Shuffle-map stages that `body` runs, counted by a listener. Skipped
-    * stages (AQE resubmits a finished map stage as skipped) never complete,
-    * so each exchange counts once.
+  /** Shuffle-map stages that `body` runs and the shuffle records they
+    * write, counted by a listener. Skipped stages (AQE resubmits a
+    * finished map stage as skipped) never complete, so each exchange
+    * counts once.
     */
-  private def shuffleMapStages(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+  private def shuffles(body: => Unit): (Int, Long) = {
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val records = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         if (org.apache.spark.ListenerBusDrain.isShuffleMap(e.stageInfo)) {
-          n.incrementAndGet(); ()
+          stages.incrementAndGet()
+          records.addAndGet(
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
         }
     }
     // earlier jobs' events must not reach the new listener
@@ -230,7 +234,7 @@ class ManifestStoreSpec extends SparkSpec {
       body
       org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
+    (stages.get(), records.get())
   }
 
   /** Bucket dir name → `.parquet` file count, for the one generation of
@@ -269,7 +273,7 @@ class ManifestStoreSpec extends SparkSpec {
     // each touched bucket is read and folded within one task: the scan is
     // hash-partitioned by the key, which is the fold's clustering and keeps
     // every bucket in one task for the write, so nothing is shuffled
-    assert(shuffleMapStages(store.compact()) === 0)
+    assert(shuffles(store.compact()) === (0, 0L))
     assert(store.deltaCount === 0)
     val compacted = filesPerBucket(dir, "gen-compact")
     assert(compacted.keySet === touched)
@@ -280,7 +284,7 @@ class ManifestStoreSpec extends SparkSpec {
     store.merge(batch((Cdc.Upsert, 300L, 5L, "FIVE"),
       (Cdc.Upsert, 301L, 50L, "FIFTY")))
     val want2 = state(store)
-    assert(shuffleMapStages(store.compact(clusterBy = Seq("payload"))) === 0)
+    assert(shuffles(store.compact(clusterBy = Seq("payload"))) === (0, 0L))
     val clustered = filesPerBucket(dir, "gen-cluster")
     assert(clustered.size === 8 && clustered.values.forall(_ == 1), clustered)
     assert(state(store) === want2)
@@ -989,6 +993,94 @@ class ManifestStoreSpec extends SparkSpec {
     assert(mor.changesBetween(m0, mor.currentVersion)
       .select("id", Cdc.ChangeType).as[(Long, String)].collect().toSet ===
       gone.map(_ -> Cdc.Delete).toSet)
+  }
+
+  /** The schema the newest manifest of the store at `dir` records. */
+  private def manifestSchema(dir: String): String = {
+    val newest = new java.io.File(dir).listFiles(
+      (_: java.io.File, n: String) => n.startsWith("manifest-")).maxBy(_.getName)
+    val payload = java.nio.file.Files.readString(newest.toPath).split("\n").head
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(payload)
+      .get("schema").asText()
+  }
+
+  private def bucketOf4(id: Long): Int = spark.range(1)
+    .select(pmod(hash(lit(id)), lit(4)).cast("int")).head().getInt(0)
+
+  test("a copy-on-write merge shuffles only the batch: one shuffle-map stage, the staged write") {
+    val dir = tmp("mfcowshuffle")
+    val store = cowStore(dir)
+    store.initialize(Cdc.initialLoad(
+      (1L to 400L).map(i => (i, s"v$i")).toDF("id", "payload")))
+    // two keys of every bucket: an update and a delete in each, so every
+    // bucket's 100-odd base rows are folded and rewritten
+    val picked = (1L to 40L).groupBy(bucketOf4).values.map(_.take(2)).toSeq
+    assert(picked.size === 4)
+    val rows = picked.flatMap { case Seq(u, d) =>
+      Seq((Cdc.Upsert, 1000L + u, u, s"u$u"),
+        (Cdc.Delete, 1000L + d, d, null.asInstanceOf[String]))
+    }
+    val (stages, records) = shuffles(store.merge(batch(rows: _*)))
+    assert(stages === 1, "the staged delta write is the merge's one exchange")
+    assert(records <= rows.size,
+      s"$records shuffle records for a ${rows.size}-row batch")
+    val deleted = rows.filter(_._1 == Cdc.Delete).map(_._3).toSet
+    assert(state(store) === (1L to 400L).filterNot(deleted).map { i =>
+      i -> rows.collectFirst { case (Cdc.Upsert, _, `i`, p) => p }
+        .getOrElse(s"v$i")
+    }.toSet)
+    assert(cowGens(dir).size === 1 &&
+      !new java.io.File(dir).list().exists(_.startsWith("gen-delta-")),
+      "the staged delta is deleted once the commit returns")
+  }
+
+  test("both write policies converge: copy-on-write, merge-on-read, and merge-on-read compacted after every merge") {
+    val initial = (1L to 12L).map(i => (i, s"v$i")).toDF("id", "payload")
+    def open(policy: WritePolicy) = {
+      val dir = tmp("mfconverge")
+      val s = new ManifestUpsertStore(spark, dir, Seq("id"), numBuckets = 4,
+        writePolicy = policy)
+      s.initialize(Cdc.initialLoad(initial)); (s, dir)
+    }
+    val stores = Seq(open(WritePolicy.CopyOnWrite),
+      open(WritePolicy.MergeOnRead), open(WritePolicy.MergeOnRead))
+    val Seq(cow, mor, compacted) = stores.map(_._1)
+    val none = null.asInstanceOf[String]
+    val emptied = bucketOf4(1L)
+    val batches: Seq[org.apache.spark.sql.DataFrame] = Seq(
+      // updates, a delete, an insert
+      batch((Cdc.Upsert, 10L, 2L, "TWO"), (Cdc.Delete, 11L, 3L, none),
+        (Cdc.Upsert, 12L, 20L, "twenty")),
+      // a re-insert of the deleted key
+      batch((Cdc.Upsert, 13L, 3L, "back"), (Cdc.Delete, 14L, 20L, none)),
+      // a batch that adds a column
+      Seq((Cdc.Upsert, 15L, 5L, "FIVE", "n5"), (Cdc.Upsert, 16L, 21L, "x", none),
+        (Cdc.Delete, 17L, 6L, none, none))
+        .toDF(Cdc.ChangeType, Cdc.TransactionId, "id", "payload", "note"),
+      // a batch that empties a bucket
+      batch(((1L to 21L).filter(bucketOf4(_) == emptied)
+        .map(i => (Cdc.Delete, 18L, i, none))): _*),
+      // the old shape again: `note` null-fills
+      batch((Cdc.Upsert, 19L, 7L, "SEVEN"), (Cdc.Upsert, 20L, 5L, "five")))
+    for ((b, n) <- batches.zipWithIndex) {
+      Seq(cow, mor, compacted).foreach(_.merge(b))
+      compacted.compact()
+      val want = cow.snapshot().collect().toSet
+      assert(mor.snapshot().collect().toSet === want, s"batch $n")
+      assert(compacted.snapshot().collect().toSet === want, s"batch $n")
+      assert(stores.map(s => manifestSchema(s._2)).distinct.size === 1,
+        s"batch $n")
+      b.select("id").as[Long].collect().foreach { k =>
+        val got = Seq(cow, mor, compacted).map(_.lookup(k).collect().toSeq)
+        assert(got.distinct.size === 1, s"batch $n, key $k: $got")
+      }
+      if (n == 3) assert(cow.snapshot()
+        .where(pmod(hash(col("id")), lit(4)) === emptied).isEmpty)
+    }
+    assert(cow.snapshot().columns.toSeq === Seq("id", "payload", "note"))
+    assert(cow.snapshot().where(col("id") === 5L)
+      .select("payload", "note").as[(String, String)].collect().toSeq ===
+      Seq(("five", null)))
   }
 
   test("GC deletes retired copy-on-write generations at once: the dir count stays bounded by keepVersions") {

@@ -4,22 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class FsSpec extends AnyFunSuite {
 
-  test("SPARK_GRAFT_FSYNC_THREADS: unset defaults to min(8, cores), a positive integer is taken as is") {
-    assert(Fs.parseFsyncThreads(None, cores = 4) === 4)
-    assert(Fs.parseFsyncThreads(None, cores = 32) === 8)
-    assert(Fs.parseFsyncThreads(Some("1"), cores = 4) === 1)
-    assert(Fs.parseFsyncThreads(Some(" 16 "), cores = 4) === 16)
-  }
-
-  test("SPARK_GRAFT_FSYNC_THREADS: a typo, zero or a negative value fails loudly, naming the variable and the value") {
-    for (bad <- Seq("eight", "", "4.5", "0", "-2")) {
-      val ex = intercept[IllegalArgumentException](
-        Fs.parseFsyncThreads(Some(bad), cores = 4))
-      assert(ex.getMessage.contains("SPARK_GRAFT_FSYNC_THREADS") &&
-        ex.getMessage.contains(s"'$bad'"), ex.getMessage)
-    }
-  }
-
   test("parallel fsync: the first failure surfaces as the original IOException, serially or in parallel") {
     val dir = java.nio.file.Files.createTempDirectory("graft-fsync").toFile
     try {
@@ -35,5 +19,30 @@ class FsSpec extends AnyFunSuite {
           e.getMessage.contains("missing"), e.toString)
       }
     } finally Fs.rmTree(dir)
+  }
+
+  test("every engine delete goes through Fs.rmTree (ConditionalPut's staging file excepted)") {
+    val root = new java.io.File("src/main/scala/graft")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) sources(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val all = Seq("streaming", "operators", "util")
+      .flatMap(d => sources(new java.io.File(root, d)))
+    // an empty listing (wrong working dir) must fail, not pass vacuously
+    assert(all.exists(_.getName == "ManifestLog.scala") &&
+      all.exists(_.getName == "VersionedManifestMaintainer.scala") &&
+      all.exists(_.getName == "Fs.scala"),
+      s"no sources found under ${root.getAbsolutePath}")
+    val offenders = for {
+      f <- all
+      if !Set("Fs.scala", "ConditionalPut.scala")(f.getName)
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray
+        .map(_.toString).zipWithIndex
+      if line.contains(".delete()")
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
